@@ -41,7 +41,13 @@ from lab_1806_vec_db_spark.index.kmeans import (
     fit_kmeans,
     sample_rows,
 )
-from lab_1806_vec_db_spark.operators.knn import _topk_per_query, np_round_half_up, round_dist
+from lab_1806_vec_db_spark.operators.knn import (
+    collect_query_block,
+    empty_topk,
+    merge_topk,
+    np_round_half_up,
+    round_dist,
+)
 from lab_1806_vec_db_spark.functions.distance import dist_expr
 
 
@@ -228,10 +234,7 @@ class IVFIndex:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        max_queries: int = 200_000,
         compute_dtype: str | None = None,
-        driver_merge: bool | None = None,
-        driver_merge_max_bytes: int = 512 << 20,
     ) -> DataFrame:
         """Batch IVF kNN: each query scans only its own probed clusters.
 
@@ -258,27 +261,12 @@ class IVFIndex:
         matters. The single-query path computes JVM-side in f64 over
         the stored values regardless (Catalyst expression).
 
-        ``driver_merge`` (None = auto): the per-task emission is
-        k-bounded per (query, task) after the in-task compaction, so
-        for bounded query blocks the global merge runs driver-side
-        (:func:`operators.knn.driver_topk_merge` — identical (dist, id)
-        cuts and tie-breaks to the window plan) instead of a shuffle +
-        window sort. Auto enables it while |Q|·k·n_parts·24 B fits
-        ``driver_merge_max_bytes``; above that the distributed window
-        merge serves unchanged (the 100 TB path)."""
-        from lab_1806_vec_db_spark.operators.knn import collect_query_block
-
+        The global cut is :func:`operators.knn.merge_topk`."""
         spark = queries.sparkSession
-        qids, qmat = collect_query_block(queries, qid_col, qvec_col)
-        if qids.size == 0:
-            return self._empty_result(spark)
-        if qids.size > max_queries:
-            raise ValueError(
-                f"Query set of {qids.size} rows exceeds the broadcast bound of the "
-                "IVF batch path (the query block is driver-collected and broadcast); "
-                "chunk the query set upstream or stream it through "
-                "knn_batch(strategy='crossjoin')."
-            )
+        block = collect_query_block(queries, qid_col, qvec_col)
+        if block is None:
+            return empty_topk(spark, self.id_col)
+        qids, qmat = block
         probes = self.model.rank_centroids_batch(qmat, n_probes)  # (m, n_probes)
         # cluster_id -> int64 array of the query indices probing it
         by_cluster = group_probes(np.asarray(probes))
@@ -391,24 +379,13 @@ class IVFIndex:
         scored = src.mapInArrow(
             scan, schema=f"query_id long, {id_col} long, dist double"
         )
-        use_dm = driver_merge
-        if use_dm is None:
-            try:
-                n_parts = src.rdd.getNumPartitions()
-            except Exception:
-                n_parts = None
-            use_dm = (
-                n_parts is not None
-                and len(qids) * k_ * n_parts * 24 <= int(driver_merge_max_bytes)
-            )
-        if use_dm:
-            from lab_1806_vec_db_spark.operators.knn import driver_topk_merge
-
-            return driver_topk_merge(spark, scored, k_, id_col, upper_bound)
-        return _topk_per_query(scored, k_, id_col, upper_bound)
-
-    def _empty_result(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], f"query_id long, {self.id_col} long, dist double")
+        try:
+            n_parts = src.rdd.getNumPartitions()
+        except Exception:
+            n_parts = None
+        # the in-task compaction emits at most k rows per (query, task)
+        est_rows = None if n_parts is None else len(qids) * k_ * n_parts
+        return merge_topk(scored, k_, id_col, upper_bound, est_rows, tier="ivf")
 
     def assign(self, df: DataFrame) -> DataFrame:
         """Q9 as a DataFrame op: nearest-centroid id per row."""

@@ -45,12 +45,15 @@ from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans, sample_r
 from lab_1806_vec_db_spark.index.pq import (
     PQTable,
     build_lookup_batch,
+    finish_adc,
+    make_grouped_rerank_scan,
     pq_groups,
     unpack_codes,
     _fit_codebooks,
 )
 from lab_1806_vec_db_spark.operators.knn import (
-    _topk_per_query,
+    collect_query_block,
+    empty_topk,
     np_round_half_up,
     round_dist,
 )
@@ -926,10 +929,15 @@ class IVFPQIndex:
         gather scale with dim, so the auto rule keys on dim. In the
         disk-bound regime the avoided second scan dwarfs the gather, so
         callers there should pass ``fuse_rerank=True`` explicitly."""
-        if override is not None:
-            return override and self.vec_col in self.codes_clustered.columns
         if self.vec_col not in self.codes_clustered.columns:
+            if override:
+                raise ValueError(
+                    "fuse_rerank=True needs the vec column on the codes "
+                    "layout, which this IVF+PQ index does not carry."
+                )
             return False
+        if override is not None:
+            return override
         dim = sum(size for _, size in self.pq.groups)
         return dim <= 256
 
@@ -1175,105 +1183,6 @@ class IVFPQIndex:
             pool_k=pool_k,
         )
 
-    def _driver_merge(
-        self,
-        spark: SparkSession,
-        approx: DataFrame,
-        fused: bool,
-        ef_: int,
-        k: int,
-        upper_bound: float | None,
-        probed: list[int],
-        qids: np.ndarray,
-        qmat: np.ndarray,
-        metric: str,
-    ) -> DataFrame:
-        """Driver-side gate + top-k for bounded query blocks (see the
-        search_batch docstring): identical cuts and tie-breaks to the
-        window plan — fast_topk_grouped applies the same
-        (dist asc, id asc) per-query total order — with zero wide
-        exchanges. Wave B (two-pass only) is the same partition-pruned
-        grouped re-rank join, with the candidate grouping done here in
-        numpy instead of a groupBy exchange.
-
-        Everything driver-side is Arrow-native (round-13 wave-B
-        profile): the raw per-task emission collects via ``toArrow``
-        (no pandas materialization), the global ADC gate is the
-        selection-based ``fast_topk_grouped`` (the 3-key lexsort over
-        the 5.8–11.7 M-row emission cost 2.9–5.8 s of the 1M serve),
-        the per-id query grouping is a zero-copy ``pa.ListArray``
-        (the per-list ``tolist()`` loop cost ~0.4 s), and the result
-        frame is built from a ``pa.table``. The emission itself is
-        bounded by ef per (query, task) — Σ|task queries|·ef rows —
-        which grows with the probe width and the pin's cluster splits
-        but stays collectable for any block the auto-router sends
-        here."""
-        import pyarrow as pa
-
-        from lab_1806_vec_db_spark.operators.knn import fast_topk_grouped
-
-        id_col = self.id_col
-        schema = f"query_id long, {id_col} long, dist double"
-        tbl = approx.toArrow()
-        if tbl.num_rows == 0:
-            return spark.createDataFrame([], schema)
-        qx = tbl.column("query_id").to_numpy(zero_copy_only=False)
-        ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-        if fused:
-            adc = tbl.column("adc_r").to_numpy(zero_copy_only=False)
-            ex = tbl.column("dist").to_numpy(zero_copy_only=False)
-            g = fast_topk_grouped(qx, ids, adc, ef_)  # global ADC gate
-            qx, ids, ex = qx[g], ids[g], ex[g]
-        else:
-            adc = tbl.column("dist").to_numpy(zero_copy_only=False)
-            g = fast_topk_grouped(qx, ids, adc, ef_)
-            qx, ids = qx[g], ids[g]
-            # wave B: candidate vectors fetched executor-side from the
-            # PROBED directories only, each crossing Arrow once
-            from lab_1806_vec_db_spark.index.pq import make_grouped_rerank_scan
-
-            order = np.argsort(ids, kind="stable")
-            uids, starts = np.unique(ids[order], return_index=True)
-            offsets = np.r_[starts, ids.size].astype(np.int32)
-            cand_tbl = pa.table({
-                id_col: pa.array(uids, type=pa.int64()),
-                "_qs": pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()),
-                    pa.array(qx[order], type=pa.int64()),
-                ),
-            })
-            cand_grouped = spark.createDataFrame(
-                cand_tbl, schema=f"{id_col} long, _qs array<long>"
-            )
-            rer = (
-                self._rerank_source(probed)
-                .join(F.broadcast(cand_grouped), id_col)
-                .mapInArrow(
-                    make_grouped_rerank_scan(
-                        spark, qids, qmat, metric, id_col, self.vec_col
-                    ),
-                    schema=schema,
-                )
-            )
-            rtbl = rer.toArrow()
-            if rtbl.num_rows == 0:
-                return spark.createDataFrame([], schema)
-            qx = rtbl.column("query_id").to_numpy(zero_copy_only=False)
-            ids = rtbl.column(id_col).to_numpy(zero_copy_only=False)
-            ex = rtbl.column("dist").to_numpy(zero_copy_only=False)
-        g2 = fast_topk_grouped(qx, ids, ex, int(k))
-        qx, ids, ex = qx[g2], ids[g2], ex[g2]
-        if upper_bound is not None:
-            m = ex <= float(upper_bound)
-            qx, ids, ex = qx[m], ids[m], ex[m]
-        o = np.lexsort((ids, ex, qx))  # (qid, dist, id) — the shared order
-        out_tbl = pa.table({
-            "query_id": pa.array(qx[o], type=pa.int64()),
-            id_col: pa.array(ids[o], type=pa.int64()),
-            "dist": pa.array(ex[o], type=pa.float64()),
-        })
-        return spark.createDataFrame(out_tbl, schema=schema)
-
     def search_batch(
         self,
         queries: DataFrame,
@@ -1284,19 +1193,16 @@ class IVFPQIndex:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        max_queries: int = 200_000,
         max_lut_bytes: int = 64 << 20,
         fuse_rerank: bool | None = None,
         acc_cap_rows: int = 2_000_000,
         acc_vec_bytes: int = 256 << 20,
-        debug_stage: str | None = None,
-        driver_merge: bool | None = None,
-        driver_merge_max_bytes: int = 512 << 20,
     ) -> DataFrame:
         """Batch IVF+PQ: one pruned scan of the codes table; each
         partition scores a row only for the queries probing its
         cluster (LUT gather, no raw vectors touched), keeps its top-ef
-        per query; window merge; Arrow re-rank against the base.
+        per query; the global ADC gate, the exact re-rank and the final
+        top-k are :func:`index.pq.finish_adc`.
 
         ``acc_cap_rows`` / ``acc_vec_bytes`` are the compaction FLOORS
         of the per-task candidate accumulator (see the closure note):
@@ -1310,40 +1216,13 @@ class IVFPQIndex:
         1.5× live candidate-vector bytes) in the STORE dtype. Python
         workers are per-core, so the executor-wide footprint multiplies
         by concurrent task slots — size the floors down on memory-tight
-        executors (the result set is identical at any setting).
-
-        ``debug_stage`` (diagnostic only): ``"approx"`` returns the raw
-        per-task candidate frame, ``"cand"`` the globally ADC-gated
-        candidate ids — lets a profiler time the scan+gate wave apart
-        from the re-rank wave without duplicating the plan here.
-
-        ``driver_merge`` (None = auto): for BOUNDED query blocks, run
-        the global ADC gate and the final top-k as one numpy pass on
-        the driver instead of shuffle+window jobs — the per-task
-        candidate frame (≤ |Q|·n_probes·ef rows, 24 B each) Arrow-
-        collects, the gate is the same (rounded-adc, id) cut, and wave
-        B still fetches vectors executor-side through the partition-
-        pruned grouped re-rank join, so results are IDENTICAL. This is
-        the low-latency serve: it removes every wide exchange and
-        window sort from the plan (round-13 wave profile: those
-        dominated the distributed-over-mirror gap in the cached
-        regime). Auto enables it while the estimate fits
-        ``driver_merge_max_bytes`` (default 512 MB of driver RAM);
-        above that — huge query blocks at 100 TB scale — the
-        distributed window merge is the right plan and serves
-        unchanged."""
-        from lab_1806_vec_db_spark.operators.knn import collect_query_block
-
+        executors (the result set is identical at any setting)."""
         metric = metric or self.model.metric
         spark = queries.sparkSession
-        qids, qmat = collect_query_block(queries, qid_col, qvec_col)
-        if qids.size == 0:
-            return spark.createDataFrame([], f"{qid_col} long, {self.id_col} long, dist double")
-        if qids.size > max_queries:
-            raise ValueError(
-                f"Query set of {qids.size} rows exceeds the broadcast bound of the "
-                "IVF+PQ batch path; chunk the query set upstream."
-            )
+        block = collect_query_block(queries, qid_col, qvec_col)
+        if block is None:
+            return empty_topk(spark, self.id_col, qid_col)
+        qids, qmat = block
         id_col = self.id_col
         ef_ = max(int(ef), int(k))
 
@@ -1382,7 +1261,6 @@ class IVFPQIndex:
 
             from lab_1806_vec_db_spark.functions.arrowvec import (
                 binary_matrix,
-                knn_schema,
                 result_batch,
                 vec_matrix,
             )
@@ -1466,13 +1344,11 @@ class IVFPQIndex:
                     vbytes_dyn = max(vbytes, n_vbytes + (n_vbytes >> 1))
                 return qx, ids, adc
 
-            out_schema = (
-                pa.schema([pa.field("query_id", pa.int64()),
-                           pa.field(id_col, pa.int64()),
-                           pa.field("adc_r", pa.float64()),
-                           pa.field("dist", pa.float64())])
-                if fused_t else knn_schema(id_col)
-            )
+            out_schema = pa.schema(
+                [pa.field("query_id", pa.int64()),
+                 pa.field(id_col, pa.int64()),
+                 pa.field("adc", pa.float64())]
+                + ([pa.field("dist", pa.float64())] if fused_t else []))
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
@@ -1568,7 +1444,7 @@ class IVFPQIndex:
             out_qid = bqids[qx]
             if not fused_t:
                 yield result_batch(out_schema,
-                                   query_id=out_qid, **{id_col: ids}, dist=adc)
+                                   query_id=out_qid, **{id_col: ids}, adc=adc)
                 return
             # fused exact re-rank over ONLY the surviving candidates
             # (vectors were buffered per fragment): the f64 upcast is
@@ -1600,7 +1476,7 @@ class IVFPQIndex:
                         np.sqrt(x2) * bqnorm2[qx[sl]], 1e-10
                     )
             yield result_batch(out_schema, query_id=out_qid, **{id_col: ids},
-                               adc_r=adc, dist=np_round_half_up(ex))
+                               adc=adc, dist=np_round_half_up(ex))
           return scan
 
         # bound each broadcast lookup tensor (same ≤64 MB budget as
@@ -1625,10 +1501,8 @@ class IVFPQIndex:
             )
             probed_any = sorted(by_cluster.keys())
             scan_cols = [id_col, "code", "cluster_id"] + ([vec_col] if fused else [])
-            scan_schema = (
-                f"query_id long, {id_col} long, adc_r double, dist double"
-                if fused else f"query_id long, {id_col} long, dist double"
-            )
+            scan_schema = f"query_id long, {id_col} long, adc double" + (
+                ", dist double" if fused else "")
             pieces.append(
                 self.codes_clustered.filter(F.col("cluster_id").isin(probed_any))
                 .select(*scan_cols)
@@ -1637,84 +1511,18 @@ class IVFPQIndex:
         approx = pieces[0]
         for p in pieces[1:]:
             approx = approx.unionByName(p)
-        if debug_stage == "approx":
-            return approx
+        rerank_source = None if fused else (
+            self._rerank_source(sorted(all_probed)),
+            make_grouped_rerank_scan(spark, qids, qmat, metric, id_col, vec_col),
+        )
         # ×2: per-task emission is ef per (query, TASK), and the
         # balanced range pin splits big clusters across ~2 tasks on
         # average (measured 1.8× raw-emission inflation at 1M/8p with
-        # the pin at shuffle width), so the collected bytes run ~2×
-        # the |Q|·n_probes·ef ideal
-        est_gate_bytes = len(qids) * int(n_probes) * ef_ * 24 * 2
-        if debug_stage is None and (
-            driver_merge if driver_merge is not None
-            else est_gate_bytes <= int(driver_merge_max_bytes)
-        ):
-            out = self._driver_merge(
-                spark, approx, fused, ef_, int(k), upper_bound,
-                sorted(all_probed), qids, qmat, metric,
-            )
-            if qid_col != "query_id":
-                out = out.withColumnRenamed("query_id", qid_col)
-            return out
-        if debug_stage == "cand":
-            if fused:
-                # the fused plan has no standalone candidate wave —
-                # silently returning the full top-k here would let a
-                # profiler believe it timed only the candidate gate
-                raise ValueError(
-                    "debug_stage='cand' has no meaning under the fused plan "
-                    "(candidates are exact-re-ranked inside the probe scan); "
-                    "pass fuse_rerank=False to profile the two-pass waves."
-                )
-            return _topk_per_query(approx, ef_, id_col, None).select(
-                "query_id", id_col)
-        if fused:
-            # global ADC gate (top-ef by rounded ADC, id tie-break —
-            # identical to the two-pass plan's candidate cut), then the
-            # exact top-k over the SAME rows: the exact distances were
-            # computed inside the probe scan, so no second scan, no
-            # join. One shuffle serves both windows (same partitioning).
-            from pyspark.sql import Window
-
-            wg = Window.partitionBy("query_id").orderBy(
-                F.col("adc_r").asc(), F.col(id_col).asc()
-            )
-            gated = (
-                approx.withColumn("__gn", F.row_number().over(wg))
-                .filter(F.col("__gn") <= ef_)
-                .select("query_id", id_col, "dist")
-            )
-            out = _topk_per_query(gated, int(k), id_col, upper_bound)
-        else:
-            cand = _topk_per_query(approx, ef_, id_col, None).select("query_id", id_col)
-            # exact re-rank: the shared GROUPED PQ closure (index/pq.py:
-            # make_grouped_rerank_scan) over the PROBED cluster
-            # directories only (partition-pruned vec fetch — see
-            # _rerank_source). Candidates are grouped per id below the
-            # broadcast, so each candidate vector crosses Arrow exactly
-            # ONCE no matter how many queries gated it — the flat pair
-            # join duplicated every travelling vector |queries-wanting-
-            # it| times (the PQ batch path measured that duplication
-            # dominating its re-rank task; at 1M/960-dim the wave-B
-            # vector ship is ef·|Q|·dim·4 B ≈ 0.8 GB flat vs the
-            # distinct-id set grouped). Per-pair expansion happens in
-            # numpy inside the closure.
-            from lab_1806_vec_db_spark.index.pq import make_grouped_rerank_scan
-
-            cand_grouped = cand.groupBy(id_col).agg(
-                F.collect_list("query_id").alias("_qs")
-            )
-            rer = (
-                self._rerank_source(sorted(all_probed))
-                .join(F.broadcast(cand_grouped), id_col)
-                .mapInArrow(
-                    make_grouped_rerank_scan(
-                        spark, qids, qmat, metric, id_col, self.vec_col
-                    ),
-                    schema=f"query_id long, {id_col} long, dist double",
-                )
-            )
-            out = _topk_per_query(rer, int(k), id_col, upper_bound)
+        # the pin at shuffle width), so the emission runs ~2× the
+        # |Q|·n_probes·ef ideal
+        out = finish_adc(approx, int(k), ef_, id_col, upper_bound,
+                         len(qids) * int(n_probes) * ef_ * 2, rerank_source,
+                         tier="ivfpq")
         if qid_col != "query_id":
             out = out.withColumnRenamed("query_id", qid_col)
         return out

@@ -37,11 +37,11 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator, Sequence
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.functions.distance import dist_expr
@@ -49,8 +49,15 @@ from lab_1806_vec_db_spark.index.kmeans import _pairwise_dist, fit_kmeans, sampl
 from lab_1806_vec_db_spark.operators.knn import (
     ROUND_DECIMALS,
     _topk_per_query,
+    collect_columns,
+    collect_query_block,
+    driver_side,
+    driver_topk_merge,
+    empty_topk,
+    fast_topk_grouped,
     np_round_half_up,
     round_dist,
+    window_cut,
 )
 
 
@@ -393,6 +400,75 @@ def make_grouped_rerank_scan(
     return rerank
 
 
+def finish_adc(
+    approx: DataFrame,
+    k: int,
+    ef: int,
+    id_col: str,
+    upper_bound: float | None,
+    est_rows: int | None,
+    rerank_source: tuple[DataFrame, Callable] | None = None,
+    *,
+    tier: str,
+) -> DataFrame:
+    """The post-scan half of the PQ and IVF+PQ batch serves: the global
+    top-``ef`` ADC gate by (adc, id), then the exact top-k by
+    (dist, id) with the threshold applied after the cut. ``approx`` is
+    the scan's per-task emission and ``est_rows`` an upper bound on its
+    rows; the merge gate (:func:`operators.knn.driver_side`) runs the
+    cuts as driver numpy passes or as window plans, with identical rows.
+
+    - fused (``rerank_source`` None): ``approx`` carries ``(query_id,
+      id, adc, dist)`` — the exact distances were computed in the scan,
+      so both cuts run over the same rows;
+    - two-wave: ``approx`` carries ``(query_id, id, adc)``;
+      ``rerank_source`` is ``(frame, rerank)`` — the ``(id, vec)`` frame
+      the candidates join against and the
+      :func:`make_grouped_rerank_scan` closure. Candidates are grouped
+      per id below the broadcast, so each candidate vector crosses
+      Arrow once whatever the number of queries that gated it."""
+    import pyarrow as pa
+
+    spark = approx.sparkSession
+    driver = driver_side(tier, approx, est_rows)
+    if rerank_source is None:
+        if not driver:
+            gated = window_cut(approx, ef, id_col, key="adc")
+            return _topk_per_query(gated.select("query_id", id_col, "dist"),
+                                   k, id_col, upper_bound)
+        qx, ids, adc, ex = collect_columns(approx, "query_id", id_col, "adc", "dist")
+        g = fast_topk_grouped(qx, ids, adc, ef)  # global ADC gate
+        return driver_topk_merge(spark, qx[g], ids[g], ex[g], k, id_col, upper_bound)
+    frame, rerank = rerank_source
+    if driver:
+        qx, ids, adc = collect_columns(approx, "query_id", id_col, "adc")
+        g = fast_topk_grouped(qx, ids, adc, ef)  # global ADC gate
+        qx, ids = qx[g], ids[g]
+        # per-id query grouping in numpy: a zero-copy ListArray, no
+        # groupBy exchange
+        order = np.argsort(ids, kind="stable")
+        uids, starts = np.unique(ids[order], return_index=True)
+        offsets = np.r_[starts, ids.size].astype(np.int32)
+        cand_grouped = spark.createDataFrame(pa.table({
+            id_col: pa.array(uids, type=pa.int64()),
+            "_qs": pa.ListArray.from_arrays(
+                pa.array(offsets, type=pa.int32()),
+                pa.array(qx[order], type=pa.int64()),
+            ),
+        }), schema=f"{id_col} long, _qs array<long>")
+    else:
+        cand_grouped = (
+            window_cut(approx, ef, id_col, key="adc")
+            .groupBy(id_col).agg(F.collect_list("query_id").alias("_qs"))
+        )
+    rer = frame.join(F.broadcast(cand_grouped), id_col).mapInArrow(
+        rerank, schema=f"query_id long, {id_col} long, dist double")
+    if not driver:
+        return _topk_per_query(rer, k, id_col, upper_bound)
+    qx, ids, ex = collect_columns(rer, "query_id", id_col, "dist")
+    return driver_topk_merge(spark, qx, ids, ex, k, id_col, upper_bound)
+
+
 def aligned_codes(pq: "PQTable", ids: np.ndarray) -> np.ndarray:
     """Collect + unpack the codes table into an (N × m) uint8 matrix
     row-aligned with ``ids`` (an HNSW index's id order) — the
@@ -678,19 +754,15 @@ class PQTable:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        max_queries: int = 200_000,
         max_lut_bytes: int = 64 << 20,
-        driver_merge: bool | None = None,
-        driver_merge_max_bytes: int = 512 << 20,
         fuse_rerank: bool | None = None,
     ) -> DataFrame:
         """Batch ADC: per-query lookup tensors broadcast in bounded
         chunks (≤ ``max_lut_bytes`` each), one Arrow scan of the codes
         table per chunk emitting each PARTITION's top-ef per query
-        (batches are merged inside the scan closure — emitting per
-        Arrow batch would make the single-partition fast path return a
-        superset), window-merge across partitions, then one broadcast
-        join back to vectors for the exact re-rank.
+        (batches are merged inside the scan closure, so the emission is
+        ef-bounded per task), the global ADC gate across partitions,
+        then one broadcast join back to vectors for the exact re-rank.
 
         ``fuse_rerank`` (None = auto): when the index carries the fused
         (id, code, vec) layout (:attr:`codes_vec`, built by
@@ -701,34 +773,22 @@ class PQTable:
         plan applied to flat PQ). The pool selection, tie handling,
         re-rank arithmetic and rounding are bit-identical to the
         two-wave plan, so results are IDENTICAL; ``False`` forces the
-        classic two-wave serve (also the only plan for indexes loaded
-        from disk, whose codes stay vec-free).
+        classic two-wave serve (the only plan for indexes loaded from
+        disk, whose codes stay vec-free — ``True`` raises there).
 
-        ``driver_merge`` (None = auto): for BOUNDED query blocks the
-        ADC gate and the final top-k run as driver-side numpy passes
-        (the round-13 IVF+PQ ``_driver_merge`` design): the ef-bounded
-        per-task emission (n_parts·ef·|Q| rows, 24 B each) Arrow-
-        collects, ``fast_topk_grouped`` applies the SAME (dist, id)
-        per-query cut the window would, the per-id query grouping is a
-        zero-copy ``pa.ListArray`` (no groupBy exchange), and the
-        exact re-rank still fetches vectors executor-side through the
-        broadcast join — results are IDENTICAL. Auto enables it while
-        the emission estimate fits ``driver_merge_max_bytes``; above
-        that the distributed window merge serves unchanged (the 100 TB
-        path)."""
-        from lab_1806_vec_db_spark.operators.knn import collect_query_block
-
-        spark = queries.sparkSession
-        qids, qmat = collect_query_block(queries, qid_col, qvec_col)
-        if qids.size == 0:
-            return spark.createDataFrame([], f"query_id long, {self.id_col} long, dist double")
-        if qids.size > max_queries:
+        The ADC gate, the re-rank wave and the final top-k are
+        :func:`finish_adc`."""
+        if fuse_rerank and self.codes_vec is None:
             raise ValueError(
-                f"Query set of {qids.size} rows exceeds the broadcast bound of the "
-                "ADC batch path (per-query lookup tensors are driver-built and "
-                "broadcast); chunk the query set upstream or stream the queries "
-                "through knn_batch(strategy='crossjoin')."
+                "fuse_rerank=True needs the fused (id, code, vec) layout, "
+                "which this PQ table does not carry (loaded from disk, or "
+                "trained above SPARK_GRAFT_PQ_FUSE_MAX_BYTES)."
             )
+        spark = queries.sparkSession
+        block = collect_query_block(queries, qid_col, qvec_col)
+        if block is None:
+            return empty_topk(spark, self.id_col)
+        qids, qmat = block
         id_col = self.id_col
         vec_col = self.vec_col
         fused = self.codes_vec is not None and fuse_rerank is not False
@@ -750,7 +810,6 @@ class PQTable:
 
                 from lab_1806_vec_db_spark.functions.arrowvec import (
                     binary_matrix,
-                    knn_schema,
                     result_batch,
                     vec_matrix,
                 )
@@ -763,13 +822,11 @@ class PQTable:
                     # derives from its broadcast (make_grouped_rerank_scan)
                     q2 = np.einsum("ij,ij->i", bqmat, bqmat)
                     qnorm = np.sqrt(q2)
-                    out_schema = pa.schema(
-                        [pa.field("query_id", pa.int64()),
-                         pa.field(id_col, pa.int64()),
-                         pa.field("adc", pa.float64()),
-                         pa.field("dist", pa.float64())])
-                else:
-                    out_schema = knn_schema(id_col)
+                out_schema = pa.schema(
+                    [pa.field("query_id", pa.int64()),
+                     pa.field(id_col, pa.int64()),
+                     pa.field("adc", pa.float64())]
+                    + ([pa.field("dist", pa.float64())] if fused_t else []))
                 # compiled lookup-sum kernel when available (the IVF+PQ
                 # tile path, guide §4): per (row, query) the m LUT rows
                 # stay L1-resident and the (n × |Q|) result is written
@@ -887,7 +944,7 @@ class PQTable:
                         out_schema,
                         query_id=out_q,
                         **{id_col: out_i},
-                        dist=out_a,
+                        adc=out_a,
                     )
                     return
                 # in-task exact re-rank of the pool — the same ops, in
@@ -920,10 +977,8 @@ class PQTable:
             return scan
 
         scan_src = self.codes_vec if fused else self.codes
-        scan_schema = (
-            f"query_id long, {id_col} long, adc double, dist double"
-            if fused else f"query_id long, {id_col} long, dist double"
-        )
+        scan_schema = f"query_id long, {id_col} long, adc double" + (
+            ", dist double" if fused else "")
         pieces = []
         for s in range(0, len(qids), chunk):
             lut3, sq, qn = build_lookup_batch(
@@ -939,185 +994,10 @@ class PQTable:
         approx = pieces[0]
         for p in pieces[1:]:
             approx = approx.unionByName(p)
-
-        use_dm = driver_merge
-        if use_dm is None:
-            use_dm = (
-                n_parts * ef_ * len(qids) * 24 <= int(driver_merge_max_bytes)
-            )
-        if fused:
-            if use_dm:
-                return self._driver_merge_fused(
-                    spark, approx, ef_, int(k), upper_bound)
-            # distributed fused finish (the 100 TB shape, mirroring the
-            # IVF+PQ fused plan): one shuffle serves both windows — the
-            # global ADC gate (top-ef by (adc, id) — identical to the
-            # two-wave candidate cut) and the exact top-k over the SAME
-            # rows (distances were computed inside the scan)
-            if n_parts > 1:
-                wg = Window.partitionBy("query_id").orderBy(
-                    F.col("adc").asc(), F.col(id_col).asc()
-                )
-                gated = (
-                    approx.withColumn("__gn", F.row_number().over(wg))
-                    .filter(F.col("__gn") <= ef_)
-                    .select("query_id", id_col, "dist")
-                )
-            else:
-                # single-partition scan already emitted the global pool
-                gated = approx.select("query_id", id_col, "dist")
-            return _topk_per_query(gated, int(k), id_col, upper_bound)
-        if use_dm:
-            return self._driver_merge_batch(
-                spark, approx, ef_, int(k), upper_bound, qids, qmat, metric
-            )
-
-        # single-partition codes already emit the global top-ef per query
-        # (the scan merges across Arrow batches) — the merge window would
-        # be a no-op shuffle (common in local/test runs; at scale codes
-        # span many partitions and the merge runs)
-        if n_parts > 1:
-            cand = _topk_per_query(approx, ef_, id_col, None).select("query_id", id_col)
-        else:
-            cand = approx.select("query_id", id_col)
-        # exact re-rank: ONE pipelined job. The ef-bounded candidate
-        # pairs are grouped per id below the broadcast (a k-bounded
-        # agg), so the base join carries each candidate vector across
-        # Arrow exactly ONCE, with its interested-query list attached;
-        # the per-pair expansion happens in numpy inside the closure
-        # (make_grouped_rerank_scan). A flat pair join duplicated every
-        # vector |queries-wanting-it| times and its to_list conversion
-        # dominated the re-rank task (measured ~0.5 s of the old 1.38 s
-        # pq_ef80 row at sf0.1).
-        cand_grouped = cand.groupBy(id_col).agg(
-            F.collect_list("query_id").alias("_qs")
+        rerank_source = None if fused else (
+            self.base.select(id_col, vec_col),
+            make_grouped_rerank_scan(spark, qids, qmat, metric, id_col, vec_col),
         )
-        rer = (
-            self.base.select(id_col, self.vec_col)
-            .join(F.broadcast(cand_grouped), id_col)
-            .mapInArrow(
-                make_grouped_rerank_scan(
-                    spark, qids, qmat, metric, id_col, self.vec_col
-                ),
-                schema=f"query_id long, {id_col} long, dist double",
-            )
-        )
-        return _topk_per_query(rer, int(k), id_col, upper_bound)
-
-    def _driver_merge_batch(
-        self,
-        spark,
-        approx: DataFrame,
-        ef_: int,
-        k: int,
-        upper_bound: float | None,
-        qids: np.ndarray,
-        qmat: np.ndarray,
-        metric: str,
-    ) -> DataFrame:
-        """Driver-side ADC gate + final top-k for bounded query blocks
-        (the round-13 IVF+PQ ``_driver_merge`` design applied to flat
-        PQ): identical cuts and tie-breaks to the window plan —
-        ``fast_topk_grouped`` applies the same (dist asc, id asc)
-        per-query total order — with zero wide exchanges. The exact
-        re-rank still fetches candidate vectors executor-side through
-        the broadcast grouped join, each vector crossing Arrow once."""
-        import pyarrow as pa
-
-        from lab_1806_vec_db_spark.operators.knn import fast_topk_grouped
-
-        id_col = self.id_col
-        schema = f"query_id long, {id_col} long, dist double"
-        tbl = approx.toArrow()
-        if tbl.num_rows == 0:
-            return spark.createDataFrame([], schema)
-        qx = tbl.column("query_id").to_numpy(zero_copy_only=False)
-        ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-        adc = tbl.column("dist").to_numpy(zero_copy_only=False)
-        g = fast_topk_grouped(qx, ids, adc, ef_)  # global ADC gate
-        qx, ids = qx[g], ids[g]
-        # per-id query grouping built here in numpy — no groupBy
-        # exchange; zero-copy ListArray (round-13 wave-B profile)
-        order = np.argsort(ids, kind="stable")
-        uids, starts = np.unique(ids[order], return_index=True)
-        offsets = np.r_[starts, ids.size].astype(np.int32)
-        cand_tbl = pa.table({
-            id_col: pa.array(uids, type=pa.int64()),
-            "_qs": pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()),
-                pa.array(qx[order], type=pa.int64()),
-            ),
-        })
-        cand_grouped = spark.createDataFrame(
-            cand_tbl, schema=f"{id_col} long, _qs array<long>"
-        )
-        rer = (
-            self.base.select(id_col, self.vec_col)
-            .join(F.broadcast(cand_grouped), id_col)
-            .mapInArrow(
-                make_grouped_rerank_scan(
-                    spark, qids, qmat, metric, id_col, self.vec_col
-                ),
-                schema=schema,
-            )
-        )
-        rtbl = rer.toArrow()
-        if rtbl.num_rows == 0:
-            return spark.createDataFrame([], schema)
-        qx = rtbl.column("query_id").to_numpy(zero_copy_only=False)
-        ids = rtbl.column(id_col).to_numpy(zero_copy_only=False)
-        ex = rtbl.column("dist").to_numpy(zero_copy_only=False)
-        g2 = fast_topk_grouped(qx, ids, ex, int(k))
-        qx, ids, ex = qx[g2], ids[g2], ex[g2]
-        if upper_bound is not None:
-            m = ex <= float(upper_bound)
-            qx, ids, ex = qx[m], ids[m], ex[m]
-        o = np.lexsort((ids, ex, qx))  # (qid, dist, id) — the shared order
-        out_tbl = pa.table({
-            "query_id": pa.array(qx[o], type=pa.int64()),
-            id_col: pa.array(ids[o], type=pa.int64()),
-            "dist": pa.array(ex[o], type=pa.float64()),
-        })
-        return spark.createDataFrame(out_tbl, schema=schema)
-
-    def _driver_merge_fused(
-        self,
-        spark,
-        approx: DataFrame,
-        ef_: int,
-        k: int,
-        upper_bound: float | None,
-    ) -> DataFrame:
-        """Driver-side finish of the FUSED scan (round-14): the scan
-        already carried exact distances back with the ADC pool, so the
-        whole serve is one job — global ADC gate (same (adc, id) cut as
-        the two-wave candidate window), then the final top-k by
-        (dist, id), both as numpy selection passes. No re-rank job, no
-        wide exchange; identical rows and order to every other plan."""
-        import pyarrow as pa
-
-        from lab_1806_vec_db_spark.operators.knn import fast_topk_grouped
-
-        id_col = self.id_col
-        schema = f"query_id long, {id_col} long, dist double"
-        tbl = approx.toArrow()
-        if tbl.num_rows == 0:
-            return spark.createDataFrame([], schema)
-        qx = tbl.column("query_id").to_numpy(zero_copy_only=False)
-        ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-        adc = tbl.column("adc").to_numpy(zero_copy_only=False)
-        ex = tbl.column("dist").to_numpy(zero_copy_only=False)
-        g = fast_topk_grouped(qx, ids, adc, ef_)  # global ADC gate
-        qx, ids, ex = qx[g], ids[g], ex[g]
-        g2 = fast_topk_grouped(qx, ids, ex, int(k))
-        qx, ids, ex = qx[g2], ids[g2], ex[g2]
-        if upper_bound is not None:
-            m = ex <= float(upper_bound)
-            qx, ids, ex = qx[m], ids[m], ex[m]
-        o = np.lexsort((ids, ex, qx))  # (qid, dist, id) — the shared order
-        out_tbl = pa.table({
-            "query_id": pa.array(qx[o], type=pa.int64()),
-            id_col: pa.array(ids[o], type=pa.int64()),
-            "dist": pa.array(ex[o], type=pa.float64()),
-        })
-        return spark.createDataFrame(out_tbl, schema=schema)
+        # each task emits at most ef rows per query
+        return finish_adc(approx, int(k), ef_, id_col, upper_bound,
+                          n_parts * ef_ * len(qids), rerank_source, tier="pq")

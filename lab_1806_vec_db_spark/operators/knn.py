@@ -35,6 +35,7 @@ same contract, so row sets hash-match.
 
 from __future__ import annotations
 
+import logging
 import math
 from collections.abc import Iterator, Sequence
 
@@ -168,24 +169,50 @@ def _dist_matrix(x: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
     return 1.0 - ip / denom
 
 
+#: Driver-memory bound of the one merge gate (:func:`driver_side`): a
+#: batch serve whose estimated emission fits it is finished on the
+#: driver, above it by the distributed window plan.
+DRIVER_MERGE_MAX_BYTES = 512 << 20
+#: Largest query block a batch tier driver-collects and broadcasts.
+MAX_QUERIES = 200_000
+
+_log = logging.getLogger("lab_1806_vec_db_spark")
+
+
 def collect_query_block(
     queries: DataFrame, qid_col: str, qvec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray] | None:
     """Driver-collect a bounded query block as (qids int64, qmat f64)
     through ONE Arrow transfer (round-14, guide §6 Arrow-for-driver-
     transfers): the Row-object ``collect()`` every batch tier opened
     with cost ~2× the Arrow path at the 1k-query bench block. Values
     are identical — the Arrow doubles ARE the stored doubles, and the
-    f64 cast matches ``np.asarray(rows, dtype=float64)``."""
+    f64 cast matches ``np.asarray(rows, dtype=float64)``.
+
+    The shared guard of every batch tier: returns None for an empty
+    block (callers answer with :func:`empty_topk`) and raises above
+    :data:`MAX_QUERIES` rows."""
     from lab_1806_vec_db_spark.functions.arrowvec import vec_matrix
 
     tbl = queries.select(qid_col, qvec_col).toArrow()
     if tbl.num_rows == 0:
-        return np.empty(0, dtype=np.int64), np.empty((0, 0))
+        return None
+    if tbl.num_rows > MAX_QUERIES:
+        raise ValueError(
+            f"Query set of {tbl.num_rows} rows exceeds the broadcast bound of "
+            f"{MAX_QUERIES} rows (the batch tiers driver-collect and broadcast "
+            "the query block); chunk the query set upstream or stream it "
+            "through knn_batch(strategy='crossjoin')."
+        )
     qids = tbl.column(qid_col).to_numpy(zero_copy_only=False).astype(
         np.int64, copy=False)
     qmat = vec_matrix(tbl.column(qvec_col), dtype=np.float64)
     return qids, qmat
+
+
+def empty_topk(spark, id_col: str, qid_col: str = "query_id") -> DataFrame:
+    """The batch-kNN result frame with no rows."""
+    return spark.createDataFrame([], f"{qid_col} long, {id_col} long, dist double")
 
 
 def knn_batch(
@@ -199,25 +226,14 @@ def knn_batch(
     qvec_col: str = "vec",
     upper_bound: float | None = None,
     strategy: str = "partitioned",
-    driver_merge: bool | None = None,
-    driver_merge_max_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Batch kNN: top-k of ``df`` for every row of ``queries``.
 
     Output: ``(query_id, id, dist)`` ascending per query, ties by id.
     ``strategy='partitioned'`` is the scale path (see module docstring);
     ``'crossjoin'`` is the fully-declarative reference plan used as the
-    semantic oracle in tests.
-
-    ``driver_merge`` (None = auto, partitioned strategy only): the
-    per-task emission is k-bounded per (query, task) — |Q|·k·n_parts
-    rows of 24 B — so for bounded query blocks the global merge runs
-    as one driver-side numpy pass (:func:`driver_topk_merge`, same
-    cuts and tie-breaks) instead of a shuffle + window sort. Auto
-    enables it while the emission estimate fits
-    ``driver_merge_max_bytes``; above that (huge query blocks × many
-    partitions at 100 TB scale) the distributed window merge serves
-    unchanged. Results are IDENTICAL either way.
+    semantic oracle in tests. The partitioned plan's global cut is
+    :func:`merge_topk`.
     """
     _check_metric(metric)
     if strategy == "crossjoin":
@@ -234,16 +250,10 @@ def knn_batch(
         raise ValueError(f"Unknown knn_batch strategy: {strategy}")
 
     spark = df.sparkSession
-    qids, qmat = collect_query_block(queries, qid_col, qvec_col)
-    if qids.size == 0:
-        return spark.createDataFrame([], f"query_id long, {id_col} long, dist double")
-    if qids.size > 200_000:
-        raise ValueError(
-            f"Query set of {qids.size} rows exceeds the broadcast bound of the "
-            "'partitioned' strategy (the query block is driver-collected and "
-            "broadcast); chunk the query set or use strategy='crossjoin', which "
-            "streams both sides."
-        )
+    block = collect_query_block(queries, qid_col, qvec_col)
+    if block is None:
+        return empty_topk(spark, id_col)
+    qids, qmat = block
     bc = spark.sparkContext.broadcast((qids, qmat))
 
     def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -335,19 +345,13 @@ def knn_batch(
     scored = src.mapInArrow(
         scan, schema=f"query_id long, {id_col} long, dist double"
     )
-    use_dm = driver_merge
-    if use_dm is None:
-        try:
-            n_parts = src.rdd.getNumPartitions()
-        except Exception:
-            n_parts = None
-        use_dm = (
-            n_parts is not None
-            and qids.size * int(k) * n_parts * 24 <= int(driver_merge_max_bytes)
-        )
-    if use_dm:
-        return driver_topk_merge(spark, scored, k, id_col, upper_bound)
-    return _topk_per_query(scored, k, id_col, upper_bound)
+    try:
+        n_parts = src.rdd.getNumPartitions()
+    except Exception:
+        n_parts = None
+    # the scan emits at most k rows per (query, task)
+    est_rows = None if n_parts is None else qids.size * int(k) * n_parts
+    return merge_topk(scored, k, id_col, upper_bound, est_rows, tier="flat")
 
 
 def local_topk_grouped(qx: np.ndarray, ids: np.ndarray, dist: np.ndarray, k: int) -> np.ndarray:
@@ -408,30 +412,39 @@ def fast_topk_grouped(qx: np.ndarray, ids: np.ndarray, dist: np.ndarray, k: int)
     return np.concatenate(out)
 
 
+def driver_side(tier: str, frame: DataFrame, est_rows: int | None) -> bool:
+    """The one merge gate of the batch tiers: True when the emission
+    ``frame`` is small enough to finish on the driver. Its size is
+    ``est_rows`` (an upper bound the tier derives from its scan; None =
+    unbounded) times the row width of the frame's declared schema,
+    compared against :data:`DRIVER_MERGE_MAX_BYTES`. Both sides return
+    identical rows; the window side is the driver-memory bound for
+    large query blocks. The decision is logged at DEBUG."""
+    row_bytes = 8 * len(frame.columns)  # every emission column is a long or a double
+    side = est_rows is not None and est_rows * row_bytes <= DRIVER_MERGE_MAX_BYTES
+    _log.debug("merge gate tier=%s est_rows=%s row_bytes=%d bound=%d side=%s",
+               tier, est_rows, row_bytes, DRIVER_MERGE_MAX_BYTES,
+               "driver" if side else "window")
+    return side
+
+
+def collect_columns(frame: DataFrame, *cols: str) -> list[np.ndarray]:
+    """One Arrow collect of ``frame``, returned as numpy columns."""
+    tbl = frame.toArrow()
+    return [tbl.column(c).to_numpy(zero_copy_only=False) for c in cols]
+
+
 def driver_topk_merge(
-    spark, scored: DataFrame, k: int, id_col: str,
-    upper_bound: float | None, qid_col: str = "query_id",
+    spark, qx: np.ndarray, ids: np.ndarray, d: np.ndarray, k: int,
+    id_col: str, upper_bound: float | None, qid_col: str = "query_id",
 ) -> DataFrame:
-    """Driver-side twin of :func:`_topk_per_query` for BOUNDED per-task
-    emissions (guide §4/§5 — the round-13 IVF+PQ ``_driver_merge``
-    generalized): Arrow-collect the (query_id, id, dist) frame, apply
-    the SAME (dist asc, id asc) per-query cut with
-    ``fast_topk_grouped`` (identical rows and tie-breaks to the window
-    plan), filter the optional threshold after the cut exactly like the
-    window path, and return the k-bounded result as a local DataFrame
-    sorted (qid, dist, id). Removes the wide exchange + per-query
-    window sort from the plan; callers gate on an emission-size
-    estimate and keep the distributed window merge above it (the
-    100 TB path)."""
+    """Driver side of the global cut, over collected (qid, id, dist)
+    columns: the SAME (dist asc, id asc) per-query top-k as the window
+    plan (:func:`fast_topk_grouped`), the threshold applied after the
+    cut, and the result returned as a local DataFrame sorted
+    (qid, dist, id) — no wide exchange, no window sort."""
     import pyarrow as pa
 
-    schema = f"{qid_col} long, {id_col} long, dist double"
-    tbl = scored.toArrow()
-    if tbl.num_rows == 0:
-        return spark.createDataFrame([], schema)
-    qx = tbl.column(qid_col).to_numpy(zero_copy_only=False)
-    ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-    d = tbl.column("dist").to_numpy(zero_copy_only=False)
     g = fast_topk_grouped(qx, ids, d, int(k))
     qx, ids, d = qx[g], ids[g], d[g]
     if upper_bound is not None:
@@ -443,7 +456,23 @@ def driver_topk_merge(
         id_col: pa.array(ids[o], type=pa.int64()),
         "dist": pa.array(d[o], type=pa.float64()),
     })
-    return spark.createDataFrame(out_tbl, schema=schema)
+    return spark.createDataFrame(
+        out_tbl, schema=f"{qid_col} long, {id_col} long, dist double")
+
+
+def window_cut(
+    scored: DataFrame, k: int, id_col: str, key: str = "dist",
+    qid_col: str = "query_id",
+) -> DataFrame:
+    """Window side of the global cut: the rows ranking < k per query
+    under the (``key`` asc, id asc) order — one shuffle on the query
+    id, k-bounded per query."""
+    w = Window.partitionBy(qid_col).orderBy(F.col(key).asc(), F.col(id_col).asc())
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
 
 
 def _topk_per_query(
@@ -453,15 +482,26 @@ def _topk_per_query(
     """The shared k-bounded per-query merge (window rank + optional
     threshold) every batch tier funnels through — flat, PQ, IVF,
     IVF+PQ, and sharded-HNSW all share this one contract."""
-    w = Window.partitionBy(qid_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    out = window_cut(scored, k, id_col, qid_col=qid_col)
     if upper_bound is not None:
         out = out.filter(F.col("dist") <= F.lit(float(upper_bound)))
     return out.orderBy(qid_col, F.col("dist").asc(), F.col(id_col).asc())
+
+
+def merge_topk(
+    scored: DataFrame, k: int, id_col: str, upper_bound: float | None,
+    est_rows: int | None, *, tier: str,
+) -> DataFrame:
+    """The global top-k every scan tier finishes with. ``scored`` is the
+    tier's (query_id, id, dist) emission of per-task top-k rows and
+    ``est_rows`` an upper bound on its row count; the gate
+    (:func:`driver_side`) picks the driver merge or the window plan,
+    which return identical rows in the (query_id, dist, id) order."""
+    if not driver_side(tier, scored, est_rows):
+        return _topk_per_query(scored, k, id_col, upper_bound)
+    qx, ids, d = collect_columns(scored, "query_id", id_col, "dist")
+    return driver_topk_merge(scored.sparkSession, qx, ids, d, k, id_col,
+                             upper_bound)
 
 
 def filtered_topk_from_pool(
@@ -477,7 +517,6 @@ def filtered_topk_from_pool(
     exact_fallback: bool = True,
     fallback_margin: float = 1.0,
     pool_k: int | None = None,
-    driver_merge_max_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Shared oversample-and-filter finisher for every batch ANN tier
     (HNSW broadcast graph, IVF+PQ, sharded HNSW): join an ef-bounded
@@ -498,20 +537,14 @@ def filtered_topk_from_pool(
     recall the pool can't certify. margin=1.0 keeps the strict
     "under-filled only" contract.
 
-    Round-14 (guide §2.4/§5): with ``exact_fallback`` the finisher
-    already materializes driver-side, so for a BOUNDED pool (the caller
-    passes its per-query ``pool_k`` width and |Q|·pool_k·24 B fits
-    ``driver_merge_max_bytes``) the per-query probe_k cut runs as the
-    same driver numpy pass every bounded batch tier uses
-    (``fast_topk_grouped`` — identical (dist, id) cuts and starvation
-    counts to the window plan) instead of a shuffle + window job ahead
-    of the collect; the surviving-pool join itself stays distributed
-    (the filtered base is never driver-materialized). Without a
-    ``pool_k`` bound (or above the byte bound) the window plan pre-cuts
-    to probe_k before the collect, exactly as before — the driver
-    materialization stays |Q|·probe_k-bounded in every regime. The
-    pool pipeline still executes exactly once either way.
-    Plan gate: tests/test_plans.py::test_batch_filtered_ann_plan_shape."""
+    With ``exact_fallback`` the survivors are driver-materialized
+    anyway. The merge gate (:func:`driver_side`, |Q|·``pool_k`` rows
+    for a pool of per-query width ``pool_k``; None = unbounded) decides
+    whether the per-query probe_k cut runs driver-side on the collected
+    join or as the window plan ahead of the collect; either way the
+    starvation counts see the same rows, the driver materialization
+    stays |Q|·probe_k-bounded, and the filtered base is never
+    collected. Plan gate: tests/test_plans.py::test_batch_filtered_ann_plan_shape."""
     spark = pool.sparkSession
     surv = pool.join(filtered_base.select(id_col), id_col).select(
         qid_col, id_col, "dist"
@@ -521,48 +554,24 @@ def filtered_topk_from_pool(
         probe_k = int(math.ceil(float(fallback_margin) * int(k)))
     if not exact_fallback:
         return _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
-    import pyarrow as pa
-
-    schema = f"{qid_col} long, {id_col} long, dist double"
     # |Q| is needed for starvation detection anyway — collect it first
-    # so it can also gate the driver-cut estimate
+    # so it can also bound the gate's estimate
     qlist = [int(r[0]) for r in queries.select(qid_col).collect()]
-    use_driver_cut = (
-        pool_k is not None
-        and len(qlist) * int(pool_k) * 24 <= int(driver_merge_max_bytes)
-    )
-    if use_driver_cut:
-        # ONE Arrow materialization of the joined pool; the probe_k cut,
-        # the starvation counts, and the k-trim all run driver-side in
-        # numpy — no shuffle, no window sort
-        tbl = surv.toArrow()
-        qx = tbl.column(qid_col).to_numpy(zero_copy_only=False)
-        sids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-        sd = tbl.column("dist").to_numpy(zero_copy_only=False)
-        g = fast_topk_grouped(qx, sids, sd, probe_k)
-        qx, sids, sd = qx[g], sids[g], sd[g]
-    else:
-        # distributed pre-cut to probe_k, then the probe_k-bounded
-        # collect (the pre-round-14 plan, the 100 TB-safe shape)
-        topk = _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
-        tbl = topk.toArrow()
-        qx = tbl.column(qid_col).to_numpy(zero_copy_only=False)
-        sids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-        sd = tbl.column("dist").to_numpy(zero_copy_only=False)
+    est_rows = None if pool_k is None else len(qlist) * int(pool_k)
+    if not driver_side("filtered", surv, est_rows):
+        surv = _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
+    qx, sids, sd = collect_columns(surv, qid_col, id_col, "dist")
+    g = fast_topk_grouped(qx, sids, sd, probe_k)
+    qx, sids, sd = qx[g], sids[g], sd[g]
     uq, cnt = np.unique(qx, return_counts=True)
     counts = dict(zip(uq.tolist(), cnt.tolist()))
     need = [q for q in qlist if int(counts.get(q, 0)) < probe_k]
-    if probe_k > int(k) and qx.size:
-        g2 = fast_topk_grouped(qx, sids, sd, int(k))
-        qx, sids, sd = qx[g2], sids[g2], sd[g2]
-    o = np.lexsort((sids, sd, qx))
-    kept_tbl = pa.table({
-        qid_col: pa.array(qx[o], type=pa.int64()),
-        id_col: pa.array(sids[o], type=pa.int64()),
-        "dist": pa.array(sd[o], type=pa.float64()),
-    })
+    if need:
+        keep_m = ~np.isin(qx, np.asarray(need, dtype=np.int64))
+        qx, sids, sd = qx[keep_m], sids[keep_m], sd[keep_m]
+    kept = driver_topk_merge(spark, qx, sids, sd, k, id_col, None, qid_col)
     if not need:
-        return spark.createDataFrame(kept_tbl, schema=schema)
+        return kept
     exact = knn_batch(
         filtered_base,
         queries.filter(F.col(qid_col).isin(need)),
@@ -572,16 +581,6 @@ def filtered_topk_from_pool(
     if qid_col != "query_id":
         # knn_batch's output column is always literal query_id
         exact = exact.withColumnRenamed("query_id", qid_col)
-    need_set = set(need)
-    keep_m = ~np.isin(qx[o], np.asarray(sorted(need_set), dtype=np.int64))
-    kept = spark.createDataFrame(
-        pa.table({
-            qid_col: pa.array(qx[o][keep_m], type=pa.int64()),
-            id_col: pa.array(sids[o][keep_m], type=pa.int64()),
-            "dist": pa.array(sd[o][keep_m], type=pa.float64()),
-        }),
-        schema=schema,
-    )
     return kept.unionByName(exact).orderBy(
         qid_col, F.col("dist").asc(), F.col(id_col).asc()
     )

@@ -287,29 +287,11 @@ def test_pq_batch_chunked_lut_broadcast_matches(emb, pq16, monkeypatch):
     assert [tuple(r) for r in chunked] == [tuple(r) for r in single]
 
 
-def test_ivf_batch_driver_merge_equals_window(emb):
-    """Round-14: the IVF batch path's bounded-block driver merge must
-    reproduce the window plan's rows and order exactly."""
-    ivf = IVFIndex.build(emb, k=8, metric="l2sqr", vec_col="embedding",
-                         id_col="vec_id", train_size=300)
-    queries = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    for ub in (None, 0.9):
-        dm = ivf.search_batch(queries, k=5, n_probes=4,
-                              qvec_col="embedding", upper_bound=ub,
-                              driver_merge=True).collect()
-        win = ivf.search_batch(queries, k=5, n_probes=4,
-                               qvec_col="embedding", upper_bound=ub,
-                               driver_merge=False).collect()
-        assert [tuple(r) for r in dm] == [tuple(r) for r in win], ub
-
-
-def test_pq_fused_serve_equals_two_wave(spark, emb, pq16):
+def test_pq_fused_serve_equals_two_wave(spark, emb, pq16, monkeypatch):
     """Round-14: the fused single-job serve (exact re-rank inside the
     ADC scan, enabled by the train-time (id, code, vec) layout) must
     reproduce the two-wave scan+re-rank plan's rows and order exactly —
-    driver merge AND window plans, both metrics, with the threshold
+    on both sides of the merge gate, both metrics, with the threshold
     filter, and across multi-Arrow-batch tasks."""
     assert pq16.codes_vec is not None  # small table → fused layout built
     queries = emb.filter(F.col("vec_id") < 16).select(
@@ -317,15 +299,17 @@ def test_pq_fused_serve_equals_two_wave(spark, emb, pq16):
     )
     for metric in ("l2sqr", "cosine"):
         for ub in (None, 0.9):
-            for dm in (True, False):
+            for bound in (1 << 62, -1):  # driver side, window side
+                monkeypatch.setattr(knn_ops, "DRIVER_MERGE_MAX_BYTES", bound)
                 fused = pq16.search_batch(
                     queries, k=5, ef=40, metric=metric, qvec_col="embedding",
-                    upper_bound=ub, driver_merge=dm).collect()
+                    upper_bound=ub).collect()
                 two = pq16.search_batch(
                     queries, k=5, ef=40, metric=metric, qvec_col="embedding",
-                    upper_bound=ub, driver_merge=dm, fuse_rerank=False).collect()
+                    upper_bound=ub, fuse_rerank=False).collect()
                 assert [tuple(r) for r in fused] == [tuple(r) for r in two], (
-                    metric, ub, dm)
+                    metric, ub, bound)
+    monkeypatch.undo()
     # multi-batch tasks: force 100-row Arrow batches through the fused
     # scan (vector buffering + compaction bookkeeping across batches)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -353,36 +337,46 @@ def test_pq_train_fuse_byte_gate(emb, monkeypatch):
     assert lean.codes.columns == ["vec_id", "code"]
 
 
-def test_pq_batch_driver_merge_equals_window(emb, pq16):
-    """Round-14: the bounded-block driver merge (ADC gate + final
-    top-k as driver numpy passes) must reproduce the window plan's
-    rows and order exactly, both metrics, with and without the
-    threshold filter."""
-    queries = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    for metric in ("l2sqr", "cosine"):
-        for ub in (None, 0.9):
-            dm = pq16.search_batch(queries, k=5, ef=40, metric=metric,
-                                   qvec_col="embedding", upper_bound=ub,
-                                   driver_merge=True).collect()
-            win = pq16.search_batch(queries, k=5, ef=40, metric=metric,
-                                    qvec_col="embedding", upper_bound=ub,
-                                    driver_merge=False).collect()
-            assert [tuple(r) for r in dm] == [tuple(r) for r in win], (
-                metric, ub)
+def test_batch_query_caps_raise(emb, pq16, monkeypatch):
+    """One shared query cap (operators/knn.py MAX_QUERIES) guards every
+    batch tier's driver-collected query block."""
+    from lab_1806_vec_db_spark.index.ivfpq import IVFPQIndex
 
-
-def test_batch_query_caps_raise(emb, pq16):
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    with pytest.raises(ValueError, match="exceeds the broadcast bound"):
-        pq16.search_batch(queries, k=3, ef=40, qvec_col="embedding", max_queries=4)
+    monkeypatch.setattr(knn_ops, "MAX_QUERIES", 4)
     ivf = IVFIndex.build(emb, k=8, metric="l2sqr", vec_col="embedding",
                          id_col="vec_id", train_size=300)
-    with pytest.raises(ValueError, match="exceeds the broadcast bound"):
-        ivf.search_batch(queries, k=3, n_probes=2, qvec_col="embedding", max_queries=4)
+    ivfpq = IVFPQIndex.build(emb, k_coarse=8, m=16, n_bits=8, metric="l2sqr",
+                             vec_col="embedding", id_col="vec_id",
+                             train_size=300)
+    serves = [
+        lambda: knn_ops.knn_batch(emb, queries, 3, vec_col="embedding",
+                                  id_col="vec_id", qvec_col="embedding"),
+        lambda: pq16.search_batch(queries, k=3, ef=40, qvec_col="embedding"),
+        lambda: ivf.search_batch(queries, k=3, n_probes=2, qvec_col="embedding"),
+        lambda: ivfpq.search_batch(queries, k=3, n_probes=2, ef=40,
+                                   qvec_col="embedding"),
+    ]
+    for serve in serves:
+        with pytest.raises(ValueError, match="exceeds the broadcast bound"):
+            serve()
+
+
+def test_pq_fuse_rerank_without_vectors_raises(emb, pq16):
+    """An explicit fuse_rerank=True on a vec-free codes layout cannot be
+    honored: it raises instead of silently serving two-wave."""
+    lean = PQTable(pq16.codebooks, pq16.groups, pq16.n_bits, pq16.codes,
+                   pq16.base, vec_col=pq16.vec_col, id_col=pq16.id_col)
+    assert lean.codes_vec is None
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    with pytest.raises(ValueError, match="fuse_rerank=True"):
+        lean.search_batch(queries, k=3, ef=40, qvec_col="embedding",
+                          fuse_rerank=True)
+    assert lean.search_batch(queries, k=3, ef=40, qvec_col="embedding").count() == 12
 
 
 # ---- HNSW ------------------------------------------------------------------
@@ -883,22 +877,6 @@ def test_hnsw_search_batch_filtered(spark, emb):
         tiny, queries, 5, metric="l2sqr", vec_col="embedding",
         id_col="vec_id", qid_col="query_id", qvec_col="vec").collect()]
     assert got2 == exact2
-
-    # round-14: the bounded-pool driver cut must match the window
-    # pre-cut path exactly (rows, order, starvation detection), with
-    # and without a thin-intersection margin
-    from lab_1806_vec_db_spark.operators.knn import filtered_topk_from_pool
-
-    for margin in (1.0, 1.5):
-        pool = idx.search_batch(queries, k=80, ef=80, qvec_col="vec")
-        kw = dict(id_col="vec_id", metric="l2sqr", vec_col="embedding",
-                  qvec_col="vec", fallback_margin=margin)
-        dcut = [tuple(r) for r in filtered_topk_from_pool(
-            pool, queries, 5, filt, pool_k=80, **kw).collect()]
-        window = [tuple(r) for r in filtered_topk_from_pool(
-            pool, queries, 5, filt, pool_k=80,
-            driver_merge_max_bytes=0, **kw).collect()]
-        assert dcut == window, margin
 
 
 def test_vecdb_search_filtered_sharded_dispatch(spark, tmp_path):

@@ -546,25 +546,6 @@ def test_store_vec_dtype_f32(spark, emb, qvec, tmp_path):
                          train_size=250, store_vec_dtype="float16")
 
 
-def test_debug_stage_cand_refuses_fused_plan(emb, ivfpq):
-    """debug_stage='cand' has no candidate wave to time under the fused
-    plan — silently returning the full top-k skewed wave-split profiles
-    (round-12 advisory). Must refuse loudly instead."""
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    with pytest.raises(ValueError, match="fused"):
-        ivfpq.search_batch(queries, k=5, n_probes=4, ef=32,
-                           qvec_col="embedding", fuse_rerank=True,
-                           debug_stage="cand")
-    # the two-pass plan still serves the candidate stage
-    cand = ivfpq.search_batch(queries, k=5, n_probes=4, ef=32,
-                              qvec_col="embedding", fuse_rerank=False,
-                              debug_stage="cand")
-    assert cand.columns == ["query_id", "vec_id"]
-    assert cand.count() > 0
-
-
 @pytest.mark.parametrize("store_dtype", [None, "float32"])
 def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtype):
     """Tiny accumulator floors force the geometric-compaction path (a
@@ -589,31 +570,6 @@ def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtyp
                                 qvec_col="embedding", fuse_rerank=fuse,
                                 acc_cap_rows=64, acc_vec_bytes=1024).collect()
         assert sorted(tiny, key=key) == sorted(ref, key=key), f"fuse={fuse}"
-
-
-def test_driver_merge_equals_window_plan(spark, emb, ivfpq):
-    """The driver-side gate+top-k (bounded query blocks) must return
-    EXACTLY what the distributed window plan returns — same gate cut,
-    same tie-breaks, same rounding — on both the two-pass and fused
-    plans, with and without an upper bound."""
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    key = lambda r: (r["query_id"], r["dist"], r["vec_id"])
-    for fuse in (False, True):
-        for ub in (None, 0.9):
-            dm = ivfpq.search_batch(queries, k=5, n_probes=8, ef=32,
-                                    qvec_col="embedding", fuse_rerank=fuse,
-                                    upper_bound=ub, driver_merge=True).collect()
-            win = ivfpq.search_batch(queries, k=5, n_probes=8, ef=32,
-                                     qvec_col="embedding", fuse_rerank=fuse,
-                                     upper_bound=ub, driver_merge=False).collect()
-            assert sorted(dm, key=key) == sorted(win, key=key), (fuse, ub)
-    # per-query ORDER of the returned frame matches the shared contract
-    dm_rows = ivfpq.search_batch(queries, k=5, n_probes=8, ef=32,
-                                 qvec_col="embedding",
-                                 driver_merge=True).collect()
-    assert dm_rows == sorted(dm_rows, key=key)
 
 
 def test_fused_auto_rule_keys_on_dim(emb, ivfpq):
@@ -643,6 +599,15 @@ def test_fused_auto_rule_keys_on_dim(emb, ivfpq):
     try:
         ivfpq.codes_clustered = novec
         assert ivfpq._use_fused_rerank(8, 200, None) is False
-        assert ivfpq._use_fused_rerank(8, 200, True) is False
+        assert ivfpq._use_fused_rerank(8, 200, False) is False
+        # an explicit request that cannot be honored raises
+        with pytest.raises(ValueError, match="fuse_rerank=True"):
+            ivfpq._use_fused_rerank(8, 200, True)
+        queries = emb.filter(F.col("vec_id") < 4).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        with pytest.raises(ValueError, match="fuse_rerank=True"):
+            ivfpq.search_batch(queries, k=5, n_probes=4, ef=32,
+                               qvec_col="embedding", fuse_rerank=True)
     finally:
         ivfpq.codes_clustered = orig_frame

@@ -218,27 +218,6 @@ def test_local_topk_grouped_edges():
     assert sorted(np.array([4, 1, 3, 2])[keep1].tolist()) == [2, 3]
 
 
-def test_knn_batch_driver_merge_equals_window(spark, emb):
-    """Round-14: the bounded-block driver-side merge
-    (driver_topk_merge) must reproduce the distributed window plan's
-    rows, order, and upper_bound handling exactly — same (dist, id)
-    cuts, threshold applied after the rank cut."""
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    for metric in ("l2sqr", "cosine"):
-        for ub in (None, 0.8):
-            kw = dict(k=5, metric=metric, vec_col="embedding",
-                      id_col="vec_id", qid_col="query_id",
-                      qvec_col="embedding", upper_bound=ub)
-            dm = knn_ops.knn_batch(emb, queries, driver_merge=True,
-                                   **kw).collect()
-            win = knn_ops.knn_batch(emb, queries, driver_merge=False,
-                                    **kw).collect()
-            assert [tuple(r) for r in dm] == [tuple(r) for r in win], (
-                metric, ub)
-
-
 def test_dense_topk_kernel_matches_lexsort():
     """Round-14: the compiled per-query top-k heap (ckernel.dense_topk,
     used by the knn_batch scan) must keep the BIT-IDENTICAL set and
