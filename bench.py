@@ -899,7 +899,7 @@ def run_matched(spark) -> dict:
                     return np.concatenate(list(tp.map(span, spans)), axis=0)
             import multiprocessing as mp
 
-            from lab_1806_vec_db_spark.index.hnsw import _cow_friendly_fork
+            from lab_1806_vec_db_spark.index.pq import _cow_friendly_fork
 
             jobs = [(s, e, ef) for s, e in spans]
             with _cow_friendly_fork():

@@ -200,8 +200,9 @@ def beam_search_batch(
 
     ``beam_width`` (B): expand up to B nearest unexpanded pool entries
     per wave instead of 1 — ~B× fewer waves, so per-wave fixed numpy
-    cost amortizes over more work (the serving lever when each fork
-    worker holds a small query slice). Termination is unchanged
+    cost amortizes over more work (the serving lever for the numpy
+    path, whose cost is dominated by per-wave overhead on small query
+    blocks). Termination is unchanged
     (nearest unexpanded vs pool worst), and entries beyond the worst
     are never expanded, so B>1 only ever *adds* explored candidates:
     recall is monotonically ≥ the B=1 search at equal ef, and full-ef

@@ -37,7 +37,7 @@ Design constraints honored:
   (dist, local id) exactly like ``beam_search_batch``'s final lexsort,
   and outputs are -1 / inf padded. The ctypes calls release the GIL,
   so driver-side serving and the build candidate phase parallelize
-  with plain threads — no fork pools, no COW traffic.
+  with plain threads.
 """
 
 from __future__ import annotations
@@ -1087,7 +1087,8 @@ class SearchCtx:
         pointers — is assembled ONCE per (k, ef) and reused; each call
         only copies the 1×d query into the staging buffer and fires
         the foreign call. NOT thread-safe (per-ctx staging buffers);
-        the fork-pool serving tier gives each process its own ctx.
+        the threaded batch fan-out calls :meth:`search`, which stages
+        nothing on the ctx.
         Returns views into the reused output buffers — callers must
         consume or copy before the next call."""
         d = q.shape[-1]

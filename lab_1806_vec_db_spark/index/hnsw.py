@@ -26,10 +26,11 @@ per-query — not a relational dataflow. The faithful AND scale-correct
 Spark design:
 
 - **build**: the chunk candidate phase is embarrassingly parallel
-  against a frozen graph — exactly a Spark stage (broadcast graph +
-  vectors, map over chunk nodes); the serial link phase runs on the
-  driver over k-bounded candidate lists. Small builds skip Spark and
-  run the same batched-numpy phases driver-side.
+  against a frozen graph; it runs driver-side on the compiled kernel
+  fanned over threads (the rayon ``par_iter`` of hnsw_index.rs:413-442),
+  or, without a toolchain, on the serial batched-numpy lockstep kernel
+  (index/beam.py) — the fallback and test oracle. The link phase
+  applies the k-bounded candidate lists serially.
 - **serve**: broadcast the compact graph (flat int32 link arrays +
   vectors) and run the *batched* beam kernel inside ``mapInPandas``
   over the queries DataFrame — queries are the parallel axis
@@ -50,12 +51,12 @@ quality is gated by the recall tests.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,65 +95,19 @@ _CHUNK_CAP = int(os.environ.get("SPARK_GRAFT_CHUNK_CAP", "512"))
 #: per chunk/phase: noise-free at build granularity.
 BUILD_PHASE: dict[str, float] = {"candidates": 0.0, "select": 0.0, "apply": 0.0}
 
-#: state inherited by fork-pool workers (set immediately before the
-#: pool forks; children snapshot it copy-on-write, so the graph and
-#: vectors are shared without serialization — the rayon-thread-pool
-#: analogue for driver-side serving, examples/bench.rs:414-417 -t)
-_FORK_STATE: dict = {}
-
-
-from contextlib import contextmanager
-
-
-_LAST_GC_COLLECT = [0.0]
-
-
-@contextmanager
-def _cow_friendly_fork():
-    """Make fork cheap from a busy driver process (a live SparkSession,
-    collected DataFrames): drop garbage, then freeze every surviving
-    object into the permanent generation so the children's own gc
-    passes never walk — and copy-on-write — the parent's heap pages.
-    Measured effect: the matched-scale build/serve inside bench.py ran
-    5-6× slower than the identical kernel in a clean process before
-    this. The full collect is throttled (it is O(heap) and the build
-    path forks once per chunk); freeze/unfreeze is cheap and always
-    runs."""
-    import gc
-    import time as _time
-
-    now = _time.monotonic()
-    if now - _LAST_GC_COLLECT[0] > 5.0:
-        gc.collect()
-        _LAST_GC_COLLECT[0] = now
-    gc.freeze()
-    try:
-        yield
-    finally:
-        gc.unfreeze()
+_log = logging.getLogger("lab_1806_vec_db_spark")
 
 
 def _release_pools(holder: dict) -> None:
-    """weakref.finalize target for a dropped :class:`HNSWIndex`: tear
-    down whatever pools it still owned. Module-level and closing only
-    over the mutable holder dict — never the index — so the finalizer
-    cannot keep the index (and its mmapped vectors) alive."""
-    pool = holder.get("pool")
-    if pool is not None:
-        pool.terminate()
-        holder["pool"] = None
+    """weakref.finalize target for a dropped :class:`HNSWIndex`: shut
+    down the serving thread pool it still owned. Module-level and
+    closing only over the mutable holder dict — never the index — so
+    the finalizer cannot keep the index (and its mmapped vectors)
+    alive."""
     tp = holder.get("tpool")
     if tp is not None:
         tp.shutdown(wait=False)
         holder["tpool"] = None
-
-
-def _fork_search(args):
-    qsub, k, ef, use_pq, bw = args
-    idx = _FORK_STATE["idx"]
-    pq = _FORK_STATE["pq"] if use_pq else None
-    adc = idx.adc_for(pq, qsub) if pq is not None else None
-    return idx._kernel_search(qsub, k, ef, adc=adc, beam_width=bw)
 
 
 class _Graph:
@@ -283,51 +238,6 @@ def _forward_select(
     return sel_id, sel_d
 
 
-#: state inherited by build-candidate fork workers (set immediately
-#: before the per-chunk pool forks; the frozen graph snapshot children
-#: need IS the fork's copy-on-write memory image, so re-forking per
-#: chunk gives snapshot isolation for free — the rayon par_iter
-#: analogue of the reference's chunked build, hnsw_index.rs:413-442)
-_BUILD_FORK_STATE: dict = {}
-
-
-def _fork_candidates(bounds):
-    """Worker: beam-search candidates for a chunk slice against the
-    copy-on-write graph snapshot, then run the full forward-link
-    selection (peer merge + trim + diversity heuristic) in-process —
-    the driver only applies the returned (node, links) pairs."""
-    lo, hi = bounds
-    st = _BUILD_FORK_STATE
-    chunk, levels, pd_ = st["chunk"], st["levels"], st["pd"]
-    sub = chunk[lo:hi]
-    out = _chunk_candidates(
-        st["links"], st["counts"], st["entry"], st["max_level"], pd_,
-        sub, levels[sub], st["ef_c"], st["n"],
-    )
-    m = st["m"]
-    trim = max(3 * m, 48)
-    chunk_levels = levels[chunk]
-    res: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    for L, (rows, pid, pdist) in out.items():
-        # chunk peers at this level, masked to strictly-earlier chunk
-        # position (the serial insert order, hnsw_index.rs:431-438)
-        peers_pos = np.nonzero(chunk_levels >= L)[0]
-        own_pos = lo + rows
-        pD = pd_.block(chunk[own_pos], chunk[peers_pos])
-        pD[peers_pos[None, :] >= own_pos[:, None]] = np.inf
-        peer_ids = np.broadcast_to(
-            chunk[peers_pos][None, :], pD.shape
-        )
-        cat_d = np.concatenate([pdist, pD], axis=1)
-        cat_id = np.concatenate([pid, peer_ids], axis=1).astype(np.int64)
-        cat_id = np.where(np.isfinite(cat_d), cat_id, -1)
-        sel_id, sel_d = _forward_select(
-            cat_d, cat_id, pd_.vecs, st["metric"], trim, m
-        )
-        res[L] = (own_pos, sel_id, sel_d)
-    return res
-
-
 def _c_chunk_candidates(
     g: "_Graph",
     cvecs: np.ndarray,
@@ -343,8 +253,7 @@ def _c_chunk_candidates(
     is frozen for the duration of a chunk), the chunk fans out over a
     plain thread pool (the C call releases the GIL), and the result is
     the same ``{level: (rows, pool_ids, pool_dists)}`` contract
-    ``_chunk_candidates`` produces — no fork pools, no COW traffic,
-    no per-chunk process spawn."""
+    ``_chunk_candidates`` produces."""
     from concurrent.futures import ThreadPoolExecutor
 
     from lab_1806_vec_db_spark.index import ckernel
@@ -378,51 +287,6 @@ def _c_chunk_candidates(
         rows = np.nonzero(levels >= L)[0]
         if rows.size:
             out[L] = (rows, ids3[rows, L], d3[rows, L])
-    return out
-
-
-def _forked_chunk_links(
-    g: "_Graph",
-    pd_all,
-    chunk: np.ndarray,
-    ef_c: int,
-    n: int,
-    workers: int,
-    metric: str,
-) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
-    """Run one chunk's candidate + forward-selection phases across a
-    fresh fork pool: chunk nodes are the parallel axis, each worker
-    beam-searches and link-selects its slice against the parent's
-    frozen graph (copy-on-write — no serialization of graph or vectors
-    in either direction). Returns {level: (chunk_pos, sel_id, sel_d)}
-    with rows ascending in chunk position."""
-    import multiprocessing as mp
-
-    global _BUILD_FORK_STATE
-    _BUILD_FORK_STATE = {
-        "links": g.links, "counts": g.counts, "entry": g.entry,
-        "max_level": g.max_level, "pd": pd_all, "chunk": chunk,
-        "levels": g.levels, "ef_c": ef_c, "n": n,
-        "m": g.M, "metric": metric,
-    }
-    w = min(workers, max(1, len(chunk) // 8))
-    bounds = np.linspace(0, len(chunk), w + 1).astype(int)
-    jobs = [(int(s), int(e)) for s, e in zip(bounds[:-1], bounds[1:]) if e > s]
-    with _cow_friendly_fork():
-        pool = mp.get_context("fork").Pool(len(jobs))
-    try:
-        parts = pool.map(_fork_candidates, jobs)
-    finally:
-        pool.terminate()
-    _BUILD_FORK_STATE = {}
-    out: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    for L in sorted({L for p in parts for L in p}):
-        pieces = [p[L] for p in parts if L in p]
-        pos = np.concatenate([pc[0] for pc in pieces])
-        sel_id = np.concatenate([pc[1] for pc in pieces], axis=0)
-        sel_d = np.concatenate([pc[2] for pc in pieces], axis=0)
-        order = np.argsort(pos, kind="stable")
-        out[L] = (pos[order], sel_id[order], sel_d[order])
     return out
 
 
@@ -495,18 +359,16 @@ class HNSWIndex:
         # (id(pq), aligned code matrix) — recomputed when the PQ table
         # changes or rows are added (the codes must cover every id)
         self._pq_cache: tuple | None = None  # (pq, pq.codes, aligned)
-        self._pool = None
-        self._pool_key = None
-        # pools are released deterministically when the index object is
-        # dropped (e.g. VecDB cache invalidation), not left to thread GC
-        # finalization: the worker threads pin the C kernel's
-        # thread-local scratch (~10 MB/thread at 500k rows) and a fork
-        # pool pins whole child processes. The finalizer closes over a
-        # mutable holder, never over self (that would make the index
-        # immortal); close_pool() keeps the holder in sync.
+        # the serving thread pool is released deterministically when
+        # the index object is dropped (e.g. VecDB cache invalidation),
+        # not left to thread GC finalization: its worker threads pin
+        # the C kernel's thread-local scratch (~10 MB/thread at 500k
+        # rows). The finalizer closes over a mutable holder, never over
+        # self (that would make the index immortal); close_pool() keeps
+        # the holder in sync.
         import weakref
 
-        self._pool_holder: dict = {"pool": None, "tpool": None}
+        self._pool_holder: dict = {"tpool": None}
         weakref.finalize(self, _release_pools, self._pool_holder)
         # flattened C-contiguous graph views for the compiled kernel
         # (ckernel.py); built lazily, invalidated by add_batch
@@ -536,18 +398,15 @@ class HNSWIndex:
         seed: int = 42,
         path: str | None = None,
         dtype=np.float64,
-        distributed: bool | None = None,
     ) -> "HNSWIndex":
         """``dtype=float32`` gives the reference's own serving precision
         (its vectors are f32) at half the memory traffic; float64 is the
-        oracle-stable default. ``distributed`` forces/disables the Spark
-        candidate phase (auto: on for large builds)."""
+        oracle-stable default."""
         # Arrow collect straight to flat numpy: zero per-row Python
         # objects on the driver — the vector column flattens in place
         # (functions/arrowvec.py) instead of materializing ~n ndarray
-        # rows through pandas. Keeps the heap fork-friendly for the
-        # build's COW worker pools AND removes the to_list pass that
-        # cost ~minutes of the 1M×960 build's untracked time.
+        # rows through pandas, which cost ~minutes of the 1M×960
+        # build's untracked time.
         from lab_1806_vec_db_spark.functions.arrowvec import vec_matrix
 
         tbl = df.select(id_col, vec_col).orderBy(id_col).toArrow()
@@ -561,10 +420,7 @@ class HNSWIndex:
             # add_batch's empty-graph guard and broke the first append)
             vecs = vecs.reshape(0)
         del tbl
-        graph = cls._build_graph(
-            vecs, metric, m, ef_construction, seed,
-            spark=df.sparkSession, distributed=distributed,
-        )
+        graph = cls._build_graph(vecs, metric, m, ef_construction, seed)
         obj = cls(ids, vecs, graph, metric, base=df, id_col=id_col, path=path,
                   ef_construction=ef_construction)
         obj.build_profile = dict(BUILD_PHASE)
@@ -579,8 +435,6 @@ class HNSWIndex:
         m: int,
         ef_c: int,
         seed: int,
-        spark: SparkSession | None = None,
-        distributed: bool | None = None,
     ) -> _Graph:
         n = vecs.shape[0]
         for _k in BUILD_PHASE:
@@ -593,32 +447,9 @@ class HNSWIndex:
             return g
         ef_c = max(int(ef_c), 2 * m)  # reference clamp (hnsw_index.rs:508)
         pd_all = ExactPairDist(vecs, vecs, metric)
-        # candidate-phase dispatch: on a local[*] master the fork pool
-        # already saturates every core with zero serialization, so the
-        # Spark stage (per-chunk job scheduling + graph broadcast +
-        # result pickle) only wins on a real multi-node cluster with
-        # enough per-chunk compute to amortize it (measured: the Spark
-        # path was 6× slower than the fork path at N=10k on local[32])
-        est_flops = float(n) * ef_c * 2 * m * vecs.shape[1]
-        is_local = True
-        if spark is not None:
-            is_local = spark.sparkContext.master.startswith("local")
-        use_spark = (
-            distributed
-            if distributed is not None
-            else (spark is not None and not is_local and n > 4000 and est_flops > 2e10)
+        HNSWIndex._insert_all(
+            g, vecs, metric, np.arange(n, dtype=np.int64), ef_c, pd_all
         )
-        bc_vecs = None
-        if use_spark and spark is not None:
-            bc_vecs = spark.sparkContext.broadcast(vecs)
-        try:
-            HNSWIndex._insert_all(
-                g, vecs, metric, np.arange(n, dtype=np.int64), ef_c, pd_all,
-                spark=spark if use_spark else None, bc_vecs=bc_vecs,
-            )
-        finally:
-            if bc_vecs is not None:
-                bc_vecs.destroy()
         return g
 
     @staticmethod
@@ -629,10 +460,11 @@ class HNSWIndex:
         nodes: np.ndarray,
         ef_c: int,
         pd_all: ExactPairDist,
-        spark: SparkSession | None = None,
-        bc_vecs=None,
     ) -> None:
-        """Chunked insert loop shared by build and incremental add."""
+        """Chunked insert loop shared by build and incremental add. The
+        candidate phase runs on the compiled kernel fanned over threads
+        when a toolchain is present, else on the serial numpy lockstep
+        kernel; both feed the same link phase."""
         from lab_1806_vec_db_spark.index import ckernel
 
         n = vecs.shape[0]
@@ -640,11 +472,21 @@ class HNSWIndex:
         total = len(nodes)
         # node-chunk cap: visited bitmaps (C × n) stay under budget
         mem_cap = max(32, _VISITED_BUDGET // max(n, 1))
-        use_c = spark is None and ckernel.available()
+        use_c = ckernel.available()
+        # SPARK_GRAFT_BUILD_WORKERS caps the candidate-phase thread
+        # fan-out — needed when several builds run concurrently in one
+        # machine's executor tasks (the sharded tier builds all
+        # sub-graphs at once; ceil(cpus/concurrent tasks) each)
+        workers = int(os.environ.get("SPARK_GRAFT_BUILD_WORKERS", "0")) \
+            or (os.cpu_count() or 1)
         if use_c:
             cvecs = np.ascontiguousarray(vecs)
             cx2 = np.einsum("ij,ij->i", cvecs, cvecs)
             cxn = np.sqrt(cx2) if metric == "cosine" else None
+        _log.debug("hnsw build candidates=%s workers=%d reason=%s",
+                   "c_threads" if use_c else "numpy",
+                   workers if use_c else 1,
+                   "toolchain" if use_c else "no_toolchain")
         while i < total:
             if g.entry < 0:
                 first = int(nodes[i])
@@ -662,125 +504,24 @@ class HNSWIndex:
             chunk = nodes[i : i + C]
             top_chunk = int(g.levels[chunk].max())
             g.ensure_level(max(top_chunk, g.max_level), n)
-            # SPARK_GRAFT_BUILD_WORKERS caps the candidate-phase thread
-            # fan-out — needed when several builds run concurrently in
-            # one machine's executor tasks (the sharded tier builds all
-            # sub-graphs at once; ceil(cpus/concurrent tasks) each)
-            workers = int(os.environ.get("SPARK_GRAFT_BUILD_WORKERS", "0")) \
-                or (os.cpu_count() or 1)
             t_c = time.perf_counter()
-            if spark is not None:
-                cands = HNSWIndex._spark_candidates(
-                    spark, bc_vecs, metric, g, chunk, ef_c, n
-                )
-                BUILD_PHASE["candidates"] += time.perf_counter() - t_c
-                HNSWIndex._link_chunk(g, vecs, metric, chunk, cands, pd_all)
-            elif use_c:
+            if use_c:
                 cands = _c_chunk_candidates(
                     g, cvecs, cx2, cxn, metric, chunk, ef_c, workers
                 )
-                BUILD_PHASE["candidates"] += time.perf_counter() - t_c
-                HNSWIndex._link_chunk(g, vecs, metric, chunk, cands, pd_all)
-            elif workers > 1 and C >= 4 * 8:
-                # fork path fuses candidates + select in the children
-                sels = _forked_chunk_links(
-                    g, pd_all, chunk, ef_c, n, workers, metric
-                )
-                BUILD_PHASE["candidates"] += time.perf_counter() - t_c
-                t_a = time.perf_counter()
-                HNSWIndex._apply_selected(g, metric, chunk, sels, pd_all)
-                BUILD_PHASE["apply"] += time.perf_counter() - t_a
             else:
                 cands = _chunk_candidates(
                     g.links, g.counts, g.entry, g.max_level, pd_all,
                     chunk, g.levels[chunk], ef_c, n,
                 )
-                BUILD_PHASE["candidates"] += time.perf_counter() - t_c
-                HNSWIndex._link_chunk(g, vecs, metric, chunk, cands, pd_all)
+            BUILD_PHASE["candidates"] += time.perf_counter() - t_c
+            HNSWIndex._link_chunk(g, vecs, metric, chunk, cands, pd_all)
             # entry-point update (hnsw_index.rs:449-456)
             for idx in chunk:
                 if int(g.levels[idx]) > g.max_level:
                     g.max_level = int(g.levels[idx])
                     g.entry = int(idx)
             i += C
-
-    @staticmethod
-    def _spark_candidates(
-        spark: SparkSession,
-        bc_vecs,
-        metric: str,
-        g: _Graph,
-        chunk: np.ndarray,
-        ef_c: int,
-        n_nodes: int,
-    ) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
-        """The chunk candidate phase as a Spark stage: broadcast the
-        frozen graph, fan the chunk nodes across executors, each task
-        runs the batched kernel on its slice (the Spark analogue of the
-        rayon par_iter at hnsw_index.rs:413-442)."""
-        bc_g = spark.sparkContext.broadcast(
-            (g.links, g.counts, g.levels, g.entry, g.max_level)
-        )
-        parts = max(1, min(len(chunk), spark.sparkContext.defaultParallelism))
-        cdf = spark.range(int(chunk[0]), int(chunk[-1]) + 1, 1, parts)
-        ef_w = int(ef_c)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            vecs_ = bc_vecs.value
-            links, counts, levels, entry, max_level = bc_g.value
-            pd_ = ExactPairDist(vecs_, vecs_, metric)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                node_ids = pdf["id"].to_numpy()
-                out = _chunk_candidates(
-                    links, counts, entry, max_level, pd_,
-                    node_ids, levels[node_ids], ef_c, n_nodes,
-                )
-                # fixed-width pools as raw byte blobs: one Arrow row per
-                # (node, level), decoded with frombuffer on the driver —
-                # no per-element Row/list conversion on either side
-                recs: dict[str, list] = {"node": [], "level": [], "pid": [], "pdist": []}
-                for L, (rows, pid, pdist) in out.items():
-                    w = pid.shape[1]
-                    if w < ef_w:
-                        pid = np.concatenate(
-                            [pid, np.full((pid.shape[0], ef_w - w), -1, dtype=np.int64)], axis=1)
-                        pdist = np.concatenate(
-                            [pdist, np.full((pdist.shape[0], ef_w - w), np.inf)], axis=1)
-                    pid = pid[:, :ef_w].astype(np.int64)
-                    pdist = pdist[:, :ef_w].astype(np.float64)
-                    for r in range(len(rows)):
-                        recs["node"].append(int(node_ids[rows[r]]))
-                        recs["level"].append(int(L))
-                        recs["pid"].append(pid[r].tobytes())
-                        recs["pdist"].append(pdist[r].tobytes())
-                if recs["node"]:
-                    yield pd.DataFrame(recs)
-
-        pdf = cdf.mapInPandas(
-            run, schema="node long, level int, pid binary, pdist binary"
-        ).toPandas()
-        bc_g.destroy()
-        # reshape into the driver format {level: (row_sel, pool_ids, pool_d)}
-        pos = {int(nid): r for r, nid in enumerate(chunk)}
-        out: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        nodes_np = pdf["node"].to_numpy()
-        levels_np = pdf["level"].to_numpy()
-        for L in np.unique(levels_np):
-            mask = levels_np == L
-            sel = np.asarray([pos[int(n)] for n in nodes_np[mask]], dtype=np.int64)
-            order = np.argsort(sel, kind="stable")
-            sel = sel[order]
-            rows_idx = np.nonzero(mask)[0][order]
-            pid = np.frombuffer(
-                b"".join(pdf["pid"].iloc[i] for i in rows_idx), dtype=np.int64
-            ).reshape(len(rows_idx), ef_w)
-            pdist = np.frombuffer(
-                b"".join(pdf["pdist"].iloc[i] for i in rows_idx), dtype=np.float64
-            ).reshape(len(rows_idx), ef_w)
-            out[int(L)] = (sel, pid, pdist)
-        return out
 
     @staticmethod
     def _link_chunk(
@@ -1086,7 +827,7 @@ class HNSWIndex:
     def _codes_for(self, pq) -> np.ndarray:
         """PQ codes aligned to this graph's id order (cached — they are
         query-independent; materializing them is a Spark action, so
-        callers must do this once before any thread/fork fan-out).
+        callers must do this once before any thread fan-out).
         Keyed by the pq OBJECT and its codes frame via ``is`` (strong
         refs — same identity contract as the serving-broadcast cache):
         an id()-keyed entry could serve stale codes after gc id reuse
@@ -1190,64 +931,23 @@ class HNSWIndex:
             adc = self.adc_for(pq, qmat)
         return self._kernel_search(qmat, k, ef, adc=adc, beam_width=beam_width)
 
-    # ---- fork-parallel driver serving (the rayon -t analogue) -------------
-
-    def _ensure_pool(self, pq, workers: int):
-        import multiprocessing as mp
-
-        # identity key with strong refs (same contract as _codes_for /
-        # the serving-broadcast cache): a recycled id() or an in-place
-        # pq.codes swap must NOT reuse a fork pool whose children hold
-        # the pre-swap aligned codes
-        key = (pq, None if pq is None else pq.codes, workers)
-        prev = self._pool_key
-        if (
-            self._pool is not None
-            and prev is not None
-            and prev[0] is key[0]
-            and prev[1] is key[1]
-            and prev[2] == workers
-        ):
-            return self._pool
-        # close_pool() also tears down any _tpool BEFORE the fork below:
-        # forking with live worker threads would copy their lock state
-        # (and pin their C scratch) into every child
-        self.close_pool()
-        if pq is not None:
-            # pre-warm the aligned-code cache BEFORE forking: children
-            # must never touch Spark (aligned_codes reads a DataFrame)
-            self.adc_for(pq, np.zeros((1, self.vecs.shape[1])))
-        global _FORK_STATE
-        _FORK_STATE = {"idx": self, "pq": pq}
-        with _cow_friendly_fork():
-            self._pool = mp.get_context("fork").Pool(workers)
-        self._pool_key = key
-        self._pool_holder["pool"] = self._pool
-        return self._pool
+    # ---- thread-parallel driver serving (the rayon -t analogue) -----------
 
     def drop_pq(self) -> None:
-        """Release the PQ-keyed serving caches. _codes_for/_ensure_pool
-        key by object identity with STRONG references (an id() key could
-        alias after gc), which pins a retired PQ table and its codes
-        DataFrame for the index's lifetime — long-lived indexes call
-        this after swapping/discarding a PQ to shed that state. The
-        fork pool is torn down too: its children hold the pre-swap
-        aligned codes."""
+        """Release the PQ-keyed serving cache. _codes_for keys by object
+        identity with STRONG references (an id() key could alias after
+        gc), which pins a retired PQ table and its codes DataFrame for
+        the index's lifetime — long-lived indexes call this after
+        swapping/discarding a PQ to shed that state."""
         self._pq_cache = None
-        self.close_pool()
 
     def close_pool(self) -> None:
-        if self._pool is not None:
-            self._pool.terminate()
-            self._pool = None
-            self._pool_key = None
         tp = getattr(self, "_tpool", None)
         if tp is not None:
             tp.shutdown(wait=True)
             self._tpool = None
         holder = getattr(self, "_pool_holder", None)
         if holder is not None:
-            holder["pool"] = None
             holder["tpool"] = None
 
     def _thread_pool(self, w: int):
@@ -1283,100 +983,86 @@ class HNSWIndex:
         beam_width: int = 4,
         steer: bool | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Batched driver-side search fanned over a persistent fork
-        pool: queries are the parallel axis, workers inherit the graph
-        copy-on-write (zero serialization of index state — only the
-        query slices and the k-bounded results cross process
-        boundaries). This is the in-memory serving regime the reference
-        benches (a rayon par_iter over queries); the Spark
+        """Batched driver-side search fanned over a persistent thread
+        pool: queries are the parallel axis, and the compiled kernel
+        releases the GIL, so threads share the graph and vectors with
+        zero serialization. This is the in-memory serving regime the
+        reference benches (a rayon par_iter over queries); the Spark
         ``search_batch`` path is the same kernel fanned over executor
-        tasks instead."""
+        tasks instead.
+
+        When the compiled kernel cannot serve the block (no toolchain,
+        or cosine with PQ steering) or the block is too small to split,
+        this is :meth:`search_many` — the serial path, same results."""
+        from lab_1806_vec_db_spark.index import ckernel
+
         qmat = np.asarray(qmat, dtype=self.vecs.dtype)
         pq = self._auto_steer_pq(pq, steer)
         w = int(workers or os.cpu_count() or 1)
-        if w <= 1 or qmat.shape[0] < 4 * w:
+        if not ckernel.available():
+            path, reason = "serial_numpy", "no_toolchain"
+        elif pq is not None and self.metric != "l2sqr":
+            path, reason = "serial_numpy", "cosine_steered"
+        elif w <= 1 or qmat.shape[0] < 4 * w:
+            path, reason = "serial_c", "small_block"
+        else:
+            path, reason = "c_threads", "toolchain"
+        _log.debug("hnsw parallel serve path=%s reason=%s queries=%d workers=%d",
+                   path, reason, qmat.shape[0], w if path == "c_threads" else 1)
+        if path != "c_threads":
             # steer already resolved — don't re-apply the auto rule
             return self.search_many(qmat, k, ef, pq=pq, steer=pq is not None,
                                     beam_width=beam_width)
-        from lab_1806_vec_db_spark.index import ckernel
+        # Spans are coarse (~2 per worker): per-span python setup
+        # holds the GIL, so fine slicing serializes. The ADC lookup
+        # tensor is built ONCE for the whole block (batched GEMM);
+        # spans take zero-copy slices of it — a per-span LUT build
+        # measured 4× slower end-to-end (320 np.stack/GEMM calls
+        # per span serialize on the GIL).
+        from lab_1806_vec_db_spark.index.pq import lut_span_builder
 
-        if ckernel.available() and (
-            pq is None or self.metric == "l2sqr"
-        ):
-            # compiled kernel releases the GIL → plain threads saturate
-            # every core with zero fork/COW traffic or serialization.
-            # Spans are coarse (~2 per worker): per-span python setup
-            # holds the GIL, so fine slicing serializes. The ADC lookup
-            # tensor is built ONCE for the whole block (batched GEMM);
-            # spans take zero-copy slices of it — a per-span LUT build
-            # measured 4× slower end-to-end (320 np.stack/GEMM calls
-            # per span serialize on the GIL).
-            from concurrent.futures import ThreadPoolExecutor
-
-            from lab_1806_vec_db_spark.index.pq import lut_span_builder
-
-            adc = None
-            lut_build = None
-            if pq is not None:
-                codes = self._codes_for(pq)
-                lut_build = lut_span_builder(
-                    pq.codebooks, pq.groups, pq.n_bits, self.metric,
-                    dtype=self.vecs.dtype,
-                )
-                if lut_build is None:
-                    # non-uniform regime: one serial batched LUT build
-                    adc = self.adc_for(pq, qmat)
-            self._c_views()  # build the cached views before fan-out
-            Q = qmat.shape[0]
-            k_ = int(k)
-            ef_ = max(int(ef) if ef is not None else 2 * k_, k_)
-            # ADC spans carry a per-span LUT build (GIL-held numpy set-up
-            # between the GIL-released GEMM/traversal), so one span per
-            # worker minimizes the serialized fraction — measured 38.9 ms
-            # vs 54.2 ms for 2/worker at Q=1000. The exact path has no
-            # per-span set-up and is bandwidth-bound; 2/worker balances.
-            nspans = w if pq is not None else 2 * w
-            bounds = np.linspace(0, Q, nspans + 1).astype(int)
-            spans = [(s, e) for s, e in zip(bounds[:-1], bounds[1:]) if e > s]
-            lut3 = (adc.lut_flat.reshape(Q, adc.m, adc.ksub)
-                    if adc is not None else None)
-
-            def run_span(span):
-                s, e = span
-                sub = None
-                if lut_build is not None:
-                    # GEMM + layout copy run here, GIL-released, so the
-                    # LUT cost spreads across the pool
-                    sub = ADCPairDist(codes, lut_build(qmat[s:e]), None, None)
-                elif adc is not None:
-                    sub = ADCPairDist(adc.codes, lut3[s:e], None, None)
-                return self._c_search(qmat[s:e], k_, ef_, sub)
-
-            parts = list(self._thread_pool(w).map(run_span, spans))
-            return (
-                np.concatenate([p[0] for p in parts], axis=0),
-                np.concatenate([p[1] for p in parts], axis=0),
+        adc = None
+        lut_build = None
+        if pq is not None:
+            codes = self._codes_for(pq)
+            lut_build = lut_span_builder(
+                pq.codebooks, pq.groups, pq.n_bits, self.metric,
+                dtype=self.vecs.dtype,
             )
-        pool = self._ensure_pool(pq, w)
-        # one big slice per worker (small slices lose the lockstep-wave
-        # amortization), but deal queries round-robin: traversal cost
-        # correlates between neighboring queries, and with one job per
-        # worker the wall time is the slowest slice — interleaving evens
-        # the deal so slice costs concentrate around the mean
+            if lut_build is None:
+                # non-uniform regime: one serial batched LUT build
+                adc = self.adc_for(pq, qmat)
+        self._c_views()  # build the cached views before fan-out
         Q = qmat.shape[0]
-        order = np.argsort(np.arange(Q) % w, kind="stable")
-        bounds = np.linspace(0, Q, w + 1).astype(int)
-        jobs = [
-            (qmat[order[s:e]], k, ef, pq is not None, beam_width)
-            for s, e in zip(bounds[:-1], bounds[1:])
-            if e > s
-        ]
-        parts = pool.map(_fork_search, jobs, chunksize=1)
-        inv = np.empty(Q, dtype=np.int64)
-        inv[order] = np.arange(Q)
-        out_id = np.concatenate([p[0] for p in parts], axis=0)[inv]
-        out_d = np.concatenate([p[1] for p in parts], axis=0)[inv]
-        return out_id, out_d
+        k_ = int(k)
+        ef_ = max(int(ef) if ef is not None else 2 * k_, k_)
+        # ADC spans carry a per-span LUT build (GIL-held numpy set-up
+        # between the GIL-released GEMM/traversal), so one span per
+        # worker minimizes the serialized fraction — measured 38.9 ms
+        # vs 54.2 ms for 2/worker at Q=1000. The exact path has no
+        # per-span set-up and is bandwidth-bound; 2/worker balances.
+        nspans = w if pq is not None else 2 * w
+        bounds = np.linspace(0, Q, nspans + 1).astype(int)
+        spans = [(s, e) for s, e in zip(bounds[:-1], bounds[1:]) if e > s]
+        lut3 = (adc.lut_flat.reshape(Q, adc.m, adc.ksub)
+                if adc is not None else None)
+
+        def run_span(span):
+            s, e = span
+            sub = None
+            if lut_build is not None:
+                # GEMM + layout copy run here, GIL-released, so the
+                # LUT cost spreads across the pool
+                sub = ADCPairDist(codes, lut_build(qmat[s:e]), None, None)
+            elif adc is not None:
+                sub = ADCPairDist(adc.codes, lut3[s:e], None, None)
+            return self._c_search(qmat[s:e], k_, ef_, sub)
+
+        parts = list(self._thread_pool(w).map(run_span, spans))
+        return (
+            np.concatenate([p[0] for p in parts], axis=0),
+            np.concatenate([p[1] for p in parts], axis=0),
+        )
 
     def search(
         self,
@@ -1793,7 +1479,6 @@ class HNSWIndex:
         self._pq_cache = None  # aligned codes no longer cover every id
         self._c_state = None  # flattened views hold the pre-add graph
         self._destroy_bc()  # the serving broadcast holds the pre-add graph
-        self.close_pool()  # forked workers hold the pre-add graph
         self.dirty = True
 
     def _destroy_bc(self) -> None:

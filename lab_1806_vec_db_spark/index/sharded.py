@@ -158,7 +158,7 @@ class ShardedHNSWIndex:
             order = np.argsort(ids, kind="stable")  # deterministic insert order
             ids = ids[order]
             vecs = np.asarray(pdf[vcol].to_list(), dtype=np.float64)[order]
-            graph = HNSWIndex._build_graph(vecs, met, mm, efc, sd + sid, spark=None)
+            graph = HNSWIndex._build_graph(vecs, met, mm, efc, sd + sid)
             shard = HNSWIndex(ids, vecs, graph, met, base=None, id_col=icol,
                               ef_construction=efc)
             shard.save(_shard_dir(p, sid))
@@ -429,7 +429,7 @@ class ShardedHNSWIndex:
                 # empty shard: materialize a fresh sub-graph for it
                 graph = HNSWIndex._build_graph(
                     new_vecs[mask], self.metric, self.m, self.ef_construction,
-                    seed + sid, spark=None)
+                    seed + sid)
                 shard = HNSWIndex(new_ids[mask], new_vecs[mask], graph,
                                   self.metric, base=None, id_col=self.id_col,
                                   ef_construction=self.ef_construction)

@@ -3,6 +3,8 @@ exactly what the numpy lockstep kernel returns (same pool semantics,
 same (dist, id) tie order, same rounding contract) on every supported
 configuration — and fall back cleanly when disabled."""
 
+import logging
+
 import numpy as np
 import pytest
 
@@ -33,6 +35,11 @@ def _both(idx, qmat, k, ef, adc=None):
     finally:
         ckernel._lib, ckernel._tried = ckernel_state
     return (cid, cd), (nid, nd)
+
+
+def _gate_lines(caplog, prefix):
+    return [r.getMessage() for r in caplog.records
+            if r.getMessage().startswith(prefix)]
 
 
 @pytest.mark.parametrize("metric", ["l2sqr", "cosine"])
@@ -76,8 +83,12 @@ def test_single_query_and_threaded_match_batch(emb):
     assert np.allclose(td, bd)
 
 
-def test_threaded_adc_matches_batch(emb):
-    idx = HNSWIndex.build(emb, metric="l2sqr", vec_col="embedding",
+@pytest.mark.parametrize("metric", ["l2sqr", "cosine"])
+def test_threaded_adc_matches_batch(emb, metric, caplog):
+    """Steered parallel serve == steered serial serve. l2sqr fans the
+    compiled steered kernel over threads; cosine has no compiled
+    steered kernel, so the parallel call serves serially on numpy."""
+    idx = HNSWIndex.build(emb, metric=metric, vec_col="embedding",
                           id_col="vec_id", m=8, ef_construction=60, seed=11)
     pq = PQTable.train(emb, dim=64, m=16, n_bits=4, train_proportion=0.5,
                        vec_col="embedding", id_col="vec_id", seed=5)
@@ -85,10 +96,14 @@ def test_threaded_adc_matches_batch(emb):
     rng = np.random.default_rng(9)
     qmat = rng.normal(size=(64, 64))
     bid, bd = idx.search_many(qmat, 10, 150, pq=pq, steer=True)
+    caplog.set_level(logging.DEBUG, logger="lab_1806_vec_db_spark")
     tid, td = idx.search_many_parallel(qmat, 10, 150, pq=pq, workers=8,
                                        steer=True)
     assert np.array_equal(tid, bid)
     assert np.allclose(td, bd)
+    want = ("path=c_threads reason=toolchain" if metric == "l2sqr"
+            else "path=serial_numpy reason=cosine_steered")
+    assert any(want in m for m in _gate_lines(caplog, "hnsw parallel serve "))
 
 
 def test_adc_block_matches_numpy_reference():
@@ -229,7 +244,7 @@ def test_batch_fanout_reuses_persistent_thread_pool(spark):
         pytest.skip("no C toolchain")
     rng = np.random.default_rng(5)
     vecs = rng.standard_normal((512, 16)).astype(np.float32)
-    graph = HNSWIndex._build_graph(vecs, "l2sqr", 8, 32, 42, spark=None)
+    graph = HNSWIndex._build_graph(vecs, "l2sqr", 8, 32, 42)
     idx = HNSWIndex(np.arange(512, dtype=np.int64), vecs, graph, "l2sqr",
                     base=None, id_col="id")
     q = rng.standard_normal((64, 16)).astype(np.float32)
@@ -248,6 +263,60 @@ def test_batch_fanout_reuses_persistent_thread_pool(spark):
     assert (ids[:, 0] == np.arange(64)).all()
     idx.close_pool()
     assert idx._tpool is None
+
+
+@pytest.mark.parametrize("metric", ["l2sqr", "cosine"])
+def test_build_gate_forced_both_ways_exact(metric, monkeypatch, caplog):
+    """The build's one gate (compiled candidates over threads vs the
+    serial numpy lockstep kernel), forced both ways on the same data:
+    at ef >= n each graph, served by its own kernel, returns exact
+    numpy top-k; on the numpy side the parallel serve is the serial
+    serve. Both sides log their build and serve decisions."""
+    from lab_1806_vec_db_spark.operators.knn import np_round_half_up
+
+    rng = np.random.default_rng(21)
+    n, d, k = 400, 16, 10
+    vecs = rng.standard_normal((n, d))
+    qmat = rng.standard_normal((32, d))
+    ids = np.arange(n, dtype=np.int64)
+    if metric == "l2sqr":
+        exact = ((qmat[:, None, :] - vecs[None, :, :]) ** 2).sum(-1)
+    else:
+        exact = 1.0 - (qmat @ vecs.T) / (
+            np.linalg.norm(qmat, axis=1)[:, None]
+            * np.linalg.norm(vecs, axis=1)[None, :])
+    want_id = np.lexsort((np.broadcast_to(ids, exact.shape), exact), axis=1)[:, :k]
+    want_d = np_round_half_up(np.take_along_axis(exact, want_id, axis=1))
+
+    def build_and_serve():
+        caplog.clear()
+        graph = HNSWIndex._build_graph(vecs, metric, 8, 64, 42)
+        idx = HNSWIndex(ids, vecs, graph, metric, base=None, id_col="id")
+        got = idx.search_many(qmat, k, n)
+        par = idx.search_many_parallel(qmat, k, n, workers=4)
+        idx.close_pool()
+        return (got, par, _gate_lines(caplog, "hnsw build "),
+                _gate_lines(caplog, "hnsw parallel serve "))
+
+    caplog.set_level(logging.DEBUG, logger="lab_1806_vec_db_spark")
+    (c_id, c_d), (cp_id, cp_d), c_build, c_serve = build_and_serve()
+    monkeypatch.setattr(ckernel, "_lib", None)  # force the numpy side
+    monkeypatch.setattr(ckernel, "_tried", True)
+    assert not ckernel.available()
+    (n_id, n_d), (np_id, np_d), n_build, n_serve = build_and_serve()
+
+    for got_id, got_d in ((c_id, c_d), (n_id, n_d), (cp_id, cp_d), (np_id, np_d)):
+        assert np.array_equal(got_id, want_id)
+        # one 4-dp grid step: the kernels' distance formulas may land a
+        # knife-edge value on the other side of the rounding boundary
+        assert np.allclose(got_d, want_d, rtol=0, atol=1e-4)
+    assert np.array_equal(c_id, n_id) and np.allclose(c_d, n_d)
+    assert len(c_build) == 1 and "candidates=c_threads" in c_build[0]
+    assert "reason=toolchain" in c_build[0]
+    assert n_build == ["hnsw build candidates=numpy workers=1 reason=no_toolchain"]
+    assert len(c_serve) == 1 and "path=c_threads reason=toolchain" in c_serve[0]
+    assert len(n_serve) == 1
+    assert "path=serial_numpy reason=no_toolchain" in n_serve[0]
 
 
 @pytest.mark.parametrize("metric", ["l2sqr", "cosine"])

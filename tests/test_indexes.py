@@ -583,13 +583,14 @@ def test_hnsw_serving_broadcast_pq_identity(emb, hnsw, pq16):
 
 
 def test_hnsw_parallel_pool_and_beam_width_exact(emb, hnsw):
-    # fork-pool serving and multi-expansion (beam_width>1) must preserve
-    # the exactness contract: at ef >= n both equal the serial kernel
+    # the parallel serve (compiled kernel over threads, or the serial
+    # numpy kernel without a toolchain) and multi-expansion
+    # (beam_width>1) must preserve the exactness contract: at ef >= n
+    # both equal the serial kernel
     qrows = emb.filter(F.col("vec_id") < 64).orderBy("vec_id").collect()
     qmat = np.asarray([r["embedding"] for r in qrows], dtype=np.float64)
     sid, sd = hnsw.search_many(qmat, 10, ef=600)
     pid, pdist = hnsw.search_many_parallel(qmat, 10, ef=600, workers=4, beam_width=4)
-    hnsw.close_pool()
     assert np.array_equal(sid, pid)
     assert np.allclose(sd, pdist)
 
@@ -1108,9 +1109,9 @@ def test_hnsw_batch_steered_recall_floor(emb, hnsw, pq16):
 
 
 def test_hnsw_drop_pq_releases_caches(emb, hnsw, pq16):
-    """drop_pq() sheds the identity-keyed strong references (_pq_cache,
-    fork-pool key) so a long-lived index doesn't pin a retired PQ table
-    and its codes DataFrame (round-12 advisory)."""
+    """drop_pq() sheds the identity-keyed strong reference (_pq_cache)
+    so a long-lived index doesn't pin a retired PQ table and its codes
+    DataFrame (round-12 advisory)."""
     import numpy as np
 
     qmat = np.asarray(
@@ -1121,7 +1122,6 @@ def test_hnsw_drop_pq_releases_caches(emb, hnsw, pq16):
     assert hnsw._pq_cache is not None and hnsw._pq_cache[0] is pq16
     hnsw.drop_pq()
     assert hnsw._pq_cache is None
-    assert hnsw._pool is None and hnsw._pool_key is None
     # the index still serves after the release
     ids, _ = hnsw.search_np(qmat[0], 3, ef=32)
     assert ids.size == 3
