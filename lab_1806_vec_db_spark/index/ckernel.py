@@ -95,31 +95,68 @@ static pair_t heap_pop(pair_t *h, long *sz, int is_max) {
     return top;
 }
 
-/* (dist, id, tile-row) triple for the fused ADC top-k tile kernel */
+/* (dist, id, tile-row) triple of the per-query top-k tile kernels */
 typedef struct { double d; long id; long row; } trip_t;
 
-static int trip_cmp(const void *a, const void *b) {
-    const trip_t *x = (const trip_t *)a, *y = (const trip_t *)b;
-    if (x->d < y->d) return -1;
-    if (x->d > y->d) return 1;
-    if (x->id < y->id) return -1;
-    if (x->id > y->id) return 1;
+/* The (d, id) order of np.lexsort((ids, d)): ascending d, ties by id,
+ * NaN after every number (NaNs among themselves by id). A plain `<`
+ * would let a NaN that entered the heap during the fill block every
+ * later replacement. */
+static int trip_lt(const trip_t *x, const trip_t *y) {
+    if (x->d < y->d) return 1;
+    if (x->d == y->d) return x->id < y->id;
+    if (isnan(y->d)) return !isnan(x->d) || x->id < y->id;
     return 0;
 }
 
-static int trip_lt(const trip_t *x, const trip_t *y) {
-    return x->d < y->d || (x->d == y->d && x->id < y->id);
+static int trip_cmp(const void *a, const void *b) {
+    const trip_t *x = (const trip_t *)a, *y = (const trip_t *)b;
+    return trip_lt(x, y) ? -1 : (trip_lt(y, x) ? 1 : 0);
+}
+
+/* offer t to the bounded max-heap of the kk best triples (root = worst kept) */
+static void topk_offer(trip_t *heap, long *hs, int kk, trip_t t) {
+    if (*hs < kk) {
+        long i = (*hs)++;
+        heap[i] = t;
+        while (i > 0) {
+            long p = (i - 1) / 2;
+            if (!trip_lt(&heap[p], &heap[i])) break;
+            trip_t tmp = heap[p]; heap[p] = heap[i]; heap[i] = tmp;
+            i = p;
+        }
+    } else if (kk > 0 && trip_lt(&t, &heap[0])) {
+        heap[0] = t;
+        long i = 0;
+        for (;;) {
+            long l = 2 * i + 1, r = l + 1, mx = i;
+            if (l < *hs && trip_lt(&heap[mx], &heap[l])) mx = l;
+            if (r < *hs && trip_lt(&heap[mx], &heap[r])) mx = r;
+            if (mx == i) break;
+            trip_t tmp = heap[mx]; heap[mx] = heap[i]; heap[i] = tmp;
+            i = mx;
+        }
+    }
+}
+
+/* sort the kept triples and write one query's kk outputs, padded with
+ * id = row = -1, d = HUGE_VAL past the kept count; out_row may be NULL */
+static void topk_emit(trip_t *heap, long hs, int kk,
+                      long *oi, long *orw, double *od) {
+    qsort(heap, (size_t)hs, sizeof(trip_t), trip_cmp);
+    for (long i = 0; i < kk; i++) {
+        int kept = i < hs;
+        oi[i] = kept ? heap[i].id : -1;
+        od[i] = kept ? heap[i].d : HUGE_VAL;
+        if (orw) orw[i] = kept ? heap[i].row : -1;
+    }
 }
 
 /*
- * Per-query top-k over a dense precomputed distance tile (round-14):
- * the exact-scan batch paths (operators/knn.py::knn_batch, index/ivf)
- * previously selected their per-task top-k with a full 2-key
- * numpy lexsort over the (rows x queries) tile — O(n log n) per query
- * and 134 ms of a 140 ms task at bench shape (the GEMM itself is
- * ~2 ms). This is the same bounded max-heap by (rounded d, id) the
- * fused ADC kernel uses — BIT-IDENTICAL kept set and order to
- * np_round_half_up + np.lexsort((ids, d))[:k] — one GIL-released call.
+ * Per-query top-k over a dense precomputed distance tile: the bounded
+ * max-heap by (optionally rounded d, id) — the kept set and order of
+ * np_round_half_up + np.lexsort((ids, d))[:kk] — in one GIL-released
+ * call (operators/knn.py::topk_cut is the only caller).
  *
  * dt: the (query s, candidate u) distance lives at dt[s*sq + u*su] —
  * (sq=n, su=1) for a C-contiguous (S x n) tile, (sq=1, su=S) for the
@@ -127,17 +164,17 @@ static int trip_lt(const trip_t *x, const trip_t *y) {
  * a column streams n cache lines that consecutive queries re-hit, so
  * no transpose copy is ever paid).
  * ids: per-query candidate ids; ids_stride 0 shares one (n,) vector
- * across queries, n gives each query its own row (the cross-batch
- * merge path). do_round applies floor(v*1e4+0.5)/1e4 — the exact
- * np_round_half_up operation; pass 0 when dt is already rounded.
- * Outputs (S x kk), padded id = -1 / d = HUGE_VAL past n.
+ * across queries, n gives each query its own row. do_round applies
+ * floor(v*1e4+0.5)/1e4 — the exact np_round_half_up operation.
+ * Outputs (S x kk) ids, tile rows (out_row may be NULL) and distances,
+ * padded id = row = -1 / d = HUGE_VAL past n.
  */
 int dense_topk(
     const double *dt, long sq, long su, const long *ids, long ids_stride,
     long n, long S, int kk, int do_round,
-    long *out_id, double *out_d)
+    long *out_id, long *out_row, double *out_d)
 {
-    pair_t *heap = (pair_t *)malloc((size_t)(kk > 0 ? kk : 1) * sizeof(pair_t));
+    trip_t *heap = (trip_t *)malloc((size_t)(kk > 0 ? kk : 1) * sizeof(trip_t));
     if (!heap) return 1;
     for (long s = 0; s < S; s++) {
         const double *row = dt + (size_t)s * sq;
@@ -146,44 +183,12 @@ int dense_topk(
         for (long u = 0; u < n; u++) {
             double v = row[(size_t)u * su];
             if (do_round) v = floor(v * 10000.0 + 0.5) / 10000.0;
-            pair_t t = { v, rid[u] };
-            if (hs < kk) {
-                long i = hs++;
-                heap[i] = t;
-                while (i > 0) {
-                    long p = (i - 1) / 2;
-                    pair_t *hp = &heap[p], *hi = &heap[i];
-                    if (!(hp->d < hi->d || (hp->d == hi->d && hp->id < hi->id)))
-                        break;
-                    pair_t tmp = *hp; *hp = *hi; *hi = tmp;
-                    i = p;
-                }
-            } else if (kk > 0 &&
-                       (t.d < heap[0].d ||
-                        (t.d == heap[0].d && t.id < heap[0].id))) {
-                heap[0] = t;
-                long i = 0;
-                for (;;) {
-                    long l = 2 * i + 1, r = l + 1, mx = i;
-                    if (l < hs && (heap[mx].d < heap[l].d ||
-                        (heap[mx].d == heap[l].d && heap[mx].id < heap[l].id)))
-                        mx = l;
-                    if (r < hs && (heap[mx].d < heap[r].d ||
-                        (heap[mx].d == heap[r].d && heap[mx].id < heap[r].id)))
-                        mx = r;
-                    if (mx == i) break;
-                    pair_t tmp = heap[mx]; heap[mx] = heap[i]; heap[i] = tmp;
-                    i = mx;
-                }
-            }
+            trip_t t = { v, rid[u], u };
+            topk_offer(heap, &hs, kk, t);
         }
-        qsort(heap, (size_t)hs, sizeof(pair_t), pair_cmp);
-        long *oi = out_id + (size_t)s * kk;
-        double *od = out_d + (size_t)s * kk;
-        for (long i = 0; i < kk; i++) {
-            if (i < hs) { oi[i] = heap[i].id; od[i] = heap[i].d; }
-            else { oi[i] = -1; od[i] = HUGE_VAL; }
-        }
+        topk_emit(heap, hs, kk, out_id + (size_t)s * kk,
+                  out_row ? out_row + (size_t)s * kk : NULL,
+                  out_d + (size_t)s * kk);
     }
     free(heap);
     return 0;
@@ -624,20 +629,20 @@ int adc_block_SUF(
 }
 
 /*
- * Block ADC + fused per-query top-k (the IVF+PQ driver-local tile,
- * index/ivfpq.py::_search_local): for each selected query, score the
- * tile, round HALF-UP to 4 decimals (floor(x*1e4+0.5)/1e4 — the exact
- * operation np_round_half_up performs, so the gate is bit-identical to
- * the numpy/Spark paths), and keep the kk smallest by (rounded, id)
- * with a bounded max-heap. Everything the Python side previously did
- * per tile under the GIL (round ufunc, 2-key lexsort, take_along_axis)
- * happens inside this one GIL-released call — the thread pool actually
- * scales. Outputs are padded with id = -1 past the tile's row count.
+ * Block ADC + fused per-query top-k (index/pq.py::adc_tile, the PQ and
+ * IVF+PQ scans and the IVF+PQ driver mirror): for each selected query,
+ * score the tile, optionally round HALF-UP to 4 decimals
+ * (floor(x*1e4+0.5)/1e4 — the exact operation np_round_half_up
+ * performs), and keep the kk smallest by (score, id) with the bounded
+ * max-heap of dense_topk. Everything the Python side would do per tile
+ * under the GIL (round ufunc, 2-key lexsort, take_along_axis) happens
+ * inside this one GIL-released call, so a thread pool actually scales.
+ * Outputs are padded with id = row = -1 past the tile's row count.
  */
 int adc_topk_SUF(
     const unsigned char *codes, const long *ids, long n, int m, int ksub,
     const VT *lut, const long *sel, long S,
-    int kk,
+    int kk, int do_round,
     long *out_id, long *out_row, double *out_d)
 {
     trip_t *heap = (trip_t *)malloc((size_t)(kk > 0 ? kk : 1) * sizeof(trip_t));
@@ -647,40 +652,12 @@ int adc_topk_SUF(
         long hs = 0;
         for (long u = 0; u < n; u++) {
             double v = adc_SUF(codes, lut_q, m, ksub, u);
-            v = floor(v * 10000.0 + 0.5) / 10000.0;
+            if (do_round) v = floor(v * 10000.0 + 0.5) / 10000.0;
             trip_t t = { v, ids[u], u };
-            if (hs < kk) {
-                /* sift-up into the max-heap (root = worst kept) */
-                long i = hs++;
-                heap[i] = t;
-                while (i > 0) {
-                    long p = (i - 1) / 2;
-                    if (!trip_lt(&heap[p], &heap[i])) break;
-                    trip_t tmp = heap[p]; heap[p] = heap[i]; heap[i] = tmp;
-                    i = p;
-                }
-            } else if (kk > 0 && trip_lt(&t, &heap[0])) {
-                /* replace root, sift-down */
-                heap[0] = t;
-                long i = 0;
-                for (;;) {
-                    long l = 2 * i + 1, r = l + 1, mx = i;
-                    if (l < hs && trip_lt(&heap[mx], &heap[l])) mx = l;
-                    if (r < hs && trip_lt(&heap[mx], &heap[r])) mx = r;
-                    if (mx == i) break;
-                    trip_t tmp = heap[mx]; heap[mx] = heap[i]; heap[i] = tmp;
-                    i = mx;
-                }
-            }
+            topk_offer(heap, &hs, kk, t);
         }
-        qsort(heap, (size_t)hs, sizeof(trip_t), trip_cmp);
-        long *oi = out_id + (size_t)s * kk;
-        long *orw = out_row + (size_t)s * kk;
-        double *od = out_d + (size_t)s * kk;
-        for (long i = 0; i < kk; i++) {
-            if (i < hs) { oi[i] = heap[i].id; orw[i] = heap[i].row; od[i] = heap[i].d; }
-            else { oi[i] = -1; orw[i] = -1; od[i] = HUGE_VAL; }
-        }
+        topk_emit(heap, hs, kk, out_id + (size_t)s * kk,
+                  out_row + (size_t)s * kk, out_d + (size_t)s * kk);
     }
     free(heap);
     return 0;
@@ -921,7 +898,7 @@ def _bind(lib: ctypes.CDLL) -> None:
         at.argtypes = [
             ctypes.c_char_p, lp, ctypes.c_long, ctypes.c_int, ctypes.c_int,  # codes, ids, n, m, ksub
             vp, lp, ctypes.c_long,                                           # lut, sel, S
-            ctypes.c_int,                                                    # kk
+            ctypes.c_int, ctypes.c_int,                                      # kk, do_round
             lp, lp, dp,                                                      # out_id, out_row, out_d
         ]
         at.restype = ctypes.c_int
@@ -948,7 +925,7 @@ def _bind(lib: ctypes.CDLL) -> None:
         lp, ctypes.c_long,                     # ids, ids_stride
         ctypes.c_long, ctypes.c_long,          # n, S
         ctypes.c_int, ctypes.c_int,            # kk, do_round
-        lp, dp,                                # out_id, out_d
+        lp, lp, dp,                            # out_id, out_row, out_d
     ]
     dt.restype = ctypes.c_int
 
@@ -1217,15 +1194,16 @@ def adc_topk(
     lut: np.ndarray,
     sel: np.ndarray | None,
     kk: int,
+    do_round: bool,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Fused tile kernel: ADC lookup-sums + 4-dp half-up rounding +
-    per-query top-``kk`` by (rounded, id) — one GIL-released call.
-    ``codes`` (n × m) uint8 unpacked, ``ids`` (n,) int64 (tie-break
-    ids), ``lut`` (Q × m × ksub) f32/f64 contiguous, ``sel`` (S,) int64
-    query rows. Returns (ids, tile_rows, rounded_d), each (S × kk),
-    padded with -1 / inf past the tile's row count. l2sqr-shaped sums
-    only (cosine needs the normalization pass — callers use adc_block
-    there)."""
+    """Fused tile kernel: ADC lookup-sums (4-dp half-up rounded with
+    ``do_round``) + per-query top-``kk`` by (score, id) — one
+    GIL-released call. ``codes`` (n × m) uint8 unpacked, ``ids`` (n,)
+    int64 (tie-break ids), ``lut`` (Q × m × ksub) f32/f64 contiguous,
+    ``sel`` (S,) int64 query rows. Returns (ids, tile_rows, d), each
+    (S × kk), padded with -1 / inf past the tile's row count.
+    l2sqr-shaped sums only (cosine needs the normalization pass —
+    callers use adc_block there)."""
     lib = get_lib()
     assert lib is not None
     n, m = codes.shape
@@ -1245,7 +1223,7 @@ def adc_topk(
         _ptr(ids, ctypes.c_long), n, m, ksub,
         _ptr(lut, vt),
         None if sel is None else _ptr(sel, ctypes.c_long),
-        S, int(kk),
+        S, int(kk), 1 if do_round else 0,
         _ptr(out_id, ctypes.c_long), _ptr(out_row, ctypes.c_long),
         _ptr(out_d, ctypes.c_double),
     )
@@ -1293,16 +1271,17 @@ def dense_topk(
     kk: int,
     do_round: bool,
     queries_axis: int = 0,
-) -> tuple[np.ndarray, np.ndarray]:
+    return_rows: bool = False,
+) -> tuple[np.ndarray, ...]:
     """Compiled per-query top-``kk`` over a dense f64 distance tile by
     (optionally 4-dp-rounded, id) — the exact kept set and order of
-    ``np_round_half_up`` + ``np.lexsort((ids, d))[:kk]``, one
+    ``np_round_half_up`` + ``np.lexsort((ids, d))[:kk]``, NaN last, one
     GIL-released call. ``dt`` is (S × n) with ``queries_axis=0`` or the
     scan GEMM's natural (n × S) with ``queries_axis=1`` — the kernel
     strides over either layout, so no transpose copy is ever paid.
-    ``ids`` is (n,) shared across queries or (S × n) per query (the
-    cross-batch merge form). Returns (ids, d) each (S × kk), padded
-    -1 / inf past the tile's row count."""
+    ``ids`` is (n,) shared across queries or (S × n) per query.
+    Returns (ids, d) each (S × kk), padded -1 / inf past the tile's row
+    count, plus the kept tile rows (padded -1) with ``return_rows``."""
     lib = get_lib()
     assert lib is not None
     if dt.dtype != np.float64:
@@ -1318,15 +1297,17 @@ def dense_topk(
     ids = np.ascontiguousarray(ids, dtype=np.int64)
     stride = 0 if ids.ndim == 1 else n
     out_id = np.empty((S, kk), dtype=np.int64)
+    out_row = np.empty((S, kk), dtype=np.int64) if return_rows else None
     out_d = np.empty((S, kk), dtype=np.float64)
     rc = lib.dense_topk(
         _ptr(dt, ctypes.c_double), sq, su,
         _ptr(ids, ctypes.c_long), stride,
         n, S, int(kk), 1 if do_round else 0,
-        _ptr(out_id, ctypes.c_long), _ptr(out_d, ctypes.c_double),
+        _ptr(out_id, ctypes.c_long), _ptr(out_row, ctypes.c_long),
+        _ptr(out_d, ctypes.c_double),
     )
     assert rc == 0
-    return out_id, out_d
+    return (out_id, out_d) if out_row is None else (out_id, out_d, out_row)
 
 
 def adc_lut(qspan: np.ndarray, cbs: np.ndarray) -> np.ndarray:

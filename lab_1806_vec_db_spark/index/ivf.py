@@ -17,11 +17,13 @@ Spark mapping — the inverted list IS the partition layout:
   the difference between reading 100 TB and reading n/k of it.
 - centroids are tiny (k × dim) and live driver-side / broadcast,
   exactly like the reference's in-memory centroid VecSet.
-- batch search: explode each query into its n_probes (query,
-  cluster_id) probe rows, broadcast-join against the clustered base on
-  ``cluster_id`` — base rows are scored only for the queries that probe
-  their cluster, no all-pairs blow-up, and the only shuffle is the
-  k-bounded per-query top-k window.
+- batch search: route each query to its n_probes clusters on the
+  driver and broadcast the (cluster → probing queries) map; the scan
+  of the probed clusters scores a base row only for the queries that
+  probe its cluster (no all-pairs blow-up), cuts each (cluster run ×
+  probing queries) tile with ``operators.knn.topk_cut`` into the task's
+  ``TopkAccumulator``, and the only wide step is the k-bounded global
+  cut (``merge_topk``).
 """
 
 from __future__ import annotations
@@ -31,8 +33,7 @@ import os
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.index.kmeans import (
@@ -41,12 +42,14 @@ from lab_1806_vec_db_spark.index.kmeans import (
     fit_kmeans,
     sample_rows,
 )
+from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.operators.knn import (
+    TopkAccumulator,
     collect_query_block,
     empty_topk,
     merge_topk,
-    np_round_half_up,
     round_dist,
+    topk_cut,
 )
 from lab_1806_vec_db_spark.functions.distance import dist_expr
 
@@ -276,6 +279,7 @@ class IVFIndex:
         vec_col, id_col = self.vec_col, self.id_col
         k_ = int(k)
         cdt = compute_dtype
+        cap = knn_ops.ACC_CAP_ROWS
 
         def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
             from lab_1806_vec_db_spark.functions.arrowvec import (
@@ -283,34 +287,9 @@ class IVFIndex:
                 result_batch,
                 vec_matrix,
             )
-            from lab_1806_vec_db_spark.index import ckernel
-            from lab_1806_vec_db_spark.operators.knn import local_topk_grouped
 
             bqids, bq, bclusters, metric = bc.value
-            use_c = ckernel.available()
-            out_schema = knn_schema(id_col)
-            # task-level candidate accumulator: a cluster arrives as
-            # ~10k-row Arrow FRAGMENTS; emitting a top-k per fragment
-            # multiplies the merge-window shuffle by the fragmentation
-            # factor. Buffer fragment top-ks, prune to the per-query
-            # top-k in-task (same (dist, id) order as the global
-            # window, so the final result is identical), emit once.
-            acc_q: list[np.ndarray] = []
-            acc_i: list[np.ndarray] = []
-            acc_d: list[np.ndarray] = []
-            n_buf = 0
-
-            def _compact():
-                nonlocal acc_q, acc_i, acc_d, n_buf
-                qx = np.concatenate(acc_q)
-                ids_a = np.concatenate(acc_i)
-                d_a = np.concatenate(acc_d)
-                keep = local_topk_grouped(qx, ids_a, d_a, k_)
-                qx, ids_a, d_a = qx[keep], ids_a[keep], d_a[keep]
-                acc_q, acc_i, acc_d = [qx], [ids_a], [d_a]
-                n_buf = ids_a.size
-                return qx, ids_a, d_a
-
+            acc = TopkAccumulator(k_, cap)
             bqc = None  # query block in the compute dtype (cast once per task)
             for rb in batches:
                 if rb.num_rows == 0:
@@ -332,45 +311,18 @@ class IVFIndex:
                     if sel is None or len(sel) == 0:
                         continue
                     rows = np.nonzero(cl_all == cid)[0]
-                    x = x_all[rows]
-                    d = _pairwise_dist(x, bqc[sel], metric)
                     ids = ids_all[rows]
-                    kk = min(k_, d.shape[0])
-                    if use_c:
-                        # compiled (rounded d, id) heap — bit-identical
-                        # set and order to the round+lexsort below, no
-                        # full-column sort, GIL released (round-14; the
-                        # rounding grid stays f64 whatever the GEMM
-                        # precision). kk ≤ rows here, so no padding.
-                        oi, od = ckernel.dense_topk(
-                            d.astype(np.float64, copy=False),
-                            np.ascontiguousarray(ids, dtype=np.int64),
-                            kk, do_round=True, queries_axis=1)
-                        acc_q.append(np.repeat(
-                            np.asarray(sel, dtype=np.int64), kk))
-                        acc_i.append(oi.reshape(-1))
-                        acc_d.append(od.reshape(-1))
-                        n_buf += kk * len(sel)
-                        if n_buf > 2_000_000:
-                            _compact()
-                        continue
-                    # the 4-dp rounding grid stays f64 whatever the
-                    # GEMM precision (the k×n distance matrix is tiny
-                    # next to the vectors it came from)
-                    d = np_round_half_up(d.astype(np.float64, copy=False))
-                    order_ids = np.broadcast_to(ids[:, None], d.shape)
-                    top = np.lexsort((order_ids, d), axis=0)[:kk, :]
-                    acc_q.append(np.repeat(np.asarray(sel, dtype=np.int64), kk))
-                    acc_i.append(ids[top].T.reshape(-1))
-                    acc_d.append(np.take_along_axis(d, top, axis=0).T.reshape(-1))
-                    n_buf += kk * len(sel)
-                if n_buf > 2_000_000:
-                    _compact()
-            if not acc_q or n_buf == 0:
-                return
-            qx, ids_a, d_a = _compact()
-            yield result_batch(out_schema,
-                               query_id=bqids[qx], **{id_col: ids_a}, dist=d_a)
+                    # the 4-dp rounding grid stays f64 whatever the GEMM
+                    # precision (topk_cut cuts on f64)
+                    top, d = topk_cut(_pairwise_dist(x_all[rows], bqc[sel], metric),
+                                      ids, k_, True)
+                    acc.add(np.repeat(np.asarray(sel, dtype=np.int64), top.shape[1]),
+                            ids[top].reshape(-1), d.reshape(-1))
+            out = acc.result()
+            if out is not None:
+                qx, ids_o, d_o = out[:3]
+                yield result_batch(knn_schema(id_col), query_id=bqids[qx],
+                                   **{id_col: ids_o}, dist=d_o)
 
         probed_any = sorted(by_cluster.keys())
         src = self.clustered.filter(F.col("cluster_id").isin(probed_any)).select(

@@ -20,8 +20,13 @@ index/pq.py):
   rounded approximate distance, then one broadcast join back to the
   base table for the exact re-rank (candidate_pair.rs:102-108).
 - **search_batch**: per-query probe sets share one scan — each codes
-  partition scores a row only for the queries that probe its cluster,
-  per-partition top-ef, k-bounded window merge, Arrow-batched re-rank.
+  partition scores a row only for the queries that probe its cluster
+  (``pq.adc_tile`` per cluster run, 4-dp rounded top-ef into the task's
+  ``operators.knn.TopkAccumulator``), then the global ADC gate, the
+  exact re-rank (``pq.exact_rerank``: fused in the scan, or an
+  Arrow-batched join wave) and the top-k cut (``pq.finish_adc``). The
+  driver-local mirror (``enable_local_serve``) runs the same tile cut
+  and re-rank over a thread pool with zero Spark jobs.
 
 Plan shape at scale: one pruned scan of the codes table (no shuffle),
 one ef·|Q|-bounded shuffle for the merge window, one broadcast join for
@@ -35,23 +40,27 @@ import os
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.functions.distance import dist_expr
 from lab_1806_vec_db_spark.index.ivf import group_probes
 from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans, sample_rows
+from lab_1806_vec_db_spark.index import pq as pq_mod
 from lab_1806_vec_db_spark.index.pq import (
     PQTable,
+    adc_tile,
     build_lookup_batch,
+    exact_rerank,
     finish_adc,
     make_grouped_rerank_scan,
     pq_groups,
     unpack_codes,
     _fit_codebooks,
 )
+from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.operators.knn import (
+    TopkAccumulator,
     collect_query_block,
     empty_topk,
     np_round_half_up,
@@ -739,18 +748,17 @@ class IVFPQIndex:
         n_probes: int,
         ef: int,
         metric: str,
-        max_lut_bytes: int = 64 << 20,
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """Driver-side batch kNN over the mirror, bit-identical to the
         distributed two-pass plan: per-cluster ADC → 4-dp rounded
-        per-cluster top-ef (id tie-break) → global rounded top-ef →
-        exact f64 re-rank (same formula as index/pq.py::
-        make_rerank_scan) → rounded top-k. Returns flat (qidx, ids,
-        dists) triples, ascending per query. The batch is chunked so
-        the f64 lookup tensor stays under ``max_lut_bytes`` — the same
-        budget the distributed path applies per broadcast — so a
-        200k-query batch never allocates a multi-GB LUT on the driver
-        regardless of the mirror cap."""
+        per-cluster top-ef (id tie-break, :func:`index.pq.adc_tile`) →
+        global rounded top-ef → exact re-rank (:func:`index.pq.
+        exact_rerank`) → rounded top-k. Returns flat (qidx, ids, dists)
+        triples, ascending per query. The batch is chunked so the f64
+        lookup tensor stays under ``pq.MAX_LUT_BYTES`` — the same budget
+        the distributed path applies per broadcast — so a 200k-query
+        batch never allocates a multi-GB LUT on the driver regardless of
+        the mirror cap."""
         from concurrent.futures import ThreadPoolExecutor
 
         from lab_1806_vec_db_spark.index import ckernel
@@ -759,15 +767,13 @@ class IVFPQIndex:
         assert L is not None
         nq = qmat.shape[0]
         lut_chunk = max(
-            4, int(max_lut_bytes) // (self.pq.m * (1 << self.pq.n_bits) * 8)
+            4, pq_mod.MAX_LUT_BYTES // (self.pq.m * (1 << self.pq.n_bits) * 8)
         )
         if nq > lut_chunk:
             qs_p, is_p, ds_p = [], [], []
             for s in range(0, nq, lut_chunk):
                 q_, i_, d_ = self._search_local(
-                    qmat[s : s + lut_chunk], k, n_probes, ef, metric,
-                    max_lut_bytes,
-                )
+                    qmat[s : s + lut_chunk], k, n_probes, ef, metric)
                 qs_p.append(q_ + s)
                 is_p.append(i_)
                 ds_p.append(d_)
@@ -782,52 +788,17 @@ class IVFPQIndex:
             qmat, self.pq.codebooks, self.pq.groups, self.pq.n_bits, metric
         )
         lut64 = np.ascontiguousarray(lut3, dtype=np.float64)
-        use_c = ckernel.available()
-        m = self.pq.m
 
         def run_tile(cid: int, s: int, e: int, qlo: int, qhi: int):
             sel = np.asarray(by_cluster[cid][qlo:qhi], dtype=np.int64)
-            codes_sub = L["codes"][s:e]
             ids = L["ids"][s:e]
-            if use_c and sq is None:
-                # fused l2sqr tile: score + round + per-query top-kk all
-                # inside one GIL-released C call (ckernel.adc_topk) —
-                # the separate round/lexsort/gather ufunc passes held
-                # the GIL per tile and serialized the pool (measured:
-                # 22 s → ~1 s at the worst-skew N=1M shape)
-                kk = min(ef_, e - s)
-                oid, orow, od = ckernel.adc_topk(codes_sub, ids, lut64, sel, kk)
-                return (
-                    np.repeat(sel, kk),
-                    oid.reshape(-1),
-                    od.reshape(-1),
-                    (orow + s).reshape(-1),
-                )
-            if use_c:
-                summed = ckernel.adc_block(codes_sub, lut64, sel)  # (S × n_c)
-            else:
-                summed = np.zeros((sel.size, e - s))
-                lsel = lut3[sel]
-                for g in range(m):
-                    summed += lsel[:, g, codes_sub[:, g]]
-            if sq is not None:  # cosine: normalize like the batch scan
-                v2 = np.zeros(e - s)
-                for g in range(m):
-                    v2 += sq[g, codes_sub[:, g]]
-                vnorm = np.sqrt(np.maximum(v2, 0.0))
-                summed = 1.0 - summed / np.maximum(
-                    vnorm[None, :] * qn[sel][:, None], 1e-10
-                )
-            summed = np_round_half_up(summed)
-            kk = min(ef_, e - s)
-            idm = np.broadcast_to(ids[None, :], summed.shape)
-            top = np.lexsort((idm, summed), axis=1)[:, :kk]
-            return (
-                np.repeat(sel, kk),
-                np.take_along_axis(idm, top, axis=1).reshape(-1),
-                np.take_along_axis(summed, top, axis=1).reshape(-1),
-                (top + s).reshape(-1),  # columns ARE positions s..e
-            )
+            # one GIL-released C call per l2sqr tile (ckernel.adc_topk)
+            # — per-tile round/lexsort ufunc passes held the GIL and
+            # serialized the pool (22 s → ~1 s at the worst-skew N=1M
+            # shape)
+            rows, d = adc_tile(L["codes"][s:e], ids, lut64, sq, qn, sel, ef_, True)
+            return (np.repeat(sel, rows.shape[1]), ids[rows].reshape(-1),
+                    d.reshape(-1), (rows + s).reshape(-1))
 
         # tile = (cluster, QUERY-chunk): k-means clusters are SKEWED, and
         # a popular cluster draws both more rows and more probing
@@ -849,57 +820,33 @@ class IVFPQIndex:
             step_q = max(4, budget_pairs // max(1, e - s))
             for qlo in range(0, nq_c, step_q):
                 tiles.append((cid, s, e, qlo, min(qlo + step_q, nq_c)))
-        if len(tiles) > 1 and use_c:
+        if len(tiles) > 1 and ckernel.available():
             workers = min(len(tiles), os.cpu_count() or 4)
             with ThreadPoolExecutor(max_workers=workers) as tp:
-                parts = [
-                    p for p in tp.map(lambda t: run_tile(*t), tiles)
-                    if p is not None
-                ]
+                parts = list(tp.map(lambda t: run_tile(*t), tiles))
         else:
-            parts = [p for p in (run_tile(*t) for t in tiles) if p is not None]
+            parts = [run_tile(*t) for t in tiles]
         if not parts:
             return (np.empty(0, np.int64), np.empty(0, np.int64),
                     np.empty(0, np.float64))
-        qidx = np.concatenate([p[0] for p in parts])
-        cids = np.concatenate([p[1] for p in parts])
-        adc = np.concatenate([p[2] for p in parts])
-        rowp = np.concatenate([p[3] for p in parts])
+        qidx, cids, adc, rowp = (np.concatenate(c) for c in zip(*parts))
         # fully vectorized finalize (a per-query Python loop ran 1000
         # small numpy ops per query and serialized the batch): ONE
         # global (qid, adc_r, id) sort ranks every candidate inside its
-        # query segment; the gate keeps rank < ef; one batched gather +
-        # row-dot re-ranks every gated pair; a second global sort cuts
-        # rank < k. (q, id) pairs are unique — a row belongs to exactly
-        # one cluster and a query probes distinct clusters — so the
-        # strict (adc_r, id) order matches the distributed plan's gate.
-        q64 = np.asarray(qmat, dtype=np.float64)
-        q2 = np.einsum("ij,ij->i", q64, q64)
-        qn2 = np.sqrt(q2)
+        # query segment; the gate keeps rank < ef; the gated pairs are
+        # re-ranked in one exact_rerank call (keyed by mirror row); a
+        # second global sort cuts rank < k. (q, id) pairs are unique — a
+        # row belongs to exactly one cluster and a query probes distinct
+        # clusters — so the strict (adc_r, id) order matches the
+        # distributed plan's gate.
         order = np.lexsort((cids, adc, qidx))
         qidx, cids, rowp = qidx[order], cids[order], rowp[order]
         bounds = np.searchsorted(qidx, np.arange(nq + 1))
         rank = np.arange(qidx.size) - bounds[qidx]
         gate = rank < ef_
         qg, ig, rg = qidx[gate], cids[gate], rowp[gate]
-        # bounded (pairs × dim) gather — the same 16k-row step the
-        # distributed fused scan uses: one unchunked gather at
-        # ef=200 × |Q|=1000 materialized 2.3 GB of f64 temporaries and
-        # the allocator/page faults cost more than the math
-        ex = np.empty(qg.size)
-        step = 16384
-        for s0 in range(0, qg.size, step):
-            sl = slice(s0, min(s0 + step, qg.size))
-            xs = L["vecs"][rg[sl]].astype(np.float64)
-            ip = np.einsum("ij,ij->i", xs, q64[qg[sl]])
-            x2s = np.einsum("ij,ij->i", xs, xs)
-            if metric == "l2sqr":
-                ex[sl] = x2s + q2[qg[sl]] - 2.0 * ip
-            else:
-                ex[sl] = 1.0 - ip / np.maximum(
-                    np.sqrt(x2s) * qn2[qg[sl]], 1e-10
-                )
-        ex = np_round_half_up(ex)
+        pool = np.unique(rg)
+        ex = exact_rerank(pool, L["vecs"][pool], rg, qmat, qg, metric)
         order2 = np.lexsort((ig, ex, qg))
         qs2, is2, ds2 = qg[order2], ig[order2], ex[order2]
         b2 = np.searchsorted(qs2, np.arange(nq + 1))
@@ -1032,18 +979,12 @@ class IVFPQIndex:
                 kk = min(ef_local, len(ids))
                 top = np.lexsort((ids, adc_r))[:kk]
                 vec_all = vec_matrix(rb.column(sch.get_field_index(vec_col)))
-                x = np.asarray(vec_all[top], dtype=np.float64)
-                ip = x @ bq
-                x2 = np.einsum("ij,ij->i", x, x)
-                if bmetric == "l2sqr":
-                    ex = x2 + float(bq @ bq) - 2.0 * ip
-                else:
-                    qn_ = float(bq @ bq) ** 0.5
-                    ex = 1.0 - ip / np.maximum(np.sqrt(x2) * qn_, 1e-10)
+                ex = exact_rerank(ids[top], vec_all[top], ids[top], bq[None, :],
+                                  np.zeros(kk, dtype=np.int64), bmetric)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(ids[top], type=pa.int64()),
                      pa.array(adc_r[top], type=pa.float64()),
-                     pa.array(np_round_half_up(ex), type=pa.float64())],
+                     pa.array(ex, type=pa.float64())],
                     names=[id_col, "adc_r", "dist"],
                 )
 
@@ -1193,10 +1134,7 @@ class IVFPQIndex:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        max_lut_bytes: int = 64 << 20,
         fuse_rerank: bool | None = None,
-        acc_cap_rows: int = 2_000_000,
-        acc_vec_bytes: int = 256 << 20,
     ) -> DataFrame:
         """Batch IVF+PQ: one pruned scan of the codes table; each
         partition scores a row only for the queries probing its
@@ -1204,19 +1142,15 @@ class IVFPQIndex:
         per query; the global ADC gate, the exact re-rank and the final
         top-k are :func:`index.pq.finish_adc`.
 
-        ``acc_cap_rows`` / ``acc_vec_bytes`` are the compaction FLOORS
-        of the per-task candidate accumulator (see the closure note):
-        a compaction fires when the buffer exceeds the threshold, and
-        the threshold then resets to max(floor, 1.5× the live set) —
-        geometric, so a live set larger than the floor (wide probes ×
-        high ef × high dim) compacts amortized-O(log) times instead of
-        per batch. Worst-case per-task memory is therefore
-        max(``acc_cap_rows``, 1.5× live candidates) triples (~24 B
-        each) plus, on the fused plan only, max(``acc_vec_bytes``,
-        1.5× live candidate-vector bytes) in the STORE dtype. Python
+        Per task, each (cluster run × probing queries) tile is cut by
+        :func:`index.pq.adc_tile` on the 4-dp grid into one
+        :class:`operators.knn.TopkAccumulator`, whose floors
+        (``knn.ACC_CAP_ROWS`` triples of ~24 B, plus on the fused plan
+        ``knn.ACC_VEC_BYTES`` of candidate vectors in the STORE dtype)
+        bound per-task memory at max(floor, 1.5× the live set). Python
         workers are per-core, so the executor-wide footprint multiplies
-        by concurrent task slots — size the floors down on memory-tight
-        executors (the result set is identical at any setting)."""
+        by concurrent task slots (the result set is identical at any
+        floor)."""
         metric = metric or self.model.metric
         spark = queries.sparkSession
         block = collect_query_block(queries, qid_col, qvec_col)
@@ -1230,10 +1164,7 @@ class IVFPQIndex:
             # driver-mirror batch serve: the (cluster × probing-queries)
             # tiling below, run through the GIL-releasing compiled
             # kernel on a thread pool — zero Spark jobs
-            qq, ii, dd = self._search_local(
-                qmat, int(k), int(n_probes), ef_, metric,
-                max_lut_bytes=max_lut_bytes,
-            )
+            qq, ii, dd = self._search_local(qmat, int(k), int(n_probes), ef_, metric)
             keep = (
                 np.ones(dd.size, dtype=bool)
                 if upper_bound is None else dd <= float(upper_bound)
@@ -1255,235 +1186,82 @@ class IVFPQIndex:
         fused = self._use_fused_rerank(n_probes, ef_, fuse_rerank)
         vec_col = self.vec_col
 
+        cap, cap_vec = knn_ops.ACC_CAP_ROWS, knn_ops.ACC_VEC_BYTES
+
         def make_scan(bc):
-          def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
+            def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+                import pyarrow as pa
 
-            from lab_1806_vec_db_spark.functions.arrowvec import (
-                binary_matrix,
-                result_batch,
-                vec_matrix,
-            )
-            from lab_1806_vec_db_spark.index import ckernel
-
-            bqids, bclusters, blut3, bsq, bqn, m, n_bits, bqmat, bmetric = bc.value
-            ksub = 1 << n_bits
-            fused_t = bqmat is not None
-            if fused_t:
-                bq2 = np.einsum("ij,ij->i", bqmat, bqmat)
-                bqnorm2 = np.sqrt(bq2)
-            # Per-(cluster, probing-queries) tile through the compiled
-            # lookup-sum kernel — the FLOP-minimal form: only probed
-            # (row, query) pairs are scored, m adds each, LUT rows
-            # L1-resident. A one-hot GEMM over all queries measured
-            # 16× the MACs · k/n_probes× the pairs (both slower);
-            # python-level gather loops lose ~10× to interpreter
-            # overhead. Falls back to the numpy loop when no cc exists.
-            use_c = ckernel.available()
-            lut64 = np.ascontiguousarray(blut3, dtype=np.float64)
-
-            # Per-TASK candidate accumulator. Arrow hands a cluster to
-            # this closure as ~10k-row FRAGMENTS; emitting a top-kk per
-            # fragment multiplied the shuffle input and the fused exact
-            # re-rank by the fragmentation factor (measured 18× at 200k
-            # rows). Buffer every fragment's rounded-ADC top-kk,
-            # periodically prune to the per-query top-ef (one
-            # vectorized grouped rank), exact-re-rank only the
-            # end-of-task survivors, emit ONE frame per task. The
-            # output SET is identical: a candidate pruned here has
-            # ≥ ef better same-query candidates inside this task, so
-            # the downstream global ADC gate could never keep it.
-            acc_q: list[np.ndarray] = []  # query index into bqids/bqmat
-            acc_i: list[np.ndarray] = []  # candidate id
-            acc_d: list[np.ndarray] = []  # rounded ADC distance
-            vec_i: list[np.ndarray] = []  # fused: candidate row ids
-            vec_x: list[np.ndarray] = []  # fused: candidate vectors
-            n_buf = 0
-            n_vbytes = 0  # fused: buffered candidate-vector bytes
-            cap = int(acc_cap_rows)
-            vbytes = int(acc_vec_bytes)
-            # GEOMETRIC compaction thresholds. The configured caps are
-            # the floor; when a compaction cannot shrink the buffer
-            # below its cap (the per-task LIVE candidate set simply
-            # exceeds it — e.g. 1M/960-dim at 32 probes holds ~200k
-            # live candidates vs a 256 MB/65k-row vector budget), the
-            # threshold grows to 1.5× the post-compaction size instead
-            # of re-firing on every batch. Round-12 measured that
-            # per-batch re-sort thrash blowing the fused plan up 3×
-            # over two-pass at wide probes; with geometric growth total
-            # compaction work is amortized O(live·log) and the memory
-            # worst case is 1.5× the live set — which any correct plan
-            # must hold anyway.
-            cap_dyn = cap
-            vbytes_dyn = vbytes
-
-            def _topef(qx, ids, adc):
-                # per-query top-ef by (rounded adc, id) — the same
-                # total order the global gate's window applies
-                from lab_1806_vec_db_spark.operators.knn import local_topk_grouped
-
-                return local_topk_grouped(qx, ids, adc, ef_)
-
-            def _compact():
-                nonlocal acc_q, acc_i, acc_d, vec_i, vec_x
-                nonlocal n_buf, n_vbytes, cap_dyn, vbytes_dyn
-                qx = np.concatenate(acc_q)
-                ids = np.concatenate(acc_i)
-                adc = np.concatenate(acc_d)
-                keep = _topef(qx, ids, adc)
-                qx, ids, adc = qx[keep], ids[keep], adc[keep]
-                acc_q, acc_i, acc_d = [qx], [ids], [adc]
-                n_buf = ids.size
-                cap_dyn = max(cap, n_buf + (n_buf >> 1))
-                if fused_t and vec_i:
-                    vi = np.concatenate(vec_i)
-                    vx = np.concatenate(vec_x) if len(vec_x) > 1 else vec_x[0]
-                    sel = np.isin(vi, np.unique(ids))
-                    vec_i, vec_x = [vi[sel]], [np.ascontiguousarray(vx[sel])]
-                    n_vbytes = vec_x[0].nbytes
-                    vbytes_dyn = max(vbytes, n_vbytes + (n_vbytes >> 1))
-                return qx, ids, adc
-
-            out_schema = pa.schema(
-                [pa.field("query_id", pa.int64()),
-                 pa.field(id_col, pa.int64()),
-                 pa.field("adc", pa.float64())]
-                + ([pa.field("dist", pa.float64())] if fused_t else []))
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                # zero-copy views over the Arrow batch: packed codes as
-                # an (n, bytes) uint8 matrix, vectors flattened in place
-                # — no pandas materialization of either column
-                sch = rb.schema
-                buf = binary_matrix(rb.column(sch.get_field_index("code")))
-                codes_all = unpack_codes(buf, m, n_bits)
-                ids_all = rb.column(sch.get_field_index(id_col)).to_numpy(
-                    zero_copy_only=False)
-                cl_all = rb.column(sch.get_field_index("cluster_id")).to_numpy(
-                    zero_copy_only=False)
-                vec_all = (
-                    vec_matrix(rb.column(sch.get_field_index(vec_col)))
-                    if fused_t else None
+                from lab_1806_vec_db_spark.functions.arrowvec import (
+                    binary_matrix,
+                    result_batch,
+                    vec_matrix,
                 )
-                for cid in np.unique(cl_all):
-                    sel = bclusters.get(int(cid))
-                    if sel is None or len(sel) == 0:
+
+                bqids, bclusters, blut3, bsq, bqn, m, n_bits, bqmat, bmetric = bc.value
+                fused_t = bqmat is not None
+                lut64 = np.ascontiguousarray(blut3, dtype=np.float64)
+                acc = TopkAccumulator(ef_, cap, cap_vec)
+                out_schema = pa.schema(
+                    [pa.field("query_id", pa.int64()),
+                     pa.field(id_col, pa.int64()),
+                     pa.field("adc", pa.float64())]
+                    + ([pa.field("dist", pa.float64())] if fused_t else []))
+                for rb in batches:
+                    if rb.num_rows == 0:
                         continue
-                    rows = np.nonzero(cl_all == cid)[0]
-                    codes_sub = np.ascontiguousarray(codes_all[rows])
-                    ids = ids_all[rows]
-                    sel_arr = np.asarray(sel, dtype=np.int64)
-                    kk = min(ef_, codes_sub.shape[0])
-                    # 4-dp rounded candidate gate with id tie-break —
-                    # the SAME cut the single-query path applies
-                    # (round_dist over adc_r), so batch == single on
-                    # near-tie boundaries
-                    if use_c and bsq is None:
-                        # fused C tile: ADC sums + rounding + per-query
-                        # top-kk by (rounded, id) in ONE GIL-released
-                        # call — the same kernel the driver-local
-                        # mirror runs (_search_local), so the executor
-                        # threads sharing this Python worker stay
-                        # parallel instead of serializing on the
-                        # GIL-held round/lexsort/gather ufunc passes
-                        oid, orow, od = ckernel.adc_topk(
-                            codes_sub,
-                            np.ascontiguousarray(ids, dtype=np.int64),
-                            lut64, sel_arr, kk,
-                        )
-                        out_ids = oid.reshape(-1)
-                        out_adc = od.reshape(-1)
-                        flat_rows = orow.reshape(-1)
-                    else:
-                        if use_c:
-                            summed = ckernel.adc_block(
-                                codes_sub, lut64, sel_arr
-                            ).T  # (n_c × |sel|)
-                        else:
-                            summed = np.zeros((codes_sub.shape[0], len(sel)))
-                            lsel = blut3[sel]
-                            for g in range(m):
-                                summed += lsel[:, g, codes_sub[:, g]].T
-                        if bsq is not None:
-                            v2 = np.zeros(codes_sub.shape[0])
-                            for g in range(m):
-                                v2 += bsq[g, codes_sub[:, g]]
-                            vnorm = np.sqrt(np.maximum(v2, 0.0))
-                            summed = 1.0 - summed / np.maximum(
-                                vnorm[:, None] * bqn[sel][None, :], 1e-10
-                            )
-                        summed = np_round_half_up(summed)
-                        idm = np.broadcast_to(ids[:, None], summed.shape)
-                        top = np.lexsort((idm, summed), axis=0)[:kk, :]
-                        out_ids = np.take_along_axis(idm, top, axis=0).T.reshape(-1)
-                        out_adc = np.take_along_axis(summed, top, axis=0).T.reshape(-1)
-                        flat_rows = top.T.reshape(-1)
-                    acc_q.append(np.repeat(sel_arr, kk))
-                    acc_i.append(out_ids)
-                    acc_d.append(out_adc)
-                    n_buf += out_ids.size
-                    if fused_t:
-                        # buffer the fragment's candidate vectors (each
-                        # row lives in exactly one fragment, so ids are
-                        # unique across the buffer) in the STORE dtype —
-                        # buffering f32 layouts at f64 doubled the
-                        # buffer bytes and halved the effective vector
-                        # budget; the lossless f64 upcast happens per
-                        # chunk in the final re-rank instead
-                        need = np.unique(flat_rows)
-                        vec_i.append(ids[need])
-                        grab = np.ascontiguousarray(vec_all[rows[need]])
-                        vec_x.append(grab)
-                        n_vbytes += grab.nbytes
-                if n_buf > cap_dyn or n_vbytes > vbytes_dyn:
-                    _compact()
-            if not acc_q or n_buf == 0:
-                return
-            qx, ids, adc = _compact()
-            out_qid = bqids[qx]
-            if not fused_t:
-                yield result_batch(out_schema,
-                                   query_id=out_qid, **{id_col: ids}, adc=adc)
-                return
-            # fused exact re-rank over ONLY the surviving candidates
-            # (vectors were buffered per fragment): the f64 upcast is
-            # per chunk and lossless, so the ops and rounding match the
-            # per-fragment form and results stay bit-identical to the
-            # two-pass plan
-            vi = np.concatenate(vec_i)
-            vx = np.concatenate(vec_x) if len(vec_x) > 1 else vec_x[0]
-            o = np.argsort(vi, kind="stable")
-            vi_s, vx_s = vi[o], vx[o]
-            pos = np.searchsorted(vi_s, ids)
-            # per-UNIQUE-vector squared norms once, gathered per pair
-            x2u = np.empty(vx_s.shape[0])
-            ex = np.empty(ids.size)
-            step = 16384  # bound every (rows × dim) gather/upcast
-            for s0 in range(0, vx_s.shape[0], step):
-                sl = slice(s0, s0 + step)
-                xc = np.asarray(vx_s[sl], dtype=np.float64)
-                x2u[sl] = np.einsum("ij,ij->i", xc, xc)
-            for s0 in range(0, ids.size, step):
-                sl = slice(s0, s0 + step)
-                xg = np.asarray(vx_s[pos[sl]], dtype=np.float64)
-                ip = np.einsum("ij,ij->i", xg, bqmat[qx[sl]])
-                x2 = x2u[pos[sl]]
-                if bmetric == "l2sqr":
-                    ex[sl] = x2 + bq2[qx[sl]] - 2.0 * ip
-                else:
-                    ex[sl] = 1.0 - ip / np.maximum(
-                        np.sqrt(x2) * bqnorm2[qx[sl]], 1e-10
+                    # zero-copy views over the Arrow batch: packed codes
+                    # as an (n, bytes) uint8 matrix, vectors flattened in
+                    # place — no pandas materialization of either column
+                    sch = rb.schema
+                    buf = binary_matrix(rb.column(sch.get_field_index("code")))
+                    codes_all = unpack_codes(buf, m, n_bits)
+                    ids_all = rb.column(sch.get_field_index(id_col)).to_numpy(
+                        zero_copy_only=False)
+                    cl_all = rb.column(sch.get_field_index("cluster_id")).to_numpy(
+                        zero_copy_only=False)
+                    vec_all = (
+                        vec_matrix(rb.column(sch.get_field_index(vec_col)))
+                        if fused_t else None
                     )
-            yield result_batch(out_schema, query_id=out_qid, **{id_col: ids},
-                               adc=adc, dist=np_round_half_up(ex))
-          return scan
+                    for cid in np.unique(cl_all):
+                        sel = bclusters.get(int(cid))
+                        if sel is None or len(sel) == 0:
+                            continue
+                        sel = np.asarray(sel, dtype=np.int64)
+                        rows = np.nonzero(cl_all == cid)[0]
+                        ids = ids_all[rows]
+                        # 4-dp rounded candidate gate with id tie-break —
+                        # the SAME cut the single-query path applies
+                        # (round_dist over adc_r), so batch == single on
+                        # near-tie boundaries
+                        top, adc = adc_tile(codes_all[rows], ids, lut64, bsq, bqn,
+                                            sel, ef_, True)
+                        args = (np.repeat(sel, top.shape[1]), ids[top].reshape(-1),
+                                adc.reshape(-1))
+                        if fused_t:
+                            need = np.unique(top)
+                            args += (ids[need], np.ascontiguousarray(vec_all[rows[need]]))
+                        acc.add(*args)
+                out = acc.result()
+                if out is None:
+                    return
+                qx, ids, adc = out[:3]
+                cols = {"query_id": bqids[qx], id_col: ids, "adc": adc}
+                if fused_t:
+                    # exact re-rank of ONLY the surviving candidates —
+                    # the same function and rounding as the two-pass
+                    # wave, so results stay bit-identical to it
+                    cols["dist"] = exact_rerank(out[3], out[4], ids, bqmat, qx, bmetric)
+                yield result_batch(out_schema, **cols)
+
+            return scan
 
         # bound each broadcast lookup tensor (same ≤64 MB budget as
         # PQTable.search_batch): queries are processed in chunks, each
         # with its own probe routing, pruned scan, and broadcast
         ksub = 1 << self.pq.n_bits
-        chunk = max(4, int(max_lut_bytes) // (self.pq.m * ksub * 8))
+        chunk = max(4, pq_mod.MAX_LUT_BYTES // (self.pq.m * ksub * 8))
         pieces = []
         all_probed: set[int] = set()
         for s in range(0, len(qids), chunk):

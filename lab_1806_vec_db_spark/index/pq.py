@@ -20,9 +20,14 @@ Spark mapping:
   column is ~dim·4bits vs dim·32bits, so the ADC scan reads 8× less
   than a flat scan; at 100 TB that ratio is the whole point of PQ;
 - lookup tables are per-query, tiny, and broadcast; the ADC scan is an
-  Arrow-batched numpy gather+sum (the SIMD loop of pq_table.rs:239-270
-  becomes a BLAS-friendly fancy-index);
-- re-rank joins the ef candidate ids back to the base table
+  Arrow-batched lookup-sum (the SIMD loop of pq_table.rs:239-270):
+  :func:`adc_tile` scores a (rows × queries) tile and cuts each
+  query's top-ef (the compiled ``ckernel.adc_topk`` / ``adc_block``
+  kernels, or a numpy gather loop), into the task's
+  ``operators.knn.TopkAccumulator``;
+- re-rank (:func:`exact_rerank`, the one exact re-rank of the PQ and
+  IVF+PQ serves) either runs in the scan over vectors riding the codes
+  batches (fused) or joins the ef candidate ids back to the base table
   (broadcast hash join on id — candidates are k-bounded).
 
 Deviation (documented): the reference silently forces n_bits=4 even
@@ -41,14 +46,14 @@ from contextlib import contextmanager
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.functions.distance import dist_expr
 from lab_1806_vec_db_spark.index.kmeans import _pairwise_dist, fit_kmeans, sample_rows
+from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.operators.knn import (
-    ROUND_DECIMALS,
+    TopkAccumulator,
     _topk_per_query,
     collect_columns,
     collect_query_block,
@@ -58,8 +63,17 @@ from lab_1806_vec_db_spark.operators.knn import (
     fast_topk_grouped,
     np_round_half_up,
     round_dist,
+    topk_cut,
     window_cut,
 )
+
+#: Byte bound of one broadcast ADC lookup tensor: the PQ and IVF+PQ
+#: batch serves (and the IVF+PQ driver mirror) split the query block
+#: into chunks whose f64 LUT fits it. Read on the driver per serve.
+MAX_LUT_BYTES = 64 << 20
+#: Row step of :func:`exact_rerank`: bounds every (rows × dim) f64
+#: gather/upcast it materializes.
+RERANK_STEP = 16384
 
 
 def pq_groups(dim: int, m: int) -> list[tuple[int, int]]:
@@ -307,54 +321,103 @@ def _fit_group_slice_seq(sample, groups, ksub, seed):
         _FIT_STATE = {}
 
 
-def make_rerank_scan(spark, qids: np.ndarray, qmat: np.ndarray, metric: str,
-                     id_col: str, vec_col: str):
-    """Arrow re-rank closure shared by the PQ and IVF+PQ batch paths:
-    exact distances for (query_id, id) candidate pairs, query vectors
-    looked up executor-side from one small broadcast — never duplicated
-    per candidate. Returns the ``mapInArrow`` function (candidate
-    vectors flatten zero-copy from the Arrow batch; no pandas
-    round-trip of the vector column)."""
-    qids = np.asarray(qids, dtype=np.int64)
-    qorder = np.argsort(qids, kind="stable")
-    bc_q = spark.sparkContext.broadcast(
-        (qids, np.asarray(qmat, dtype=np.float64), qorder)
-    )
+def adc_tile(
+    codes: np.ndarray,
+    ids: np.ndarray,
+    lut: np.ndarray,
+    sq: np.ndarray | None,
+    qn: np.ndarray,
+    sel: np.ndarray | None,
+    kk: int,
+    round: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """ADC-score one tile and cut each query's top-``kk`` by (score, id)
+    (pq_table.rs:239-301 lookup-sums). ``codes`` (n × m) uint8 are the
+    tile's rows and ``ids`` their ids; ``lut`` the (Q × m × 2^b) f64
+    lookup block of :func:`build_lookup_batch` and ``sel`` the (S,)
+    query rows scored (None = all Q). Cosine (``sq`` the (m × 2^b)
+    centroid self-dots, ``qn`` the (Q,) query norms) turns the summed
+    dots into 1 − dot / max(‖v̂‖·‖q‖, 1e-10) with one reconstructed norm
+    per row. ``round`` cuts on the 4-dp grid (IVF+PQ's candidate gate);
+    PQ cuts its raw ADC. Returns ``(rows, scores)`` as
+    :func:`operators.knn.topk_cut` does.
 
-    def rerank(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from lab_1806_vec_db_spark.functions.arrowvec import (
-            knn_schema,
-            result_batch,
-            vec_matrix,
-        )
+    With the C toolchain, l2sqr runs score + round + cut in one
+    GIL-released call (``ckernel.adc_topk``); otherwise the lookup-sums
+    (``ckernel.adc_block``, or the numpy group loop — the same f64
+    left-to-right accumulation, bit-identical) go through ``topk_cut``."""
+    from lab_1806_vec_db_spark.index import ckernel
 
-        bqids, bqmat, bqorder = bc_q.value
-        qsorted = bqids[bqorder]
-        q2 = np.einsum("ij,ij->i", bqmat, bqmat)
-        qn = np.sqrt(q2)
-        out_schema = knn_schema(id_col)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            sch = rb.schema
-            x = vec_matrix(rb.column(sch.get_field_index(vec_col)),
-                           dtype=np.float64)
-            rqids = rb.column(sch.get_field_index("query_id")).to_numpy(
-                zero_copy_only=False).astype(np.int64, copy=False)
-            rids = rb.column(sch.get_field_index(id_col)).to_numpy(
-                zero_copy_only=False)
-            qi = bqorder[np.searchsorted(qsorted, rqids)]
-            ip = np.einsum("ij,ij->i", x, bqmat[qi])
-            x2 = np.einsum("ij,ij->i", x, x)
-            if metric == "l2sqr":
-                d = x2 + q2[qi] - 2.0 * ip
-            else:
-                d = 1.0 - ip / np.maximum(np.sqrt(x2) * qn[qi], 1e-10)
-            d = np_round_half_up(d)
-            yield result_batch(out_schema, query_id=rqids,
-                               **{id_col: rids}, dist=d)
+    codes = np.ascontiguousarray(codes)
+    n, m = codes.shape
+    use_c = ckernel.available()
+    if use_c and sq is None:
+        _, rows, d = ckernel.adc_topk(codes, ids, lut, sel, min(int(kk), n), round)
+        return rows, d
+    if use_c:
+        summed = ckernel.adc_block(codes, lut, sel)  # (S × n)
+    else:
+        lsel = lut if sel is None else lut[sel]
+        summed = np.zeros((lsel.shape[0], n))
+        for g in range(m):
+            summed += lsel[:, g, codes[:, g]]
+    if sq is not None:
+        # centroid self-dots are query-independent: one reconstructed
+        # norm per row, shared by every query
+        v2 = np.zeros(n)
+        for g in range(m):
+            v2 += sq[g, codes[:, g]]
+        vnorm = np.sqrt(np.maximum(v2, 0.0))
+        qs = qn if sel is None else qn[sel]
+        summed = 1.0 - summed / np.maximum(vnorm[None, :] * qs[:, None], 1e-10)
+    return topk_cut(summed.T, ids, kk, round)
 
-    return rerank
+
+def exact_rerank(
+    keys: np.ndarray,
+    vecs: np.ndarray,
+    ids: np.ndarray,
+    qmat: np.ndarray,
+    qidx: np.ndarray,
+    metric: str,
+) -> np.ndarray:
+    """The exact re-rank of the PQ and IVF+PQ serves
+    (candidate_pair.rs:102-108): the 4-dp rounded exact distance of each
+    candidate pair ``(qmat[qidx[j]], vector of ids[j])``. The pool is
+    ``vecs`` (any float dtype; upcast to f64 per step, lossless),
+    row-keyed by the unique ids ``keys`` in any order; a candidate id
+    the pool does not hold raises instead of gathering a wrong vector.
+
+    Self-dots are taken once per pool vector, then per pair l2sqr is
+    max(‖x‖² + ‖q‖² − 2·x·q, 0) — the clamp of ``kmeans._pairwise_dist``
+    — and cosine 1 − x·q / max(‖x‖·‖q‖, 1e-10). Both loops step
+    :data:`RERANK_STEP` rows."""
+    keys = np.asarray(keys, dtype=np.int64)
+    ids = np.asarray(ids, dtype=np.int64)
+    order = np.argsort(keys, kind="stable")
+    ks = keys[order]
+    pos = np.minimum(np.searchsorted(ks, ids), max(ks.size - 1, 0))
+    if ids.size and (ks.size == 0 or not np.array_equal(ks[pos], ids)):
+        raise ValueError("exact re-rank: a candidate id is missing from the "
+                         "buffered vector pool")
+    rows = order[pos]
+    q64 = np.asarray(qmat, dtype=np.float64)
+    q2 = np.einsum("ij,ij->i", q64, q64)
+    qn = np.sqrt(q2)
+    x2 = np.empty(vecs.shape[0])
+    for s in range(0, vecs.shape[0], RERANK_STEP):
+        xc = np.asarray(vecs[s : s + RERANK_STEP], dtype=np.float64)
+        x2[s : s + RERANK_STEP] = np.einsum("ij,ij->i", xc, xc)
+    ex = np.empty(ids.size)
+    for s in range(0, ids.size, RERANK_STEP):
+        r, qi = rows[s : s + RERANK_STEP], qidx[s : s + RERANK_STEP]
+        xg = np.asarray(vecs[r], dtype=np.float64)
+        ip = np.einsum("ij,ij->i", xg, q64[qi])
+        if metric == "l2sqr":
+            ex[s : s + RERANK_STEP] = np.maximum(x2[r] + q2[qi] - 2.0 * ip, 0.0)
+        else:
+            ex[s : s + RERANK_STEP] = 1.0 - ip / np.maximum(np.sqrt(x2[r]) * qn[qi], 1e-10)
+    return np_round_half_up(ex)
 
 
 def make_grouped_rerank_scan(
@@ -365,15 +428,13 @@ def make_grouped_rerank_scan(
     id_col: str,
     vec_col: str,
 ):
-    """Grouped variant of :func:`make_rerank_scan` for the batch path:
-    the caller joins the base table against candidates GROUPED per id
-    (``collect_list(query_id)``), so each candidate vector crosses
-    Arrow exactly once no matter how many queries want it — at bench
-    shape (ef=80, |Q|=1k over 2k rows) the flat pair join duplicated
-    every vector ~40× and the ``to_list`` conversion of the duplicates
-    dominated the re-rank task. Per-pair expansion happens here in
-    numpy against the already-deserialized block; query vectors come
-    from the same small broadcast as the flat closure."""
+    """The two-wave re-rank closure of the PQ and IVF+PQ batch serves:
+    the caller joins the ``(id, vec)`` frame against candidates GROUPED
+    per id (``_qs`` = ``collect_list(query_id)``), so each candidate
+    vector crosses Arrow exactly once no matter how many queries want
+    it. Per-pair expansion happens here against the already-decoded
+    block, through :func:`exact_rerank`; query vectors come from one
+    small broadcast."""
     qids = np.asarray(qids, dtype=np.int64)
     qorder = np.argsort(qids, kind="stable")
     bc = spark.sparkContext.broadcast(
@@ -389,39 +450,28 @@ def make_grouped_rerank_scan(
 
         bqids, bqmat, bqorder = bc.value
         qsorted = bqids[bqorder]
-        q2 = np.einsum("ij,ij->i", bqmat, bqmat)
-        qn = np.sqrt(q2)
         out_schema = knn_schema(id_col)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             sch = rb.schema
-            x = vec_matrix(rb.column(sch.get_field_index(vec_col)),
-                           dtype=np.float64)
-            bids = rb.column(sch.get_field_index(id_col)).to_numpy(
-                zero_copy_only=False).astype(np.int64, copy=False)
             # the grouped query lists come apart zero-copy: the list
             # column's offsets give per-id counts, its flattened child
             # IS the concatenated query ids
             qs = rb.column(sch.get_field_index("_qs"))
             cnt = np.diff(qs.offsets.to_numpy(zero_copy_only=False))
-            total = int(cnt.sum())
-            if total == 0:
+            if int(cnt.sum()) == 0:
                 continue
+            x = vec_matrix(rb.column(sch.get_field_index(vec_col)))
+            bids = rb.column(sch.get_field_index(id_col)).to_numpy(
+                zero_copy_only=False).astype(np.int64, copy=False)
             qflat = qs.flatten().to_numpy(zero_copy_only=False).astype(
                 np.int64, copy=False)
             qi = bqorder[np.searchsorted(qsorted, qflat)]
-            rows_rep = np.repeat(np.arange(bids.size), cnt)
-            xs = x[rows_rep]
-            ip = np.einsum("ij,ij->i", xs, bqmat[qi])
-            x2 = np.einsum("ij,ij->i", x, x)[rows_rep]
-            if metric == "l2sqr":
-                d = x2 + q2[qi] - 2.0 * ip
-            else:
-                d = 1.0 - ip / np.maximum(np.sqrt(x2) * qn[qi], 1e-10)
-            d = np_round_half_up(d)
-            yield result_batch(out_schema, query_id=bqids[qi],
-                               **{id_col: bids[rows_rep]}, dist=d)
+            pair_ids = np.repeat(bids, cnt)
+            yield result_batch(
+                out_schema, query_id=bqids[qi], **{id_col: pair_ids},
+                dist=exact_rerank(bids, x, pair_ids, bqmat, qi, metric))
 
     return rerank
 
@@ -780,13 +830,13 @@ class PQTable:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        max_lut_bytes: int = 64 << 20,
         fuse_rerank: bool | None = None,
     ) -> DataFrame:
         """Batch ADC: per-query lookup tensors broadcast in bounded
-        chunks (≤ ``max_lut_bytes`` each), one Arrow scan of the codes
-        table per chunk emitting each PARTITION's top-ef per query
-        (batches are merged inside the scan closure, so the emission is
+        chunks (≤ :data:`MAX_LUT_BYTES` each), one Arrow scan of the
+        codes table per chunk emitting each TASK's top-ef per query by
+        raw ADC (:func:`adc_tile` per Arrow batch into a
+        :class:`operators.knn.TopkAccumulator`, so the emission is
         ef-bounded per task), the global ADC gate across partitions,
         then one broadcast join back to vectors for the exact re-rank.
 
@@ -822,8 +872,9 @@ class PQTable:
         ksub = 1 << self.n_bits
         # bound each broadcast lookup tensor (default ~64 MB; dim 960 /
         # m=320: ~1.6k queries per chunk; small m → one chunk for all)
-        chunk = max(256, int(max_lut_bytes // (self.m * ksub * 8)))
+        chunk = max(256, int(MAX_LUT_BYTES // (self.m * ksub * 8)))
         n_parts = self.code_partitions
+        cap, cap_vec = knn_ops.ACC_CAP_ROWS, knn_ops.ACC_VEC_BYTES
         # NOTE on parallelism: splitting queries into more chunks than
         # the LUT byte bound requires was measured SLOWER at bench shape
         # (per-piece broadcast + task overhead beats the win; 32 pieces
@@ -839,46 +890,16 @@ class PQTable:
                     result_batch,
                     vec_matrix,
                 )
-                from lab_1806_vec_db_spark.index import ckernel
 
                 bqids, blut3, bsq, bqn, m, n_bits, bqmat = bc.value
                 fused_t = bqmat is not None
-                if fused_t:
-                    # same per-query terms the two-wave re-rank closure
-                    # derives from its broadcast (make_grouped_rerank_scan)
-                    q2 = np.einsum("ij,ij->i", bqmat, bqmat)
-                    qnorm = np.sqrt(q2)
                 out_schema = pa.schema(
                     [pa.field("query_id", pa.int64()),
                      pa.field(id_col, pa.int64()),
                      pa.field("adc", pa.float64())]
                     + ([pa.field("dist", pa.float64())] if fused_t else []))
-                # compiled lookup-sum kernel when available (the IVF+PQ
-                # tile path, guide §4): per (row, query) the m LUT rows
-                # stay L1-resident and the (n × |Q|) result is written
-                # once — the numpy fallback's m gather passes re-stream
-                # the whole accumulator from memory per group (m×3×
-                # |tile| f64 traffic) and hold the GIL throughout.
-                # Same f64 left-to-right group accumulation → summed is
-                # bit-identical either way.
-                use_c = ckernel.available()
-                lut64 = (
-                    np.ascontiguousarray(blut3, dtype=np.float64)
-                    if use_c else None
-                )
-                # (m, ksub, |Q|) C-contiguous LUT: the per-group gather
-                # lut_t[g][codes[:, g]] then copies contiguous |Q|-rows
-                # (≈1.8× the transposed-view gather, measured at bench
-                # shape); one cheap transpose per task
-                lut_t = (
-                    None if use_c
-                    else np.ascontiguousarray(blut3.transpose(1, 2, 0))
-                )
-                run_d = run_id = run_src = None
-                off = 0
-                vkeys: list[np.ndarray] = []  # fused: buffered global row ids
-                vmats: list[np.ndarray] = []  # fused: their vectors, STORE dtype
-                vbytes = 0
+                lut64 = np.ascontiguousarray(blut3, dtype=np.float64)
+                acc = TopkAccumulator(ef_, cap, cap_vec)
                 for rb in batches:
                     if rb.num_rows == 0:
                         continue
@@ -886,119 +907,28 @@ class PQTable:
                     codes = unpack_codes(buf, m, n_bits)
                     ids = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
                         zero_copy_only=False)
-                    if use_c:
-                        # (n × |Q|) view of the kernel's (|Q| × n) sums
-                        summed = ckernel.adc_block(
-                            np.ascontiguousarray(codes), lut64, None
-                        ).T
-                    else:
-                        # (n × |Q|) approx distances, accumulated group-
-                        # by-group: m cheap 2-D gathers instead of one
-                        # giant (|Q|, n, m) fancy-index — no 3-D
-                        # intermediate
-                        summed = np.zeros((codes.shape[0], lut_t.shape[2]))
-                        for g in range(m):
-                            summed += lut_t[g][codes[:, g]]
-                    if bsq is not None:
-                        # centroid self-dots are query-independent: one
-                        # (n,) reconstructed norm shared by all queries
-                        v2 = np.zeros(codes.shape[0])
-                        for g in range(m):
-                            v2 += bsq[g, codes[:, g]]
-                        vnorm = np.sqrt(np.maximum(v2, 0.0))
-                        summed = 1.0 - summed / np.maximum(vnorm[:, None] * bqn[None, :], 1e-10)
-                    idm = np.broadcast_to(ids[:, None], summed.shape)
+                    # raw (unrounded) ADC pool cut, id tie-break
+                    rows, adc = adc_tile(codes, ids, lut64, bsq, bqn, None, ef_, False)
+                    args = (np.repeat(np.arange(len(bqids)), rows.shape[1]),
+                            ids[rows].reshape(-1), adc.reshape(-1))
                     if fused_t:
-                        srcm = np.broadcast_to(
-                            (off + np.arange(codes.shape[0], dtype=np.int64))[:, None],
-                            summed.shape)
-                    if run_d is not None:
-                        summed = np.concatenate([run_d, summed], axis=0)
-                        idm = np.concatenate([run_id, idm], axis=0)
-                        if fused_t:
-                            srcm = np.concatenate([run_src, srcm], axis=0)
-                    kk = min(ef_, summed.shape[0])
-                    if kk < summed.shape[0]:
-                        # O(n) prefilter before the exact ordering sort
-                        # (~3× faster than a full-column lexsort). Under
-                        # an exact float tie at the kk-th boundary the
-                        # KEPT set is deterministic but not id-tiebroken
-                        # — fine for an ef candidate pool feeding the
-                        # exact re-rank; the oracled rounded-gate cuts
-                        # (knn_pq_adc / knn_ivf_pq) use the single-query
-                        # paths, which keep their full id-tiebroken sort
-                        part = np.argpartition(summed, kk - 1, axis=0)[:kk, :]
-                        summed = np.take_along_axis(summed, part, axis=0)
-                        idm = np.take_along_axis(idm, part, axis=0)
-                        if fused_t:
-                            srcm = np.take_along_axis(srcm, part, axis=0)
-                    sel = np.lexsort((idm, summed), axis=0)
-                    run_d = np.take_along_axis(summed, sel, axis=0)
-                    run_id = np.take_along_axis(idm, sel, axis=0)
-                    if fused_t:
-                        run_src = np.take_along_axis(srcm, sel, axis=0)
-                        # buffer THIS batch's pool survivors' vectors in
-                        # the STORE dtype (f64 upcast happens once at the
-                        # end-of-task re-rank — lossless, so the exact
-                        # distances match the two-wave closure's bits)
-                        new_rows = np.unique(run_src[run_src >= off])
-                        if new_rows.size:
-                            vx = vec_matrix(
-                                rb.column(rb.schema.get_field_index(vec_col)))
-                            grab = np.ascontiguousarray(vx[new_rows - off])
-                            vkeys.append(new_rows)
-                            vmats.append(grab)
-                            vbytes += grab.nbytes
-                            if vbytes > 256 << 20:
-                                # keep only rows the live pool references
-                                vk = np.concatenate(vkeys)
-                                vm = (np.concatenate(vmats)
-                                      if len(vmats) > 1 else vmats[0])
-                                keep = np.isin(vk, np.unique(run_src))
-                                vkeys = [vk[keep]]
-                                vmats = [np.ascontiguousarray(vm[keep])]
-                                vbytes = vmats[0].nbytes
-                    off += codes.shape[0]
-                if run_d is None:
+                        # buffer the pool survivors' vectors in the STORE
+                        # dtype (exact_rerank upcasts per step, losslessly)
+                        need = np.unique(rows)
+                        vx = vec_matrix(rb.column(rb.schema.get_field_index(vec_col)))
+                        args += (ids[need], np.ascontiguousarray(vx[need]))
+                    acc.add(*args)
+                out = acc.result()
+                if out is None:
                     return
-                kk = run_d.shape[0]
-                out_q = np.repeat(bqids, kk)
-                out_i = run_id.T.reshape(-1)
-                out_a = run_d.T.reshape(-1)
-                if not fused_t:
-                    yield result_batch(
-                        out_schema,
-                        query_id=out_q,
-                        **{id_col: out_i},
-                        adc=out_a,
-                    )
-                    return
-                # in-task exact re-rank of the pool — the same ops, in
-                # the same order, as make_grouped_rerank_scan: per-row
-                # self-dots on the f64 matrix of UNIQUE pool vectors,
-                # per-pair dots on the gathered rows, 4-dp half-up round
-                vk = np.concatenate(vkeys)
-                vm = np.concatenate(vmats) if len(vmats) > 1 else vmats[0]
-                o = np.argsort(vk, kind="stable")
-                vk_s = vk[o]
-                x_u = np.asarray(vm[o], dtype=np.float64)
-                x2u = np.einsum("ij,ij->i", x_u, x_u)
-                pos = np.searchsorted(vk_s, run_src.T.reshape(-1))
-                qidx = np.repeat(np.arange(len(bqids)), kk)
-                xs = x_u[pos]
-                ip = np.einsum("ij,ij->i", xs, bqmat[qidx])
-                if bsq is None:
-                    ex = x2u[pos] + q2[qidx] - 2.0 * ip
-                else:
-                    ex = 1.0 - ip / np.maximum(
-                        np.sqrt(x2u[pos]) * qnorm[qidx], 1e-10)
-                yield result_batch(
-                    out_schema,
-                    query_id=out_q,
-                    **{id_col: out_i},
-                    adc=out_a,
-                    dist=np_round_half_up(ex),
-                )
+                qx, ids, adc = out[:3]
+                cols = {"query_id": bqids[qx], id_col: ids, "adc": adc}
+                if fused_t:
+                    # in-task exact re-rank of the pool: the same
+                    # function, ops and rounding as the two-wave wave
+                    cols["dist"] = exact_rerank(out[3], out[4], ids, bqmat, qx,
+                                                metric)
+                yield result_batch(out_schema, **cols)
 
             return scan
 

@@ -21,11 +21,18 @@ rayon loop, examples/bench.rs:414-417):
   for small query sets, wrong at scale.
 - ``partitioned`` (default): Arrow-batched numpy scan. Each input batch
   computes a (batch × queries) distance matrix against the broadcast
-  query block and emits only its local top-k per query; a final window
-  over ~``num_batches × |Q| × k`` rows picks the global top-k. The
+  query block and cuts its per-query top-k; each task emits the top-k
+  per query across its batches, and the global cut (driver merge or
+  window, :func:`merge_topk`) runs over ~``tasks × |Q| × k`` rows. The
   shuffle is k-bounded, independent of base-table size — this is the
   plan that survives 100 TB. (Same partial-top-k-then-merge shape that
   TakeOrderedAndProject uses, generalized per query.)
+
+The per-task half is shared by every batch scan tier (flat, IVF, PQ,
+IVF+PQ): :func:`topk_cut` cuts a scored tile per query (compiled heap
+or numpy round + lexsort) and :class:`TopkAccumulator` keeps the task's
+candidates down to the per-query top-k; the post-scan half is
+:func:`merge_topk` (and ``index/pq.py::finish_adc``).
 
 Determinism contract for the correctness oracle: distances are computed
 in float64, rounded to ``ROUND_DECIMALS``, normalized ``-0.0 → +0.0``,
@@ -40,11 +47,12 @@ import math
 from collections.abc import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.functions.distance import DISTANCES, dist_expr
+from lab_1806_vec_db_spark.index import ckernel
+from lab_1806_vec_db_spark.index.kmeans import _pairwise_dist
 
 #: decimals kept on emitted distances — enough to order meaningfully,
 #: coarse enough that float64 summation-order differences (Spark vs
@@ -153,28 +161,18 @@ def knn_grouped(
     )
 
 
-def _dist_matrix(x: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
-    """(n × d) base block vs (m × d) query block → (n × m) float64
-    distances; algebraic forms match the reference's cached-dot
-    formulations (distance/mod.rs:51-69)."""
-    ip = x @ q.T
-    if metric == "l2sqr":
-        x2 = np.einsum("ij,ij->i", x, x)
-        q2 = np.einsum("ij,ij->i", q, q)
-        return x2[:, None] + q2[None, :] - 2.0 * ip
-    # cosine with the reference's 1e-10 denominator floor
-    nx = np.sqrt(np.einsum("ij,ij->i", x, x))
-    nq = np.sqrt(np.einsum("ij,ij->i", q, q))
-    denom = np.maximum(nx[:, None] * nq[None, :], 1e-10)
-    return 1.0 - ip / denom
-
-
 #: Driver-memory bound of the one merge gate (:func:`driver_side`): a
 #: batch serve whose estimated emission fits it is finished on the
 #: driver, above it by the distributed window plan.
 DRIVER_MERGE_MAX_BYTES = 512 << 20
 #: Largest query block a batch tier driver-collects and broadcasts.
 MAX_QUERIES = 200_000
+#: Compaction floors of the per-task candidate accumulator
+#: (:class:`TopkAccumulator`): (query, id, dist) triples, and — on the
+#: fused PQ / IVF+PQ scans — bytes of buffered candidate vectors. The
+#: scans read them on the driver when they build their plan.
+ACC_CAP_ROWS = 2_000_000
+ACC_VEC_BYTES = 256 << 20
 
 _log = logging.getLogger("lab_1806_vec_db_spark")
 
@@ -256,32 +254,17 @@ def knn_batch(
     qids, qmat = block
     bc = spark.sparkContext.broadcast((qids, qmat))
 
+    cap = ACC_CAP_ROWS
+
     def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         from lab_1806_vec_db_spark.functions.arrowvec import (
             knn_schema,
             result_batch,
             vec_matrix,
         )
-        from lab_1806_vec_db_spark.index import ckernel
 
         bqids, bq = bc.value
-        out_schema = knn_schema(id_col)
-        # per-batch top-k through the compiled heap kernel when a C
-        # toolchain exists (round-14, guide §4): the full 2-key lexsort
-        # over the (rows × |Q|) tile was 134 ms of a 140 ms task at
-        # bench shape (the GEMM itself is ~2 ms); the kernel's bounded
-        # (rounded d, id) max-heap keeps the BIT-IDENTICAL set and
-        # order in ~10 ms, GIL-released, striding the GEMM's natural
-        # layout (no transpose copy). The numpy branch below is the
-        # toolchain-free fallback, same results.
-        use_c = ckernel.available()
-        # running per-TASK top-k (k × |Q|): merging across Arrow
-        # batches keeps the shuffle input at tasks × |Q| × k instead of
-        # arrow_batches × |Q| × k — identical final result (the global
-        # window keeps top-k by the same (dist, id) order; anything
-        # pruned here is dominated in-task)
-        run_d = run_i = None
-        n_seen = 0
+        acc = TopkAccumulator(k, cap)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -289,57 +272,16 @@ def knn_batch(
             # vector column (the f64 cast is the only copy)
             x = vec_matrix(rb.column(rb.schema.get_field_index(vec_col)),
                            dtype=np.float64)
-            d = _dist_matrix(x, bq, metric)
             ids = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
                 zero_copy_only=False)
-            n_seen += d.shape[0]
-            if use_c:
-                # (|Q| × k) rounded top-k, -1/inf padded below k rows;
-                # cross-batch merge re-runs the same heap on the
-                # concatenated (|Q| × 2k) survivors (already rounded)
-                new_i, new_d = ckernel.dense_topk(
-                    d, np.ascontiguousarray(ids, dtype=np.int64), k,
-                    do_round=True, queries_axis=1)
-                if run_d is None:
-                    run_d, run_i = new_d, new_i
-                else:
-                    run_i, run_d = ckernel.dense_topk(
-                        np.concatenate([run_d, new_d], axis=1),
-                        np.concatenate([run_i, new_i], axis=1),
-                        k, do_round=False)
-                continue
-            d = np_round_half_up(d)
-            kk = min(k, d.shape[0])
-            order_ids = np.broadcast_to(ids[:, None], d.shape)
-            sel = np.lexsort((order_ids, d), axis=0)[:kk, :]
-            new_i = ids[sel]
-            new_d = np.take_along_axis(d, sel, axis=0)
-            if run_d is None:
-                run_d, run_i = new_d, new_i
-                continue
-            md = np.concatenate([run_d, new_d], axis=0)
-            mi = np.concatenate([run_i, new_i], axis=0)
-            sel2 = np.lexsort((mi, md), axis=0)[: min(k, md.shape[0]), :]
-            run_d = np.take_along_axis(md, sel2, axis=0)
-            run_i = np.take_along_axis(mi, sel2, axis=0)
-        if run_d is None:
-            return
-        if use_c:
-            kk = min(k, n_seen)
-            yield result_batch(
-                out_schema,
-                query_id=np.repeat(bqids, kk),
-                **{id_col: run_i[:, :kk].reshape(-1)},
-                dist=run_d[:, :kk].reshape(-1),
-            )
-            return
-        kk = run_d.shape[0]
-        yield result_batch(
-            out_schema,
-            query_id=np.repeat(bqids, kk),
-            **{id_col: run_i.T.reshape(-1)},
-            dist=run_d.T.reshape(-1),
-        )
+            rows, d = topk_cut(_pairwise_dist(x, bq, metric), ids, k, True)
+            acc.add(np.repeat(np.arange(len(bqids)), rows.shape[1]),
+                    ids[rows].reshape(-1), d.reshape(-1))
+        out = acc.result()
+        if out is not None:
+            qx, ids_o, d_o = out[:3]
+            yield result_batch(knn_schema(id_col), query_id=bqids[qx],
+                               **{id_col: ids_o}, dist=d_o)
 
     src = df.select(id_col, vec_col)
     scored = src.mapInArrow(
@@ -358,14 +300,119 @@ def local_topk_grouped(qx: np.ndarray, ids: np.ndarray, dist: np.ndarray, k: int
     """Vectorized per-group top-k: indices of the rows that rank < k
     within their ``qx`` group under the (dist asc, id asc) total order
     — the SAME order the global merge window applies, which is what
-    makes in-task pruning with this helper output-preserving. Shared
-    by the task-level candidate accumulators (IVF / IVF+PQ scans)."""
+    makes in-task pruning with this helper output-preserving. The
+    compaction of :class:`TopkAccumulator`."""
     order = np.lexsort((ids, dist, qx))
     qs = qx[order]
     starts = np.r_[0, 1 + np.flatnonzero(qs[1:] != qs[:-1])]
     sizes = np.diff(np.r_[starts, qs.size])
     pos = np.arange(qs.size) - np.repeat(starts, sizes)
     return order[pos < int(k)]
+
+
+def topk_cut(
+    d: np.ndarray, ids: np.ndarray, kk: int, round: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-query top-``kk`` of a (candidates × queries) distance tile
+    by (dist, id): ``d`` is (n × S), ``ids`` the (n,) candidate ids.
+    ``round`` cuts on the 4-dp :func:`np_round_half_up` grid (the
+    oracle contract) instead of the raw values. Returns ``(rows, dist)``,
+    each (S × min(kk, n)): the kept tile rows (``ids[rows]`` are their
+    ids) and their distances, ascending per query.
+
+    The one place that picks the compiled heap (``ckernel.dense_topk``,
+    GIL-released, strides either tile layout with no transpose copy)
+    over the numpy round + lexsort, which is the toolchain-free path and
+    the tests' reference. Both keep the same rows in the same order:
+    NaN sorts after every number, and ``kk`` is clipped to the tile's
+    row count, so no (inf, -1) padding ever reaches a caller."""
+    kk = min(int(kk), d.shape[0])
+    if ckernel.available():
+        if d.T.flags["C_CONTIGUOUS"] and not d.flags["C_CONTIGUOUS"]:
+            _, dist, rows = ckernel.dense_topk(d.T, ids, kk, round, return_rows=True)
+        else:
+            _, dist, rows = ckernel.dense_topk(d, ids, kk, round, queries_axis=1,
+                                               return_rows=True)
+        return rows, dist
+    d = np.asarray(d, dtype=np.float64)
+    if round:
+        d = np_round_half_up(d)
+    sel = np.lexsort((np.broadcast_to(ids[:, None], d.shape), d), axis=0)[:kk, :]
+    return sel.T, np.take_along_axis(d, sel, axis=0).T
+
+
+class TopkAccumulator:
+    """The per-task candidate buffer of the batch scans: (query index,
+    id, dist) triples from each scored tile, kept down to the per-query
+    top-``k`` by (dist, id) — the order of the global cut, so what it
+    prunes is dominated in-task and the serve's result is unchanged.
+    Arrow hands a task its rows as ~10k-row fragments; emitting one
+    cut per fragment would multiply the shuffle (and the fused exact
+    re-rank) by the fragmentation factor.
+
+    An optional payload buffers candidate vectors by id (each row lives
+    in one fragment, so ids are unique) for the fused exact re-rank;
+    compaction keeps exactly the vectors the surviving triples reference.
+
+    Compaction (:func:`local_topk_grouped`) fires when the buffer
+    exceeds its threshold — ``cap_rows`` triples or ``cap_vec_bytes``
+    payload bytes, the floors — and each threshold then resets to
+    max(floor, 1.5× the live set). A live set above the floor (wide
+    probes × high ef) thus compacts amortized O(log) times instead of on
+    every fragment; the worst-case memory is 1.5× the live set."""
+
+    def __init__(self, k: int, cap_rows: int, cap_vec_bytes: int = 0) -> None:
+        self.k = int(k)
+        self._floor, self._vfloor = int(cap_rows), int(cap_vec_bytes)
+        self._cap, self._vcap = self._floor, self._vfloor
+        self._q: list[np.ndarray] = []
+        self._i: list[np.ndarray] = []
+        self._d: list[np.ndarray] = []
+        self._vk: list[np.ndarray] = []
+        self._vx: list[np.ndarray] = []
+        self._n = self._vn = 0
+        self._compacted = False
+
+    def add(self, qx: np.ndarray, ids: np.ndarray, d: np.ndarray,
+            vec_ids: np.ndarray | None = None, vecs: np.ndarray | None = None) -> None:
+        """Buffer triples ``(qx, ids, d)`` and, with a payload, the
+        vectors ``vecs`` of the candidates ``vec_ids``."""
+        self._q.append(qx)
+        self._i.append(ids)
+        self._d.append(d)
+        self._n += ids.size
+        if vecs is not None:
+            self._vk.append(vec_ids)
+            self._vx.append(vecs)
+            self._vn += vecs.nbytes
+        self._compacted = False
+        if self._n > self._cap or (self._vk and self._vn > self._vcap):
+            self._compact()
+
+    def _compact(self) -> None:
+        qx, ids, d = (np.concatenate(a) for a in (self._q, self._i, self._d))
+        keep = local_topk_grouped(qx, ids, d, self.k)
+        self._q, self._i, self._d = [qx[keep]], [ids[keep]], [d[keep]]
+        self._n = keep.size
+        self._cap = max(self._floor, self._n + (self._n >> 1))
+        if self._vk:
+            vk = np.concatenate(self._vk)
+            vx = np.concatenate(self._vx) if len(self._vx) > 1 else self._vx[0]
+            live = np.isin(vk, self._i[0])
+            self._vk, self._vx = [vk[live]], [np.ascontiguousarray(vx[live])]
+            self._vn = self._vx[0].nbytes
+            self._vcap = max(self._vfloor, self._vn + (self._vn >> 1))
+        self._compacted = True
+
+    def result(self) -> tuple[np.ndarray, ...] | None:
+        """The per-query top-``k`` as ``(qx, ids, d)`` — plus ``(vec_ids,
+        vecs)`` with a payload — or None when nothing was added."""
+        if self._n == 0:
+            return None
+        if not self._compacted:
+            self._compact()
+        out = (self._q[0], self._i[0], self._d[0])
+        return out + (self._vk[0], self._vx[0]) if self._vk else out
 
 
 def fast_topk_grouped(qx: np.ndarray, ids: np.ndarray, dist: np.ndarray, k: int) -> np.ndarray:

@@ -281,8 +281,9 @@ def test_pq_batch_chunked_lut_broadcast_matches(emb, pq16, monkeypatch):
         return real(qmat, *a, **kw)
 
     monkeypatch.setattr(pq_mod, "build_lookup_batch", counting)
+    monkeypatch.setattr(pq_mod, "MAX_LUT_BYTES", 1)
     chunked = pq16.search_batch(queries, k=3, ef=40, metric="l2sqr",
-                                qvec_col="embedding", max_lut_bytes=1).collect()
+                                qvec_col="embedding").collect()
     assert calls == [256, 44]  # chunk floor of 256 → two lookup tensors
     assert [tuple(r) for r in chunked] == [tuple(r) for r in single]
 

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from lab_1806_vec_db_spark.index import pq as pq_mod
 from lab_1806_vec_db_spark.index.ivfpq import IVFPQIndex
 from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.session import read_table
@@ -123,15 +124,16 @@ def test_partition_pruning_reaches_scan(spark, emb, tmp_path, qvec):
     assert "PartitionFilters" in plan and "cluster_id" in plan
 
 
-def test_chunked_lut_broadcast_matches(emb, ivfpq):
+def test_chunked_lut_broadcast_matches(emb, ivfpq, monkeypatch):
     # force multiple LUT chunks (tiny budget ⇒ 4 queries per chunk) —
     # results must be identical to the single-chunk run
     queries = emb.filter(F.col("vec_id") < 12).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     one = ivfpq.search_batch(queries, k=5, n_probes=4, ef=32, qvec_col="embedding").collect()
+    monkeypatch.setattr(pq_mod, "MAX_LUT_BYTES", 1)
     many = ivfpq.search_batch(queries, k=5, n_probes=4, ef=32,
-                              qvec_col="embedding", max_lut_bytes=1).collect()
+                              qvec_col="embedding").collect()
     assert sorted(map(tuple, many)) == sorted(map(tuple, one))
 
 
@@ -440,9 +442,9 @@ def test_local_serve_upper_bound_and_cap(spark, emb, qvec, ivfpq):
     assert _pairs(loc) == _pairs(dist)
 
 
-def test_local_serve_lut_chunking_matches(spark, emb):
+def test_local_serve_lut_chunking_matches(spark, emb, monkeypatch):
     """_search_local bounds its f64 lookup tensor by the SAME
-    max_lut_bytes budget the distributed path applies per broadcast
+    MAX_LUT_BYTES budget the distributed path applies per broadcast
     (a 200k-query batch otherwise allocated a multi-GB driver LUT
     independent of the mirror cap). Chunked and unchunked runs must be
     identical — chunking only splits the query axis."""
@@ -458,7 +460,9 @@ def test_local_serve_lut_chunking_matches(spark, emb):
     )
     big = idx._search_local(qmat, 10, 4, 64, "l2sqr")
     # one query's LUT is m*ksub*8 = 32 KiB > 16 KiB budget → chunk of 4
-    tiny = idx._search_local(qmat, 10, 4, 64, "l2sqr", max_lut_bytes=16 << 10)
+    with monkeypatch.context() as mp:
+        mp.setattr(pq_mod, "MAX_LUT_BYTES", 16 << 10)
+        tiny = idx._search_local(qmat, 10, 4, 64, "l2sqr")
     for a, b in zip(big, tiny):
         assert np.array_equal(a, b)
     # and through the public batch API with a forced tiny budget
@@ -467,9 +471,9 @@ def test_local_serve_lut_chunking_matches(spark, emb):
     )
     ref = idx.search_batch(queries, k=10, n_probes=4, ef=64,
                            qvec_col="embedding").collect()
+    monkeypatch.setattr(pq_mod, "MAX_LUT_BYTES", 16 << 10)
     chunked = idx.search_batch(queries, k=10, n_probes=4, ef=64,
-                               qvec_col="embedding",
-                               max_lut_bytes=16 << 10).collect()
+                               qvec_col="embedding").collect()
     assert sorted(map(tuple, chunked)) == sorted(map(tuple, ref))
 
 def test_persist_codes_pin_survives_append_and_compact(spark, emb, tmp_path):
@@ -547,12 +551,19 @@ def test_store_vec_dtype_f32(spark, emb, qvec, tmp_path):
 
 
 @pytest.mark.parametrize("store_dtype", [None, "float32"])
-def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtype):
+def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtype,
+                                                monkeypatch):
     """Tiny accumulator floors force the geometric-compaction path (a
-    live candidate set far above acc_cap_rows/acc_vec_bytes, the 1M
+    live candidate set far above ACC_CAP_ROWS/ACC_VEC_BYTES, the 1M
     wide-probe regime in miniature): results must be IDENTICAL to the
-    defaults on both the fused and two-pass plans, for both stored
-    dtypes (fused buffers candidate vectors in the store dtype)."""
+    defaults on the fused and two-pass IVF+PQ plans, for both stored
+    dtypes (fused buffers candidate vectors in the store dtype) — and on
+    the flat, IVF and PQ (fused and two-wave) tiers, which share the
+    one per-task accumulator (100-row Arrow batches give each of their
+    tasks several fragments)."""
+    from lab_1806_vec_db_spark.index.ivf import IVFIndex
+    from lab_1806_vec_db_spark.index.pq import PQTable
+
     path = str(tmp_path / f"ivfpq_geo_{store_dtype}")
     idx = IVFPQIndex.build(
         emb, k_coarse=16, m=16, n_bits=8, metric="l2sqr",
@@ -563,13 +574,49 @@ def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtyp
         F.col("vec_id").alias("query_id"), "embedding"
     )
     key = lambda r: (r["query_id"], r["dist"], r["vec_id"])
+
+    def tiny_floors(serve):
+        with monkeypatch.context() as mp:
+            mp.setattr(knn_ops, "ACC_CAP_ROWS", 64)
+            mp.setattr(knn_ops, "ACC_VEC_BYTES", 1024)
+            return serve().collect()
+
     for fuse in (True, False):
-        ref = idx.search_batch(queries, k=5, n_probes=8, ef=48,
-                               qvec_col="embedding", fuse_rerank=fuse).collect()
-        tiny = idx.search_batch(queries, k=5, n_probes=8, ef=48,
-                                qvec_col="embedding", fuse_rerank=fuse,
-                                acc_cap_rows=64, acc_vec_bytes=1024).collect()
+        serve = lambda: idx.search_batch(queries, k=5, n_probes=8, ef=48,
+                                         qvec_col="embedding", fuse_rerank=fuse)
+        ref = serve().collect()
+        tiny = tiny_floors(serve)
         assert sorted(tiny, key=key) == sorted(ref, key=key), f"fuse={fuse}"
+
+    base = emb if store_dtype is None else emb.withColumn(
+        "embedding", F.col("embedding").cast("array<float>")).cache()
+    ivf = IVFIndex.build(base, k=16, metric="l2sqr", vec_col="embedding",
+                         id_col="vec_id", train_size=500)
+    pq = PQTable.train(base, dim=64, m=16, n_bits=8, train_proportion=0.5,
+                       vec_col="embedding", id_col="vec_id")
+    serves = {
+        "flat": lambda: knn_ops.knn_batch(
+            base, queries, 5, metric="l2sqr", vec_col="embedding",
+            id_col="vec_id", qvec_col="embedding"),
+        "ivf": lambda: ivf.search_batch(queries, 5, n_probes=8,
+                                        qvec_col="embedding"),
+        "pq_fused": lambda: pq.search_batch(queries, 5, ef=48, metric="l2sqr",
+                                            qvec_col="embedding", fuse_rerank=True),
+        "pq_two_wave": lambda: pq.search_batch(queries, 5, ef=48, metric="l2sqr",
+                                               qvec_col="embedding",
+                                               fuse_rerank=False),
+    }
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(batch_key)
+    spark.conf.set(batch_key, "100")
+    try:
+        for tier, serve in serves.items():
+            ref = serve().collect()
+            tiny = tiny_floors(serve)
+            assert len(ref) == 12 * 5, tier
+            assert sorted(tiny, key=key) == sorted(ref, key=key), tier
+    finally:
+        spark.conf.set(batch_key, old)
 
 
 def test_fused_auto_rule_keys_on_dim(emb, ivfpq):

@@ -259,3 +259,101 @@ def test_dense_topk_kernel_matches_lexsort():
     sel2 = np.lexsort((mi.T, md.T), axis=0)[:8, :]
     assert np.array_equal(ri, np.take_along_axis(mi.T, sel2, axis=0).T)
     assert np.array_equal(rd, np.take_along_axis(md.T, sel2, axis=0).T)
+
+
+def test_topk_cut_both_sides_identical_on_nonfinite(monkeypatch):
+    """topk_cut's compiled heap and its numpy round + lexsort keep the
+    same rows in the same order on non-finite input: NaN after every
+    number (NaNs by id), ±inf ordered by id among themselves, and kk
+    above the tile's row count clipped — never (inf, -1) padding."""
+    from lab_1806_vec_db_spark.index import ckernel
+
+    if not ckernel.available():
+        pytest.skip("no C toolchain")
+    rng = np.random.default_rng(11)
+    n, q = 40, 6
+    d = rng.random((n, q)) * 3
+    d[rng.random((n, q)) < 0.2] = np.nan
+    d[rng.random((n, q)) < 0.15] = np.inf
+    d[rng.random((n, q)) < 0.1] = -np.inf
+    d[:5] = np.nan  # NaN during the heap fill
+    d[:, 0] = np.nan  # an all-NaN query
+    d[10:14, 1] = d[20:24, 1] = 1.23456  # rounding ties
+    ids = rng.permutation(1000)[:n].astype(np.int64)
+    cases = [(d, kk, rnd) for kk in (1, 7, n, n + 9) for rnd in (True, False)]
+    cases.append((np.asfortranarray(d), 7, True))  # (S × n)-contiguous tile
+    for tile, kk, rnd in cases:
+        c_rows, c_d = knn_ops.topk_cut(tile, ids, kk, rnd)
+        with monkeypatch.context() as mp:
+            mp.setattr(ckernel, "available", lambda: False)
+            n_rows, n_d = knn_ops.topk_cut(tile, ids, kk, rnd)
+        assert c_rows.shape == (q, min(kk, n))
+        assert np.array_equal(c_rows, n_rows), (kk, rnd)
+        assert np.array_equal(c_d, n_d, equal_nan=True), (kk, rnd)
+        assert np.array_equal(ids[c_rows], ids[n_rows])
+    # the all-NaN query keeps its rows by id
+    rows, _ = knn_ops.topk_cut(d, ids, n, True)
+    assert np.array_equal(ids[rows[0]], np.sort(ids))
+
+
+def test_l2sqr_large_scale_never_negative(spark):
+    """l2sqr distances are clamped at 0 on every path. At 1e5 scale the
+    cached-dot form x² + q² − 2·x·q leaves round-off residuals of a few
+    1e-3 around the true 0 of a self-hit: the negative ones rounded to
+    e.g. -0.0034 on the partitioned flat scan, while the crossjoin plan
+    (direct Σ(x−q)², exactly 0) and IVF (kmeans._pairwise_dist) never
+    go below 0. The positive residuals are the cached-dot form's own
+    (the reference's distance/mod.rs form) and depend on the GEMM's
+    blocking, so only the sign is path-independent."""
+    from lab_1806_vec_db_spark.index.ivf import IVFIndex
+
+    rng = np.random.default_rng(0)
+    x = rng.normal(size=(200, 128)) * 1e5
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "id long, vec array<double>").cache()
+    queries = df.withColumnRenamed("id", "query_id")
+    ivf = IVFIndex.build(df, k=4, metric="l2sqr", train_size=200)
+    serves = {
+        "partitioned": knn_ops.knn_batch(df, queries, 3, metric="l2sqr"),
+        "crossjoin": knn_ops.knn_batch(df, queries, 3, metric="l2sqr",
+                                       strategy="crossjoin"),
+        "ivf": ivf.search_batch(queries, 3, n_probes=4),
+    }
+    for name, frame in serves.items():
+        rows = frame.collect()
+        assert len(rows) == 600, name
+        assert all(r["dist"] >= 0.0 for r in rows), name
+        self_hits = [r for r in rows if r["id"] == r["query_id"]]
+        assert len(self_hits) == 200 and all(r["dist"] < 0.01 for r in self_hits), name
+        if name == "crossjoin":
+            assert all(r["dist"] == 0.0 for r in self_hits)
+
+
+def test_exact_rerank_pool_contract():
+    """The one exact re-rank: rounded exact distances keyed by id from
+    an unordered pool, l2sqr clamped at 0, and a candidate id missing
+    from the pool raises instead of gathering another row's vector."""
+    from lab_1806_vec_db_spark.index.pq import exact_rerank
+
+    rng = np.random.default_rng(3)
+    vecs = rng.normal(size=(6, 8)).astype(np.float32)
+    keys = np.array([50, 10, 40, 20, 60, 30], dtype=np.int64)
+    qmat = np.vstack([vecs[1].astype(np.float64), rng.normal(size=8)])
+    ids = np.array([10, 60, 30, 10], dtype=np.int64)
+    qidx = np.array([0, 0, 1, 1], dtype=np.int64)
+    x = vecs[[1, 4, 5, 1]].astype(np.float64)
+    q = qmat[qidx]
+    want = knn_ops.np_round_half_up(np.maximum(((x - q) ** 2).sum(axis=1), 0.0))
+    got = exact_rerank(keys, vecs, ids, qmat, qidx, "l2sqr")
+    assert got[0] == 0.0
+    assert np.allclose(got, want, atol=2e-4)
+    cos = exact_rerank(keys, vecs, ids, qmat, qidx, "cosine")
+    want_cos = 1.0 - (x * q).sum(axis=1) / (np.linalg.norm(x, axis=1) * np.linalg.norm(q, axis=1))
+    assert np.allclose(cos, want_cos, atol=2e-4)
+    with pytest.raises(ValueError, match="missing"):
+        exact_rerank(keys, vecs, np.array([10, 35], dtype=np.int64), qmat,
+                     np.array([0, 1], dtype=np.int64), "l2sqr")
+    with pytest.raises(ValueError, match="missing"):  # above every key
+        exact_rerank(keys, vecs, np.array([99], dtype=np.int64), qmat,
+                     np.array([0], dtype=np.int64), "l2sqr")

@@ -15,7 +15,11 @@ from hypothesis import strategies as st
 from lab_1806_vec_db_spark.functions.distance import calc_dist
 from lab_1806_vec_db_spark.index.kmeans import _pairwise_dist
 from lab_1806_vec_db_spark.index.pq import pack_codes, pq_groups, unpack_codes
-from lab_1806_vec_db_spark.operators.knn import np_round_half_up
+from lab_1806_vec_db_spark.operators.knn import (
+    TopkAccumulator,
+    local_topk_grouped,
+    np_round_half_up,
+)
 
 finite = st.floats(min_value=-1e3, max_value=1e3, allow_nan=False, width=32)
 vec = st.lists(finite, min_size=1, max_size=16)
@@ -124,3 +128,54 @@ def test_hash32_portable_python_vs_duckdb(s):
         "SELECT CAST(('0x' || substr(md5(?),1,8)) AS BIGINT)", [s]
     ).fetchone()[0]
     assert py == db
+
+
+@given(
+    st.integers(min_value=1, max_value=12),     # fragments
+    st.integers(min_value=1, max_value=5),      # k
+    st.integers(min_value=1, max_value=40),     # row floor
+    st.integers(min_value=0, max_value=2**32 - 1),
+    st.booleans(),                              # vector payload
+)
+@settings(max_examples=60, deadline=None)
+def test_topk_accumulator_matches_one_shot(n_frag, k, floor, seed, payload):
+    """The per-task candidate accumulator, fed random fragments in
+    random order with tiny floors (so the geometric compaction fires),
+    keeps exactly the triples one-shot ``local_topk_grouped`` keeps on
+    the concatenation; its payload holds exactly the vectors the
+    surviving triples reference. Fragments own disjoint ids (a row
+    lives in one Arrow fragment) and repeat distances (ties)."""
+    rng = np.random.default_rng(seed)
+    frags, next_id = [], 0
+    for _ in range(n_frag):
+        n_ids = int(rng.integers(1, 8))
+        fid = next_id + rng.permutation(n_ids * 3)[:n_ids].astype(np.int64)
+        next_id += n_ids * 3
+        pick = rng.random((n_ids, 4)) < 0.7  # (id, query) pairs present
+        ii, qq = np.nonzero(pick)
+        frags.append((qq.astype(np.int64), fid[ii],
+                      rng.integers(0, 4, ii.size).astype(np.float64) / 2, fid))
+    vec_of = {int(i): rng.normal(size=3) for f in frags for i in f[3]}
+    acc = TopkAccumulator(k, floor, 8 if payload else 0)
+    for j in rng.permutation(n_frag):
+        qx, ids, d, fid = frags[j]
+        if payload:
+            acc.add(qx, ids, d, fid, np.stack([vec_of[int(i)] for i in fid]))
+        else:
+            acc.add(qx, ids, d)
+    out = acc.result()
+    qx, ids, d = (np.concatenate([f[i] for f in frags]) for i in range(3))
+    keep = local_topk_grouped(qx, ids, d, k)
+    want = sorted(zip(qx[keep].tolist(), ids[keep].tolist(), d[keep].tolist()))
+    if not want:
+        assert out is None
+        return
+    got = sorted(zip(*(a.tolist() for a in out[:3])))
+    assert got == want
+    if payload:
+        vk, vx = out[3], out[4]
+        assert sorted(vk.tolist()) == sorted(set(out[1].tolist()))
+        for i, v in zip(vk.tolist(), vx):
+            assert np.array_equal(v, vec_of[i])
+    else:
+        assert len(out) == 3
