@@ -140,7 +140,7 @@ static void topk_offer(trip_t *heap, long *hs, int kk, trip_t t) {
 }
 
 /* sort the kept triples and write one query's kk outputs, padded with
- * id = row = -1, d = HUGE_VAL past the kept count; out_row may be NULL */
+ * id = row = -1, d = HUGE_VAL past the kept count */
 static void topk_emit(trip_t *heap, long hs, int kk,
                       long *oi, long *orw, double *od) {
     qsort(heap, (size_t)hs, sizeof(trip_t), trip_cmp);
@@ -148,7 +148,7 @@ static void topk_emit(trip_t *heap, long hs, int kk,
         int kept = i < hs;
         oi[i] = kept ? heap[i].id : -1;
         od[i] = kept ? heap[i].d : HUGE_VAL;
-        if (orw) orw[i] = kept ? heap[i].row : -1;
+        orw[i] = kept ? heap[i].row : -1;
     }
 }
 
@@ -166,7 +166,7 @@ static void topk_emit(trip_t *heap, long hs, int kk,
  * ids: per-query candidate ids; ids_stride 0 shares one (n,) vector
  * across queries, n gives each query its own row. do_round applies
  * floor(v*1e4+0.5)/1e4 — the exact np_round_half_up operation.
- * Outputs (S x kk) ids, tile rows (out_row may be NULL) and distances,
+ * Outputs (S x kk) ids, tile rows and distances,
  * padded id = row = -1 / d = HUGE_VAL past n.
  */
 int dense_topk(
@@ -187,8 +187,7 @@ int dense_topk(
             topk_offer(heap, &hs, kk, t);
         }
         topk_emit(heap, hs, kk, out_id + (size_t)s * kk,
-                  out_row ? out_row + (size_t)s * kk : NULL,
-                  out_d + (size_t)s * kk);
+                  out_row + (size_t)s * kk, out_d + (size_t)s * kk);
     }
     free(heap);
     return 0;
@@ -1271,8 +1270,7 @@ def dense_topk(
     kk: int,
     do_round: bool,
     queries_axis: int = 0,
-    return_rows: bool = False,
-) -> tuple[np.ndarray, ...]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Compiled per-query top-``kk`` over a dense f64 distance tile by
     (optionally 4-dp-rounded, id) — the exact kept set and order of
     ``np_round_half_up`` + ``np.lexsort((ids, d))[:kk]``, NaN last, one
@@ -1280,8 +1278,8 @@ def dense_topk(
     scan GEMM's natural (n × S) with ``queries_axis=1`` — the kernel
     strides over either layout, so no transpose copy is ever paid.
     ``ids`` is (n,) shared across queries or (S × n) per query.
-    Returns (ids, d) each (S × kk), padded -1 / inf past the tile's row
-    count, plus the kept tile rows (padded -1) with ``return_rows``."""
+    Returns (ids, d, rows) each (S × kk): the kept ids, distances and
+    tile rows, padded -1 / inf / -1 past the tile's row count."""
     lib = get_lib()
     assert lib is not None
     if dt.dtype != np.float64:
@@ -1297,7 +1295,7 @@ def dense_topk(
     ids = np.ascontiguousarray(ids, dtype=np.int64)
     stride = 0 if ids.ndim == 1 else n
     out_id = np.empty((S, kk), dtype=np.int64)
-    out_row = np.empty((S, kk), dtype=np.int64) if return_rows else None
+    out_row = np.empty((S, kk), dtype=np.int64)
     out_d = np.empty((S, kk), dtype=np.float64)
     rc = lib.dense_topk(
         _ptr(dt, ctypes.c_double), sq, su,
@@ -1307,7 +1305,7 @@ def dense_topk(
         _ptr(out_d, ctypes.c_double),
     )
     assert rc == 0
-    return (out_id, out_d) if out_row is None else (out_id, out_d, out_row)
+    return out_id, out_d, out_row
 
 
 def adc_lut(qspan: np.ndarray, cbs: np.ndarray) -> np.ndarray:

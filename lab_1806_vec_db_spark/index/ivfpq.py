@@ -63,7 +63,6 @@ from lab_1806_vec_db_spark.operators.knn import (
     TopkAccumulator,
     collect_query_block,
     empty_topk,
-    np_round_half_up,
     round_dist,
 )
 
@@ -834,7 +833,8 @@ class IVFPQIndex:
         # small numpy ops per query and serialized the batch): ONE
         # global (qid, adc_r, id) sort ranks every candidate inside its
         # query segment; the gate keeps rank < ef; the gated pairs are
-        # re-ranked in one exact_rerank call (keyed by mirror row); a
+        # re-ranked in one exact_rerank call straight off the mirror
+        # rows (gathered a step at a time, never as one copy); a
         # second global sort cuts rank < k. (q, id) pairs are unique — a
         # row belongs to exactly one cluster and a query probes distinct
         # clusters — so the strict (adc_r, id) order matches the
@@ -845,8 +845,7 @@ class IVFPQIndex:
         rank = np.arange(qidx.size) - bounds[qidx]
         gate = rank < ef_
         qg, ig, rg = qidx[gate], cids[gate], rowp[gate]
-        pool = np.unique(rg)
-        ex = exact_rerank(pool, L["vecs"][pool], rg, qmat, qg, metric)
+        ex = exact_rerank(L["vecs"], rg, qmat, qg, metric)
         order2 = np.lexsort((ig, ex, qg))
         qs2, is2, ds2 = qg[order2], ig[order2], ex[order2]
         b2 = np.searchsorted(qs2, np.arange(nq + 1))
@@ -935,12 +934,14 @@ class IVFPQIndex:
                 rows or [], f"{self.id_col} long, dist double"
             )
         probed = [int(c) for c in self.model.rank_centroids(q, n_probes)]
-        lut, sq, qnorm = self.pq.build_lookup(q, metric)
+        lut, sq, qn = build_lookup_batch(
+            q[None, :], self.pq.codebooks, self.pq.groups, self.pq.n_bits, metric
+        )
         spark = self.codes_clustered.sparkSession
         id_col = self.id_col
         fused = self._use_fused_rerank(n_probes, max(int(ef), int(k)), fuse_rerank)
         bc = spark.sparkContext.broadcast(
-            (lut, sq, qnorm, self.pq.m, self.pq.n_bits, q if fused else None, metric)
+            (lut, sq, qn, self.pq.m, self.pq.n_bits, q if fused else None, metric)
         )
         vec_col = self.vec_col
 
@@ -952,7 +953,7 @@ class IVFPQIndex:
                 vec_matrix,
             )
 
-            blut, bsq, bqnorm, m, n_bits, bq, bmetric = bc.value
+            blut, bsq, bqn, m, n_bits, bq, bmetric = bc.value
             ef_local = max(int(ef), int(k))
             for rb in batches:
                 if rb.num_rows == 0:
@@ -960,30 +961,29 @@ class IVFPQIndex:
                 sch = rb.schema
                 buf = binary_matrix(rb.column(sch.get_field_index("code")))
                 codes = unpack_codes(buf, m, n_bits)
-                d = PQTable._adc_scores(codes, blut, bsq, bqnorm)
                 ids = rb.column(sch.get_field_index(id_col)).to_numpy(
                     zero_copy_only=False)
                 if bq is None:
+                    rows, d = adc_tile(codes, ids, blut, bsq, bqn, None, len(ids), False)
                     yield pa.RecordBatch.from_arrays(
-                        [pa.array(ids, type=pa.int64()),
-                         pa.array(d, type=pa.float64())],
+                        [pa.array(ids[rows[0]], type=pa.int64()),
+                         pa.array(d[0], type=pa.float64())],
                         names=[id_col, "dist"],
                     )
                     continue
                 # fused exact re-rank: the raw vectors sit in the SAME
                 # row group, so compute exact distances for this
-                # partition's ADC top-ef candidates here — the global
-                # ADC gate still applies at the merge, so results are
-                # identical to the two-pass plan, minus a whole scan
-                adc_r = np_round_half_up(d)
-                kk = min(ef_local, len(ids))
-                top = np.lexsort((ids, adc_r))[:kk]
+                # partition's rounded ADC top-ef candidates here — the
+                # global ADC gate still applies at the merge, so results
+                # are identical to the two-pass plan, minus a whole scan
+                rows, adc_r = adc_tile(codes, ids, blut, bsq, bqn, None, ef_local, True)
+                top = rows[0]
                 vec_all = vec_matrix(rb.column(sch.get_field_index(vec_col)))
-                ex = exact_rerank(ids[top], vec_all[top], ids[top], bq[None, :],
-                                  np.zeros(kk, dtype=np.int64), bmetric)
+                ex = exact_rerank(vec_all, top, bq[None, :],
+                                  np.zeros(top.size, dtype=np.int64), bmetric)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(ids[top], type=pa.int64()),
-                     pa.array(adc_r[top], type=pa.float64()),
+                     pa.array(adc_r[0], type=pa.float64()),
                      pa.array(ex, type=pa.float64())],
                     names=[id_col, "adc_r", "dist"],
                 )
@@ -1241,7 +1241,7 @@ class IVFPQIndex:
                                 adc.reshape(-1))
                         if fused_t:
                             need = np.unique(top)
-                            args += (ids[need], np.ascontiguousarray(vec_all[rows[need]]))
+                            args += (ids[need], vec_all[rows[need]])
                         acc.add(*args)
                 out = acc.result()
                 if out is None:
@@ -1252,7 +1252,7 @@ class IVFPQIndex:
                     # exact re-rank of ONLY the surviving candidates —
                     # the same function and rounding as the two-pass
                     # wave, so results stay bit-identical to it
-                    cols["dist"] = exact_rerank(out[3], out[4], ids, bqmat, qx, bmetric)
+                    cols["dist"] = exact_rerank(out[3], out[4], bqmat, qx, bmetric)
                 yield result_batch(out_schema, **cols)
 
             return scan

@@ -5,8 +5,8 @@ Reference semantics (/root/reference/src/distance/pq_table.rs):
 - group split: ``m`` contiguous dimension ranges, div_ceil-balanced
   (pq_table.rs:38-53 — e.g. dim 7, m 3 → sizes [3, 2, 2]);
 - train: per group, k-means with k = 2^n_bits (4 or 8 bits) on a
-  sampled training set (pq_table.rs:141-191); centroid self-dots are
-  cached for the cosine ADC form;
+  sampled training set (pq_table.rs:141-191); the cosine ADC form takes
+  the centroid self-dots from the lookup builder;
 - encode: per vector per group, nearest-centroid id; 4-bit codes packed
   two per byte (pq_table.rs:66-91, 173-180);
 - ADC search: per query build an (m × 2^n_bits) lookup table of
@@ -21,10 +21,11 @@ Spark mapping:
   than a flat scan; at 100 TB that ratio is the whole point of PQ;
 - lookup tables are per-query, tiny, and broadcast; the ADC scan is an
   Arrow-batched lookup-sum (the SIMD loop of pq_table.rs:239-270):
-  :func:`adc_tile` scores a (rows × queries) tile and cuts each
-  query's top-ef (the compiled ``ckernel.adc_topk`` / ``adc_block``
-  kernels, or a numpy gather loop), into the task's
-  ``operators.knn.TopkAccumulator``;
+  :func:`adc_tile`, the one ADC scorer of every PQ and IVF+PQ scan
+  (batch, single-query, driver mirror), scores a (rows × queries) tile
+  and cuts each query's top-ef (the compiled ``ckernel.adc_topk`` /
+  ``adc_block`` kernels, or a numpy gather loop) — in the batch scans
+  into the task's ``operators.knn.TopkAccumulator``;
 - re-rank (:func:`exact_rerank`, the one exact re-rank of the PQ and
   IVF+PQ serves) either runs in the scan over vectors riding the codes
   batches (fused) or joins the ef candidate ids back to the base table
@@ -374,49 +375,44 @@ def adc_tile(
 
 
 def exact_rerank(
-    keys: np.ndarray,
     vecs: np.ndarray,
-    ids: np.ndarray,
+    rows: np.ndarray,
     qmat: np.ndarray,
     qidx: np.ndarray,
     metric: str,
 ) -> np.ndarray:
     """The exact re-rank of the PQ and IVF+PQ serves
     (candidate_pair.rs:102-108): the 4-dp rounded exact distance of each
-    candidate pair ``(qmat[qidx[j]], vector of ids[j])``. The pool is
-    ``vecs`` (any float dtype; upcast to f64 per step, lossless),
-    row-keyed by the unique ids ``keys`` in any order; a candidate id
-    the pool does not hold raises instead of gathering a wrong vector.
+    candidate pair ``(qmat[qidx[j]], vecs[rows[j]])``. ``vecs`` is any
+    row store (a task's buffered pool, an Arrow batch, the driver
+    mirror) in any float dtype; only the rows the pairs reference are
+    read, gathered and upcast to f64 (lossless) :data:`RERANK_STEP`
+    rows at a time, so peak memory is one step whatever the store or
+    pair count.
 
-    Self-dots are taken once per pool vector, then per pair l2sqr is
+    Self-dots are taken once per referenced row, then per pair l2sqr is
     max(‖x‖² + ‖q‖² − 2·x·q, 0) — the clamp of ``kmeans._pairwise_dist``
-    — and cosine 1 − x·q / max(‖x‖·‖q‖, 1e-10). Both loops step
-    :data:`RERANK_STEP` rows."""
-    keys = np.asarray(keys, dtype=np.int64)
-    ids = np.asarray(ids, dtype=np.int64)
-    order = np.argsort(keys, kind="stable")
-    ks = keys[order]
-    pos = np.minimum(np.searchsorted(ks, ids), max(ks.size - 1, 0))
-    if ids.size and (ks.size == 0 or not np.array_equal(ks[pos], ids)):
-        raise ValueError("exact re-rank: a candidate id is missing from the "
-                         "buffered vector pool")
-    rows = order[pos]
+    — and cosine 1 − x·q / max(‖x‖·‖q‖, 1e-10)."""
+    rows = np.asarray(rows, dtype=np.int64)
+    urows, inv = np.unique(rows, return_inverse=True)
     q64 = np.asarray(qmat, dtype=np.float64)
     q2 = np.einsum("ij,ij->i", q64, q64)
     qn = np.sqrt(q2)
-    x2 = np.empty(vecs.shape[0])
-    for s in range(0, vecs.shape[0], RERANK_STEP):
-        xc = np.asarray(vecs[s : s + RERANK_STEP], dtype=np.float64)
-        x2[s : s + RERANK_STEP] = np.einsum("ij,ij->i", xc, xc)
-    ex = np.empty(ids.size)
-    for s in range(0, ids.size, RERANK_STEP):
-        r, qi = rows[s : s + RERANK_STEP], qidx[s : s + RERANK_STEP]
-        xg = np.asarray(vecs[r], dtype=np.float64)
+    x2u = np.empty(urows.size)
+    for s in range(0, urows.size, RERANK_STEP):
+        xc = np.asarray(vecs[urows[s : s + RERANK_STEP]], dtype=np.float64)
+        x2u[s : s + RERANK_STEP] = np.einsum("ij,ij->i", xc, xc)
+    x2 = x2u[inv]
+    ex = np.empty(rows.size)
+    for s in range(0, rows.size, RERANK_STEP):
+        sl = slice(s, s + RERANK_STEP)
+        qi = qidx[sl]
+        xg = np.asarray(vecs[rows[sl]], dtype=np.float64)
         ip = np.einsum("ij,ij->i", xg, q64[qi])
         if metric == "l2sqr":
-            ex[s : s + RERANK_STEP] = np.maximum(x2[r] + q2[qi] - 2.0 * ip, 0.0)
+            ex[sl] = np.maximum(x2[sl] + q2[qi] - 2.0 * ip, 0.0)
         else:
-            ex[s : s + RERANK_STEP] = 1.0 - ip / np.maximum(np.sqrt(x2[r]) * qn[qi], 1e-10)
+            ex[sl] = 1.0 - ip / np.maximum(np.sqrt(x2[sl]) * qn[qi], 1e-10)
     return np_round_half_up(ex)
 
 
@@ -468,10 +464,10 @@ def make_grouped_rerank_scan(
             qflat = qs.flatten().to_numpy(zero_copy_only=False).astype(
                 np.int64, copy=False)
             qi = bqorder[np.searchsorted(qsorted, qflat)]
-            pair_ids = np.repeat(bids, cnt)
+            rows = np.repeat(np.arange(bids.size), cnt)
             yield result_batch(
-                out_schema, query_id=bqids[qi], **{id_col: pair_ids},
-                dist=exact_rerank(bids, x, pair_ids, bqmat, qi, metric))
+                out_schema, query_id=bqids[qi], **{id_col: bids[rows]},
+                dist=exact_rerank(x, rows, bqmat, qi, metric))
 
     return rerank
 
@@ -596,8 +592,6 @@ class PQTable:
         #: scale codes tables must not carry raw vectors and the
         #: two-wave plan serves unchanged.
         self.codes_vec = codes_vec
-        # cosine ADC needs per-centroid self-dots (pq_table.rs:131-136)
-        self.self_dots = [np.einsum("ij,ij->i", cb, cb) for cb in codebooks]
         self._code_parts: int | None = None
 
     @property
@@ -724,48 +718,15 @@ class PQTable:
 
     # ---- ADC (A8-A9) ------------------------------------------------------
 
-    def build_lookup(self, q: np.ndarray, metric: str) -> tuple[np.ndarray, np.ndarray | None, float]:
-        """Per-query (m × 2^n_bits) sub-distance lookup
-        (pq_table.rs:195-224). For L2²: entries are ‖q_g − c‖², distance
-        = Σ entries. For cosine: entries are q_g·c, with the cached
-        centroid self-dots giving the reconstructed norm; distance =
-        1 − Σdot / max(√Σself · ‖q‖, 1e-10)."""
-        ksub = 1 << self.n_bits
-        lut = np.zeros((self.m, ksub), dtype=np.float64)
-        sq = None
-        if metric == "l2sqr":
-            for gi, (start, size) in enumerate(self.groups):
-                qg = q[start : start + size][None, :]
-                lut[gi, : self.codebooks[gi].shape[0]] = _pairwise_dist(
-                    qg, self.codebooks[gi], "l2sqr"
-                )[0]
-        else:
-            sq = np.zeros((self.m, ksub), dtype=np.float64)
-            for gi, (start, size) in enumerate(self.groups):
-                qg = q[start : start + size]
-                lut[gi, : self.codebooks[gi].shape[0]] = self.codebooks[gi] @ qg
-                sq[gi, : self.self_dots[gi].shape[0]] = self.self_dots[gi]
-        qnorm = float(np.sqrt(q @ q))
-        return lut, sq, qnorm
-
-    @staticmethod
-    def _adc_scores(codes: np.ndarray, lut: np.ndarray, sq: np.ndarray | None, qnorm: float) -> np.ndarray:
-        """Σ over groups of looked-up entries (pq_table.rs:239-301)."""
-        m = lut.shape[0]
-        gidx = np.arange(m)[None, :]
-        summed = lut[gidx, codes].sum(axis=1)
-        if sq is None:
-            return summed
-        vnorm = np.sqrt(np.maximum(sq[gidx, codes].sum(axis=1), 0.0))
-        return 1.0 - summed / np.maximum(vnorm * qnorm, 1e-10)
-
     def adc_scan(self, query: Sequence[float], metric: str = "l2sqr") -> DataFrame:
         """Approximate distance for every encoded vector: broadcast the
-        lookup table, Arrow scan over the codes DataFrame."""
+        one-query lookup block, Arrow scan over the codes DataFrame,
+        each batch scored whole by :func:`adc_tile`."""
         q = np.asarray(list(query), dtype=np.float64)
-        lut, sq, qnorm = self.build_lookup(q, metric)
+        lut, sq, qn = build_lookup_batch(q[None, :], self.codebooks, self.groups,
+                                         self.n_bits, metric)
         spark = self.codes.sparkSession
-        bc = spark.sparkContext.broadcast((lut, sq, qnorm, self.m, self.n_bits))
+        bc = spark.sparkContext.broadcast((lut, sq, qn, self.m, self.n_bits))
         id_col = self.id_col
 
         def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -773,16 +734,18 @@ class PQTable:
 
             from lab_1806_vec_db_spark.functions.arrowvec import binary_matrix
 
-            blut, bsq, bqnorm, m, n_bits = bc.value
+            blut, bsq, bqn, m, n_bits = bc.value
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
                 buf = binary_matrix(rb.column(rb.schema.get_field_index("code")))
                 codes = unpack_codes(buf, m, n_bits)
-                d = PQTable._adc_scores(codes, blut, bsq, bqnorm)
+                ids = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
+                    zero_copy_only=False)
+                rows, d = adc_tile(codes, ids, blut, bsq, bqn, None, len(ids), False)
                 yield pa.RecordBatch.from_arrays(
-                    [rb.column(rb.schema.get_field_index(id_col)).cast(pa.int64()),
-                     pa.array(d, type=pa.float64())],
+                    [pa.array(ids[rows[0]], type=pa.int64()),
+                     pa.array(d[0], type=pa.float64())],
                     names=[id_col, "dist"],
                 )
 
@@ -912,11 +875,11 @@ class PQTable:
                     args = (np.repeat(np.arange(len(bqids)), rows.shape[1]),
                             ids[rows].reshape(-1), adc.reshape(-1))
                     if fused_t:
-                        # buffer the pool survivors' vectors in the STORE
-                        # dtype (exact_rerank upcasts per step, losslessly)
-                        need = np.unique(rows)
-                        vx = vec_matrix(rb.column(rb.schema.get_field_index(vec_col)))
-                        args += (ids[need], np.ascontiguousarray(vx[need]))
+                        # the accumulator copies the vectors of the rows
+                        # it buffers, in the STORE dtype (exact_rerank
+                        # upcasts per step, losslessly)
+                        args += (ids, vec_matrix(
+                            rb.column(rb.schema.get_field_index(vec_col))))
                     acc.add(*args)
                 out = acc.result()
                 if out is None:
@@ -926,8 +889,7 @@ class PQTable:
                 if fused_t:
                     # in-task exact re-rank of the pool: the same
                     # function, ops and rounding as the two-wave wave
-                    cols["dist"] = exact_rerank(out[3], out[4], ids, bqmat, qx,
-                                                metric)
+                    cols["dist"] = exact_rerank(out[3], out[4], bqmat, qx, metric)
                 yield result_batch(out_schema, **cols)
 
             return scan

@@ -170,9 +170,11 @@ MAX_QUERIES = 200_000
 #: Compaction floors of the per-task candidate accumulator
 #: (:class:`TopkAccumulator`): (query, id, dist) triples, and — on the
 #: fused PQ / IVF+PQ scans — bytes of buffered candidate vectors. The
-#: scans read them on the driver when they build their plan.
+#: scans read them on the driver when they build their plan. The
+#: vector floor is low because a fused PQ fragment can buffer most of
+#: its rows until the first compaction sets the per-query bounds.
 ACC_CAP_ROWS = 2_000_000
-ACC_VEC_BYTES = 256 << 20
+ACC_VEC_BYTES = 32 << 20
 
 _log = logging.getLogger("lab_1806_vec_db_spark")
 
@@ -329,10 +331,9 @@ def topk_cut(
     kk = min(int(kk), d.shape[0])
     if ckernel.available():
         if d.T.flags["C_CONTIGUOUS"] and not d.flags["C_CONTIGUOUS"]:
-            _, dist, rows = ckernel.dense_topk(d.T, ids, kk, round, return_rows=True)
+            _, dist, rows = ckernel.dense_topk(d.T, ids, kk, round)
         else:
-            _, dist, rows = ckernel.dense_topk(d, ids, kk, round, queries_axis=1,
-                                               return_rows=True)
+            _, dist, rows = ckernel.dense_topk(d, ids, kk, round, queries_axis=1)
         return rows, dist
     d = np.asarray(d, dtype=np.float64)
     if round:
@@ -351,15 +352,19 @@ class TopkAccumulator:
     re-rank) by the fragmentation factor.
 
     An optional payload buffers candidate vectors by id (each row lives
-    in one fragment, so ids are unique) for the fused exact re-rank;
-    compaction keeps exactly the vectors the surviving triples reference.
+    in one fragment, so ids are unique) for the fused exact re-rank:
+    only the vectors of buffered triples are copied, and compaction
+    keeps exactly the vectors the surviving triples reference.
 
     Compaction (:func:`local_topk_grouped`) fires when the buffer
     exceeds its threshold — ``cap_rows`` triples or ``cap_vec_bytes``
     payload bytes, the floors — and each threshold then resets to
     max(floor, 1.5× the live set). A live set above the floor (wide
     probes × high ef) thus compacts amortized O(log) times instead of on
-    every fragment; the worst-case memory is 1.5× the live set."""
+    every fragment. Each compaction also records every full query's
+    k-th (dist, id); a later triple that does not beat its query's
+    bound is dropped on arrival, vector and all, so after the first
+    compaction the buffer grows only by candidates that improve it."""
 
     def __init__(self, k: int, cap_rows: int, cap_vec_bytes: int = 0) -> None:
         self.k = int(k)
@@ -371,48 +376,81 @@ class TopkAccumulator:
         self._vk: list[np.ndarray] = []
         self._vx: list[np.ndarray] = []
         self._n = self._vn = 0
-        self._compacted = False
+        self._has_vec = self._compacted = False
+        # per query index: the k-th survivor's (dist, id) at the last
+        # compaction; NaN dist = no bound (fewer than k, or a NaN k-th)
+        self._bd: np.ndarray | None = None
+        self._bi: np.ndarray | None = None
 
     def add(self, qx: np.ndarray, ids: np.ndarray, d: np.ndarray,
             vec_ids: np.ndarray | None = None, vecs: np.ndarray | None = None) -> None:
         """Buffer triples ``(qx, ids, d)`` and, with a payload, the
-        vectors ``vecs`` of the candidates ``vec_ids``."""
+        vectors (``vecs[j]`` that of row id ``vec_ids[j]``) of the
+        candidates a buffered triple references."""
+        if self._bd is not None:
+            qb = np.minimum(qx, self._bd.size - 1)
+            bd, bi = self._bd[qb], self._bi[qb]
+            live = ((qx >= self._bd.size) | np.isnan(bd) | (d < bd)
+                    | ((d == bd) & (ids < bi)))
+            qx, ids, d = qx[live], ids[live], d[live]
+        self._has_vec |= vecs is not None
+        if ids.size == 0:
+            return
         self._q.append(qx)
         self._i.append(ids)
         self._d.append(d)
         self._n += ids.size
         if vecs is not None:
-            self._vk.append(vec_ids)
-            self._vx.append(vecs)
-            self._vn += vecs.nbytes
+            need = np.isin(vec_ids, ids)
+            self._vk.append(vec_ids[need])
+            self._vx.append(np.ascontiguousarray(vecs[need]))
+            self._vn += self._vx[-1].nbytes
         self._compacted = False
-        if self._n > self._cap or (self._vk and self._vn > self._vcap):
+        if self._n > self._cap or (self._has_vec and self._vn > self._vcap):
             self._compact()
 
     def _compact(self) -> None:
         qx, ids, d = (np.concatenate(a) for a in (self._q, self._i, self._d))
         keep = local_topk_grouped(qx, ids, d, self.k)
-        self._q, self._i, self._d = [qx[keep]], [ids[keep]], [d[keep]]
+        # survivors come grouped by query, (dist, id) ascending within
+        qx, ids, d = qx[keep], ids[keep], d[keep]
+        self._q, self._i, self._d = [qx], [ids], [d]
         self._n = keep.size
         self._cap = max(self._floor, self._n + (self._n >> 1))
+        last = np.flatnonzero(np.r_[qx[1:] != qx[:-1], True])
+        full = last[np.diff(np.r_[-1, last]) == self.k]
+        self._bd = np.full(int(qx[-1]) + 1, np.nan)
+        self._bi = np.zeros(int(qx[-1]) + 1, dtype=np.int64)
+        self._bd[qx[full]], self._bi[qx[full]] = d[full], ids[full]
         if self._vk:
             vk = np.concatenate(self._vk)
             vx = np.concatenate(self._vx) if len(self._vx) > 1 else self._vx[0]
-            live = np.isin(vk, self._i[0])
+            live = np.isin(vk, ids)
             self._vk, self._vx = [vk[live]], [np.ascontiguousarray(vx[live])]
             self._vn = self._vx[0].nbytes
             self._vcap = max(self._vfloor, self._vn + (self._vn >> 1))
         self._compacted = True
 
     def result(self) -> tuple[np.ndarray, ...] | None:
-        """The per-query top-``k`` as ``(qx, ids, d)`` — plus ``(vec_ids,
-        vecs)`` with a payload — or None when nothing was added."""
+        """The per-query top-``k`` as ``(qx, ids, d)`` — plus, with a
+        payload, ``(vecs, rows)``: the surviving candidates' vectors and
+        each triple's row in them — or None when nothing was added. A
+        triple whose id has no buffered vector raises instead of
+        pointing at another candidate's row."""
         if self._n == 0:
             return None
         if not self._compacted:
             self._compact()
         out = (self._q[0], self._i[0], self._d[0])
-        return out + (self._vk[0], self._vx[0]) if self._vk else out
+        if not self._has_vec:
+            return out
+        vk = self._vk[0] if self._vk else np.empty(0, dtype=np.int64)
+        order = np.argsort(vk, kind="stable")
+        pos = np.minimum(np.searchsorted(vk[order], out[1]), max(vk.size - 1, 0))
+        if vk.size == 0 or not np.array_equal(vk[order[pos]], out[1]):
+            raise ValueError("a candidate id is missing from the buffered "
+                             "vector pool")
+        return out + (self._vx[0], order[pos])
 
 
 def fast_topk_grouped(qx: np.ndarray, ids: np.ndarray, dist: np.ndarray, k: int) -> np.ndarray:

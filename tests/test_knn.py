@@ -241,10 +241,10 @@ def test_dense_topk_kernel_matches_lexsort():
         sel = np.lexsort((oid, d), axis=0)[:kk, :]
         ref_i = np.take_along_axis(oid, sel, axis=0)
         ref_d = np.take_along_axis(d, sel, axis=0)
-        ci, cd = ckernel.dense_topk(d0, ids, k, do_round=True, queries_axis=1)
+        ci, cd, _ = ckernel.dense_topk(d0, ids, k, do_round=True, queries_axis=1)
         assert np.array_equal(ci.T[:kk], ref_i)
         assert np.array_equal(cd.T[:kk], ref_d)
-        ci2, cd2 = ckernel.dense_topk(
+        ci2, cd2, _ = ckernel.dense_topk(
             np.ascontiguousarray(d0.T), ids, k, do_round=True)
         assert np.array_equal(ci2, ci) and np.array_equal(cd2, cd)
         if n < k:
@@ -252,10 +252,10 @@ def test_dense_topk_kernel_matches_lexsort():
     # merge form: per-row ids, pre-rounded values
     d0 = rng.random((200, 30))
     ids = rng.permutation(200).astype(np.int64)
-    ci, cd = ckernel.dense_topk(d0, ids, 8, do_round=True, queries_axis=1)
+    ci, cd, _ = ckernel.dense_topk(d0, ids, 8, do_round=True, queries_axis=1)
     md = np.concatenate([cd, cd + 0.0001], axis=1)
     mi = np.concatenate([ci, ci + 10_000], axis=1)
-    ri, rd = ckernel.dense_topk(md, mi, 8, do_round=False)
+    ri, rd, _ = ckernel.dense_topk(md, mi, 8, do_round=False)
     sel2 = np.lexsort((mi.T, md.T), axis=0)[:8, :]
     assert np.array_equal(ri, np.take_along_axis(mi.T, sel2, axis=0).T)
     assert np.array_equal(rd, np.take_along_axis(md.T, sel2, axis=0).T)
@@ -330,30 +330,57 @@ def test_l2sqr_large_scale_never_negative(spark):
             assert all(r["dist"] == 0.0 for r in self_hits)
 
 
-def test_exact_rerank_pool_contract():
-    """The one exact re-rank: rounded exact distances keyed by id from
-    an unordered pool, l2sqr clamped at 0, and a candidate id missing
-    from the pool raises instead of gathering another row's vector."""
+def test_exact_rerank_pool_contract(monkeypatch):
+    """The one exact re-rank: rounded exact distances of (query, store
+    row) pairs, l2sqr clamped at 0, rows gathered at most RERANK_STEP at
+    a time (never the whole pool in one copy); the accumulator maps
+    candidate ids to pool rows and raises on an id it holds no vector
+    for instead of pointing at another row's vector."""
+    from lab_1806_vec_db_spark.index import pq as pq_mod
     from lab_1806_vec_db_spark.index.pq import exact_rerank
 
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(6, 8)).astype(np.float32)
-    keys = np.array([50, 10, 40, 20, 60, 30], dtype=np.int64)
     qmat = np.vstack([vecs[1].astype(np.float64), rng.normal(size=8)])
-    ids = np.array([10, 60, 30, 10], dtype=np.int64)
+    rows = np.array([1, 4, 5, 1], dtype=np.int64)
     qidx = np.array([0, 0, 1, 1], dtype=np.int64)
-    x = vecs[[1, 4, 5, 1]].astype(np.float64)
+    x = vecs[rows].astype(np.float64)
     q = qmat[qidx]
     want = knn_ops.np_round_half_up(np.maximum(((x - q) ** 2).sum(axis=1), 0.0))
-    got = exact_rerank(keys, vecs, ids, qmat, qidx, "l2sqr")
+    got = exact_rerank(vecs, rows, qmat, qidx, "l2sqr")
     assert got[0] == 0.0
     assert np.allclose(got, want, atol=2e-4)
-    cos = exact_rerank(keys, vecs, ids, qmat, qidx, "cosine")
+    cos = exact_rerank(vecs, rows, qmat, qidx, "cosine")
     want_cos = 1.0 - (x * q).sum(axis=1) / (np.linalg.norm(x, axis=1) * np.linalg.norm(q, axis=1))
     assert np.allclose(cos, want_cos, atol=2e-4)
+
+    class Store:
+        """Row store that records the size of every gather."""
+
+        def __init__(self, a):
+            self.a, self.sizes = a, []
+
+        def __getitem__(self, r):
+            self.sizes.append(len(r))
+            return self.a[r]
+
+    big = rng.normal(size=(500, 8))
+    prs = rng.integers(0, 500, 2000)
+    pqi = rng.integers(0, 2, 2000)
+    ref = exact_rerank(big, prs, qmat, pqi, "l2sqr")
+    monkeypatch.setattr(pq_mod, "RERANK_STEP", 64)
+    store = Store(big)
+    assert np.array_equal(exact_rerank(store, prs, qmat, pqi, "l2sqr"), ref)
+    assert store.sizes and max(store.sizes) <= 64
+
+    acc = knn_ops.TopkAccumulator(2, 1, 1)
+    pool_ids = np.array([50, 10, 40, 20, 60, 30], dtype=np.int64)
+    acc.add(qidx, pool_ids[rows], want, pool_ids, vecs)
+    _, ids_o, _, pool, prow = acc.result()
+    pos = {int(i): j for j, i in enumerate(pool_ids)}
+    assert np.array_equal(pool[prow], vecs[[pos[int(i)] for i in ids_o]])
+    assert len(pool) == len(set(ids_o.tolist()))
+    acc = knn_ops.TopkAccumulator(2, 1, 1)
+    acc.add(qidx, np.array([10, 60, 35, 10], dtype=np.int64), want, pool_ids, vecs)
     with pytest.raises(ValueError, match="missing"):
-        exact_rerank(keys, vecs, np.array([10, 35], dtype=np.int64), qmat,
-                     np.array([0, 1], dtype=np.int64), "l2sqr")
-    with pytest.raises(ValueError, match="missing"):  # above every key
-        exact_rerank(keys, vecs, np.array([99], dtype=np.int64), qmat,
-                     np.array([0], dtype=np.int64), "l2sqr")
+        acc.result()

@@ -144,7 +144,9 @@ def test_topk_accumulator_matches_one_shot(n_frag, k, floor, seed, payload):
     keeps exactly the triples one-shot ``local_topk_grouped`` keeps on
     the concatenation; its payload holds exactly the vectors the
     surviving triples reference. Fragments own disjoint ids (a row
-    lives in one Arrow fragment) and repeat distances (ties)."""
+    lives in one Arrow fragment) and repeat distances (ties), inf and
+    NaN, so the per-query bounds the accumulator prunes against meet
+    every order case."""
     rng = np.random.default_rng(seed)
     frags, next_id = [], 0
     for _ in range(n_frag):
@@ -154,7 +156,8 @@ def test_topk_accumulator_matches_one_shot(n_frag, k, floor, seed, payload):
         pick = rng.random((n_ids, 4)) < 0.7  # (id, query) pairs present
         ii, qq = np.nonzero(pick)
         frags.append((qq.astype(np.int64), fid[ii],
-                      rng.integers(0, 4, ii.size).astype(np.float64) / 2, fid))
+                      np.array([0.0, 0.5, 1.0, 1.5, np.inf, np.nan])[
+                          rng.integers(0, 6, ii.size)], fid))
     vec_of = {int(i): rng.normal(size=3) for f in frags for i in f[3]}
     acc = TopkAccumulator(k, floor, 8 if payload else 0)
     for j in rng.permutation(n_frag):
@@ -166,16 +169,20 @@ def test_topk_accumulator_matches_one_shot(n_frag, k, floor, seed, payload):
     out = acc.result()
     qx, ids, d = (np.concatenate([f[i] for f in frags]) for i in range(3))
     keep = local_topk_grouped(qx, ids, d, k)
-    want = sorted(zip(qx[keep].tolist(), ids[keep].tolist(), d[keep].tolist()))
+    def triples(q, i, dd):
+        return sorted(zip(q.tolist(), i.tolist(),
+                          ["nan" if np.isnan(v) else v for v in dd.tolist()]))
+
+    want = triples(qx[keep], ids[keep], d[keep])
     if not want:
         assert out is None
         return
-    got = sorted(zip(*(a.tolist() for a in out[:3])))
+    got = triples(*out[:3])
     assert got == want
     if payload:
-        vk, vx = out[3], out[4]
-        assert sorted(vk.tolist()) == sorted(set(out[1].tolist()))
-        for i, v in zip(vk.tolist(), vx):
-            assert np.array_equal(v, vec_of[i])
+        vx, rows = out[3], out[4]
+        assert len(vx) == len(set(out[1].tolist()))
+        for i, r in zip(out[1].tolist(), rows.tolist()):
+            assert np.array_equal(vx[r], vec_of[i])
     else:
         assert len(out) == 3
