@@ -24,6 +24,11 @@ def get_spark(app_name: str = "lab_1806_vec_db_spark", cpus: int | None = None) 
       package move batches, never rows.
     - Session timezone pinned to UTC so timestamp semantics agree with
       the DuckDB correctness oracle.
+    - ``spark.python.daemon.module`` is this package's ``worker_daemon``:
+      pyspark's daemon, except that on CPython < 3.12 a task's
+      ``importlib.invalidate_caches()`` no longer re-reads an unchanged
+      ``pyspark.zip`` once per zip importer, which was about half of the
+      fixed start cost of every Python task.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -57,6 +62,7 @@ def get_spark(app_name: str = "lab_1806_vec_db_spark", cpus: int | None = None) 
         # Spark reader rejects natively; read as epoch-nanos long and
         # convert at the query layer (streaming/windows.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "lab_1806_vec_db_spark.worker_daemon")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

@@ -184,3 +184,18 @@ def test_self_adjudicate_flags_host_degraded_ab_window(monkeypatch):
     out = bench._self_adjudicate({"pq_ef80": 1.35}, rnd,
                                  suite_best={"pq_ef80": 1.9})
     assert out["pq_ef80"]["verdict"] == "regression_confirmed"
+
+
+def test_matched_grid_skips_on_missing_gist_input(monkeypatch, tmp_path):
+    """Without the GIST sample the matched grid is recorded as skipped,
+    naming the missing file, instead of raising before BENCH_FULL.json
+    is written."""
+    import bench
+
+    def must_not_run(spark):
+        raise AssertionError("run_matched called without its GIST inputs")
+
+    missing = str(tmp_path / "gist_1000.bin")
+    monkeypatch.setattr(bench, "GIST_BASE", missing)
+    monkeypatch.setattr(bench, "run_matched", must_not_run)
+    assert bench.matched_or_skipped(None) == {"skipped": f"missing {missing}"}
