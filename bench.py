@@ -48,7 +48,7 @@ Environment:
   SPARK_GRAFT_SF_DIR  data dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    local[] width (default: all cores)
   BENCH_QUERIES       number of sf-suite query vectors (default 1000)
-  BENCH_RUNS          timed repetitions, best-of (default 3)
+  BENCH_RUNS          timed repetitions, best-of (default 4)
   BENCH_MATCHED       0 to skip the matched-scale grid (default 1)
   BENCH_MATCHED_N     matched-scale table size (default 10000; 1000000
                       reproduces BENCH_1M.json — use
@@ -60,6 +60,11 @@ Environment:
                       when BENCH_MATCHED_N > 500k (default 1)
   BENCH_IVFPQ         0 to skip the IVF+PQ grid rows (default 1)
   BENCH_GT_DIR        ground-truth cache dir (default /tmp/spark_graft_gt)
+
+Every run records a plain host-speed stamp (``host_calibration``) and
+nothing derived from it. A suite row is compared across code versions
+only by a same-host interleaved A/B, ``tools/ab_row_vs_commit.py``,
+which times one row per fresh JVM through ``bench.py --ab-row``.
 """
 
 from __future__ import annotations
@@ -129,23 +134,6 @@ _HNSW_PQ_EFS = {10_000: (60, 100, 160, 360), 1_000_000: (60, 90, 120, 180, 360, 
 #: ef=40 gives the interpolation a sub-baseline-recall point
 _FLAT_PQ_EFS = {10_000: (40, 100, 200)}
 _IVF_PROBES = {10_000: (4, 8, 16, 32), 1_000_000: (8, 32)}
-
-#: pinned reference calibration stamp — the round-8 driver host
-#: (BENCH_r08.json), the anchor of the cross-round trend. Every
-#: artifact divides its raw timings by (this host / pinned host) so a
-#: slower driver machine cannot read as a code regression: the round-9
-#: driver host ran at 0.58× (single-thread) / 0.87× (all-core) of this
-#: stamp and its raw rows looked 11-49% slower on unchanged code.
-_REF_STAMP = {
-    "sort1m_per_sec_1t": 72.25,
-    "sort1m_per_sec_all": 1578.97,
-    "stream_gibps_1t": 6.95,
-    "stream_gibps_all": 171.94,
-}
-#: suite rows whose wall-time is GIL/driver-single-thread-bound (the
-#: rest are all-core Spark stages) — normalized by the 1t ratio
-_SINGLE_THREAD_KEYS = {"hnsw_point_serve", "pq_ef80"}
-
 
 def _recall(result_rows, gt: dict[int, set[int]]) -> float:
     got: dict[int, set[int]] = {}
@@ -228,10 +216,10 @@ _ROW_DEPS = {
 
 def run_sf_suite(spark, only_row: str | None = None) -> dict:
     """The full suite, or (``only_row``) ONE row timed in isolation:
-    only that row's index builds run, no ground truth / recall /
-    canary — the leg unit of the interleaved regression A/B, which
-    compares best-of legs of the SAME row across code versions in a
-    fresh JVM each."""
+    only that row's index builds run, no ground truth / recall — the
+    leg unit of the interleaved regression A/B
+    (``tools/ab_row_vs_commit.py``), which times the SAME row across
+    code versions in a fresh JVM each."""
     if only_row is not None and only_row not in _ROW_DEPS:
         raise ValueError(f"unknown suite row: {only_row!r} (rows: {sorted(_ROW_DEPS)})")
     deps = (
@@ -438,17 +426,6 @@ def run_sf_suite(spark, only_row: str | None = None) -> dict:
             "build_sec": {k_: round(v, 3) for k_, v in build_sec.items()},
         }
 
-    # ---- host-noise canary: re-time one already-measured row at the
-    # END of the suite. On a quiet host this re-run reproduces the
-    # row's best-of-RUNS within ~±15%; a large ratio means the host's
-    # effective speed DRIFTED during the suite (noisy-neighbor /
-    # frequency scaling), in which case cross-round normalized ratios
-    # for individual rows are suspect — the start-of-run calibration
-    # stamp cannot see mid-run drift. (Motivated by round-11 A/B runs
-    # of identical code moving single rows 1.9x run-to-run.)
-    canary_best, _ = _timed(run_hnsw, runs=2)
-    canary_ratio = canary_best / max(timings["hnsw_ef120"], 1e-9)
-
     total = float(sum(timings.values()))
     return {
         "metric": "ann_suite_sec",
@@ -463,13 +440,6 @@ def run_sf_suite(spark, only_row: str | None = None) -> dict:
         "ms_per_query": {k_: round(v / max(n_q, 1) * 1000.0, 4) for k_, v in timings.items()},
         "recall_at_10": {k_: round(v, 4) for k_, v in recalls.items()},
         "build_sec": {k_: round(v, 3) for k_, v in build_sec.items()},
-        "host_noise_canary": {
-            "row": "hnsw_ef120",
-            "end_over_suite_ratio": round(canary_ratio, 3),
-            "note": ("end-of-suite re-run of the row / its suite best; "
-                     "far from 1.0 = host speed drifted mid-run and "
-                     "per-row cross-round ratios are suspect"),
-        },
         "pipeline": run_pipeline_suite(spark),
         "relational": run_relational_suite(spark),
     }
@@ -683,9 +653,7 @@ def matched_or_skipped(spark) -> dict:
 
 
 def run_matched(spark) -> dict:
-    # host-quietness evidence INSIDE the matched block (round-13 gate):
-    # a matched-recall ratio is only adjudicable when the window was
-    # quiet — calibration at both ends, drift flag in the artifact
+    # host-speed stamps at both ends of the grid, recorded as measured
     cal_start = host_calibration()
     base, queries = _gist_matched()
     n, dim = base.shape
@@ -1117,37 +1085,17 @@ def run_matched(spark) -> dict:
         "n_baseline_rows_unreachable": sum(
             1 for g in grid if g.get("matched_recall_reachable") is False
         ),
-        **_window_quiet_block(cal_start),
-    }
-
-
-def _window_quiet_block(cal_start: dict) -> dict:
-    """Start/end calibration pair + quietness verdict for a grid that
-    just ran: quiet = all-core host speed ≥ 0.8× the pinned reference
-    stamp at BOTH ends and end/start drift within 1.1 (the r12 host
-    swung 2×+ mid-run; only artifacts carrying this evidence are
-    adjudicable across rounds)."""
-    cal_end = host_calibration()
-    ref = _REF_STAMP["sort1m_per_sec_all"]
-    s = cal_start["sort1m_per_sec_all"] / ref
-    e = cal_end["sort1m_per_sec_all"] / ref
-    drift = e / max(s, 1e-9)
-    return {
         "calibration_start": cal_start,
-        "calibration_end": cal_end,
-        "host_over_ref_all_start": round(s, 4),
-        "host_over_ref_all_end": round(e, 4),
-        "host_drift_end_over_start": round(drift, 3),
-        "window_quiet": bool(s >= 0.8 and e >= 0.8 and 1 / 1.1 <= drift <= 1.1),
+        "calibration_end": host_calibration(),
     }
 
 
 def host_calibration() -> dict:
-    """Fixed-work host-speed stamp recorded with every bench run, so
-    cross-run ratio comparisons can detect a degraded host (this box
-    throttles ~2× under sustained all-core load — two round-7 1M runs
-    were discarded for exactly that, diagnosable only by re-running
-    the whole grid). Two numbers, ~1 s total: a 1M-element f64
+    """Fixed-work host-speed stamp recorded with every bench run, as
+    measured: it says which kind of host a run came from and, taken at
+    both ends of a grid, whether the host degraded mid-run (a host can
+    throttle ~2× under sustained all-core load). It is never used to
+    rescale timings. Sort stamps, ~1 s total: a 1M-element f64
     ``np.sort`` loop on ONE thread (numpy sorts are single-threaded —
     BLAS GEMM would fan out internally and hide the signal) and the
     same work fanned over all cores (sort releases the GIL). A
@@ -1205,367 +1153,16 @@ def host_calibration() -> dict:
             "stream_gibps_all": round(bwa, 2), "threads": w}
 
 
-def _latest_committed_normalized() -> tuple[dict, int]:
-    """The normalized queries_sec block of the newest committed
-    BENCH_r{N}.json (the driver parses bench stdout into a 'parsed'
-    dict; rounds before the normalized schema simply lack the block)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[dict, int] = ({}, -1)
-    for f in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", f)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(f) as fh:
-                d = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        parsed = d.get("parsed") or {}
-        norm = (parsed.get("normalized") or {}).get("queries_sec") or {}
-        if norm and rnd > best[1]:
-            best = (norm, rnd)
-    return best
+#: compact-line blocks emptied, in this order, until the line fits
+_COMPACT_DROP = ("recall_at_10", "ms_per_query", "queries")
+COMPACT_MAX_CHARS = 1900
 
 
-def _vs_prev_normalized(cur: dict) -> dict:
-    """Per-query ratio of this run's normalized seconds to the last
-    committed round's; ratios > 1.2 are listed as regressions (the
-    round-10 contract: normalized-vs-normalized is the only
-    comparison defined across rounds)."""
-    prev, rnd = _latest_committed_normalized()
-    if not prev:
-        return {"prev_round": None,
-                "note": "no committed BENCH_r{N}.json carries a normalized block"}
-    ratios = {
-        k: round(v / prev[k], 3)
-        for k, v in cur.items() if prev.get(k, 0) > 0
-    }
-    return {
-        "prev_round": rnd,
-        "ratio_vs_prev": ratios,
-        "regressions_gt_1p2": {k: r for k, r in ratios.items() if r > 1.2},
-        "note": ("normalized sec this run / normalized sec in "
-                 f"BENCH_r{rnd}.json; >1.2 = real regression "
-                 "(raw rows drift with the host, these must not)"),
-    }
-
-
-def _prev_committed_raw(prev_round: int | None) -> dict:
-    """Raw per-row seconds of the previous round's committed bench
-    artifact (``parsed.queries``) — the prev side's suite-row reference
-    for the A/B suite-consistency check. Empty dict when unavailable."""
-    if prev_round is None:
-        return {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for name in (f"BENCH_r{prev_round:02d}.json", f"BENCH_r{prev_round}.json"):
-        try:
-            with open(os.path.join(here, name)) as fh:
-                d = json.load(fh)
-            q = (d.get("parsed") or {}).get("queries") or {}
-            if q:
-                return q
-        except (OSError, ValueError):
-            continue
-    return {}
-
-
-def _prev_round_commit(prev_round: int) -> str | None:
-    """Commit holding the previous round's code: the one that ADDED its
-    bench artifact (the driver commits artifacts on top of that round's
-    final code)."""
-    import subprocess
-
-    if prev_round is None:
-        return None
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        out = subprocess.run(
-            ["git", "log", "--diff-filter=A", "--format=%H", "-n", "1",
-             "--", f"BENCH_r{prev_round:02d}.json"],
-            cwd=here, capture_output=True, text=True, timeout=60,
-        )
-        sha = out.stdout.strip()
-        if not sha:
-            out = subprocess.run(
-                ["git", "log", "--diff-filter=A", "--format=%H", "-n", "1",
-                 "--", f"BENCH_r{prev_round}.json"],
-                cwd=here, capture_output=True, text=True, timeout=60,
-            )
-            sha = out.stdout.strip()
-        return sha or None
-    except (subprocess.SubprocessError, OSError):
-        return None
-
-
-def _ab_leg(repo_dir: str, row: str, runs: int) -> float | None:
-    """One A/B leg: a FRESH process+JVM times one suite row in
-    ``repo_dir``'s code. Uses THIS bench.py as the harness in both legs
-    (copied into the prev worktree), so the timing loop is identical
-    and only the package code differs."""
-    import subprocess
-
-    env = dict(os.environ, BENCH_RUNS=str(runs))
-    env.pop("BENCH_AB", None)  # a leg must never recurse into adjudication
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.join(repo_dir, "bench.py"), "--ab-row", row],
-            cwd=repo_dir, env=env, capture_output=True, text=True,
-            timeout=int(os.environ.get("BENCH_AB_LEG_TIMEOUT", "1800")),
-        )
-        for line in reversed(out.stdout.strip().splitlines()):
-            try:
-                d = json.loads(line)
-            except ValueError:
-                continue
-            if d.get("row") == row:
-                return float(d["best_sec"])
-        sys.stderr.write(f"[ab] leg failed for {row}: {out.stderr[-500:]}\n")
-        return None
-    except (subprocess.SubprocessError, OSError) as e:
-        sys.stderr.write(f"[ab] leg errored for {row}: {e}\n")
-        return None
-
-
-def _ab_verdict(ab_ratio: float) -> str:
-    """Best-of-legs HEAD/prev → verdict: ``cleared`` ≤ 1.1 (the r12
-    audit convention: HEAD best at-or-under prev best, with 10% for
-    leg-level jitter), ``regression_confirmed`` > 1.2 (the same bar the
-    normalized flag uses, now measured same-host same-hour), else
-    ``inconclusive`` (re-run on a quieter window)."""
-    return ("cleared" if ab_ratio <= 1.1
-            else "regression_confirmed" if ab_ratio > 1.2
-            else "inconclusive")
-
-
-def _self_adjudicate(flagged: dict, prev_round: int,
-                     suite_best: dict | None = None) -> dict:
-    """Interleaved same-host A/B of every flagged suite row against the
-    previous round's code — IN the artifact, not in a side doc. The
-    round-12 lesson: on an unstable host the per-row normalized gate
-    flags rows that identical code reproduces 2× apart, and the only
-    adjudication that held up was alternating HEAD/prev legs minutes
-    apart with best-of aggregation (docs/BENCH_AUDIT_r12.md §1). Legs
-    alternate prev→HEAD→prev→HEAD (fresh JVM each); verdict:
-    ``cleared`` if HEAD best ≤ 1.1× prev best, ``regression_confirmed``
-    if > 1.2×, else ``inconclusive``.
-
-    Two round-13 hardenings against minute-periodic host noise (the
-    18:19 run this round confirmed three rows a quieter run had just
-    cleared — both legs of every "confirmation" sat 3–5× above their
-    quiet-window values, docs/BENCH_AUDIT_r13.md §4):
-
-    - **escalation**: a would-be confirmation is only final after the
-      full alternation is repeated once more (doubling the minutes the
-      best-of samples) and the ratio still exceeds 1.2;
-    - **suite-consistency**: the HEAD leg runs the SAME code the suite
-      row just measured in this run, so ``ab_head_best`` far above the
-      row's own suite best (``suite_best``, raw seconds) proves the
-      A/B window was degraded, not the code — the verdict becomes
-      ``inconclusive_host_degraded`` with both numbers recorded. A real
-      regression cannot trip this: its head leg reproduces the (slow)
-      suite number, it does not exceed it.
-
-    Round-14 hardening (ADVICE r13): a cold fresh-JVM leg carries JIT/
-    startup inflation over the warm suite JVM, and if that inflation
-    alone exceeded the 1.5× margin the downgrade would mute every
-    genuine confirmation. The downgrade therefore requires BOTH sides
-    inflated: the HEAD leg vs this run's suite row AND the prev leg vs
-    the previous round's committed raw row (when available) — symmetric
-    inflation is host degradation; one-sided inflation is not proof.
-    And ``inconclusive_host_degraded`` is explicitly re-run-required
-    (``rerun_required: true`` in the entry), never a pass."""
-    import shutil
-    import subprocess
-    import tempfile
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    sha = _prev_round_commit(prev_round)
-    if sha is None:
-        return {k: {"ratio": v, "verdict": "ab_unavailable",
-                    "note": "prev-round commit not found"} for k, v in flagged.items()}
-    wt = tempfile.mkdtemp(prefix="bench_ab_wt_")
-    legs_per_side = int(os.environ.get("BENCH_AB_LEGS", "2"))
-    leg_runs = int(os.environ.get("BENCH_AB_RUNS", "2"))
-    out: dict = {}
-    try:
-        subprocess.run(["git", "worktree", "add", "--force", "--detach", wt, sha],
-                       cwd=here, check=True, capture_output=True, timeout=120)
-        # identical harness both sides: prev package code + THIS timing loop
-        shutil.copy2(os.path.join(here, "bench.py"), os.path.join(wt, "bench.py"))
-        for row, ratio in flagged.items():
-            prev_best: float | None = None
-            head_best: float | None = None
-
-            def _alternate(n_pairs: int):
-                nonlocal prev_best, head_best
-                for _ in range(n_pairs):
-                    for side, repo in (("prev", wt), ("head", here)):
-                        t = _ab_leg(repo, row, leg_runs)
-                        if t is None:
-                            continue
-                        if side == "prev":
-                            prev_best = t if prev_best is None else min(prev_best, t)
-                        else:
-                            head_best = t if head_best is None else min(head_best, t)
-
-            _alternate(legs_per_side)
-            escalated = False
-            if (
-                prev_best is not None and head_best is not None
-                and _ab_verdict(head_best / max(prev_best, 1e-9))
-                == "regression_confirmed"
-            ):
-                _alternate(legs_per_side)  # escalation before confirming
-                escalated = True
-            entry: dict = {"ratio": ratio}
-            if prev_best is None or head_best is None:
-                entry["verdict"] = "ab_failed"
-            else:
-                ab_ratio = head_best / max(prev_best, 1e-9)
-                entry.update({
-                    "ab_head_best": round(head_best, 4),
-                    "ab_prev_best": round(prev_best, 4),
-                    "ab_ratio": round(ab_ratio, 3),
-                    "verdict": _ab_verdict(ab_ratio),
-                })
-                if escalated:
-                    entry["escalated_legs"] = 2 * legs_per_side
-                sb = (suite_best or {}).get(row)
-                if (
-                    entry["verdict"] == "regression_confirmed"
-                    and sb and head_best > 1.5 * float(sb)
-                ):
-                    # the prev leg must ALSO be inflated vs its own
-                    # committed suite row before the confirmation is
-                    # muted (cold-JVM inflation is per-side; only
-                    # symmetric inflation proves a degraded window)
-                    prev_row = _prev_committed_raw(prev_round).get(row)
-                    prev_inflated = (
-                        prev_row is None  # no reference → old behavior
-                        or prev_best > 1.5 * float(prev_row)
-                    )
-                    entry["suite_best"] = round(float(sb), 4)
-                    if prev_row is not None:
-                        entry["prev_committed_row"] = round(float(prev_row), 4)
-                    if prev_inflated:
-                        entry["verdict"] = "inconclusive_host_degraded"
-                        entry["rerun_required"] = True
-                        entry["note"] = (
-                            "both legs ran >1.5x their side's suite-row "
-                            "reference — A/B window degraded, not "
-                            "adjudicable; RE-RUN on a quiet window "
-                            "before treating this row as cleared"
-                        )
-                    else:
-                        entry["note"] = (
-                            "HEAD leg >1.5x its suite row but the prev "
-                            "leg matches its committed row — one-sided "
-                            "inflation, confirmation stands"
-                        )
-            out[row] = entry
-    except (subprocess.SubprocessError, OSError) as e:
-        for row, ratio in flagged.items():
-            out.setdefault(row, {"ratio": ratio, "verdict": "ab_error",
-                                 "note": str(e)[:200]})
-    finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=here, capture_output=True, timeout=120)
-        shutil.rmtree(wt, ignore_errors=True)
-    return out
-
-
-def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--ab-row":
-        # one-row leg mode (see _self_adjudicate): fresh JVM, one row,
-        # one JSON line
-        spark = get_spark("bench_ab")
-        print(json.dumps(run_sf_suite(spark, only_row=sys.argv[2])))
-        spark.stop()
-        return
-    spark = get_spark("bench")
-    if SF_SUITE:
-        out = run_sf_suite(spark)
-    else:
-        out = {"metric": "ann_suite_sec", "value": 0.0, "unit": "sec",
-               "queries": {}, "sf": -1.0}
-    if MATCHED:
-        out["matched"] = matched_or_skipped(spark)
-    out["calibration"] = host_calibration()
-    # host-drift-proof rows: divide every suite timing by this host's
-    # speed relative to the PINNED reference stamp (the round-8 driver
-    # host), so a slow driver machine reads as a calibration delta, not
-    # a code regression. Raw rows stay alongside; single-thread-bound
-    # rows (GIL/driver paths) use the 1t ratio, Spark stages the
-    # all-core ratio.
-    cal = out["calibration"]
-    r1 = cal["sort1m_per_sec_1t"] / _REF_STAMP["sort1m_per_sec_1t"]
-    ra = cal["sort1m_per_sec_all"] / _REF_STAMP["sort1m_per_sec_all"]
-    out["normalized"] = {
-        "ref_stamp": _REF_STAMP,
-        "host_over_ref_1t": round(r1, 4),
-        "host_over_ref_all": round(ra, 4),
-        "queries_sec": {
-            k: round(v * (r1 if k in _SINGLE_THREAD_KEYS else ra), 3)
-            for k, v in out.get("queries", {}).items()
-        },
-        "ms_per_query": {
-            k: round(v * (r1 if k in _SINGLE_THREAD_KEYS else ra), 4)
-            for k, v in out.get("ms_per_query", {}).items()
-        },
-        "note": (
-            "raw seconds x host/ref calibration ratio (1t for GIL-bound "
-            "rows, all-core for Spark stages); compare THESE across "
-            "rounds, raw only within one host"
-        ),
-    }
-    # Cross-round regression gate: compare THIS run's normalized rows
-    # against the newest committed BENCH_r{N}.json's normalized block
-    # (the calibration-normalized numbers are the only rows defined to
-    # be host-drift-proof). A ratio > 1.2 is flagged as a real
-    # regression — raw rows may drift with the host, these must not.
-    out["vs_prev_normalized"] = _vs_prev_normalized(
-        out["normalized"]["queries_sec"]
-    )
-    can = out.get("host_noise_canary", {}).get("end_over_suite_ratio")
-    if can is not None:
-        out["vs_prev_normalized"]["host_noise_canary"] = can
-        if (can > 1.3 or can < 0.77) and out["vs_prev_normalized"].get(
-            "regressions_gt_1p2"
-        ):
-            out["vs_prev_normalized"]["note"] += (
-                " — CAUTION: the canary shows mid-run host drift this run;"
-                " re-measure flagged rows before believing them"
-            )
-    # Self-adjudicating gate (round 13): every flagged row is re-run
-    # interleaved against the previous round's code IN THIS ARTIFACT —
-    # round 12 proved the raw flag can't be believed on an unstable
-    # host and the acquittal lived in a side doc. BENCH_AB=0 skips
-    # (leaves the bare ratios).
-    vp = out["vs_prev_normalized"]
-    flagged = vp.get("regressions_gt_1p2") or {}
-    flagged = {k: v for k, v in flagged.items() if k in _ROW_DEPS}
-    if flagged and os.environ.get("BENCH_AB", "1") != "0":
-        vp["regressions_gt_1p2"] = _self_adjudicate(
-            flagged, vp.get("prev_round"), suite_best=out.get("queries"))
-        vp["note"] += (
-            "; flagged rows carry an interleaved prev-vs-HEAD A/B "
-            "(fresh JVM per leg, best-of) with a verdict"
-        )
-    # Full result → repo file: the harness keeps only a ~2000-char tail
-    # of stdout, which truncated the full JSON line in earlier rounds
-    # ("parsed": null in BENCH_r03/r04).
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    with open(full_path, "w") as f:
-        json.dump(out, f, indent=1)
-    print(json.dumps(out))
-    # LAST stdout line: a compact summary guaranteed to fit inside the
-    # tail window, so the driver's parse always succeeds.
+def compact_line(out: dict) -> str:
+    """The LAST stdout line: a summary of ``out`` guaranteed to fit the
+    ~2000-char stdout tail a harness keeps (the full result goes to
+    BENCH_FULL.json; earlier rounds lost the full JSON line to that
+    truncation). A skipped matched grid passes through as is."""
     compact = {
         "metric": out["metric"], "value": out["value"], "unit": out["unit"],
         "queries": out["queries"], "sf": out["sf"],
@@ -1573,11 +1170,6 @@ def main() -> None:
         "ms_per_query": out.get("ms_per_query"),
         "recall_at_10": out.get("recall_at_10"),
         "calibration": out.get("calibration"),
-        "normalized": {
-            "host_over_ref_1t": out["normalized"]["host_over_ref_1t"],
-            "host_over_ref_all": out["normalized"]["host_over_ref_all"],
-            "queries_sec": out["normalized"]["queries_sec"],
-        },
         "full": "BENCH_FULL.json",
     }
     m = out.get("matched")
@@ -1591,24 +1183,39 @@ def main() -> None:
             "best_ratio_at_matched_recall": m.get("best_ratio_at_matched_recall"),
             "median_ratio_at_matched_recall": m.get("median_ratio_at_matched_recall"),
         }
-    def _droppable():
-        # normalized.queries_sec goes LAST — it is the cross-round
-        # trend signal the raw rows can no longer carry alone
-        yield from ("recall_at_10", "ms_per_query", "queries")
-
     line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > 1900:
-        for k in _droppable():
-            if compact.get(k):
-                compact[k] = {}
-                break
-        else:
-            if compact.get("normalized", {}).get("queries_sec"):
-                compact["normalized"]["queries_sec"] = {}
-            else:
-                break
+    for k in _COMPACT_DROP:
+        if len(line) <= COMPACT_MAX_CHARS:
+            break
+        compact[k] = {}
         line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    return line
+
+
+def main() -> None:
+    if len(sys.argv) >= 3 and sys.argv[1] == "--ab-row":
+        # one-row leg mode (see tools/ab_row_vs_commit.py): fresh JVM,
+        # one row, one JSON line
+        spark = get_spark("bench_ab")
+        print(json.dumps(run_sf_suite(spark, only_row=sys.argv[2])))
+        spark.stop()
+        return
+    spark = get_spark("bench")
+    if SF_SUITE:
+        out = run_sf_suite(spark)
+    else:
+        out = {"metric": "ann_suite_sec", "value": 0.0, "unit": "sec",
+               "queries": {}, "sf": -1.0}
+    if MATCHED:
+        out["matched"] = matched_or_skipped(spark)
+    out["calibration"] = host_calibration()
+    full_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
+    )
+    with open(full_path, "w") as f:
+        json.dump(out, f, indent=1)
+    print(json.dumps(out))
+    print(compact_line(out))
 
 
 if __name__ == "__main__":

@@ -1227,8 +1227,8 @@ class HNSWIndex:
         amortizes over the whole query batch inside one kernel call —
         the round-13 interleaved A/B measured the auto-dropped exact
         kernel at 1.92 s vs 0.80 s steered on the cache-resident
-        sf-suite row (BENCH_FULL.json vs_prev_normalized,
-        hnsw_pq_ef120), i.e. the driver paths' byte gate inverts here.
+        sf-suite row (hnsw_pq_ef120; OPTIMIZATION_r13.md), i.e. the
+        driver paths' byte gate inverts here.
         ``steer=False`` disables steering (then this is the plain
         exact-kernel serve); both variants exact-re-rank the ef pool,
         so distances are exact either way. PATH-DEPENDENCE CAVEAT: a

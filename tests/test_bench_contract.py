@@ -1,36 +1,34 @@
-"""Bench artifact contract: the pieces the cross-round comparison
-depends on must not silently disappear — the calibration stamp, the
-pinned reference stamp, and the normalized rows (round-9's only open
-question was a driver-host slowdown reading as a regression; these
-fields are what makes that diagnosable)."""
+"""Bench output contract: the committed artifact carries the host stamp
+and a suite big enough to time, the compact last stdout line keeps its
+keys and fits the stdout tail, every suite row can be re-timed alone
+for the interleaved A/B, the A/B tool summarizes pairs by the pair rule,
+and bench.py plus every tool still import."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
+import subprocess
+import sys
+
+import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_bench_module_pins_reference_stamp():
-    import bench
+def _load_tool(name: str):
+    spec = importlib.util.spec_from_file_location(
+        f"tools_{name}", os.path.join(ROOT, "tools", f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
-    for k in ("sort1m_per_sec_1t", "sort1m_per_sec_all",
-              "stream_gibps_1t", "stream_gibps_all"):
-        assert k in bench._REF_STAMP and bench._REF_STAMP[k] > 0
-    assert bench._SINGLE_THREAD_KEYS  # GIL-bound rows normalize by 1t
 
-
-def test_committed_bench_full_carries_normalized_rows():
+def test_committed_bench_full_carries_calibration_and_suite_size():
     with open(os.path.join(ROOT, "BENCH_FULL.json")) as f:
         d = json.load(f)
     assert d["calibration"]["sort1m_per_sec_1t"] > 0
-    norm = d["normalized"]
-    assert norm["ref_stamp"] == {
-        k: v for k, v in norm["ref_stamp"].items()
-    } and norm["host_over_ref_1t"] > 0
-    # every raw suite row has a normalized twin
-    assert set(norm["queries_sec"]) == set(d["queries"])
     # the suite table is big enough that ms/query is not
     # fixed-overhead dominated (round-9 finding: 2,000 rows was)
     assert d["n_rows"] >= 50_000
@@ -50,21 +48,6 @@ def test_committed_bench_full_has_measured_filtered_rows():
                for r in r50)
 
 
-def test_vs_prev_normalized_compares_against_committed_round():
-    """The cross-round gate must anchor on the newest committed
-    normalized block and flag >1.2 ratios as regressions."""
-    import bench
-
-    prev, rnd = bench._latest_committed_normalized()
-    assert rnd >= 10 and prev, "no committed normalized block found"
-    cmp = bench._vs_prev_normalized({k: v * 1.5 for k, v in prev.items()})
-    assert cmp["prev_round"] == rnd
-    assert set(cmp["ratio_vs_prev"]) == set(prev)
-    assert set(cmp["regressions_gt_1p2"]) == set(prev)  # all 1.5x
-    clean = bench._vs_prev_normalized(dict(prev))
-    assert not clean["regressions_gt_1p2"]
-
-
 def test_ab_row_deps_cover_every_suite_row():
     """The interleaved-A/B leg unit must be able to re-time every row
     the cross-round gate can flag (the committed artifact's queries
@@ -74,116 +57,6 @@ def test_ab_row_deps_cover_every_suite_row():
     with open(os.path.join(ROOT, "BENCH_FULL.json")) as f:
         d = json.load(f)
     assert set(bench._ROW_DEPS) == set(d["queries"])
-
-
-def test_ab_verdict_rule():
-    import bench
-
-    assert bench._ab_verdict(0.9) == "cleared"
-    assert bench._ab_verdict(1.1) == "cleared"
-    assert bench._ab_verdict(1.15) == "inconclusive"
-    assert bench._ab_verdict(1.5) == "regression_confirmed"
-
-
-def test_prev_round_commit_resolves():
-    """Adjudication anchors on the commit that added the newest
-    committed bench artifact — it must resolve in this repo."""
-    import bench
-
-    _, rnd = bench._latest_committed_normalized()
-    sha = bench._prev_round_commit(rnd)
-    assert sha and len(sha) == 40
-    assert bench._prev_round_commit(None) is None
-
-
-def test_self_adjudicate_schema(monkeypatch):
-    """Every flagged entry the adjudicator returns carries the fields
-    the verdict contract requires: ratio, ab_head_best, ab_prev_best,
-    verdict. Legs are stubbed (prev=1.0s, head=2.0s best-of) — the
-    worktree plumbing runs for real against the prev-round commit."""
-    import bench
-
-    legs = {"prev": [1.2, 1.0], "head": [2.0, 2.2]}
-
-    def fake_leg(repo_dir, row, runs):
-        side = "head" if os.path.abspath(repo_dir) == ROOT else "prev"
-        return legs[side].pop(0) if legs[side] else None
-
-    monkeypatch.setattr(bench, "_ab_leg", fake_leg)
-    _, rnd = bench._latest_committed_normalized()
-    out = bench._self_adjudicate({"pq_ef80": 1.35}, rnd)
-    e = out["pq_ef80"]
-    assert e["ratio"] == 1.35
-    assert e["ab_prev_best"] == 1.0 and e["ab_head_best"] == 2.0
-    assert e["verdict"] == "regression_confirmed"
-
-
-def test_self_adjudicate_escalates_before_confirming(monkeypatch):
-    """A would-be confirmation must re-run the full alternation once
-    more before it is final: here the first two head legs land on a
-    degraded window (2.0, 2.2) and the escalation legs recover the
-    quiet value (0.95), so the verdict clears instead of confirming —
-    the false-confirmation mode of minute-periodic host noise
-    (docs/BENCH_AUDIT_r13.md §4)."""
-    import bench
-
-    legs = {"prev": [1.2, 1.0, 1.1, 1.3], "head": [2.0, 2.2, 0.95, 2.1]}
-
-    def fake_leg(repo_dir, row, runs):
-        side = "head" if os.path.abspath(repo_dir) == ROOT else "prev"
-        return legs[side].pop(0) if legs[side] else None
-
-    monkeypatch.setattr(bench, "_ab_leg", fake_leg)
-    _, rnd = bench._latest_committed_normalized()
-    out = bench._self_adjudicate({"pq_ef80": 1.35}, rnd)
-    e = out["pq_ef80"]
-    assert e["escalated_legs"] == 4
-    assert e["ab_head_best"] == 0.95
-    assert e["verdict"] == "cleared"
-
-
-def test_self_adjudicate_flags_host_degraded_ab_window(monkeypatch):
-    """A confirmation whose HEAD leg ran far slower than the SAME
-    code's own suite row this run is an A/B-window artifact ONLY when
-    the prev leg is ALSO inflated vs its own committed row (round-14
-    ADVICE hardening: cold-JVM inflation is per-side; symmetric
-    inflation proves a degraded window, one-sided inflation does not
-    mute the confirmation). The downgrade is marked re-run-required.
-    With a consistent suite row the confirmation stands."""
-    import bench
-
-    def fake_leg_slow(repo_dir, row, runs):
-        return 2.0 if os.path.abspath(repo_dir) == ROOT else 1.0
-
-    monkeypatch.setattr(bench, "_ab_leg", fake_leg_slow)
-    _, rnd = bench._latest_committed_normalized()
-    # BOTH sides inflated: head 2.0 vs suite 0.5, prev 1.0 vs committed
-    # 0.4 → symmetric degradation → downgraded, re-run required
-    monkeypatch.setattr(bench, "_prev_committed_raw",
-                        lambda prev_round: {"pq_ef80": 0.4})
-    out = bench._self_adjudicate({"pq_ef80": 1.35}, rnd,
-                                 suite_best={"pq_ef80": 0.5})
-    e = out["pq_ef80"]
-    assert e["verdict"] == "inconclusive_host_degraded"
-    assert e["rerun_required"] is True
-    assert e["suite_best"] == 0.5 and e["ab_head_best"] == 2.0
-    assert e["prev_committed_row"] == 0.4
-    # ONE-SIDED inflation: prev leg (1.0) matches its committed row
-    # (0.9) while only the head leg is slow → the confirmation stands
-    monkeypatch.setattr(bench, "_prev_committed_raw",
-                        lambda prev_round: {"pq_ef80": 0.9})
-    out = bench._self_adjudicate({"pq_ef80": 1.35}, rnd,
-                                 suite_best={"pq_ef80": 0.5})
-    assert out["pq_ef80"]["verdict"] == "regression_confirmed"
-    # no committed reference → conservative old behavior (downgrade)
-    monkeypatch.setattr(bench, "_prev_committed_raw", lambda prev_round: {})
-    out = bench._self_adjudicate({"pq_ef80": 1.35}, rnd,
-                                 suite_best={"pq_ef80": 0.5})
-    assert out["pq_ef80"]["verdict"] == "inconclusive_host_degraded"
-    # consistent suite row (leg ≈ suite) → real confirmation survives
-    out = bench._self_adjudicate({"pq_ef80": 1.35}, rnd,
-                                 suite_best={"pq_ef80": 1.9})
-    assert out["pq_ef80"]["verdict"] == "regression_confirmed"
 
 
 def test_matched_grid_skips_on_missing_gist_input(monkeypatch, tmp_path):
@@ -199,3 +72,108 @@ def test_matched_grid_skips_on_missing_gist_input(monkeypatch, tmp_path):
     monkeypatch.setattr(bench, "GIST_BASE", missing)
     monkeypatch.setattr(bench, "run_matched", must_not_run)
     assert bench.matched_or_skipped(None) == {"skipped": f"missing {missing}"}
+
+
+def test_compact_line_keys_size_and_skipped_grid():
+    """The last stdout line carries the summary keys (no derived
+    normalized block), fits the stdout tail even with an oversized
+    queries block, and passes a skipped matched grid through."""
+    import bench
+
+    skipped = {"skipped": "missing /data/gist_1000.bin"}
+    out = {
+        "metric": "ann_suite_sec", "value": 12.5, "unit": "sec",
+        "queries": {"flat_batch": 1.25}, "sf": 0.1, "n_rows": 50_000,
+        "ms_per_query": {"flat_batch": 1.25}, "recall_at_10": {"flat_batch": 1.0},
+        "calibration": {"sort1m_per_sec_1t": 50.0, "sort1m_per_sec_all": 150.0},
+        "matched": skipped, "build_sec": {"ivf": 3.0},
+    }
+    keys = {"metric", "value", "unit", "queries", "sf", "n_rows",
+            "ms_per_query", "recall_at_10", "calibration", "full"}
+    small = json.loads(bench.compact_line(out))
+    assert set(small) == keys | {"matched"}
+    assert "normalized" not in small
+    assert small["queries"] == {"flat_batch": 1.25}
+    assert small["matched"] == skipped
+    assert small["full"] == "BENCH_FULL.json"
+
+    out["queries"] = {f"row_{i:04d}": 1.2345 for i in range(400)}
+    line = bench.compact_line(out)
+    assert len(line) <= bench.COMPACT_MAX_CHARS <= 1900
+    big = json.loads(line)
+    assert set(big) == keys | {"matched"}
+    assert big["matched"] == skipped
+    assert big["calibration"] == out["calibration"]
+
+
+def test_bench_and_tools_import():
+    """bench.py and every tools/*.py import at module level in a fresh
+    interpreter (several tools set env defaults on import, so not in
+    this process): a deleted name one of them still reads fails here."""
+    paths = [os.path.join(ROOT, "bench.py")] + sorted(
+        os.path.join(ROOT, "tools", f)
+        for f in os.listdir(os.path.join(ROOT, "tools")) if f.endswith(".py"))
+    code = (
+        "import importlib.util, sys\n"
+        "for i, p in enumerate(sys.argv[1:]):\n"
+        "    spec = importlib.util.spec_from_file_location(f'm{i}', p)\n"
+        "    spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "    print('imported', p)\n"
+    )
+    r = subprocess.run([sys.executable, "-c", code, *paths], cwd=ROOT,
+                       capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.count("imported ") == len(paths)
+
+
+def _stub_legs(monkeypatch, ab, times: dict[str, list[float | None]]):
+    calls: list[str] = []
+    left = {side: list(ts) for side, ts in times.items()}
+
+    def fake_leg(repo_dir, row, runs):
+        calls.append(repo_dir)
+        return left[repo_dir].pop(0)
+
+    monkeypatch.setattr(ab, "_ab_leg", fake_leg)
+    return calls
+
+
+def test_ab_row_pairs_alternate_and_summarize(monkeypatch):
+    """Pairs alternate which side runs first; the summary's per-side
+    median and quartiles are numpy's linear percentiles over the
+    complete pairs, and a tied pair is a win for neither side."""
+    ab = _load_tool("ab_row_vs_commit")
+    calls = _stub_legs(monkeypatch, ab, {
+        "prev": [1.0, 2.0, 3.0, 4.0, 5.0, 9.0],
+        "head": [0.5, 2.0, 2.0, 3.0, 4.0, None],
+    })
+    pairs = ab.run_pairs("prev", "head", "flat_batch", 6, 1)
+    assert calls == ["prev", "head", "head", "prev", "prev", "head",
+                     "head", "prev", "prev", "head", "head", "prev"]
+    assert [p["order"][0] for p in pairs] == ["prev", "head"] * 3
+    s = ab.summarize(pairs)
+    assert s["pairs"] == 6 and s["complete_pairs"] == 5  # head leg failed
+    assert s["prev"] == {"median": 3.0, "q1": 2.0, "q3": 4.0}
+    assert s["head"] == {"median": 2.0, "q1": 2.0, "q3": 3.0}
+    assert s["head_wins"] == 4 and s["prev_wins"] == 0  # 2.0 vs 2.0 tie
+    # 4 of 5 wins and a median gap (1.0) inside prev's IQR (2.0)
+    assert not s["head_faster"] and not s["head_slower"]
+
+
+@pytest.mark.parametrize("head,faster,slower", [
+    ([1.0] * 10, True, False),
+    ([3.0] * 10, False, True),
+    ([1.0] * 8 + [2.5] * 2, False, False),  # 8 of 10 wins: under 9 in 10
+])
+def test_ab_row_pair_rule(monkeypatch, head, faster, slower):
+    ab = _load_tool("ab_row_vs_commit")
+    _stub_legs(monkeypatch, ab, {"prev": [2.0] * 10, "head": head})
+    s = ab.summarize(ab.run_pairs("prev", "head", "pq_ef80", 10, 1))
+    assert (s["head_faster"], s["head_slower"]) == (faster, slower)
+
+
+def test_ab_row_summary_without_complete_pairs(monkeypatch):
+    ab = _load_tool("ab_row_vs_commit")
+    _stub_legs(monkeypatch, ab, {"prev": [None, 1.0], "head": [1.0, None]})
+    assert ab.summarize(ab.run_pairs("prev", "head", "pq_ef80", 2, 1)) == {
+        "pairs": 2, "complete_pairs": 0}
