@@ -164,7 +164,15 @@ def _densify_rows(spark, emb, target: int):
     of collapsing to near-duplicate clusters or isotropic blur. Labels
     copy from the seed row (the filtered-ANN row keeps its ~10%
     selectivity); vec_ids continue past the real range, so the query
-    set (vec_id < N_QUERIES) stays exactly the real rows."""
+    set (vec_id < N_QUERIES) stays exactly the real rows. The rows are
+    staged through a parquet file under GT_DIR, keyed by a digest of
+    the seed rows: a DataFrame built from a local pandas frame ships
+    the whole table inside its tasks."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq_
+
     pdf = emb.select("vec_id", "embedding", "label").toPandas()
     base = np.asarray(pdf["embedding"].to_list(), dtype=np.float64)
     labels = pdf["label"].to_numpy()
@@ -186,17 +194,23 @@ def _densify_rows(spark, emb, target: int):
         reps_l.append(labels[i])
         reps_i.append(np.arange(next_id, next_id + s, dtype=np.int64))
         next_id += s
-    import pandas as _pd
-
     allv = np.concatenate(reps_v, axis=0)[:target]
-    out = _pd.DataFrame({
-        "vec_id": np.concatenate(reps_i)[:target],
-        "embedding": list(allv),
-        "label": np.concatenate(reps_l)[:target],
-    })
-    return spark.createDataFrame(
-        out, schema="vec_id long, embedding array<double>, label long"
-    ).repartition(32)
+    digest = hashlib.sha1(b"".join(
+        a.tobytes() for a in (base, np.asarray(labels, dtype=np.int64), vec_ids)
+    )).hexdigest()[:12]
+    ppath = os.path.join(GT_DIR, f"sf_dense_{digest}_{target}_v4.parquet")
+    if not os.path.exists(ppath):
+        os.makedirs(GT_DIR, exist_ok=True)
+        tmp = f"{ppath}.tmp{os.getpid()}"
+        pq_.write_table(pa.table({
+            "vec_id": pa.array(np.concatenate(reps_i)[:target], type=pa.int64()),
+            "embedding": pa.FixedSizeListArray.from_arrays(
+                pa.array(allv.reshape(-1)), dim
+            ).cast(pa.list_(pa.float64())),
+            "label": pa.array(np.concatenate(reps_l)[:target], type=pa.int64()),
+        }), tmp)
+        os.replace(tmp, ppath)
+    return spark.read.parquet(ppath).repartition(32)
 
 
 #: index builds each suite row depends on — drives ``only_row`` mode

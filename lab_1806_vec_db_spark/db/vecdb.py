@@ -764,14 +764,7 @@ class VecDB:
             ids, dists = hnsw.search_np(
                 np.asarray([float(x) for x in query]), k, ef, pq=pq
             )
-            md = self._metadata_map(key)
-            result = [
-                (md.get(int(i), {}), float(d))
-                for i, d in zip(ids, dists)
-                if upper_bound is None or float(d) <= upper_bound
-            ]
-            result.sort(key=lambda t: t[1])
-            return result[:k]
+            return self._driver_result(key, ids, dists, k, upper_bound)
         if ef is not None and pq is not None:
             out = pq.search(query, k, ef=ef, metric=meta["dist"],
                             payload_cols=["id", "metadata"])
@@ -785,14 +778,7 @@ class VecDB:
             ids, dists = hnsw.search_np(
                 np.asarray([float(x) for x in query]), k, ef
             )
-            md = self._metadata_map(key)
-            result = [
-                (md.get(int(i), {}), float(d))
-                for i, d in zip(ids, dists)
-                if upper_bound is None or float(d) <= upper_bound
-            ]
-            result.sort(key=lambda t: t[1])
-            return result[:k]
+            return self._driver_result(key, ids, dists, k, upper_bound)
         elif ef is not None and meta.get("has_ivfpq"):
             # beyond-reference tier, same latency model as the HNSW
             # branch above: serve the point query from the driver-local
@@ -822,14 +808,7 @@ class VecDB:
                         int(k), int(probes), max(int(ef), int(k)),
                         ivfpq.model.metric,
                     )
-                    md = self._metadata_map(key)
-                    result = [
-                        (md.get(int(i), {}), float(d))
-                        for i, d in zip(ids, dists)
-                        if upper_bound is None or float(d) <= upper_bound
-                    ]
-                    result.sort(key=lambda t: t[1])
-                    return result[:k]
+                    return self._driver_result(key, ids, dists, k, upper_bound)
                 out = ivfpq.search(
                     query, k, n_probes=probes, ef=ef,
                     payload_cols=["id", "metadata"],
@@ -845,6 +824,21 @@ class VecDB:
             if upper_bound is not None and r["dist"] > upper_bound:
                 continue
             result.append((dict(r["metadata"] or {}), float(r["dist"])))
+        result.sort(key=lambda t: t[1])
+        return result[:k]
+
+    def _driver_result(
+        self, key: str, ids, dists, k: int, upper_bound: float | None
+    ) -> list[tuple[dict[str, str], float]]:
+        """The :meth:`search` result of a driver-side serve's ``(ids,
+        dists)``: metadata attached from the table's map, the threshold
+        applied, ascending by distance, at most ``k``."""
+        md = self._metadata_map(key)
+        result = [
+            (md.get(int(i), {}), float(d))
+            for i, d in zip(ids, dists)
+            if upper_bound is None or float(d) <= upper_bound
+        ]
         result.sort(key=lambda t: t[1])
         return result[:k]
 

@@ -676,8 +676,7 @@ class IVFPQIndex:
             self._local_denied = True  # callers stop re-probing per query
             return False
         n = self.codes_clustered.count()
-        dim = sum(size for _, size in self.pq.groups)
-        if n * (self.pq.m + 4 * dim + 12) > int(max_bytes):
+        if n * (self.pq.m + 4 * self.pq.dim + 12) > int(max_bytes):
             self._local_denied = True
             return False
         self._local = None
@@ -707,11 +706,10 @@ class IVFPQIndex:
             cl = pdf["cluster_id"].to_numpy().astype(np.int32, copy=False)
             vecs = np.asarray(pdf[self.vec_col].to_list(), dtype=np.float32)
         else:
-            dim = sum(size for _, size in self.pq.groups)
             ids = np.empty(0, dtype=np.int64)
             cl = np.empty(0, dtype=np.int32)
             codes = np.empty((0, self.pq.m), dtype=np.uint8)
-            vecs = np.empty((0, dim), dtype=np.float32)
+            vecs = np.empty((0, self.pq.dim), dtype=np.float32)
         if old is not None:
             ids = np.concatenate([old["ids"], ids])
             cl = np.concatenate([old["cl"], cl])
@@ -855,38 +853,6 @@ class IVFPQIndex:
 
     # ---- search -----------------------------------------------------------
 
-    def _use_fused_rerank(self, n_probes: int, ef: int,
-                          override: bool | None) -> bool:
-        """Fuse the exact re-rank into the probe scan when the extra
-        in-scan work is cheap. The fused plan computes exact distances
-        for n_probes·ef candidates PER QUERY (each probed partition
-        contributes its own top-ef to the global gate) instead of the
-        global ef — it removes a whole second scan + join. The dim≤256
-        rule re-held at the balanced range pin across the whole probe
-        sweep (committed docs/BENCH_1M_IVF_AB_r13.json: at 1M/dim 960,
-        fused 21.8/28.1 ms/q vs two-pass 9.1/14.6 at 8p/32p ef=200 —
-        the per-candidate vector buffering scales with dim and loses
-        at every (n_probes, ef) point measured, so the rule stays
-        keyed on dim alone). Measured
-        calibration (bench.py): at dim=64 fusing wins across the whole
-        probe sweep (suite ivfpq 1.77→1.31 s); at dim=960 it LOSES at
-        every config (3.1→5.0 s at the narrowest, 3.7× at the widest) —
-        the per-candidate Arrow-list→numpy conversion and (pairs × dim)
-        gather scale with dim, so the auto rule keys on dim. In the
-        disk-bound regime the avoided second scan dwarfs the gather, so
-        callers there should pass ``fuse_rerank=True`` explicitly."""
-        if self.vec_col not in self.codes_clustered.columns:
-            if override:
-                raise ValueError(
-                    "fuse_rerank=True needs the vec column on the codes "
-                    "layout, which this IVF+PQ index does not carry."
-                )
-            return False
-        if override is not None:
-            return override
-        dim = sum(size for _, size in self.pq.groups)
-        return dim <= 256
-
     def _rerank_source(self, probed: Sequence[int]) -> DataFrame:
         """Vector source for the exact re-rank: the cluster-partitioned
         codes table itself when it carries the vec column (partition
@@ -910,11 +876,13 @@ class IVFPQIndex:
         metric: str | None = None,
         upper_bound: float | None = None,
         payload_cols: Sequence[str] | None = None,
-        fuse_rerank: bool | None = None,
     ) -> DataFrame:
         """Single-query IVF+PQ: partition-pruned ADC scan of the probed
-        clusters, rounded top-ef candidate gate, exact re-rank top-k.
-        ``fuse_rerank``: None = auto (see _use_fused_rerank)."""
+        clusters, rounded top-ef candidate gate, exact re-rank top-k,
+        fused into the scan or two-wave as :func:`index.pq.fuse_rerank`
+        picks. The fused plan re-ranks each probed partition's own
+        top-ef (n_probes·ef candidates per query instead of the global
+        ef) and drops the second scan + join."""
         metric = metric or self.model.metric
         q = np.asarray(list(query), dtype=np.float64)
         if (
@@ -939,7 +907,7 @@ class IVFPQIndex:
         )
         spark = self.codes_clustered.sparkSession
         id_col = self.id_col
-        fused = self._use_fused_rerank(n_probes, max(int(ef), int(k)), fuse_rerank)
+        fused = pq_mod.fuse_rerank(self.codes_clustered, self.vec_col, self.pq.dim)
         bc = spark.sparkContext.broadcast(
             (lut, sq, qn, self.pq.m, self.pq.n_bits, q if fused else None, metric)
         )
@@ -1134,7 +1102,6 @@ class IVFPQIndex:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        fuse_rerank: bool | None = None,
     ) -> DataFrame:
         """Batch IVF+PQ: one pruned scan of the codes table; each
         partition scores a row only for the queries probing its
@@ -1183,7 +1150,7 @@ class IVFPQIndex:
                 out = out.withColumnRenamed("query_id", qid_col)
             return out
 
-        fused = self._use_fused_rerank(n_probes, ef_, fuse_rerank)
+        fused = pq_mod.fuse_rerank(self.codes_clustered, self.vec_col, self.pq.dim)
         vec_col = self.vec_col
 
         cap, cap_vec = knn_ops.ACC_CAP_ROWS, knn_ops.ACC_VEC_BYTES

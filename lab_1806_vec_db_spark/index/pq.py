@@ -16,9 +16,10 @@ Reference semantics (/root/reference/src/distance/pq_table.rs):
   (candidate_pair.rs:102-108, flat_index.rs:84-104).
 
 Spark mapping:
-- codes live in a ``(id, code BINARY)`` DataFrame — the compressed
-  column is ~dim·4bits vs dim·32bits, so the ADC scan reads 8× less
-  than a flat scan; at 100 TB that ratio is the whole point of PQ;
+- codes live in an ``(id, code BINARY, vec)`` DataFrame, the layout
+  IVF+PQ's codes frame has too: the compressed column is ~dim·4bits vs
+  dim·32bits, and every reader projects the columns it needs, so the
+  columnar ADC scan reads 8× less than a flat scan;
 - lookup tables are per-query, tiny, and broadcast; the ADC scan is an
   Arrow-batched lookup-sum (the SIMD loop of pq_table.rs:239-270):
   :func:`adc_tile`, the one ADC scorer of every PQ and IVF+PQ scan
@@ -28,8 +29,9 @@ Spark mapping:
   into the task's ``operators.knn.TopkAccumulator``;
 - re-rank (:func:`exact_rerank`, the one exact re-rank of the PQ and
   IVF+PQ serves) either runs in the scan over vectors riding the codes
-  batches (fused) or joins the ef candidate ids back to the base table
-  (broadcast hash join on id — candidates are k-bounded).
+  batches (fused) or joins the ef candidate ids back to the vectors
+  (two-wave: broadcast hash join on id — candidates are k-bounded);
+  :func:`fuse_rerank` is the one rule that picks.
 
 Deviation (documented): the reference silently forces n_bits=4 even
 when 8 was validated (metadata_vec_table.rs:140); we honor the
@@ -42,6 +44,7 @@ pq_table.rs:215-224.
 from __future__ import annotations
 
 import json
+import logging
 import os
 from contextlib import contextmanager
 from typing import Callable, Iterator, Sequence
@@ -75,6 +78,20 @@ MAX_LUT_BYTES = 64 << 20
 #: Row step of :func:`exact_rerank`: bounds every (rows × dim) f64
 #: gather/upcast it materializes.
 RERANK_STEP = 16384
+#: Widest vector :func:`fuse_rerank` re-ranks inside the ADC scan.
+#: Measured on the IVF+PQ serve: at dim 64 fusing wins across the whole
+#: probe sweep (suite ivfpq 1.77 → 1.31 s); at 1M/dim 960 it loses at
+#: every (n_probes, ef) point (docs/BENCH_1M_IVF_AB_r13.json: fused
+#: 21.8/28.1 ms/q vs two-wave 9.1/14.6 at 8p/32p ef=200), because the
+#: per-candidate vector buffering and (pairs × dim) gather scale with
+#: dim. Flat PQ follows the same rule (10k rows, 500 queries, k=10,
+#: ef=80, local[4] on 4 cores, 8 alternating pairs): at dim 128 fused
+#: took 2 jobs and 0.52 s vs two-wave's 4 jobs and 0.75 s, faster in
+#: 8/8; at dim 960 two-wave took 1.26 s vs fused 1.38 s, faster in 8/8.
+#: Tests force each plan by monkeypatching it.
+FUSE_MAX_DIM = 256
+
+_log = logging.getLogger("lab_1806_vec_db_spark")
 
 
 def pq_groups(dim: int, m: int) -> list[tuple[int, int]]:
@@ -472,6 +489,20 @@ def make_grouped_rerank_scan(
     return rerank
 
 
+def fuse_rerank(frame: DataFrame, vec_col: str, dim: int) -> bool:
+    """The one fused-vs-two-wave rule of the PQ and IVF+PQ serves: True
+    when the codes ``frame`` carries ``vec_col`` and ``dim`` ≤
+    :data:`FUSE_MAX_DIM`, so the exact re-rank runs inside the ADC scan
+    (one scan, no re-rank join). Otherwise the serve runs two-wave: an
+    ADC scan of ``(id, code)``, then a join back to the vectors. Both
+    plans return identical rows. The decision is logged at DEBUG."""
+    has_vec = vec_col in frame.columns
+    fused = has_vec and dim <= FUSE_MAX_DIM
+    _log.debug("fuse rule vec=%s dim=%d bound=%d plan=%s", has_vec, dim,
+               FUSE_MAX_DIM, "fused" if fused else "two_wave")
+    return fused
+
+
 def finish_adc(
     approx: DataFrame,
     k: int,
@@ -549,7 +580,7 @@ def aligned_codes(pq: "PQTable", ids: np.ndarray) -> np.ndarray:
     smaller than the graph's link arrays, so it rides the same bounded
     broadcast tier (docs/SCALE.md)."""
     ids = np.asarray(ids, dtype=np.int64)
-    pdf = pq.codes.toPandas()
+    pdf = pq.codes.select(pq.id_col, "code").toPandas()
     buf = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8).reshape(len(pdf), -1)
     codes = unpack_codes(buf, pq.m, pq.n_bits)
     code_ids = pdf[pq.id_col].to_numpy(dtype=np.int64)
@@ -561,8 +592,15 @@ def aligned_codes(pq: "PQTable", ids: np.ndarray) -> np.ndarray:
 
 
 class PQTable:
-    """Trained codebooks + encoded codes DataFrame + the base table for
-    exact re-ranking."""
+    """Trained codebooks + the encoded ``(id, code, vec)`` codes frame +
+    the base table.
+
+    ``codes`` carries the stored vectors next to the codes, so
+    :meth:`search_batch` can exact-re-rank inside the ADC scan (see
+    :func:`fuse_rerank`); readers that need only the codes project
+    ``(id, code)``. A codes frame without the vector column (a
+    directory written before the vectors were persisted) still loads
+    and serves, on the two-wave plan."""
 
     def __init__(
         self,
@@ -574,7 +612,6 @@ class PQTable:
         vec_col: str = "vec",
         id_col: str = "id",
         path: str | None = None,
-        codes_vec: DataFrame | None = None,
     ) -> None:
         self.codebooks = codebooks
         self.groups = groups
@@ -584,14 +621,6 @@ class PQTable:
         self.vec_col = vec_col
         self.id_col = id_col
         self.path = path
-        #: (id, code, vec) fused frame — when present, ``search_batch``
-        #: exact-re-ranks INSIDE the ADC scan (one job instead of
-        #: scan + re-rank join; round-14, guide §2.4). Built by
-        #: :meth:`train` only while the vector payload fits
-        #: ``SPARK_GRAFT_PQ_FUSE_MAX_BYTES`` (default 1 GiB) — at 100 TB
-        #: scale codes tables must not carry raw vectors and the
-        #: two-wave plan serves unchanged.
-        self.codes_vec = codes_vec
         self._code_parts: int | None = None
 
     @property
@@ -606,6 +635,10 @@ class PQTable:
     @property
     def m(self) -> int:
         return len(self.groups)
+
+    @property
+    def dim(self) -> int:
+        return sum(size for _, size in self.groups)
 
     # ---- train + encode (A5-A7) ------------------------------------------
 
@@ -625,7 +658,9 @@ class PQTable:
     ) -> "PQTable":
         """Fit m sub-quantizers on a sampled training block
         (pq_table.rs:141-191; sampling per metadata_vec_table.rs:133-137),
-        then encode the whole table distributedly."""
+        then encode the whole table distributedly into the cached
+        ``(id, code, vec)`` codes frame, persisted under ``path`` when
+        one is given."""
         if n_bits not in (4, 8):
             raise ValueError("n_bits must be 4 or 8")
         mm = -(-dim // 3) if m is None else int(m)
@@ -639,21 +674,6 @@ class PQTable:
         codebooks = _fit_codebooks(sample, groups, ksub, seed)
         obj = cls(codebooks, groups, n_bits, codes=None, base=df,  # type: ignore[arg-type]
                   vec_col=vec_col, id_col=id_col, path=path)
-        # Fused-serve layout (round-14): while the raw-vector payload is
-        # bounded, encode (id, code, vec) in ONE pass and cache that;
-        # `codes` is a column projection of the same cached frame (no
-        # second copy of the code bytes) and `search_batch` re-ranks
-        # inside the ADC scan — one job instead of two. Above the bound
-        # (or for persisted indexes, whose on-disk codes stay vec-free)
-        # the classic (id, code) frame + two-wave serve is unchanged:
-        # at scale a codes table must not carry raw vectors.
-        fuse_max = int(os.environ.get("SPARK_GRAFT_PQ_FUSE_MAX_BYTES",
-                                      str(1 << 30)))
-        if path is None and n_rows * dim * 8 <= fuse_max:
-            fused = obj.encode_df(df, with_vec=True).cache()
-            obj.codes_vec = fused
-            obj.codes = fused.select(id_col, "code")
-            return obj
         codes = obj.encode_df(df)
         if path is not None:
             spark = df.sparkSession
@@ -678,11 +698,11 @@ class PQTable:
         return cls(codebooks, [tuple(g) for g in meta["groups"]], meta["n_bits"],
                    codes, base, vec_col=meta["vec_col"], id_col=meta["id_col"], path=path)
 
-    def encode_df(self, df: DataFrame, with_vec: bool = False) -> DataFrame:
+    def encode_df(self, df: DataFrame) -> DataFrame:
         """Distributed encode (pq_table.rs:66-91): broadcast codebooks,
         Arrow scan, per-group nearest-centroid argmin, pack to BINARY.
-        ``with_vec`` passes the stored vector column through unchanged
-        (zero-copy Arrow column reuse) for the fused-serve layout."""
+        Returns ``(id, code, vec)``: the stored vector column passes
+        through unchanged (zero-copy Arrow column reuse)."""
         spark = df.sparkSession
         bc = spark.sparkContext.broadcast((self.codebooks, self.groups, self.n_bits))
         vec_col, id_col = self.vec_col, self.id_col
@@ -696,25 +716,20 @@ class PQTable:
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
-                x = vec_matrix(rb.column(rb.schema.get_field_index(vec_col)),
-                               dtype=np.float64)
+                vec = rb.column(rb.schema.get_field_index(vec_col))
+                x = vec_matrix(vec, dtype=np.float64)
                 codes = np.empty((x.shape[0], len(groups)), dtype=np.uint8)
                 for gi, (start, size) in enumerate(groups):
                     d = _pairwise_dist(x[:, start : start + size], codebooks[gi], "l2sqr")
                     codes[:, gi] = np.argmin(d, axis=1)
-                cols = [rb.column(rb.schema.get_field_index(id_col)).cast(pa.int64()),
-                        pa.array(pack_codes(codes, n_bits), type=pa.binary())]
-                names = [id_col, "code"]
-                if with_vec:
-                    cols.append(rb.column(rb.schema.get_field_index(vec_col)))
-                    names.append(vec_col)
-                yield pa.RecordBatch.from_arrays(cols, names=names)
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(rb.schema.get_field_index(id_col)).cast(pa.int64()),
+                     pa.array(pack_codes(codes, n_bits), type=pa.binary()), vec],
+                    names=[id_col, "code", vec_col])
 
-        schema = f"{id_col} long, code binary"
-        if with_vec:
-            vtype = df.schema[vec_col].dataType.simpleString()
-            schema += f", {vec_col} {vtype}"
-        return df.select(id_col, vec_col).mapInArrow(encode, schema=schema)
+        vtype = df.schema[vec_col].dataType.simpleString()
+        return df.select(id_col, vec_col).mapInArrow(
+            encode, schema=f"{id_col} long, code binary, {vec_col} {vtype}")
 
     # ---- ADC (A8-A9) ------------------------------------------------------
 
@@ -749,7 +764,8 @@ class PQTable:
                     names=[id_col, "dist"],
                 )
 
-        return self.codes.mapInArrow(scan, schema=f"{id_col} long, dist double")
+        return self.codes.select(id_col, "code").mapInArrow(
+            scan, schema=f"{id_col} long, dist double")
 
     # ---- search = ADC topk(ef) → exact re-rank topk(k) (Q5, A10) ---------
 
@@ -793,7 +809,6 @@ class PQTable:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        fuse_rerank: bool | None = None,
     ) -> DataFrame:
         """Batch ADC: per-query lookup tensors broadcast in bounded
         chunks (≤ :data:`MAX_LUT_BYTES` each), one Arrow scan of the
@@ -801,28 +816,19 @@ class PQTable:
         raw ADC (:func:`adc_tile` per Arrow batch into a
         :class:`operators.knn.TopkAccumulator`, so the emission is
         ef-bounded per task), the global ADC gate across partitions,
-        then one broadcast join back to vectors for the exact re-rank.
+        then the exact re-rank.
 
-        ``fuse_rerank`` (None = auto): when the index carries the fused
-        (id, code, vec) layout (:attr:`codes_vec`, built by
-        :meth:`train` for bounded tables), the exact re-rank runs
-        INSIDE the ADC scan — each task re-ranks its own ef-bounded
-        pool against the vectors riding the same Arrow batches, so the
-        whole serve is ONE job (round-14, guide §2.4; the IVF+PQ fused
-        plan applied to flat PQ). The pool selection, tie handling,
-        re-rank arithmetic and rounding are bit-identical to the
-        two-wave plan, so results are IDENTICAL; ``False`` forces the
-        classic two-wave serve (the only plan for indexes loaded from
-        disk, whose codes stay vec-free — ``True`` raises there).
+        :func:`fuse_rerank` picks where the re-rank runs. Fused, each
+        task re-ranks its own ef-bounded pool against the vectors riding
+        the same Arrow batches, so the ADC scan is the only scan. Two-wave
+        (dim above :data:`FUSE_MAX_DIM`, or a codes frame without
+        vectors) scans ``(id, code)`` and joins the gated candidates
+        back to the base table's vectors. The pool selection, tie
+        handling, re-rank arithmetic and rounding are the same on both
+        plans, so results are IDENTICAL.
 
         The ADC gate, the re-rank wave and the final top-k are
         :func:`finish_adc`."""
-        if fuse_rerank and self.codes_vec is None:
-            raise ValueError(
-                "fuse_rerank=True needs the fused (id, code, vec) layout, "
-                "which this PQ table does not carry (loaded from disk, or "
-                "trained above SPARK_GRAFT_PQ_FUSE_MAX_BYTES)."
-            )
         spark = queries.sparkSession
         block = collect_query_block(queries, qid_col, qvec_col)
         if block is None:
@@ -830,7 +836,7 @@ class PQTable:
         qids, qmat = block
         id_col = self.id_col
         vec_col = self.vec_col
-        fused = self.codes_vec is not None and fuse_rerank is not False
+        fused = fuse_rerank(self.codes, vec_col, self.dim)
         ef_ = max(int(ef), int(k))
         ksub = 1 << self.n_bits
         # bound each broadcast lookup tensor (default ~64 MB; dim 960 /
@@ -894,7 +900,7 @@ class PQTable:
 
             return scan
 
-        scan_src = self.codes_vec if fused else self.codes
+        scan_src = self.codes.select(id_col, "code", *([vec_col] if fused else []))
         scan_schema = f"query_id long, {id_col} long, adc double" + (
             ", dist double" if fused else "")
         pieces = []

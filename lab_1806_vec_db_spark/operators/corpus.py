@@ -336,7 +336,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_join: bool = False,
-    impl: str = "vectorized",
 ) -> DataFrame:
     """Train/eval decontamination screen: for every document matching
     ``eval_pred`` (the held-out/eval split), the fraction of its
@@ -349,49 +348,40 @@ def decontaminate(
     Plan shape at 100 TB: the split predicate applies BEFORE gram
     expansion on both sides, so each side's parquet scan reads only
     its split (PushedFilters — gated in tests/test_plans.py); n-gram
-    expansion is map-only (``impl="vectorized"``: Arrow-batched
-    ``mapInPandas``, the default; ``impl="catalyst"``: pure
-    slice+concat_ws expressions — bit-identical, gated in
-    tests/test_dedup_text.py); the train-side ``distinct`` is one
-    shuffle with map-side combine; the probe is a shuffle join on the
-    gram key (never broadcast — the train gram set is the big side).
+    expansion is map-only, an Arrow-batched ``mapInPandas``
+    (tests/test_dedup_text.py keeps the pure-Catalyst explode of
+    ``word_shingles`` as its bit-identity reference); the train-side
+    ``distinct`` is one shuffle with map-side combine; the probe is a
+    shuffle join on the gram key (never broadcast — the train gram set is the big side).
     ``hash_join=True`` joins on ``xxhash64(gram)`` instead of the
     string — a much narrower shuffle at a ~2^-64 per-pair false-hit
     risk, the right trade at scale (exact strings are kept for the
     oracle-gated entry)."""
-    from lab_1806_vec_db_spark.operators.dedup import word_shingles
+    id_type = dict(docs.dtypes)[id_col]
+    fn = _exploded_grams_batches(n, id_col, text_col)
+    schema = f"{id_col} {id_type}, gram string"
+    ev = (
+        docs.filter(eval_pred)
+        .select(id_col, text_col)
+        .mapInPandas(fn, schema=schema)
+    )
+    train = (
+        docs.filter(~eval_pred)
+        .select(id_col, text_col)
+        .mapInPandas(fn, schema=schema)
+        # drop the short-doc sentinel: a NULL join key never
+        # matches, so pruning it here only shrinks the distinct
+        .filter(F.col("gram").isNotNull())
+        .select("gram")
+    )
+    return _gram_hit_ratio(ev, train, id_col, hash_join)
 
-    if impl == "vectorized":
-        id_type = dict(docs.dtypes)[id_col]
-        fn = _exploded_grams_batches(n, id_col, text_col)
-        schema = f"{id_col} {id_type}, gram string"
-        ev = (
-            docs.filter(eval_pred)
-            .select(id_col, text_col)
-            .mapInPandas(fn, schema=schema)
-        )
-        train = (
-            docs.filter(~eval_pred)
-            .select(id_col, text_col)
-            .mapInPandas(fn, schema=schema)
-            # drop the short-doc sentinel: a NULL join key never
-            # matches, so pruning it here only shrinks the distinct
-            .filter(F.col("gram").isNotNull())
-            .select("gram")
-        )
-    elif impl == "catalyst":
-        # explode_outer: an eval doc SHORTER than n tokens has no grams
-        # but must still report (id, 0, 0, 0.0) — a silently missing row
-        # reads as "unchecked" downstream
-        grams = docs.select(
-            id_col,
-            F.explode_outer(word_shingles(text_col, n)).alias("gram"),
-            eval_pred.alias("_is_eval"),
-        )
-        train = grams.filter(~F.col("_is_eval")).select("gram")
-        ev = grams.filter(F.col("_is_eval")).select(id_col, "gram")
-    else:
-        raise ValueError(f"decontaminate: unknown impl {impl!r}")
+
+def _gram_hit_ratio(ev: DataFrame, train: DataFrame, id_col: str,
+                    hash_join: bool) -> DataFrame:
+    """The probe half of :func:`decontaminate`: ``ev`` is ``(id, gram)``
+    with a NULL gram for an eval doc that has none, ``train`` the train
+    side's ``gram`` column. Returns ``(id, n_grams, n_hit, ratio)``."""
     if hash_join:
         # keep NULL (the no-grams sentinel) NULL: xxhash64(NULL) is the
         # SEED, which would collide with a train-side null-hash
@@ -494,9 +484,10 @@ def bigram_stats(
 
 def _repetition_ratio_expr() -> F.Column:
     """The 4-dp half-up repetition ratio from the (n_grams, n_distinct)
-    columns — ALWAYS evaluated by Catalyst so both repetition_stats
-    implementations (and the DuckDB oracle, whose round matches
-    Spark's HALF_UP on doubles) share bit-identical rounding."""
+    columns — ALWAYS evaluated by Catalyst so repetition_stats, its
+    Catalyst reference in tests/test_dedup_text.py and the DuckDB
+    oracle (whose round matches Spark's HALF_UP on doubles) share
+    bit-identical rounding."""
     ng, nd = F.col("n_grams"), F.col("n_distinct")
     return F.when(
         ng > 0,
@@ -584,7 +575,6 @@ def repetition_stats(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "vectorized",
 ) -> DataFrame:
     """Within-document repetition signal — the corpus-cleaning filter
     that catches boilerplate/spam: fraction of the document's word
@@ -592,43 +582,19 @@ def repetition_stats(
     (id, n_grams, n_distinct, rep_ratio); docs shorter than ``n``
     tokens report 0 grams and ratio 0.0.
 
-    ``impl="vectorized"`` (default) counts grams in an Arrow-batched
-    ``mapInPandas`` (batch-local factorize + one int64 sort per batch
-    — ~10× the Catalyst path's constant factor, which spends its time
-    materializing every gram as a Java string); ``impl="catalyst"``
-    keeps the pure-expression form. BOTH are map-only with zero
-    shuffle — at 100 TB each is a single scan stage — and both feed
-    the SAME Catalyst ratio expression, so results are bit-identical
-    across impls and vs the DuckDB oracle."""
-    if impl == "vectorized":
-        id_type = dict(docs.dtypes)[id_col]
-        counts = docs.select(id_col, text_col).mapInPandas(
-            _repetition_counts_batches(n, id_col, text_col),
-            schema=f"{id_col} {id_type}, n_grams bigint, n_distinct bigint",
-        )
-        return counts.select(
-            F.col(id_col),
-            F.col("n_grams"),
-            F.col("n_distinct"),
-            _repetition_ratio_expr().alias("rep_ratio"),
-        )
-    if impl != "catalyst":
-        raise ValueError(f"repetition_stats: unknown impl {impl!r}")
-    toks = F.split(F.col(text_col), " ")
-    # guard: sequence(1, 0) DESCENDS in Spark, so short docs must map
-    # to an empty gram list explicitly
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return docs.select(
-        F.col(id_col),
-        F.size(grams).cast("bigint").alias("n_grams"),
-        F.size(F.array_distinct(grams)).cast("bigint").alias("n_distinct"),
-    ).select(
+    Grams are counted in an Arrow-batched ``mapInPandas`` (batch-local
+    factorize + one int64 sort per batch — ~10× the constant factor of
+    the pure-Catalyst form, which spends its time materializing every
+    gram as a Java string; tests/test_dedup_text.py keeps that form as
+    the bit-identity reference). It is map-only with zero shuffle — at
+    100 TB a single scan stage — and the ratio is one Catalyst
+    expression, bit-identical to the DuckDB oracle."""
+    id_type = dict(docs.dtypes)[id_col]
+    counts = docs.select(id_col, text_col).mapInPandas(
+        _repetition_counts_batches(n, id_col, text_col),
+        schema=f"{id_col} {id_type}, n_grams bigint, n_distinct bigint",
+    )
+    return counts.select(
         F.col(id_col),
         F.col("n_grams"),
         F.col("n_distinct"),

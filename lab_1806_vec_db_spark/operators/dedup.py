@@ -211,7 +211,6 @@ def minhash_signatures(
     num_hashes: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "vectorized",
 ) -> DataFrame:
     """MinHash signatures: hash each shingle ONCE (md5-prefix), then
     every permutation is a cheap affine map collapsed by ``min`` — 1
@@ -220,56 +219,35 @@ def minhash_signatures(
 
     ``id_col`` is the document KEY: rows sharing an id are fingerprinted
     as one merged document (union of shingle sets ≡ elementwise min of
-    per-row signatures — both impls honor this).
+    per-row signatures).
 
-    ``impl="vectorized"`` (default) computes per-row signatures in an
-    Arrow-batched ``mapInPandas`` (one numpy min over the affine plane
-    per row, batch-local md5 cache) — ~2× the Catalyst form's constant
-    factor, which pays to materialize every shingle as a Java string
-    and explode it. ``impl="catalyst"`` keeps the pure-expression
-    explode → hash → min-agg plan. BOTH end in the same groupBy(id)
-    min-aggregate whose map-side partials collapse each task's rows to
-    ≤num_hashes ints per doc — at 100 TB the one shuffle carries
-    signatures, never shingles — and both are bit-identical (gated in
-    tests/test_dedup_text.py). Empty docs (fewer than ``n`` tokens)
-    report the all--1 sentinel."""
-    if impl == "vectorized":
-        id_type = dict(df.dtypes)[id_col]
-        per_row = df.select(id_col, text_col).mapInPandas(
-            _minhash_row_sig_batches(n, num_hashes, id_col, text_col),
-            schema=f"{id_col} {id_type}, "
-            + ", ".join(f"_s{j} bigint" for j in range(num_hashes)),
-        )
-        merged = per_row.groupBy(id_col).agg(
-            *[F.min(f"_s{j}").alias(f"_s{j}") for j in range(num_hashes)]
-        )
-        # a doc whose every row was shingle-less still carries the P
-        # sentinel after the min — map it to the -1 contract value
-        return merged.select(
-            id_col,
-            F.array(*[
-                F.when(F.col(f"_s{j}") == MINHASH_P, F.lit(-1).cast("bigint"))
-                .otherwise(F.col(f"_s{j}"))
-                for j in range(num_hashes)
-            ]).alias("sig"),
-        )
-    if impl != "catalyst":
-        raise ValueError(f"minhash_signatures: unknown impl {impl!r}")
-    grams = df.select(F.col(id_col), F.explode_outer(word_shingles(text_col, n)).alias("_s"))
-    hashed = grams.select(id_col, hash32(F.col("_s")).alias("_h"))
-    aggs = []
-    for j in range(num_hashes):
-        a_j, b_j = minhash_perm_consts(j)
-        aggs.append(
-            F.coalesce(
-                F.min((F.lit(a_j) * F.col("_h") + F.lit(b_j)) % F.lit(MINHASH_P)),
-                F.lit(-1).cast("bigint"),
-            ).alias(f"_s{j}")
-        )
-    return (
-        hashed.groupBy(id_col)
-        .agg(*aggs)
-        .select(id_col, F.array(*[F.col(f"_s{j}") for j in range(num_hashes)]).alias("sig"))
+    Per-row signatures come from an Arrow-batched ``mapInPandas`` (one
+    numpy min over the affine plane per row, batch-local md5 cache) —
+    ~2× the constant factor of the pure-Catalyst explode → hash →
+    min-agg form, which pays to materialize every shingle as a Java
+    string; tests/test_dedup_text.py keeps that form as the bit-identity
+    reference. The rows end in one groupBy(id) min-aggregate whose
+    map-side partials collapse each task's rows to ≤num_hashes ints per
+    doc — at 100 TB the one shuffle carries signatures, never shingles.
+    Empty docs (fewer than ``n`` tokens) report the all--1 sentinel."""
+    id_type = dict(df.dtypes)[id_col]
+    per_row = df.select(id_col, text_col).mapInPandas(
+        _minhash_row_sig_batches(n, num_hashes, id_col, text_col),
+        schema=f"{id_col} {id_type}, "
+        + ", ".join(f"_s{j} bigint" for j in range(num_hashes)),
+    )
+    merged = per_row.groupBy(id_col).agg(
+        *[F.min(f"_s{j}").alias(f"_s{j}") for j in range(num_hashes)]
+    )
+    # a doc whose every row was shingle-less still carries the P
+    # sentinel after the min — map it to the -1 contract value
+    return merged.select(
+        id_col,
+        F.array(*[
+            F.when(F.col(f"_s{j}") == MINHASH_P, F.lit(-1).cast("bigint"))
+            .otherwise(F.col(f"_s{j}"))
+            for j in range(num_hashes)
+        ]).alias("sig"),
     )
 
 

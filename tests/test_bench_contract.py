@@ -177,3 +177,16 @@ def test_ab_row_summary_without_complete_pairs(monkeypatch):
     _stub_legs(monkeypatch, ab, {"prev": [None, 1.0], "head": [1.0, None]})
     assert ab.summarize(ab.run_pairs("prev", "head", "pq_ef80", 2, 1)) == {
         "pairs": 2, "complete_pairs": 0}
+
+
+def test_ab_row_rejects_single_run_legs(monkeypatch, capsys):
+    """A best-of-1 leg times a cold serve, so --leg-runs below 2 is an
+    argparse error that says why, raised before any leg runs."""
+    ab = _load_tool("ab_row_vs_commit")
+    calls = _stub_legs(monkeypatch, ab, {"prev": [], "head": []})
+    with pytest.raises(SystemExit) as exc:
+        ab.main(["--row", "pq_ef80", "--commit", "HEAD", "--leg-runs", "1"])
+    assert exc.value.code == 2
+    assert "--leg-runs must be at least 2" in capsys.readouterr().err
+    assert calls == []
+    assert ab.parse_args(["--row", "pq_ef80", "--commit", "HEAD"]).leg_runs == 2

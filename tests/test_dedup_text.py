@@ -13,6 +13,78 @@ from lab_1806_vec_db_spark.operators import dedup as D
 from lab_1806_vec_db_spark.streaming.windows import sessionize, tumbling_agg
 
 
+# ---- pure-Catalyst parity references ---------------------------------------
+# The library computes MinHash signatures, decontamination grams and
+# repetition counts in Arrow-batched mapInPandas. These are the same
+# operators as Catalyst expression plans; the parity tests below require
+# the library to match them bit for bit.
+
+
+def catalyst_minhash_signatures(df, n=3, num_hashes=16, text_col="text",
+                                id_col="doc_id"):
+    """explode → JVM md5 (hash32) → affine-permutation min-agg."""
+    grams = df.select(F.col(id_col),
+                      F.explode_outer(D.word_shingles(text_col, n)).alias("_s"))
+    hashed = grams.select(id_col, T.hash32(F.col("_s")).alias("_h"))
+    aggs = []
+    for j in range(num_hashes):
+        a_j, b_j = D.minhash_perm_consts(j)
+        aggs.append(
+            F.coalesce(
+                F.min((F.lit(a_j) * F.col("_h") + F.lit(b_j)) % F.lit(D.MINHASH_P)),
+                F.lit(-1).cast("bigint"),
+            ).alias(f"_s{j}")
+        )
+    return (
+        hashed.groupBy(id_col)
+        .agg(*aggs)
+        .select(id_col, F.array(*[F.col(f"_s{j}") for j in range(num_hashes)]).alias("sig"))
+    )
+
+
+def catalyst_decontaminate(docs, eval_pred, n=3, text_col="text",
+                           id_col="doc_id", hash_join=False):
+    """explode_outer of word_shingles, then the library's probe half."""
+    from lab_1806_vec_db_spark.operators.corpus import _gram_hit_ratio
+
+    # explode_outer: an eval doc SHORTER than n tokens has no grams but
+    # must still report (id, 0, 0, 0.0)
+    grams = docs.select(
+        id_col,
+        F.explode_outer(D.word_shingles(text_col, n)).alias("gram"),
+        eval_pred.alias("_is_eval"),
+    )
+    train = grams.filter(~F.col("_is_eval")).select("gram")
+    ev = grams.filter(F.col("_is_eval")).select(id_col, "gram")
+    return _gram_hit_ratio(ev, train, id_col, hash_join)
+
+
+def catalyst_repetition_stats(docs, n=3, text_col="text", id_col="doc_id"):
+    """Per-row gram array expression, sized whole and distinct."""
+    from lab_1806_vec_db_spark.operators.corpus import _repetition_ratio_expr
+
+    toks = F.split(F.col(text_col), " ")
+    # guard: sequence(1, 0) DESCENDS in Spark, so short docs must map
+    # to an empty gram list explicitly
+    grams = F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return docs.select(
+        F.col(id_col),
+        F.size(grams).cast("bigint").alias("n_grams"),
+        F.size(F.array_distinct(grams)).cast("bigint").alias("n_distinct"),
+    ).select(
+        F.col(id_col),
+        F.col("n_grams"),
+        F.col("n_distinct"),
+        _repetition_ratio_expr().alias("rep_ratio"),
+    )
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -143,8 +215,8 @@ def test_minhash_signatures_impl_parity(spark, n, num_hashes):
     )
     cat = sorted(
         (r["doc_id"], tuple(r["sig"]))
-        for r in D.minhash_signatures(
-            df, n=n, num_hashes=num_hashes, impl="catalyst"
+        for r in catalyst_minhash_signatures(
+            df, n=n, num_hashes=num_hashes
         ).collect()
     )
     assert vec == cat
@@ -168,12 +240,12 @@ def test_vectorized_impl_parity_randomized(spark):
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    for op, kw in [
-        (repetition_stats, dict(n=3)),
-        (D.minhash_signatures, dict(n=2, num_hashes=8)),
+    for op, ref, kw in [
+        (repetition_stats, catalyst_repetition_stats, dict(n=3)),
+        (D.minhash_signatures, catalyst_minhash_signatures, dict(n=2, num_hashes=8)),
     ]:
         vec = sorted(map(repr, op(df, **kw).collect()))
-        cat = sorted(map(repr, op(df, impl="catalyst", **kw).collect()))
+        cat = sorted(map(repr, ref(df, **kw).collect()))
         assert vec == cat, op.__name__
 
 
@@ -351,8 +423,8 @@ def test_decontaminate_impl_parity(spark, hj):
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     pred = F.col("source") == "eval"
     vec = sorted(map(tuple, decontaminate(docs, pred, n=3, hash_join=hj).collect()))
-    cat = sorted(map(tuple, decontaminate(
-        docs, pred, n=3, hash_join=hj, impl="catalyst").collect()))
+    cat = sorted(map(tuple, catalyst_decontaminate(
+        docs, pred, n=3, hash_join=hj).collect()))
     assert vec == cat
 
 
@@ -522,7 +594,8 @@ def test_repetition_stats_hand_counted(spark, impl):
          (3, "q r")],          # shorter than n → 0 grams
         "doc_id bigint, text string",
     )
-    out = {r["doc_id"]: r for r in repetition_stats(df, n=3, impl=impl).collect()}
+    op = repetition_stats if impl == "vectorized" else catalyst_repetition_stats
+    out = {r["doc_id"]: r for r in op(df, n=3).collect()}
     assert (out[1]["n_grams"], out[1]["n_distinct"], out[1]["rep_ratio"]) == (4, 2, 0.5)
     assert (out[2]["n_grams"], out[2]["n_distinct"], out[2]["rep_ratio"]) == (2, 2, 0.0)
     assert (out[3]["n_grams"], out[3]["n_distinct"], out[3]["rep_ratio"]) == (0, 0, 0.0)
@@ -550,7 +623,7 @@ def test_repetition_stats_impl_parity(spark, n):
     from lab_1806_vec_db_spark.operators.corpus import repetition_stats
 
     vec = sorted(map(tuple, repetition_stats(df, n=n).collect()))
-    cat = sorted(map(tuple, repetition_stats(df, n=n, impl="catalyst").collect()))
+    cat = sorted(map(tuple, catalyst_repetition_stats(df, n=n).collect()))
     assert vec == cat
 
 

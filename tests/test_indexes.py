@@ -15,6 +15,10 @@ Ported gates:
 
 from __future__ import annotations
 
+import logging
+import os
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -22,8 +26,15 @@ from pyspark.sql import functions as F
 from lab_1806_vec_db_spark.db.vecdb import VecDB
 from lab_1806_vec_db_spark.index.hnsw import HNSWIndex
 from lab_1806_vec_db_spark.index.ivf import IVFIndex
+from lab_1806_vec_db_spark.index import pq as pq_mod
 from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans
-from lab_1806_vec_db_spark.index.pq import PQTable, pack_codes, pq_groups, unpack_codes
+from lab_1806_vec_db_spark.index.pq import (
+    PQTable,
+    aligned_codes,
+    pack_codes,
+    pq_groups,
+    unpack_codes,
+)
 from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.session import read_table
 
@@ -272,7 +283,6 @@ def test_pq_batch_chunked_lut_broadcast_matches(emb, pq16, monkeypatch):
     )
     single = pq16.search_batch(queries, k=3, ef=40, metric="l2sqr",
                                qvec_col="embedding").collect()
-    import lab_1806_vec_db_spark.index.pq as pq_mod
     real = pq_mod.build_lookup_batch
     calls: list[int] = []
 
@@ -289,25 +299,29 @@ def test_pq_batch_chunked_lut_broadcast_matches(emb, pq16, monkeypatch):
 
 
 def test_pq_fused_serve_equals_two_wave(spark, emb, pq16, monkeypatch):
-    """Round-14: the fused single-job serve (exact re-rank inside the
-    ADC scan, enabled by the train-time (id, code, vec) layout) must
-    reproduce the two-wave scan+re-rank plan's rows and order exactly —
-    on both sides of the merge gate, both metrics, with the threshold
-    filter, and across multi-Arrow-batch tasks."""
-    assert pq16.codes_vec is not None  # small table → fused layout built
+    """The fused single-job serve (exact re-rank inside the ADC scan,
+    over the (id, code, vec) codes frame) must reproduce the two-wave
+    scan+re-rank plan's rows and order exactly — on both sides of the
+    merge gate, both metrics, with the threshold filter, and across
+    multi-Arrow-batch tasks. ``FUSE_MAX_DIM = 0`` forces two-wave."""
+    assert "embedding" in pq16.codes.columns  # the codes carry vectors
     queries = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    fuse_max_dim = pq_mod.FUSE_MAX_DIM
+
+    def serve(plan, **kw):
+        monkeypatch.setattr(pq_mod, "FUSE_MAX_DIM",
+                            fuse_max_dim if plan == "fused" else 0)
+        return pq16.search_batch(queries, k=5, ef=40, qvec_col="embedding",
+                                 **kw).collect()
+
     for metric in ("l2sqr", "cosine"):
         for ub in (None, 0.9):
             for bound in (1 << 62, -1):  # driver side, window side
                 monkeypatch.setattr(knn_ops, "DRIVER_MERGE_MAX_BYTES", bound)
-                fused = pq16.search_batch(
-                    queries, k=5, ef=40, metric=metric, qvec_col="embedding",
-                    upper_bound=ub).collect()
-                two = pq16.search_batch(
-                    queries, k=5, ef=40, metric=metric, qvec_col="embedding",
-                    upper_bound=ub, fuse_rerank=False).collect()
+                fused = serve("fused", metric=metric, upper_bound=ub)
+                two = serve("two_wave", metric=metric, upper_bound=ub)
                 assert [tuple(r) for r in fused] == [tuple(r) for r in two], (
                     metric, ub, bound)
     monkeypatch.undo()
@@ -317,25 +331,69 @@ def test_pq_fused_serve_equals_two_wave(spark, emb, pq16, monkeypatch):
     old = spark.conf.get(key)
     spark.conf.set(key, "100")
     try:
-        fused_mb = pq16.search_batch(
-            queries, k=5, ef=40, metric="l2sqr", qvec_col="embedding").collect()
+        fused_mb = serve("fused", metric="l2sqr")
     finally:
         spark.conf.set(key, old)
-    ref = pq16.search_batch(
-        queries, k=5, ef=40, metric="l2sqr", qvec_col="embedding",
-        fuse_rerank=False).collect()
+    ref = serve("two_wave", metric="l2sqr")
     assert [tuple(r) for r in fused_mb] == [tuple(r) for r in ref]
 
 
-def test_pq_train_fuse_byte_gate(emb, monkeypatch):
-    """The fused layout is bounded: above SPARK_GRAFT_PQ_FUSE_MAX_BYTES
-    the codes frame stays vec-free (the 100 TB shape) and search_batch
-    serves the classic two-wave plan."""
-    monkeypatch.setenv("SPARK_GRAFT_PQ_FUSE_MAX_BYTES", "1")
-    lean = PQTable.train(emb, dim=64, m=22, n_bits=4, train_proportion=0.5,
-                         vec_col="embedding", id_col="vec_id")
-    assert lean.codes_vec is None
-    assert lean.codes.columns == ["vec_id", "code"]
+def test_pq_vec_free_directory_serves_two_wave(spark, emb, tmp_path, caplog):
+    """A PQ directory whose codes parquet has no vector column (written
+    before the codes carried vectors) still loads, and serves two-wave
+    with the rows of the fused serve of the same codebooks and codes."""
+    caplog.set_level(logging.DEBUG, logger="lab_1806_vec_db_spark")
+    path = str(tmp_path / "pq")
+    pq = PQTable.train(emb, dim=64, m=16, n_bits=8, train_proportion=0.5,
+                       vec_col="embedding", id_col="vec_id", path=path)
+    codes = os.path.join(path, "codes")
+    lean = str(tmp_path / "codes_lean")
+    spark.read.parquet(codes).drop("embedding").write.parquet(lean)
+    shutil.rmtree(codes)
+    os.replace(lean, codes)
+    legacy = PQTable.load(spark, path, base=emb)
+    assert legacy.codes.columns == ["vec_id", "code"]
+    queries = emb.filter(F.col("vec_id") < 12).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    for metric in ("l2sqr", "cosine"):
+        caplog.clear()
+        fused = pq.search_batch(queries, k=5, ef=40, metric=metric,
+                                qvec_col="embedding").collect()
+        two = legacy.search_batch(queries, k=5, ef=40, metric=metric,
+                                  qvec_col="embedding").collect()
+        plans = [r.getMessage() for r in caplog.records
+                 if r.getMessage().startswith("fuse rule ")]
+        assert plans == [
+            "fuse rule vec=True dim=64 bound=256 plan=fused",
+            "fuse rule vec=False dim=64 bound=256 plan=two_wave",
+        ]
+        assert len(fused) == 12 * 5
+        assert [tuple(r) for r in two] == [tuple(r) for r in fused], metric
+
+
+def test_aligned_codes_collects_no_vectors(emb, pq16, monkeypatch):
+    """The HNSW+PQ companion codes come from an (id, code) projection:
+    the driver collect never carries the vector column."""
+    frame_cls = type(pq16.codes)
+    collected: list[list[str]] = []
+    real = frame_cls.toPandas
+
+    def spy(self, *a, **kw):
+        collected.append(list(self.columns))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "toPandas", spy)
+    ids = np.array([7, 3, 0, 499, 42], dtype=np.int64)
+    got = aligned_codes(pq16, ids)
+    monkeypatch.undo()
+    assert collected == [["vec_id", "code"]]
+    assert got.shape == (5, pq16.m) and got.dtype == np.uint8
+    pdf = pq16.codes.select("vec_id", "code").toPandas().set_index("vec_id")
+    want = unpack_codes(
+        np.frombuffer(b"".join(pdf.loc[ids, "code"]), dtype=np.uint8)
+        .reshape(len(ids), -1), pq16.m, pq16.n_bits)
+    assert np.array_equal(got, want)
 
 
 def test_batch_query_caps_raise(emb, pq16, monkeypatch):
@@ -363,21 +421,6 @@ def test_batch_query_caps_raise(emb, pq16, monkeypatch):
     for serve in serves:
         with pytest.raises(ValueError, match="exceeds the broadcast bound"):
             serve()
-
-
-def test_pq_fuse_rerank_without_vectors_raises(emb, pq16):
-    """An explicit fuse_rerank=True on a vec-free codes layout cannot be
-    honored: it raises instead of silently serving two-wave."""
-    lean = PQTable(pq16.codebooks, pq16.groups, pq16.n_bits, pq16.codes,
-                   pq16.base, vec_col=pq16.vec_col, id_col=pq16.id_col)
-    assert lean.codes_vec is None
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    with pytest.raises(ValueError, match="fuse_rerank=True"):
-        lean.search_batch(queries, k=3, ef=40, qvec_col="embedding",
-                          fuse_rerank=True)
-    assert lean.search_batch(queries, k=3, ef=40, qvec_col="embedding").count() == 12
 
 
 # ---- HNSW ------------------------------------------------------------------

@@ -560,7 +560,8 @@ def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtyp
     dtypes (fused buffers candidate vectors in the store dtype) — and on
     the flat, IVF and PQ (fused and two-wave) tiers, which share the
     one per-task accumulator (100-row Arrow batches give each of their
-    tasks several fragments)."""
+    tasks several fragments). ``FUSE_MAX_DIM = 0`` forces the two-wave
+    plans."""
     from lab_1806_vec_db_spark.index.ivf import IVFIndex
     from lab_1806_vec_db_spark.index.pq import PQTable
 
@@ -581,9 +582,17 @@ def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtyp
             mp.setattr(knn_ops, "ACC_VEC_BYTES", 1024)
             return serve().collect()
 
+    fuse_max_dim = pq_mod.FUSE_MAX_DIM
+
+    def forced(fuse, serve):
+        def run():
+            monkeypatch.setattr(pq_mod, "FUSE_MAX_DIM", fuse_max_dim if fuse else 0)
+            return serve()
+        return run
+
     for fuse in (True, False):
-        serve = lambda: idx.search_batch(queries, k=5, n_probes=8, ef=48,
-                                         qvec_col="embedding", fuse_rerank=fuse)
+        serve = forced(fuse, lambda: idx.search_batch(
+            queries, k=5, n_probes=8, ef=48, qvec_col="embedding"))
         ref = serve().collect()
         tiny = tiny_floors(serve)
         assert sorted(tiny, key=key) == sorted(ref, key=key), f"fuse={fuse}"
@@ -600,11 +609,10 @@ def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtyp
             id_col="vec_id", qvec_col="embedding"),
         "ivf": lambda: ivf.search_batch(queries, 5, n_probes=8,
                                         qvec_col="embedding"),
-        "pq_fused": lambda: pq.search_batch(queries, 5, ef=48, metric="l2sqr",
-                                            qvec_col="embedding", fuse_rerank=True),
-        "pq_two_wave": lambda: pq.search_batch(queries, 5, ef=48, metric="l2sqr",
-                                               qvec_col="embedding",
-                                               fuse_rerank=False),
+        "pq_fused": forced(True, lambda: pq.search_batch(
+            queries, 5, ef=48, metric="l2sqr", qvec_col="embedding")),
+        "pq_two_wave": forced(False, lambda: pq.search_batch(
+            queries, 5, ef=48, metric="l2sqr", qvec_col="embedding")),
     }
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(batch_key)
@@ -619,42 +627,36 @@ def test_fused_geometric_compaction_tiny_floors(spark, emb, tmp_path, store_dtyp
         spark.conf.set(batch_key, old)
 
 
-def test_fused_auto_rule_keys_on_dim(emb, ivfpq):
-    """Auto fused-dispatch rule (docs/BENCH_1M_IVF_AB_r13.json): fuse
-    iff the store carries the vec column AND dim <= 256 — at 1M/960
-    fused lost to two-pass at every measured (n_probes, ef) because
-    per-candidate vector buffering scales with dim. The sf fixture is
-    64-dim, so auto must fuse when vectors ride the codes frame, never
-    when they don't, and the override must always win."""
-    # fixture carries the vec column at dim 64 -> auto-fuses
-    assert "embedding" in ivfpq.codes_clustered.columns
-    assert ivfpq._use_fused_rerank(8, 200, None) is True
-    assert ivfpq._use_fused_rerank(8, 200, False) is False  # override wins
+def test_fused_auto_rule_keys_on_dim(ivfpq, caplog):
+    """The one fused-dispatch rule (``index.pq.fuse_rerank``,
+    docs/BENCH_1M_IVF_AB_r13.json): fuse iff the codes frame carries the
+    vec column AND dim <= FUSE_MAX_DIM — at 1M/960 fused lost to
+    two-pass at every measured (n_probes, ef) because per-candidate
+    vector buffering scales with dim. The sf fixture is 64-dim, so the
+    rule must fuse when vectors ride the codes frame, never when they
+    don't, and never at dim 960; each decision is logged at DEBUG."""
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="lab_1806_vec_db_spark")
+    frame = ivfpq.codes_clustered
+    assert "embedding" in frame.columns
+    assert pq_mod.fuse_rerank(frame, "embedding", ivfpq.pq.dim) is True
+    assert pq_mod.fuse_rerank(frame, "embedding", pq_mod.FUSE_MAX_DIM) is True
     # the dim>256 branch of the rule (the 1M/960 case) — fake the dim
     # via a wide groups list on the pq metadata, restored after
     wide_groups = [(i * 4, 4) for i in range(240)]  # dim 960
     orig = ivfpq.pq.groups
     try:
         ivfpq.pq.groups = wide_groups
-        assert ivfpq._use_fused_rerank(8, 200, None) is False
-        assert ivfpq._use_fused_rerank(8, 200, True) is True  # override wins
+        assert pq_mod.fuse_rerank(frame, "embedding", ivfpq.pq.dim) is False
     finally:
         ivfpq.pq.groups = orig
-    # a frame WITHOUT the vec column can never fuse, even on request
-    novec = ivfpq.codes_clustered.drop("embedding")
-    orig_frame = ivfpq.codes_clustered
-    try:
-        ivfpq.codes_clustered = novec
-        assert ivfpq._use_fused_rerank(8, 200, None) is False
-        assert ivfpq._use_fused_rerank(8, 200, False) is False
-        # an explicit request that cannot be honored raises
-        with pytest.raises(ValueError, match="fuse_rerank=True"):
-            ivfpq._use_fused_rerank(8, 200, True)
-        queries = emb.filter(F.col("vec_id") < 4).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        with pytest.raises(ValueError, match="fuse_rerank=True"):
-            ivfpq.search_batch(queries, k=5, n_probes=4, ef=32,
-                               qvec_col="embedding", fuse_rerank=True)
-    finally:
-        ivfpq.codes_clustered = orig_frame
+    # a frame WITHOUT the vec column can never fuse
+    assert pq_mod.fuse_rerank(frame.drop("embedding"), "embedding", 64) is False
+    assert [r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("fuse rule ")] == [
+        "fuse rule vec=True dim=64 bound=256 plan=fused",
+        "fuse rule vec=True dim=256 bound=256 plan=fused",
+        "fuse rule vec=True dim=960 bound=256 plan=two_wave",
+        "fuse rule vec=False dim=64 bound=256 plan=two_wave",
+    ]

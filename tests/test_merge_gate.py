@@ -2,8 +2,10 @@
 ``driver_side``): every tier finishes through it, and its two sides —
 the driver merge and the window plan — must return identical ordered
 ``(query_id, id, dist)`` rows. Tests force each side by monkeypatching
-``DRIVER_MERGE_MAX_BYTES``; the DEBUG decision record on the
-``lab_1806_vec_db_spark`` logger shows which side each serve took."""
+``DRIVER_MERGE_MAX_BYTES``, and the PQ-family cases force their
+fused or two-wave plan through ``index.pq.FUSE_MAX_DIM``; the DEBUG
+decision records on the ``lab_1806_vec_db_spark`` logger show which
+side and which plan each serve took."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.index.ivf import IVFIndex
+from lab_1806_vec_db_spark.index import pq as pq_mod
 from lab_1806_vec_db_spark.index.ivfpq import IVFPQIndex
 from lab_1806_vec_db_spark.index.pq import PQTable
 from lab_1806_vec_db_spark.operators import knn as knn_ops
@@ -27,6 +30,10 @@ CASES = ("flat", "ivf", "pq_fused", "pq_two_wave", "ivfpq_fused",
 TIER = {"flat": "flat", "ivf": "ivf", "pq_fused": "pq", "pq_two_wave": "pq",
         "ivfpq_fused": "ivfpq", "ivfpq_two_pass": "ivfpq",
         "filtered": "filtered"}
+#: FUSE_MAX_DIM per PQ-family case: the default fuses the 64-dim
+#: fixture, 0 forces two-wave
+FUSE_DIM = {"pq_fused": pq_mod.FUSE_MAX_DIM, "ivfpq_fused": pq_mod.FUSE_MAX_DIM,
+            "pq_two_wave": 0, "ivfpq_two_pass": 0}
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +53,7 @@ def _build(base):
                                  vec_col="embedding", id_col="vec_id",
                                  train_size=300)
              for m in METRICS}
-    assert pq.codes_vec is not None
+    assert "embedding" in pq.codes.columns
     assert all("embedding" in i.codes_clustered.columns for i in ivfpq.values())
     return {"base": base, "ivf": ivf, "pq": pq, "ivfpq": ivfpq}
 
@@ -72,12 +79,10 @@ def _serve(case, ix, queries, k, ef, metric, ub):
     if case == "ivf":
         return [ix["ivf"][metric].search_batch(queries, k, n_probes=2, **kw)]
     if case.startswith("pq"):
-        return [ix["pq"].search_batch(queries, k, ef=ef, metric=metric,
-                                      fuse_rerank=case == "pq_fused", **kw)]
+        return [ix["pq"].search_batch(queries, k, ef=ef, metric=metric, **kw)]
     if case.startswith("ivfpq"):
         return [ix["ivfpq"][metric].search_batch(
-            queries, k, n_probes=2, ef=ef, metric=metric,
-            fuse_rerank=case == "ivfpq_fused", **kw)]
+            queries, k, n_probes=2, ef=ef, metric=metric, **kw)]
     # the filtered finisher over a flat pool (the threshold thins the
     # pool, so starved queries take the exact fallback), strict and
     # thin-intersection escalation
@@ -95,11 +100,17 @@ def _serve(case, ix, queries, k, ef, metric, ub):
 
 def _rows(case, ix, queries, k, ef, metric, ub, side, monkeypatch, caplog):
     monkeypatch.setattr(knn_ops, "DRIVER_MERGE_MAX_BYTES", SIDES[side])
+    if case in FUSE_DIM:
+        monkeypatch.setattr(pq_mod, "FUSE_MAX_DIM", FUSE_DIM[case])
     caplog.clear()
     rows = [tuple(r) for f in _serve(case, ix, queries, k, ef, metric, ub)
             for r in f.collect()]
-    gates = [r.getMessage() for r in caplog.records
-             if r.getMessage().startswith(f"merge gate tier={TIER[case]} ")]
+    msgs = [r.getMessage() for r in caplog.records]
+    if case in FUSE_DIM and queries.count():
+        plan = "fused" if case.endswith("fused") else "two_wave"
+        assert [m for m in msgs if m.startswith("fuse rule ")] == [
+            f"fuse rule vec=True dim=64 bound={FUSE_DIM[case]} plan={plan}"]
+    gates = [m for m in msgs if m.startswith(f"merge gate tier={TIER[case]} ")]
     return rows, gates
 
 
@@ -171,10 +182,10 @@ def test_fused_pq_gate_uses_its_32_byte_rows(emb, full, monkeypatch, caplog):
     monkeypatch.setattr(knn_ops, "DRIVER_MERGE_MAX_BYTES", 28 * est_rows)
     out = {}
     for fuse in (True, False):
+        monkeypatch.setattr(pq_mod, "FUSE_MAX_DIM", FUSE_DIM["pq_fused"] if fuse else 0)
         caplog.clear()
         out[fuse] = [tuple(r) for r in pq.search_batch(
-            queries, 5, ef=ef, metric="l2sqr", qvec_col="embedding",
-            fuse_rerank=fuse).collect()]
+            queries, 5, ef=ef, metric="l2sqr", qvec_col="embedding").collect()]
         gates = [r.getMessage() for r in caplog.records
                  if r.getMessage().startswith("merge gate tier=pq ")]
         width, side = (32, "window") if fuse else (24, "driver")

@@ -206,6 +206,60 @@ def test_ivfpq_index_build_dispatch_invalidate(db, spark, tmp_path):
     d2.close()
 
 
+def test_pq_table_reopened_serves_fused(spark, tmp_path, monkeypatch, caplog):
+    """A VecDB PQ table persists its vectors next to its codes, so after
+    a close and reopen ``batch_search`` serves the fused plan: the
+    query-block collect plus one ADC-and-re-rank scan, 2 Spark jobs. Its
+    rows equal the forced two-wave serve's (``FUSE_MAX_DIM = 0``)."""
+    import logging
+    import uuid
+
+    import numpy as np
+
+    from lab_1806_vec_db_spark.index import pq as pq_mod
+
+    caplog.set_level(logging.DEBUG, logger="lab_1806_vec_db_spark")
+    path = str(tmp_path / "pqdb")
+    d1 = VecDB(path, spark=spark)
+    d1.create_table_if_not_exists("t", 16, "l2sqr")
+    vecs = np.random.default_rng(11).normal(size=(300, 16))
+    d1.batch_add("t", [[float(x) for x in v] for v in vecs],
+                 [{"i": str(i)} for i in range(300)])
+    d1.build_pq_table("t", train_proportion=0.5, n_bits=8, m=8)
+    d1.close()
+    d2 = VecDB(path, spark=spark)
+    queries = spark.createDataFrame(
+        [(q, [float(x) for x in vecs[q]]) for q in range(20)],
+        "query_id long, vec array<double>",
+    ).cache()
+    queries.count()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def serve(fuse_max_dim):
+        monkeypatch.setattr(pq_mod, "FUSE_MAX_DIM", fuse_max_dim)
+        d2.batch_search("t", queries, k=5, ef=40).collect()  # loads the index
+        caplog.clear()
+        group = f"pq_reopened_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "PQ batch serve")
+        try:
+            rows = [tuple(r) for r in d2.batch_search("t", queries, k=5, ef=40).collect()]
+        finally:
+            sc._jsc.clearJobGroup()
+        plans = [r.getMessage() for r in caplog.records
+                 if r.getMessage().startswith("fuse rule ")]
+        return rows, len(tracker.getJobIdsForGroup(group)), plans
+
+    fused, fused_jobs, fused_plans = serve(pq_mod.FUSE_MAX_DIM)
+    two, two_jobs, two_plans = serve(0)
+    d2.close()
+    assert fused_plans == ["fuse rule vec=True dim=16 bound=256 plan=fused"]
+    assert two_plans == ["fuse rule vec=True dim=16 bound=0 plan=two_wave"]
+    assert (fused_jobs, two_jobs) == (2, 4)
+    assert len(fused) == 20 * 5 and [r[1] for r in fused[::5]] == list(range(20))
+    assert fused == two
+
+
 def test_search_filtered_subset_match(db):
     key = _tiny4d(db)  # 4 one-hots (content a-d) + one 'oops' row
     # filter to a single metadata value: only that row can be returned,

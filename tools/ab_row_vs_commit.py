@@ -18,6 +18,8 @@ alongside, as measured.
 Usage:
     python tools/ab_row_vs_commit.py --row ivf_probe50pct \
         --commit 6932a6b [--pairs 10] [--leg-runs 2] [--out docs/X.json]
+
+``--leg-runs`` is at least 2: a leg's first run times a cold serve.
 """
 
 from __future__ import annotations
@@ -110,7 +112,7 @@ def summarize(pairs: list[dict]) -> dict:
     return out
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--row", required=True)
     ap.add_argument("--commit", required=True)
@@ -118,7 +120,16 @@ def main() -> None:
     ap.add_argument("--leg-runs", type=int, default=2)
     ap.add_argument("--out", default=None)
     ap.add_argument("--label", default=None)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    if args.leg_runs < 2:
+        ap.error("--leg-runs must be at least 2: a leg's first run times a "
+                 "cold serve in a fresh JVM, so a best-of-1 leg measures the "
+                 "start-up, not the row")
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = parse_args(argv)
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     cal_start = bench.host_calibration()
