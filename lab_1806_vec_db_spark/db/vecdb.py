@@ -39,6 +39,7 @@ import threading
 from collections.abc import Sequence
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,6 +79,11 @@ def _is_plain_hnsw(idx) -> bool:
     from lab_1806_vec_db_spark.index.sharded import ShardedHNSWIndex
 
     return not isinstance(idx, ShardedHNSWIndex)
+
+
+def _ivfpq_probes(meta: dict[str, Any]) -> int:
+    """The IVF+PQ serving probe count recorded at build time."""
+    return (meta.get("ivfpq_params") or {}).get("n_probes", 8)
 
 
 def _locked_per_table(fn):
@@ -737,95 +743,54 @@ class VecDB:
         upper_bound: float | None = None,
     ) -> list[tuple[dict[str, str], float]]:
         """Single-query kNN returning ascending ``(metadata, distance)``
-        (database/mod.rs:492-506). Physical dispatch mirrors
-        metadata_vec_table.rs:201-205: PQ present & ef given → ``knn_pq``
-        on whatever index is live (HNSW built → ADC-steered graph
-        traversal + exact re-rank, the reference's fastest published
-        configuration, hnsw_index.rs:672-696; else flat ADC + re-rank);
-        HNSW present → graph search with beam ef; else flat scan (which
-        ignores ef, dynamic_index.rs:77)."""
+        (database/mod.rs:492-506). The tier is :meth:`batch_search`'s
+        (:meth:`_tier`, metadata_vec_table.rs:201-205); the query is
+        then served on the driver or by that tier's batch plan:
+
+        - HNSW (plain or sharded) — the graph search on the driver, with
+          beam ef; with PQ built too and ``ef`` given, ``knn_pq``'s
+          ADC-steered traversal + exact re-rank (hnsw_index.rs:672-696);
+        - IVF+PQ with the driver mirror (``local_serve``) — the mirror's
+          serve, bit-identical to the distributed plan;
+        - otherwise (flat, PQ, IVF, IVF+PQ without the mirror) — the
+          tier's batch plan over a one-row query matrix, so a point query
+          and a one-row ``batch_search`` get the same rows. IVF reads
+          ``ef`` as ``n_probes`` in both (dynamic_index.rs:85-90); flat
+          ignores it (dynamic_index.rs:77).
+
+        Metadata comes from the driver-resident map (:meth:`_metadata_map`)."""
         meta = self._meta(key)
         if len(query) != meta["dim"]:
             raise ValueError("Dimension mismatch")
-        df = self.table_df(key)
-        pq = self._get_index(key, "pq") if meta["has_pq"] else None
-        hnsw = self._get_index(key, "hnsw") if meta["has_hnsw"] else None
-        if hnsw is not None:
-            # absorb any appended rows the live graph hasn't seen (a
-            # driver-side count check — zero jobs when current)
-            self._hnsw_tail_sync(key, hnsw)
-        # knn_pq's ADC-steered traversal needs the single-graph layout;
-        # a sharded index serves through its own routed branch below
-        if ef is not None and pq is not None and _is_plain_hnsw(hnsw):
-            # knn_pq combined path — zero Spark jobs, like the HNSW
-            # point-serve branch below
-            import numpy as np
-
-            ids, dists = hnsw.search_np(
-                np.asarray([float(x) for x in query]), k, ef, pq=pq
+        q = np.asarray([query], dtype=np.float64)
+        tier, idx, pq = self._tier(key, meta, ef)
+        if tier == "hnsw_pq":
+            ids, dists = idx.search_np(q[0], k, ef, pq=pq)
+        elif tier == "hnsw":
+            ids, dists = idx.search_np(q[0], k, ef)
+        elif tier == "ivfpq" and self._ivfpq_mirror(idx):
+            _, ids, dists = idx._search_local(
+                q, int(k), _ivfpq_probes(meta), max(int(ef), int(k)),
+                idx.model.metric,
             )
-            return self._driver_result(key, ids, dists, k, upper_bound)
-        if ef is not None and pq is not None:
-            out = pq.search(query, k, ef=ef, metric=meta["dist"],
-                            payload_cols=["id", "metadata"])
-        elif hnsw is not None:
-            # point-serve fast path: beam search + metadata attach from
-            # broadcast-grade driver state — ZERO Spark jobs per query,
-            # the reference's own latency model (SURVEY §3.1: serve from
-            # in-memory state, don't launch a job per query)
-            import numpy as np
-
-            ids, dists = hnsw.search_np(
-                np.asarray([float(x) for x in query]), k, ef
-            )
-            return self._driver_result(key, ids, dists, k, upper_bound)
-        elif ef is not None and meta.get("has_ivfpq"):
-            # beyond-reference tier, same latency model as the HNSW
-            # branch above: serve the point query from the driver-local
-            # codes mirror when it fits (zero Spark jobs, bit-identical
-            # to the distributed plan); the partition-pruned Spark path
-            # answers above the cap
-            ivfpq = self._get_index(key, "ivfpq")
-            if ivfpq is None:
-                out = knn_ops.knn(
-                    df, query, k, metric=meta["dist"], vec_col="vec",
-                    payload_cols=["id", "metadata"], id_col="id",
-                    norm_col="norm",
-                )
-            else:
-                probes = (meta.get("ivfpq_params") or {}).get("n_probes", 8)
-                if (
-                    self.local_serve
-                    and not ivfpq._local_enabled
-                    and not getattr(ivfpq, "_local_denied", False)
-                ):
-                    ivfpq.enable_local_serve(self.local_serve_max_bytes)
-                if self.local_serve and ivfpq._local_state() is not None:
-                    import numpy as np
-
-                    _, ids, dists = ivfpq._search_local(
-                        np.asarray([[float(x) for x in query]]),
-                        int(k), int(probes), max(int(ef), int(k)),
-                        ivfpq.model.metric,
-                    )
-                    return self._driver_result(key, ids, dists, k, upper_bound)
-                out = ivfpq.search(
-                    query, k, n_probes=probes, ef=ef,
-                    payload_cols=["id", "metadata"],
-                )
         else:
-            out = knn_ops.knn(
-                df, query, k, metric=meta["dist"], vec_col="vec",
-                payload_cols=["id", "metadata"], id_col="id", norm_col="norm",
-            )
-        rows = out.collect()
-        result = []
-        for r in rows:
-            if upper_bound is not None and r["dist"] > upper_bound:
-                continue
-            result.append((dict(r["metadata"] or {}), float(r["dist"])))
-        result.sort(key=lambda t: t[1])
-        return result[:k]
+            # Row collect: the plan's result is a driver-built local
+            # frame, which collect() reads with no Spark job (toArrow
+            # would run one)
+            rows = self._batch_plan(key, meta, tier, idx, pq, q, k, ef,
+                                    upper_bound).collect()
+            ids, dists = [r["id"] for r in rows], [r["dist"] for r in rows]
+        return self._driver_result(key, ids, dists, k, upper_bound)
+
+    def _ivfpq_mirror(self, ivfpq) -> bool:
+        """Whether a point query on ``ivfpq`` is served from its driver
+        mirror: with ``local_serve`` on, the first such query builds the
+        mirror when it fits ``local_serve_max_bytes``."""
+        if not self.local_serve:
+            return False
+        if not ivfpq._local_enabled and not getattr(ivfpq, "_local_denied", False):
+            ivfpq.enable_local_serve(self.local_serve_max_bytes)
+        return ivfpq._local_state() is not None
 
     def _driver_result(
         self, key: str, ids, dists, k: int, upper_bound: float | None
@@ -888,8 +853,8 @@ class VecDB:
                     queries, k, df, ef=ef, qid_col="query_id", qvec_col="vec"
                 ).select("id", "dist")
             elif ivfpq is not None:
-                probes = (meta.get("ivfpq_params") or {}).get("n_probes", 8)
-                out = ivfpq.search_filtered(query, k, df, n_probes=probes, ef=ef)
+                out = ivfpq.search_filtered(query, k, df,
+                                            n_probes=_ivfpq_probes(meta), ef=ef)
         if out is None:
             out = knn_ops.knn(
                 df, query, k, metric=meta["dist"], vec_col="vec",
@@ -939,9 +904,8 @@ class VecDB:
                     queries, k, df, ef=ef, qid_col="query_id", qvec_col="vec"
                 )
             elif ivfpq is not None:
-                probes = (meta.get("ivfpq_params") or {}).get("n_probes", 8)
                 out = ivfpq.search_batch_filtered(
-                    queries, k, df, n_probes=probes, ef=ef,
+                    queries, k, df, n_probes=_ivfpq_probes(meta), ef=ef,
                     qid_col="query_id", qvec_col="vec",
                 )
         if out is not None:
@@ -951,7 +915,7 @@ class VecDB:
         return knn_ops.knn_batch(
             df, queries, k, metric=meta["dist"], vec_col="vec",
             id_col="id", qid_col="query_id", qvec_col="vec",
-            upper_bound=upper_bound,
+            upper_bound=upper_bound, dim=meta["dim"],
         )
 
     def batch_search(
@@ -963,51 +927,69 @@ class VecDB:
         upper_bound: float | None = None,
     ) -> DataFrame:
         """Spark-native batch form: a DataFrame of queries
-        ``(query_id, vec)`` → ``(query_id, id, dist)``.
-
-        Physical dispatch mirrors the single-query path
-        (metadata_vec_table.rs:201-205): ``ef`` + PQ built → ``knn_pq``
-        on the live index (HNSW built → ADC-steered broadcast-graph
-        traversal + in-task exact re-rank; else flat batch ADC +
-        re-rank); HNSW built → broadcast-graph beam per query; IVF+PQ
-        built + ``ef`` → cluster-pruned ADC with the build-time probe
-        default; IVF built + ``ef`` → ef probes; else the flat Arrow
-        scan."""
+        ``(query_id, vec)`` → ``(query_id, id, dist)``, served by the
+        tier :meth:`_tier` picks — the same tier :meth:`search` uses."""
         meta = self._meta(key)
+        tier, idx, pq = self._tier(key, meta, ef)
+        return self._batch_plan(key, meta, tier, idx, pq, queries, k, ef,
+                                upper_bound)
+
+    def _tier(self, key: str, meta: dict[str, Any], ef: int | None):
+        """The one tier-precedence ladder of :meth:`search` and
+        :meth:`batch_search` (metadata_vec_table.rs:201-205), as
+        ``(tier, index, pq)``:
+
+        - ``ef`` + PQ built → ``knn_pq`` on the live index: ``"hnsw_pq"``
+          (single-graph HNSW built too: ADC-steered traversal + exact
+          re-rank, with ``pq`` the table) or else ``"pq"`` (flat ADC +
+          re-rank);
+        - HNSW built → ``"hnsw"`` (graph beam with ef);
+        - ``ef`` + IVF+PQ built → ``"ivfpq"`` (cluster-pruned ADC with the
+          build-time probe default);
+        - ``ef`` + IVF built → ``"ivf"`` (ef probes);
+        - else ``"flat"`` (the exact scan; index None)."""
         pq = self._get_index(key, "pq") if meta["has_pq"] else None
         hnsw = self._get_index(key, "hnsw") if meta["has_hnsw"] else None
-        ivf = self._get_index(key, "ivf") if meta.get("has_ivf") else None
-        ivfpq = self._get_index(key, "ivfpq") if meta.get("has_ivfpq") else None
         if hnsw is not None:
+            # absorb any appended rows the live graph hasn't seen (a
+            # driver-side count check — zero jobs when current)
             self._hnsw_tail_sync(key, hnsw)
-        if ef is not None and pq is not None and _is_plain_hnsw(hnsw):
-            return hnsw.search_batch(queries, k, ef=ef, qid_col="query_id",
-                                     qvec_col="vec", upper_bound=upper_bound,
-                                     pq=pq)
         if ef is not None and pq is not None:
-            return pq.search_batch(queries, k, ef=ef, metric=meta["dist"],
-                                   qid_col="query_id", qvec_col="vec",
-                                   upper_bound=upper_bound)
+            if _is_plain_hnsw(hnsw):
+                return "hnsw_pq", hnsw, pq
+            return "pq", pq, None
         if hnsw is not None:
-            return hnsw.search_batch(queries, k, ef=ef, qid_col="query_id",
-                                     qvec_col="vec", upper_bound=upper_bound)
-        if ef is not None and ivfpq is not None:
-            # distributed throughput tier: coarse probe (serving default
-            # recorded at build time) prunes partitions, ADC keeps the
-            # ef-candidate pool, exact re-rank returns k
-            probes = (meta.get("ivfpq_params") or {}).get("n_probes", 8)
-            return ivfpq.search_batch(queries, k, n_probes=probes, ef=ef,
-                                      qid_col="query_id", qvec_col="vec",
-                                      upper_bound=upper_bound)
-        if ef is not None and ivf is not None:
-            # the reference reuses the ef knob as n_probes for IVF
-            # (dynamic_index.rs:85-90)
-            return ivf.search_batch(queries, k, n_probes=ef, qid_col="query_id",
-                                    qvec_col="vec", upper_bound=upper_bound)
+            return "hnsw", hnsw, None
+        if ef is not None:
+            for tier, flag in (("ivfpq", "has_ivfpq"), ("ivf", "has_ivf")):
+                idx = self._get_index(key, tier) if meta.get(flag) else None
+                if idx is not None:
+                    return tier, idx, None
+        return "flat", None, None
+
+    def _batch_plan(
+        self, key: str, meta: dict[str, Any], tier: str, idx, pq,
+        queries, k: int, ef: int | None, upper_bound: float | None,
+    ) -> DataFrame:
+        """The batch plan of the tier :meth:`_tier` picked, over
+        ``queries`` (a DataFrame, or a driver-side matrix on the scan
+        tiers) → ``(query_id, id, dist)``."""
+        cols = {"qid_col": "query_id", "qvec_col": "vec",
+                "upper_bound": upper_bound}
+        if tier == "hnsw_pq":
+            return idx.search_batch(queries, k, ef=ef, pq=pq, **cols)
+        if tier == "hnsw":
+            return idx.search_batch(queries, k, ef=ef, **cols)
+        if tier == "pq":
+            return idx.search_batch(queries, k, ef=ef, metric=meta["dist"], **cols)
+        if tier == "ivfpq":
+            return idx.search_batch(queries, k, n_probes=_ivfpq_probes(meta),
+                                    ef=ef, **cols)
+        if tier == "ivf":
+            return idx.search_batch(queries, k, n_probes=ef, **cols)
         return knn_ops.knn_batch(
-            self.table_df(key), queries, k, metric=meta["dist"],
-            vec_col="vec", id_col="id", qid_col="query_id", qvec_col="vec",
-            upper_bound=upper_bound,
+            self.table_df(key), queries, k, metric=meta["dist"], vec_col="vec",
+            id_col="id", dim=meta["dim"], **cols,
         )
 
     def table_file_count(self, key: str) -> int:
@@ -1136,8 +1118,6 @@ class VecDB:
         (``force=True`` at load time runs the watermark probe even when
         counts look current — a crash BETWEEN shard flushes and the
         root-meta flush leaves counts overcounting)."""
-        import numpy as np
-
         from lab_1806_vec_db_spark.index.sharded import ShardedHNSWIndex
 
         meta = self._meta(key)

@@ -48,10 +48,8 @@ from lab_1806_vec_db_spark.operators.knn import (
     collect_query_block,
     empty_topk,
     merge_topk,
-    round_dist,
     topk_cut,
 )
-from lab_1806_vec_db_spark.functions.distance import dist_expr
 
 
 def group_probes(probes: np.ndarray) -> dict[int, np.ndarray]:
@@ -207,31 +205,17 @@ class IVFIndex:
         k: int,
         n_probes: int = 4,
         upper_bound: float | None = None,
-        payload_cols: Sequence[str] | None = None,
     ) -> DataFrame:
-        """Single-query IVF kNN (ivf_index.rs:132-155): rank centroids on
-        the driver (they are driver-resident, like the reference), then a
-        cluster-pruned flat scan. ``cluster_id.isin(...)`` prunes
-        partitions when the layout is persisted partitioned."""
-        q = np.asarray(list(query), dtype=np.float64)
-        probed = [int(c) for c in self.model.rank_centroids(q, n_probes)]
-        qlit = F.lit([float(x) for x in q]).cast("array<double>")
-        payload = list(payload_cols) if payload_cols is not None else [self.id_col]
-        scored = (
-            self.clustered.filter(F.col("cluster_id").isin(probed))
-            .select(
-                *payload,
-                round_dist(dist_expr(F.col(self.vec_col), qlit, self.model.metric)).alias("dist"),
-            )
-        )
-        out = scored.orderBy(F.col("dist").asc(), F.col(self.id_col).asc()).limit(k)
-        if upper_bound is not None:
-            out = out.filter(F.col("dist") <= F.lit(float(upper_bound)))
-        return out
+        """Single-query IVF kNN (ivf_index.rs:132-155) as ``(id, dist)``:
+        :meth:`search_batch` over a one-row block, in f64 arithmetic."""
+        return self.search_batch(
+            np.asarray([query], dtype=np.float64), k, n_probes,
+            upper_bound=upper_bound, compute_dtype="float64",
+        ).select(self.id_col, "dist")
 
     def search_batch(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         n_probes: int = 4,
         qid_col: str = "query_id",
@@ -261,12 +245,14 @@ class IVFIndex:
         Distances are rounded on the 4-dp grid in f64 either way; f32
         arithmetic can flip a rounded last decimal on near-ties, so
         forced-f64 remains the choice where oracle hash-equality
-        matters. The single-query path computes JVM-side in f64 over
-        the stored values regardless (Catalyst expression).
+        matters; :meth:`search` forces it.
 
-        The global cut is :func:`operators.knn.merge_topk`."""
-        spark = queries.sparkSession
-        block = collect_query_block(queries, qid_col, qvec_col)
+        ``queries`` is a DataFrame or a driver-side matrix
+        (:func:`operators.knn.collect_query_block`). The global cut is
+        :func:`operators.knn.merge_topk`."""
+        spark = self.clustered.sparkSession
+        block = collect_query_block(queries, qid_col, qvec_col,
+                                    self.model.centroids.shape[1])
         if block is None:
             return empty_topk(spark, self.id_col)
         qids, qmat = block

@@ -14,19 +14,18 @@ index/pq.py):
   **partitioned by cluster_id**. At 100 TB the codes table is ~m/dim·¼
   the size of the raw vectors (4-bit codes) and a probe touches only
   n_probes/k of its directories — both pruning axes multiply.
-- **search**: rank centroids driver-side (they are tiny, exactly the
-  reference's in-memory centroid VecSet), partition-pruned ADC scan of
-  the probed clusters only (pq_table.rs:239-301 lookup-sum), top-ef by
-  rounded approximate distance, then one broadcast join back to the
-  base table for the exact re-rank (candidate_pair.rs:102-108).
-- **search_batch**: per-query probe sets share one scan — each codes
-  partition scores a row only for the queries that probe its cluster
-  (``pq.adc_tile`` per cluster run, 4-dp rounded top-ef into the task's
-  ``operators.knn.TopkAccumulator``), then the global ADC gate, the
-  exact re-rank (``pq.exact_rerank``: fused in the scan, or an
-  Arrow-batched join wave) and the top-k cut (``pq.finish_adc``). The
-  driver-local mirror (``enable_local_serve``) runs the same tile cut
-  and re-rank over a thread pool with zero Spark jobs.
+- **search_batch** (and ``search``, which runs it over a one-row
+  block): centroids are ranked driver-side (they are tiny, exactly the
+  reference's in-memory centroid VecSet) and per-query probe sets share
+  one partition-pruned scan — each codes partition scores a row only
+  for the queries that probe its cluster (``pq.adc_tile`` per cluster
+  run, pq_table.rs:239-301 lookup-sum, 4-dp rounded top-ef into the
+  task's ``operators.knn.TopkAccumulator``), then the global ADC gate,
+  the exact re-rank (``pq.exact_rerank``, candidate_pair.rs:102-108:
+  fused in the scan, or an Arrow-batched join wave) and the top-k cut
+  (``pq.finish_adc``). The driver-local mirror (``enable_local_serve``)
+  runs the same tile cut and re-rank over a thread pool with no Spark
+  job.
 
 Plan shape at scale: one pruned scan of the codes table (no shuffle),
 one ef·|Q|-bounded shuffle for the merge window, one broadcast join for
@@ -43,7 +42,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab_1806_vec_db_spark.functions.distance import dist_expr
 from lab_1806_vec_db_spark.index.ivf import group_probes
 from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans, sample_rows
 from lab_1806_vec_db_spark.index import pq as pq_mod
@@ -62,8 +60,8 @@ from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.operators.knn import (
     TopkAccumulator,
     collect_query_block,
+    driver_topk_merge,
     empty_topk,
-    round_dist,
 )
 
 
@@ -875,130 +873,13 @@ class IVFPQIndex:
         ef: int = 64,
         metric: str | None = None,
         upper_bound: float | None = None,
-        payload_cols: Sequence[str] | None = None,
     ) -> DataFrame:
-        """Single-query IVF+PQ: partition-pruned ADC scan of the probed
-        clusters, rounded top-ef candidate gate, exact re-rank top-k,
-        fused into the scan or two-wave as :func:`index.pq.fuse_rerank`
-        picks. The fused plan re-ranks each probed partition's own
-        top-ef (n_probes·ef candidates per query instead of the global
-        ef) and drops the second scan + join."""
-        metric = metric or self.model.metric
-        q = np.asarray(list(query), dtype=np.float64)
-        if (
-            self._local_state() is not None
-            and (payload_cols is None or list(payload_cols) == [self.id_col])
-        ):
-            # zero-Spark-job point serve from the driver mirror — same
-            # probes, gates, rounding, and tie-breaks as the plan below
-            _, ids_r, d_r = self._search_local(
-                q[None, :], int(k), int(n_probes), max(int(ef), int(k)), metric
-            )
-            rows = [
-                (int(i), float(d)) for i, d in zip(ids_r, d_r)
-                if upper_bound is None or d <= float(upper_bound)
-            ]
-            return self.codes_clustered.sparkSession.createDataFrame(
-                rows or [], f"{self.id_col} long, dist double"
-            )
-        probed = [int(c) for c in self.model.rank_centroids(q, n_probes)]
-        lut, sq, qn = build_lookup_batch(
-            q[None, :], self.pq.codebooks, self.pq.groups, self.pq.n_bits, metric
-        )
-        spark = self.codes_clustered.sparkSession
-        id_col = self.id_col
-        fused = pq_mod.fuse_rerank(self.codes_clustered, self.vec_col, self.pq.dim)
-        bc = spark.sparkContext.broadcast(
-            (lut, sq, qn, self.pq.m, self.pq.n_bits, q if fused else None, metric)
-        )
-        vec_col = self.vec_col
-
-        def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
-            from lab_1806_vec_db_spark.functions.arrowvec import (
-                binary_matrix,
-                vec_matrix,
-            )
-
-            blut, bsq, bqn, m, n_bits, bq, bmetric = bc.value
-            ef_local = max(int(ef), int(k))
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                sch = rb.schema
-                buf = binary_matrix(rb.column(sch.get_field_index("code")))
-                codes = unpack_codes(buf, m, n_bits)
-                ids = rb.column(sch.get_field_index(id_col)).to_numpy(
-                    zero_copy_only=False)
-                if bq is None:
-                    rows, d = adc_tile(codes, ids, blut, bsq, bqn, None, len(ids), False)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(ids[rows[0]], type=pa.int64()),
-                         pa.array(d[0], type=pa.float64())],
-                        names=[id_col, "dist"],
-                    )
-                    continue
-                # fused exact re-rank: the raw vectors sit in the SAME
-                # row group, so compute exact distances for this
-                # partition's rounded ADC top-ef candidates here — the
-                # global ADC gate still applies at the merge, so results
-                # are identical to the two-pass plan, minus a whole scan
-                rows, adc_r = adc_tile(codes, ids, blut, bsq, bqn, None, ef_local, True)
-                top = rows[0]
-                vec_all = vec_matrix(rb.column(sch.get_field_index(vec_col)))
-                ex = exact_rerank(vec_all, top, bq[None, :],
-                                  np.zeros(top.size, dtype=np.int64), bmetric)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids[top], type=pa.int64()),
-                     pa.array(adc_r[0], type=pa.float64()),
-                     pa.array(ex, type=pa.float64())],
-                    names=[id_col, "adc_r", "dist"],
-                )
-
-        pruned = self.codes_clustered.filter(F.col("cluster_id").isin(probed))
-        payload = list(payload_cols) if payload_cols is not None else [id_col]
-        if fused:
-            cand = (
-                pruned.select(id_col, "code", vec_col)
-                .mapInArrow(scan, schema=f"{id_col} long, adc_r double, dist double")
-                .orderBy(F.col("adc_r").asc(), F.col(id_col).asc())
-                .limit(max(int(ef), int(k)))
-            )
-            rer = (
-                cand.select(id_col, "dist")
-                .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-                .limit(int(k))
-            )
-        else:
-            cand = (
-                pruned.select(id_col, "code")
-                .mapInArrow(scan, schema=f"{id_col} long, dist double")
-                .select(id_col, round_dist(F.col("dist")).alias("adc_r"))
-                .orderBy(F.col("adc_r").asc(), F.col(id_col).asc())
-                .limit(max(int(ef), int(k)))
-                .select(id_col)
-            )
-            qlit = F.lit([float(x) for x in q]).cast("array<double>")
-            rer = (
-                self._rerank_source(probed).join(F.broadcast(cand), id_col)
-                .select(id_col,
-                        round_dist(dist_expr(F.col(self.vec_col), qlit, metric)).alias("dist"))
-                .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-                .limit(int(k))
-            )
-        extra = [c for c in payload if c != id_col]
-        if extra:
-            # metadata attach on the k-bounded result only (Q8): the
-            # k rows broadcast INTO the base scan, never the reverse
-            rer = (
-                self.base.select(id_col, *extra).join(F.broadcast(rer), id_col)
-                .select(*payload, "dist")
-                .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-            )
-        if upper_bound is not None:
-            rer = rer.filter(F.col("dist") <= F.lit(float(upper_bound)))
-        return rer
+        """Single-query IVF+PQ as ``(id, dist)``: :meth:`search_batch`
+        over a one-row block (the driver mirror when enabled)."""
+        return self.search_batch(
+            np.asarray([query], dtype=np.float64), k, n_probes, ef, metric,
+            upper_bound=upper_bound,
+        ).select(self.id_col, "dist")
 
     def search_filtered(
         self,
@@ -1094,7 +975,7 @@ class IVFPQIndex:
 
     def search_batch(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         n_probes: int = 4,
         ef: int = 64,
@@ -1117,10 +998,13 @@ class IVFPQIndex:
         bound per-task memory at max(floor, 1.5× the live set). Python
         workers are per-core, so the executor-wide footprint multiplies
         by concurrent task slots (the result set is identical at any
-        floor)."""
+        floor).
+
+        ``queries`` is a DataFrame or a driver-side matrix
+        (:func:`operators.knn.collect_query_block`)."""
         metric = metric or self.model.metric
-        spark = queries.sparkSession
-        block = collect_query_block(queries, qid_col, qvec_col)
+        spark = self.codes_clustered.sparkSession
+        block = collect_query_block(queries, qid_col, qvec_col, self.pq.dim)
         if block is None:
             return empty_topk(spark, self.id_col, qid_col)
         qids, qmat = block
@@ -1129,26 +1013,13 @@ class IVFPQIndex:
 
         if self._local_state() is not None:
             # driver-mirror batch serve: the (cluster × probing-queries)
-            # tiling below, run through the GIL-releasing compiled
-            # kernel on a thread pool — zero Spark jobs
+            # tiling of _search_local through the GIL-releasing compiled
+            # kernel on a thread pool, its result a driver-built local
+            # frame whose collect() runs no job — the serve's only job
+            # is a DataFrame block's collect (none for a matrix block)
             qq, ii, dd = self._search_local(qmat, int(k), int(n_probes), ef_, metric)
-            keep = (
-                np.ones(dd.size, dtype=bool)
-                if upper_bound is None else dd <= float(upper_bound)
-            )
-            rows = sorted(
-                (
-                    (int(qids[q_]), int(i_), float(d_))
-                    for q_, i_, d_ in zip(qq[keep], ii[keep], dd[keep])
-                ),
-                key=lambda t: (t[0], t[2], t[1]),
-            )
-            out = spark.createDataFrame(
-                rows or [], f"query_id long, {id_col} long, dist double"
-            )
-            if qid_col != "query_id":
-                out = out.withColumnRenamed("query_id", qid_col)
-            return out
+            return driver_topk_merge(spark, qids[qq], ii, dd, int(k), id_col,
+                                     upper_bound, qid_col)
 
         fused = pq_mod.fuse_rerank(self.codes_clustered, self.vec_col, self.pq.dim)
         vec_col = self.vec_col
@@ -1199,9 +1070,8 @@ class IVFPQIndex:
                         rows = np.nonzero(cl_all == cid)[0]
                         ids = ids_all[rows]
                         # 4-dp rounded candidate gate with id tie-break —
-                        # the SAME cut the single-query path applies
-                        # (round_dist over adc_r), so batch == single on
-                        # near-tie boundaries
+                        # the SAME cut the driver mirror applies, so the
+                        # two agree on near-tie boundaries
                         top, adc = adc_tile(codes_all[rows], ids, lut64, bsq, bqn,
                                             sel, ef_, True)
                         args = (np.repeat(sel, top.shape[1]), ids[top].reshape(-1),

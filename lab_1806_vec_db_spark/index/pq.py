@@ -23,7 +23,7 @@ Spark mapping:
 - lookup tables are per-query, tiny, and broadcast; the ADC scan is an
   Arrow-batched lookup-sum (the SIMD loop of pq_table.rs:239-270):
   :func:`adc_tile`, the one ADC scorer of every PQ and IVF+PQ scan
-  (batch, single-query, driver mirror), scores a (rows × queries) tile
+  (batch scans, ``adc_scan``, driver mirror), scores a (rows × queries) tile
   and cuts each query's top-ef (the compiled ``ckernel.adc_topk`` /
   ``adc_block`` kernels, or a numpy gather loop) — in the batch scans
   into the task's ``operators.knn.TopkAccumulator``;
@@ -53,7 +53,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab_1806_vec_db_spark.functions.distance import dist_expr
 from lab_1806_vec_db_spark.index.kmeans import _pairwise_dist, fit_kmeans, sample_rows
 from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.operators.knn import (
@@ -66,7 +65,6 @@ from lab_1806_vec_db_spark.operators.knn import (
     empty_topk,
     fast_topk_grouped,
     np_round_half_up,
-    round_dist,
     topk_cut,
     window_cut,
 )
@@ -776,33 +774,17 @@ class PQTable:
         ef: int,
         metric: str = "l2sqr",
         upper_bound: float | None = None,
-        payload_cols: Sequence[str] | None = None,
     ) -> DataFrame:
-        """knn_pq (flat_index.rs:84-104): ef approximate candidates by
-        ADC, then exact re-rank keeps k (candidate_pair.rs:102-108)."""
-        q = [float(x) for x in query]
-        cand = (
-            self.adc_scan(q, metric)
-            .orderBy(F.col("dist").asc(), F.col(self.id_col).asc())
-            .limit(max(int(ef), int(k)))
-            .select(self.id_col)
-        )
-        qlit = F.lit(q).cast("array<double>")
-        payload = list(payload_cols) if payload_cols is not None else [self.id_col]
-        rer = (
-            self.base.join(F.broadcast(cand), self.id_col)
-            .select(*payload,
-                    round_dist(dist_expr(F.col(self.vec_col), qlit, metric)).alias("dist"))
-            .orderBy(F.col("dist").asc(), F.col(self.id_col).asc())
-            .limit(int(k))
-        )
-        if upper_bound is not None:
-            rer = rer.filter(F.col("dist") <= F.lit(float(upper_bound)))
-        return rer
+        """knn_pq (flat_index.rs:84-104) for one query as ``(id, dist)``:
+        :meth:`search_batch` over a one-row block."""
+        return self.search_batch(
+            np.asarray([query], dtype=np.float64), k, ef, metric,
+            upper_bound=upper_bound,
+        ).select(self.id_col, "dist")
 
     def search_batch(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         ef: int,
         metric: str = "l2sqr",
@@ -827,10 +809,11 @@ class PQTable:
         handling, re-rank arithmetic and rounding are the same on both
         plans, so results are IDENTICAL.
 
-        The ADC gate, the re-rank wave and the final top-k are
-        :func:`finish_adc`."""
-        spark = queries.sparkSession
-        block = collect_query_block(queries, qid_col, qvec_col)
+        ``queries`` is a DataFrame or a driver-side matrix
+        (:func:`operators.knn.collect_query_block`). The ADC gate, the
+        re-rank wave and the final top-k are :func:`finish_adc`."""
+        spark = self.codes.sparkSession
+        block = collect_query_block(queries, qid_col, qvec_col, self.dim)
         if block is None:
             return empty_topk(spark, self.id_col)
         qids, qmat = block

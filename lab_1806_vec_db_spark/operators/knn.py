@@ -180,33 +180,43 @@ _log = logging.getLogger("lab_1806_vec_db_spark")
 
 
 def collect_query_block(
-    queries: DataFrame, qid_col: str, qvec_col: str
+    queries: DataFrame | np.ndarray, qid_col: str, qvec_col: str,
+    dim: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray] | None:
-    """Driver-collect a bounded query block as (qids int64, qmat f64)
-    through ONE Arrow transfer (round-14, guide §6 Arrow-for-driver-
-    transfers): the Row-object ``collect()`` every batch tier opened
-    with cost ~2× the Arrow path at the 1k-query bench block. Values
-    are identical — the Arrow doubles ARE the stored doubles, and the
-    f64 cast matches ``np.asarray(rows, dtype=float64)``.
+    """The one place a query block enters a batch plan, as (qids int64,
+    qmat f64). ``queries`` is either a ``(qid_col, qvec_col)``
+    DataFrame, driver-collected through ONE Arrow transfer (the Arrow
+    doubles ARE the stored doubles), or a driver-side (n × dim) matrix,
+    taken as is with query ids ``0..n-1`` and no Spark job — the block
+    a point ``search`` hands its tier's batch plan.
 
     The shared guard of every batch tier: returns None for an empty
-    block (callers answer with :func:`empty_topk`) and raises above
-    :data:`MAX_QUERIES` rows."""
+    block (callers answer with :func:`empty_topk`), raises above
+    :data:`MAX_QUERIES` rows, and raises ``ValueError("Dimension
+    mismatch")`` when ``dim`` is given and the block's width differs."""
     from lab_1806_vec_db_spark.functions.arrowvec import vec_matrix
 
-    tbl = queries.select(qid_col, qvec_col).toArrow()
-    if tbl.num_rows == 0:
+    if isinstance(queries, DataFrame):
+        tbl = queries.select(qid_col, qvec_col).toArrow()
+        qids = tbl.column(qid_col).to_numpy(zero_copy_only=False).astype(
+            np.int64, copy=False)
+        qmat = vec_matrix(tbl.column(qvec_col), dtype=np.float64)
+    else:
+        qmat = np.asarray(queries, dtype=np.float64)
+        if qmat.ndim != 2:
+            raise ValueError(f"query matrix must be 2-D, got shape {qmat.shape}")
+        qids = np.arange(qmat.shape[0], dtype=np.int64)
+    if qids.size == 0:
         return None
-    if tbl.num_rows > MAX_QUERIES:
+    if qids.size > MAX_QUERIES:
         raise ValueError(
-            f"Query set of {tbl.num_rows} rows exceeds the broadcast bound of "
+            f"Query set of {qids.size} rows exceeds the broadcast bound of "
             f"{MAX_QUERIES} rows (the batch tiers driver-collect and broadcast "
             "the query block); chunk the query set upstream or stream it "
             "through knn_batch(strategy='crossjoin')."
         )
-    qids = tbl.column(qid_col).to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False)
-    qmat = vec_matrix(tbl.column(qvec_col), dtype=np.float64)
+    if dim is not None and qmat.shape[1] != int(dim):
+        raise ValueError("Dimension mismatch")
     return qids, qmat
 
 
@@ -217,7 +227,7 @@ def empty_topk(spark, id_col: str, qid_col: str = "query_id") -> DataFrame:
 
 def knn_batch(
     df: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | np.ndarray,
     k: int,
     metric: str = "cosine",
     vec_col: str = "vec",
@@ -226,13 +236,16 @@ def knn_batch(
     qvec_col: str = "vec",
     upper_bound: float | None = None,
     strategy: str = "partitioned",
+    dim: int | None = None,
 ) -> DataFrame:
     """Batch kNN: top-k of ``df`` for every row of ``queries``.
 
     Output: ``(query_id, id, dist)`` ascending per query, ties by id.
     ``strategy='partitioned'`` is the scale path (see module docstring);
     ``'crossjoin'`` is the fully-declarative reference plan used as the
-    semantic oracle in tests. The partitioned plan's global cut is
+    semantic oracle in tests (DataFrame queries only). The partitioned
+    plan takes its block through :func:`collect_query_block` (``dim``,
+    when given, is the table's width) and its global cut is
     :func:`merge_topk`.
     """
     _check_metric(metric)
@@ -250,7 +263,7 @@ def knn_batch(
         raise ValueError(f"Unknown knn_batch strategy: {strategy}")
 
     spark = df.sparkSession
-    block = collect_query_block(queries, qid_col, qvec_col)
+    block = collect_query_block(queries, qid_col, qvec_col, dim)
     if block is None:
         return empty_topk(spark, id_col)
     qids, qmat = block

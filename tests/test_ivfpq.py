@@ -68,21 +68,6 @@ def test_partial_probe_recall(emb, ivfpq):
     assert sum(recalls) / len(recalls) >= 0.5
 
 
-def test_batch_matches_single(emb, ivfpq):
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    batch = ivfpq.search_batch(queries, k=5, n_probes=4, ef=32, qvec_col="embedding")
-    by_q: dict = {}
-    for r in batch.collect():
-        by_q.setdefault(r["query_id"], []).append((r["vec_id"], r["dist"]))
-    for r in queries.collect():
-        single = ivfpq.search(
-            [float(x) for x in r["embedding"]], k=5, n_probes=4, ef=32
-        ).collect()
-        assert by_q[r["query_id"]] == _pairs(single)
-
-
 def test_cosine_metric(emb, qvec):
     idx = IVFPQIndex.build(
         emb, k_coarse=8, m=16, n_bits=8, metric="cosine",

@@ -6,9 +6,11 @@ from __future__ import annotations
 import contextlib
 import io
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from lab_1806_vec_db_spark.index import pq as pq_mod
 from lab_1806_vec_db_spark.index.ivf import IVFIndex
 from lab_1806_vec_db_spark.index.pq import PQTable
 from lab_1806_vec_db_spark.operators import knn as knn_ops
@@ -43,19 +45,25 @@ def test_flat_knn_is_take_ordered_with_pruned_scan(emb, qvec):
     assert schema_lines and all("label" not in l for l in schema_lines)
 
 
-def test_ivf_probe_is_partition_pruning(emb, qvec, tmp_path):
+def test_ivf_probe_is_partition_pruning(emb, qvec, tmp_path, monkeypatch):
     idx = IVFIndex.build(emb, k=8, metric="l2sqr", vec_col="embedding",
                          id_col="vec_id", train_size=500,
                          path=str(tmp_path / "ivf"))
-    plan = _plan(idx.search(qvec, k=10, n_probes=2))
+    # the window side of the merge gate keeps the scan in the returned plan
+    monkeypatch.setattr(knn_ops, "DRIVER_MERGE_MAX_BYTES", -1)
+    plan = _plan(idx.search_batch(np.asarray([qvec]), k=10, n_probes=2))
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf and "cluster_id" in pf[0] and " IN " in pf[0]
 
 
-def test_pq_rerank_is_broadcast_join(emb, qvec):
+def test_pq_rerank_is_broadcast_join(emb, qvec, monkeypatch):
     pq = PQTable.train(emb, dim=64, m=8, n_bits=4, train_proportion=0.2,
                        vec_col="embedding", id_col="vec_id")
-    plan = _plan(pq.search(qvec, k=10, ef=50, metric="l2sqr"))
+    # the two-wave plan (the re-rank join) on the window side of the
+    # merge gate, so the join stays in the returned plan
+    monkeypatch.setattr(pq_mod, "FUSE_MAX_DIM", 0)
+    monkeypatch.setattr(knn_ops, "DRIVER_MERGE_MAX_BYTES", -1)
+    plan = _plan(pq.search_batch(np.asarray([qvec]), k=10, ef=50, metric="l2sqr"))
     assert "BroadcastHashJoin" in plan  # base table is never shuffled
 
 
