@@ -758,7 +758,9 @@ class VecDB:
           ``ef`` as ``n_probes`` in both (dynamic_index.rs:85-90); flat
           ignores it (dynamic_index.rs:77).
 
-        Metadata comes from the driver-resident map (:meth:`_metadata_map`)."""
+        Metadata: the driver serves read the table's driver-resident map
+        (:meth:`_metadata_map`); the batch plans look it up for the
+        returned ids only (:meth:`_driver_result`)."""
         meta = self._meta(key)
         if len(query) != meta["dim"]:
             raise ValueError("Dimension mismatch")
@@ -769,6 +771,9 @@ class VecDB:
         elif tier == "hnsw":
             ids, dists = idx.search_np(q[0], k, ef)
         elif tier == "ivfpq" and self._ivfpq_mirror(idx):
+            # the mirror's own serve, not _batch_plan: the batch route's
+            # local result frame costs ~24 ms a query (median 39.4 vs
+            # 15.0 ms, 10k × 128, local[4] on a 4-core host; same rows)
             _, ids, dists = idx._search_local(
                 q, int(k), _ivfpq_probes(meta), max(int(ef), int(k)),
                 idx.model.metric,
@@ -780,6 +785,8 @@ class VecDB:
             rows = self._batch_plan(key, meta, tier, idx, pq, q, k, ef,
                                     upper_bound).collect()
             ids, dists = [r["id"] for r in rows], [r["dist"] for r in rows]
+            return self._driver_result(key, ids, dists, k, upper_bound,
+                                       full_map=False)
         return self._driver_result(key, ids, dists, k, upper_bound)
 
     def _ivfpq_mirror(self, ivfpq) -> bool:
@@ -793,19 +800,32 @@ class VecDB:
         return ivfpq._local_state() is not None
 
     def _driver_result(
-        self, key: str, ids, dists, k: int, upper_bound: float | None
+        self, key: str, ids, dists, k: int, upper_bound: float | None,
+        full_map: bool = True,
     ) -> list[tuple[dict[str, str], float]]:
-        """The :meth:`search` result of a driver-side serve's ``(ids,
-        dists)``: metadata attached from the table's map, the threshold
-        applied, ascending by distance, at most ``k``."""
-        md = self._metadata_map(key)
-        result = [
-            (md.get(int(i), {}), float(d))
-            for i, d in zip(ids, dists)
-            if upper_bound is None or float(d) <= upper_bound
-        ]
-        result.sort(key=lambda t: t[1])
-        return result[:k]
+        """The :meth:`search` result of a serve's ``(ids, dists)``: the
+        threshold applied, ascending by distance, at most ``k``, with
+        metadata attached. It comes from the table's driver map when
+        ``full_map`` (the driver serves, which hold driver state of the
+        table's size anyway) or when the map is already built; otherwise
+        one Spark job looks up the ≤ k returned ids, so a scan tier
+        never pulls the whole table's metadata onto the driver."""
+        hits = sorted(
+            ((int(i), float(d)) for i, d in zip(ids, dists)
+             if upper_bound is None or float(d) <= upper_bound),
+            key=lambda t: t[1],
+        )[:k]
+        if full_map or "_mdmap" in self._indexes.get(key, {}):
+            md = self._metadata_map(key)
+        elif hits:
+            rows = (
+                self.table_df(key).filter(F.col("id").isin([i for i, _ in hits]))
+                .select("id", "metadata").collect()
+            )
+            md = {int(r["id"]): dict(r["metadata"] or {}) for r in rows}
+        else:
+            md = {}
+        return [(md.get(i, {}), d) for i, d in hits]
 
     def search_filtered(
         self,

@@ -86,12 +86,13 @@ def test_point_search_equals_one_row_batch(spark, tables, tier, metric):
 
 
 @pytest.mark.parametrize("tier,jobs", [
-    ("flat", 1), ("ivf", 1), ("pq", 1), ("hnsw", 0), ("ivfpq_mirror", 0),
+    ("flat", 2), ("ivf", 2), ("pq", 2), ("hnsw", 0), ("ivfpq_mirror", 0),
 ])
 def test_point_search_job_count(spark, tables, tier, jobs):
     """After one warm-up call (index load, metadata map, IVF+PQ mirror),
-    a point ``search`` runs exactly the tier's scan job on flat, IVF and
-    PQ, and no Spark job on HNSW or the IVF+PQ mirror."""
+    a point ``search`` runs the tier's scan job and the metadata lookup
+    of the returned ids on flat, IVF and PQ, and no Spark job on HNSW or
+    the IVF+PQ mirror."""
     db, key, queries = tables[tier, "l2sqr"]
     db.search(key, queries[0], K, ef=EF[tier])
     sc = spark.sparkContext
@@ -102,6 +103,36 @@ def test_point_search_job_count(spark, tables, tier, jobs):
     finally:
         sc._jsc.clearJobGroup()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+@pytest.mark.parametrize("tier", ["flat", "ivf", "pq", "ivfpq_spark"])
+def test_scan_tier_point_search_reads_only_result_metadata(
+        spark, tmp_path, monkeypatch, tier):
+    """The first point ``search`` after a write on a scan tier attaches
+    the metadata of its ≤ k ids without building the whole table's
+    driver map (the write drops any map; IVF and PQ are rebuilt after
+    it, since a write clears them)."""
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(N, DIM))
+    db = VecDB(str(tmp_path), spark=spark)
+    db.local_serve = False
+    key = "t"
+    db.create_table_if_not_exists(key, DIM, "l2sqr")
+    db.batch_add(key, [[float(x) for x in v] for v in vecs],
+                 [{"i": str(i)} for i in range(N)])
+    q = [float(x) for x in rng.normal(size=DIM)]
+    db.add(key, q, {"i": str(N)})  # the query itself: its own nearest row
+    BUILD[tier](db, key)
+
+    def whole_table_map(self, key):
+        raise AssertionError("whole-table metadata map built")
+
+    monkeypatch.setattr(VecDB, "_metadata_map", whole_table_map)
+    got = db.search(key, q, K, ef=EF[tier])
+    assert got[0] == ({"i": str(N)}, pytest.approx(0.0, abs=1e-6))
+    assert len(got) == K and all(md for md, _ in got)
+    assert "_mdmap" not in db._indexes.get(key, {})
+    db.close()
 
 
 @pytest.mark.parametrize("tier", ["flat", "ivf", "pq", "ivfpq_spark"])
