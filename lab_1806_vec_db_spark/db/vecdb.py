@@ -57,6 +57,9 @@ TABLE_SCHEMA = "id long, vec array<float>, metadata map<string,string>"
 #: typed tables (S2): exactly f32 and u8, like the reference
 #: (scalar.rs:117-119); u8 stores as smallint (no unsigned byte in Spark)
 DATA_TYPES = {"float32": "float", "uint8": "smallint"}
+#: rows a graph tail sync absorbs per insert batch; a longer tail is
+#: range-sorted and streamed (``VecDB._hnsw_tail_sync``)
+TAIL_CHUNK_ROWS = 65536
 
 
 def _table_schema(data_type: str) -> str:
@@ -836,107 +839,76 @@ class VecDB:
         upper_bound: float | None = None,
         ef: int | None = None,
     ) -> list[tuple[dict[str, str], float]]:
-        """Metadata-filtered kNN: the subset-match predicate
-        (the reference's delete-pattern semantics, metadata_vec_table.rs
-        :163-169) applied BELOW the distance computation — non-matching
-        rows are pruned by the scan (map-type predicate; with metadata
-        promoted to top-level parquet columns it reaches PushedFilters,
+        """Metadata-filtered kNN returning ascending ``(metadata,
+        distance)``: the subset-match predicate (the reference's
+        delete-pattern semantics, metadata_vec_table.rs:163-169) applied
+        BELOW the distance computation — non-matching rows are pruned by
+        the scan (map-type predicate; with metadata promoted to
+        top-level parquet columns it reaches PushedFilters,
         tests/test_plans.py shows the shape). Beyond-reference: the
         reference can attach metadata to results (Q8) but cannot prune
         the search space by it.
 
-        Dispatch mirrors :meth:`search`: with ``ef`` given and an index
-        live, the oversample-and-filter path runs (HNSW or IVF+PQ
-        ``search_filtered`` — graph/ADC pool semi-joined against the
-        filtered scan, exact-scan fallback when the pool can't fill k);
-        otherwise the exact filtered flat scan."""
+        The query is :meth:`batch_search_filtered` over a one-row query
+        matrix, so a point query and a one-row batch get the same rows;
+        metadata is looked up for the returned ids only
+        (:meth:`_driver_result`)."""
         meta = self._meta(key)
         if len(query) != meta["dim"]:
             raise ValueError("Dimension mismatch")
-        df = self.table_df(key).filter(self._pattern_pred(pattern))
-        out = None
-        if ef is not None:
-            hnsw = self._get_index(key, "hnsw") if meta["has_hnsw"] else None
-            ivfpq = self._get_index(key, "ivfpq") if meta.get("has_ivfpq") else None
-            if _is_plain_hnsw(hnsw):
-                self._hnsw_tail_sync(key, hnsw)
-                out = hnsw.search_filtered(query, k, df, ef=ef)
-            elif hnsw is not None:
-                # sharded tier: route the point query through the batch
-                # pool→filter→fallback path (one-row query frame)
-                self._hnsw_tail_sync(key, hnsw)
-                queries = self.spark.createDataFrame(
-                    [(0, [float(x) for x in query])],
-                    "query_id long, vec array<double>",
-                )
-                out = hnsw.search_batch_filtered(
-                    queries, k, df, ef=ef, qid_col="query_id", qvec_col="vec"
-                ).select("id", "dist")
-            elif ivfpq is not None:
-                out = ivfpq.search_filtered(query, k, df,
-                                            n_probes=_ivfpq_probes(meta), ef=ef)
-        if out is None:
-            out = knn_ops.knn(
-                df, query, k, metric=meta["dist"], vec_col="vec",
-                payload_cols=["id", "metadata"], id_col="id", norm_col="norm",
-            )
-        else:
-            # metadata attach on the k-bounded result only (Q8)
-            out = (
-                self.table_df(key).select("id", "metadata")
-                .join(F.broadcast(out), "id")
-            )
-        result = []
-        for r in out.collect():
-            if upper_bound is not None and r["dist"] > upper_bound:
-                continue
-            result.append((dict(r["metadata"] or {}), float(r["dist"])))
-        result.sort(key=lambda t: t[1])
-        return result[:k]
+        # Row collect: the plan's result is a driver-built local frame,
+        # which collect() reads with no Spark job
+        rows = self.batch_search_filtered(
+            key, np.asarray([query], dtype=np.float64), k, pattern,
+            upper_bound, ef,
+        ).collect()
+        return self._driver_result(key, [r["id"] for r in rows],
+                                   [r["dist"] for r in rows], k, upper_bound,
+                                   full_map=False)
 
     def batch_search_filtered(
         self,
         key: str,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         pattern: dict[str, str],
         upper_bound: float | None = None,
         ef: int | None = None,
     ) -> DataFrame:
-        """Batch form of :meth:`search_filtered`: the subset-match
-        predicate prunes the base table BEFORE the Arrow distance scan,
-        then the flat batch path runs over the survivors — exact
-        results within the filtered set, one k-bounded merge shuffle.
-        With ``ef`` given and a broadcast-tier HNSW live, the
-        oversample-and-filter batch path runs instead (graph pool →
-        filtered join → per-query window; starved queries answered
-        exactly — hnsw.py search_batch_filtered)."""
+        """Batch form of :meth:`search_filtered`: queries ``(query_id,
+        vec)`` (a DataFrame, or a driver-side matrix) → ``(query_id, id,
+        dist)`` over the rows matching ``pattern``. The one filtered
+        ladder; the predicate prunes the base table first, then:
+
+        - ``ef`` + HNSW (plain or sharded) → the graph's oversample-and-
+          filter plan (``search_batch_filtered``: pool → filtered join →
+          exact scan for starved queries), after the tail sync;
+        - ``ef`` + IVF+PQ → the same plan over the ADC pool, with the
+          build-time probe count and the driver mirror when
+          :meth:`_ivfpq_mirror` allows it;
+        - else the exact flat batch scan of the filtered rows."""
         meta = self._meta(key)
         df = self.table_df(key).filter(self._pattern_pred(pattern))
+        cols = {"qid_col": "query_id", "qvec_col": "vec"}
         out = None
         if ef is not None:
             hnsw = self._get_index(key, "hnsw") if meta["has_hnsw"] else None
             ivfpq = self._get_index(key, "ivfpq") if meta.get("has_ivfpq") else None
             if hnsw is not None:
-                # both graph tiers share the pool→filter→fallback shape
                 self._hnsw_tail_sync(key, hnsw)
-                out = hnsw.search_batch_filtered(
-                    queries, k, df, ef=ef, qid_col="query_id", qvec_col="vec"
-                )
+                out = hnsw.search_batch_filtered(queries, k, df, ef=ef, **cols)
             elif ivfpq is not None:
+                self._ivfpq_mirror(ivfpq)
                 out = ivfpq.search_batch_filtered(
-                    queries, k, df, n_probes=_ivfpq_probes(meta), ef=ef,
-                    qid_col="query_id", qvec_col="vec",
-                )
-        if out is not None:
-            if upper_bound is not None:
-                out = out.filter(F.col("dist") <= F.lit(float(upper_bound)))
-            return out
-        return knn_ops.knn_batch(
-            df, queries, k, metric=meta["dist"], vec_col="vec",
-            id_col="id", qid_col="query_id", qvec_col="vec",
-            upper_bound=upper_bound, dim=meta["dim"],
-        )
+                    queries, k, df, n_probes=_ivfpq_probes(meta), ef=ef, **cols)
+        if out is None:
+            return knn_ops.knn_batch(
+                df, queries, k, metric=meta["dist"], vec_col="vec", id_col="id",
+                upper_bound=upper_bound, dim=meta["dim"], **cols,
+            )
+        if upper_bound is not None:
+            out = out.filter(F.col("dist") <= F.lit(float(upper_bound)))
+        return out
 
     def batch_search(
         self,
@@ -1128,51 +1100,48 @@ class VecDB:
 
         The lag check is driver-side arithmetic (``len`` vs rows
         indexed) — ZERO Spark jobs when the graph is current, so the
-        point-serve fast path stays job-free. The pull itself streams
-        through ``toLocalIterator`` in 64k-row chunks: driver memory is
-        bounded no matter how far the graph lags (a bulk load can defer
+        point-serve fast path stays job-free. The pull absorbs
+        :data:`TAIL_CHUNK_ROWS`-row chunks, and a tail longer than one
+        streams through ``toLocalIterator``: driver memory is bounded no
+        matter how far the graph lags (a bulk load can defer
         millions of rows without OOMing the driver). Appends are
         id-ordered and deletes clear the index, so the missing rows are
-        exactly the largest ids; the sharded tier instead filters on
-        its durable watermark and membership-checks per shard
-        (``force=True`` at load time runs the watermark probe even when
-        counts look current — a crash BETWEEN shard flushes and the
-        root-meta flush leaves counts overcounting)."""
+        exactly those above a bound: the graph's largest id on the
+        broadcast tier, the durable watermark on the sharded tier, which
+        membership-checks per shard (``force=True`` at load time runs
+        the watermark probe even when counts look current — a crash
+        BETWEEN shard flushes and the root-meta flush leaves counts
+        overcounting). Both read the tail with one ``id > bound``
+        filter."""
         from lab_1806_vec_db_spark.index.sharded import ShardedHNSWIndex
 
         meta = self._meta(key)
         is_sharded = isinstance(idx, ShardedHNSWIndex)
-        use_wm = is_sharded and idx.max_committed_id >= -1
         rows_indexed = (
             sum(idx.shard_counts.values()) if is_sharded else len(idx.ids)
         )
         n_missing = int(meta["len"]) - rows_indexed
-        if n_missing <= 0 and not (use_wm and force):
+        if n_missing <= 0 and not (is_sharded and force):
             return
-        if use_wm:
-            tail = (
-                self.table_df(key)
-                .filter(F.col("id") > int(idx.max_committed_id))
-                .select("id", "vec")
-            )
+        if is_sharded:
+            bound = int(idx.max_committed_id)
         else:
-            # the tail is the largest n_missing ids, but it MUST be
-            # absorbed in ASCENDING id order: an interrupted sync then
-            # leaves the graph holding a contiguous prefix of the tail,
-            # so "missing rows are exactly the largest ids" still holds
-            # at the next sync. Desc iteration absorbed the largest ids
-            # first — a mid-iteration failure left a hole in the middle
-            # band that the recomputed n_missing could never see, and
-            # the retry double-inserted the already-absorbed ids.
-            tail = (
-                self.table_df(key)
-                .orderBy(F.col("id").desc())
-                .limit(int(n_missing))
-                .select("id", "vec")
-                .orderBy(F.col("id").asc())
-            )
+            bound = int(idx.ids.max()) if len(idx.ids) else -1
+        # the tail is absorbed in ASCENDING id order: an interrupted sync
+        # then leaves the graph holding a contiguous prefix of the tail,
+        # so the next sync's bound still finds exactly the rest. The tail
+        # holds the n_missing rows (on the sharded tier the watermark and
+        # the counts flush together): one that fits a chunk is read by
+        # one parallel scan and sorted here; a longer one is range-sorted
+        # (a sampling job and a shuffle more), so toLocalIterator holds
+        # one partition at a time
+        tail = self.table_df(key).filter(F.col("id") > bound).select("id", "vec")
+        chunk = TAIL_CHUNK_ROWS
+        if n_missing > chunk:
+            rows = tail.orderBy("id").toLocalIterator(prefetchPartitions=True)
+        else:
+            rows = sorted(tail.collect(), key=lambda r: r["id"])
         seed = 43 + int(meta["next_id"])
-        chunk = 65536
         ids_buf: list[int] = []
         vec_buf: list[list[float]] = []
 
@@ -1183,7 +1152,7 @@ class VecDB:
             vecs = np.asarray(
                 [[float(x) for x in v] for v in vec_buf], dtype=np.float64
             )
-            if use_wm:
+            if is_sharded:
                 idx.absorb_tail(ids, vecs, seed=seed + i)
             else:
                 idx.add_batch(ids, vecs, seed=seed + i)
@@ -1191,7 +1160,7 @@ class VecDB:
             vec_buf.clear()
 
         i = 0
-        for r in tail.toLocalIterator(prefetchPartitions=True):
+        for r in rows:
             ids_buf.append(int(r["id"]))
             vec_buf.append(r["vec"])
             if len(ids_buf) >= chunk:

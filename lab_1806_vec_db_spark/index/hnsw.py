@@ -58,7 +58,6 @@ from typing import Iterator, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.index.beam import (
     ADCPairDist,
@@ -66,7 +65,13 @@ from lab_1806_vec_db_spark.index.beam import (
     beam_search_batch,
     greedy_descent_batch,
 )
-from lab_1806_vec_db_spark.operators.knn import np_round_half_up
+from lab_1806_vec_db_spark.operators.knn import (
+    collect_query_block,
+    driver_topk_merge,
+    empty_topk,
+    filtered_topk_from_pool,
+    np_round_half_up,
+)
 
 #: visited-bitmap budget per kernel call (bytes): bounds query-chunking
 #: in search and node-chunking in build. Q_chunk × N bools ≤ this.
@@ -1090,23 +1095,11 @@ class HNSWIndex:
         filtered_base: DataFrame,
         ef: int | None = None,
         oversample: int = 4,
-        max_rounds: int = 3,
         vec_col: str = "vec",
     ) -> DataFrame:
-        """Metadata-filtered ANN by oversample-and-filter. The
-        predicate stays IN SPARK: the caller passes the
-        predicate-filtered base table (so the filter pushes into the
-        parquet scan), the graph contributes only an ef-bounded
-        candidate pool, and survivors come from broadcasting the pool
-        into the filtered scan — no metadata ever crosses to the
-        driver, which is what makes this hold at 100 TB.
-
-        Escalation: the pool starts at max(ef, oversample·k) and
-        quadruples for up to ``max_rounds`` rounds until k survivors
-        exist; if the graph pool still can't fill k (very selective
-        predicates, or matches only among graph-unreachable nodes),
-        the EXACT filtered scan answers — the result never silently
-        under-fills k while matches exist.
+        """Metadata-filtered ANN for one query as ``(id, dist)``:
+        :meth:`search_batch_filtered` over a one-row block, so a point
+        query and a one-row batch return the same rows.
 
         Reference analogue: the subset-match pattern semantics
         (metadata_vec_table.rs:163-169) applied below search — the
@@ -1114,55 +1107,14 @@ class HNSWIndex:
         metadata_vec_table.rs:194-212), it cannot filter the search.
         Recall gate vs the exact filtered scan: tests/test_indexes.py;
         oracle equivalence at full beam: entry knn_hnsw_filtered."""
-        from lab_1806_vec_db_spark.operators import knn as knn_ops
-
-        spark = filtered_base.sparkSession
-        q = np.asarray([float(x) for x in query], dtype=np.float64)
-        n = self.vecs.shape[0]
-        id_col = self.id_col
-        ef_i = max(int(ef or 0), int(oversample) * int(k), int(k))
-        # selectivity-aware dispatch: when the predicate leaves no more
-        # rows than the pool is wide, the graph pool CANNOT beat the
-        # exact filtered scan — it would pay pool + escalation rounds +
-        # the very same exact scan as fallback. One early-terminating
-        # limit-probe (stops as soon as ef_i+1 survivors are found, so
-        # it is cheap precisely when the pool path would win) routes
-        # highly selective predicates straight to the exact answer.
-        n_f = filtered_base.select(id_col).limit(ef_i + 1).count()
-        if n_f <= ef_i:
-            return knn_ops.knn(
-                filtered_base, [float(x) for x in query], int(k),
-                metric=self.metric, vec_col=vec_col, id_col=id_col,
-            )
-        for _ in range(max(1, int(max_rounds))):
-            kk = min(ef_i, n) if n else int(k)
-            ids, dists = self.search_np(q, kk, ef_i)
-            pool_df = spark.createDataFrame(
-                [(int(i), float(d)) for i, d in zip(ids, dists)] or [],
-                f"{id_col} long, dist double",
-            )
-            rows = (
-                filtered_base.select(id_col)
-                .join(F.broadcast(pool_df), id_col)
-                .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-                .limit(int(k))
-                .collect()
-            )
-            if len(rows) >= int(k):
-                return spark.createDataFrame(rows, f"{id_col} long, dist double")
-            if len(ids) >= n:
-                break  # pool already covers the reachable set
-            ef_i *= 4
-        # selective predicate (or unreachable matches): exact scan of
-        # the already-filtered base — correct by construction
-        return knn_ops.knn(
-            filtered_base, [float(x) for x in query], int(k),
-            metric=self.metric, vec_col=vec_col, id_col=id_col,
-        )
+        return self.search_batch_filtered(
+            np.asarray([query], dtype=np.float64), k, filtered_base, ef=ef,
+            oversample=oversample, vec_col=vec_col,
+        ).select(self.id_col, "dist")
 
     def search_batch_filtered(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         filtered_base: DataFrame,
         ef: int | None = None,
@@ -1173,23 +1125,12 @@ class HNSWIndex:
         vec_col: str = "vec",
         fallback_margin: float = 1.0,
     ) -> DataFrame:
-        """Batch twin of :meth:`search_filtered`: every query's
-        ef-bounded graph pool (one broadcast-graph mapInPandas pass,
-        queries as the parallel axis) is joined against the
-        predicate-filtered base — the predicate pushes into the parquet
-        scan, the pool is the k-bounded side of the join — then the
-        shared per-query window keeps k survivors.
-
-        Under-filled queries (pool ∩ filter < k) are detected with one
-        |Q|-bounded aggregate and answered EXACTLY by the flat batch
-        scan over the filtered base (``exact_fallback=False`` skips
-        that and documents the recall contract instead). One graph
-        pass + one filtered-scan join + at most one exact pass over
-        only the starved queries — no per-query driver loop. The
-        finisher is shared by every batch tier
-        (operators/knn.py::filtered_topk_from_pool)."""
-        from lab_1806_vec_db_spark.operators.knn import filtered_topk_from_pool
-
+        """Oversample-and-filter: each query's max(ef, oversample·k)
+        graph pool (:meth:`search_batch`) goes through the finisher
+        every batch tier shares (operators/knn.py::
+        filtered_topk_from_pool): a join against the predicate-filtered
+        base keeps k survivors per query, and queries the pool cannot
+        fill are answered by the exact filtered scan."""
         pool_k = max(int(ef or 0), int(oversample) * int(k), int(k))
         pool = self.search_batch(
             queries, k=pool_k, ef=max(pool_k, int(ef or 0)),
@@ -1199,12 +1140,18 @@ class HNSWIndex:
             pool, queries, k, filtered_base, self.id_col, self.metric,
             vec_col, qid_col=qid_col, qvec_col=qvec_col,
             exact_fallback=exact_fallback, fallback_margin=fallback_margin,
-            pool_k=pool_k,
+            pool_k=pool_k, dim=self.dim,
         )
+
+    @property
+    def dim(self) -> int | None:
+        """The vector width; None for an empty graph, whose width is
+        unknown."""
+        return self.vecs.shape[1] if self.vecs.ndim == 2 else None
 
     def search_batch(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         ef: int | None = None,
         qid_col: str = "query_id",
@@ -1237,9 +1184,14 @@ class HNSWIndex:
         logical query can return a (slightly) different candidate set
         there than on this always-steered batch path — recall of the
         steered batch is gated vs the exact serve in
-        tests/test_indexes.py::test_hnsw_batch_steered_recall_floor."""
+        tests/test_indexes.py::test_hnsw_batch_steered_recall_floor.
+
+        A driver-side matrix block is served on the driver instead
+        (:meth:`_search_block`), with no Spark job."""
         if steer is False:
             pq = None
+        if not isinstance(queries, DataFrame):
+            return self._search_block(queries, k, ef, qid_col, upper_bound, pq)
         spark = queries.sparkSession
         sc = spark.sparkContext
         # cache hit requires the SAME pq object (strong ref, `is` — an
@@ -1322,6 +1274,28 @@ class HNSWIndex:
         if qid_col != "query_id":
             out = out.withColumnRenamed("query_id", qid_col)
         return out
+
+    def _search_block(
+        self, queries: np.ndarray, k: int, ef: int | None, qid_col: str,
+        upper_bound: float | None, pq,
+    ) -> DataFrame:
+        """:meth:`search_batch` of a driver-side matrix block
+        (:func:`operators.knn.collect_query_block` checks its width):
+        :meth:`search_many_parallel` with the tasks' kernel, steering
+        rule and beam width, into a driver-built result frame."""
+        spark = (self.base.sparkSession if self.base is not None
+                 else SparkSession.active())
+        block = collect_query_block(queries, qid_col, "vec", self.dim)
+        if block is None:
+            return empty_topk(spark, self.id_col, qid_col)
+        qids, qmat = block
+        # steer=True: the tasks steer whenever pq is given (no byte gate)
+        gids, dists = self.search_many_parallel(qmat, k, ef, pq=pq, steer=True,
+                                                beam_width=1)
+        rows, cols = np.nonzero(gids >= 0)
+        return driver_topk_merge(spark, qids[rows], gids[rows, cols],
+                                 dists[rows, cols], int(k), self.id_col,
+                                 upper_bound, qid_col)
 
     # ---- persistence (S8: hnsw_index.rs:644-670 saves links w/o vectors) --
 

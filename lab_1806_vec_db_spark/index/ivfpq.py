@@ -62,6 +62,7 @@ from lab_1806_vec_db_spark.operators.knn import (
     collect_query_block,
     driver_topk_merge,
     empty_topk,
+    filtered_topk_from_pool,
 )
 
 
@@ -890,58 +891,17 @@ class IVFPQIndex:
         ef: int = 64,
         oversample: int = 4,
     ) -> DataFrame:
-        """Metadata-filtered ANN on the distributed tier, oversample-
-        and-filter: the ADC + exact-re-rank pool of size
-        max(ef, oversample·k) is semi-joined against the caller's
-        predicate-filtered base (the predicate pushes into the parquet
-        scan; only the pool broadcasts), top-k of the survivors.
-        Escalation: round 2 probes EVERY cluster with a 4× pool; if the
-        pool still can't fill k (very selective predicates), the exact
-        filtered scan answers — never a silent under-fill while matches
-        exist. The HNSW twin (hnsw.py search_filtered) documents the
-        scale argument; here the pool stage additionally keeps IVF's
-        partition pruning."""
-        from lab_1806_vec_db_spark.operators import knn as knn_ops
-
-        spark = filtered_base.sparkSession
-        id_col = self.id_col
-        k_clusters = int(self.model.centroids.shape[0])
-        ef_i = max(int(ef), int(oversample) * int(k), int(k))
-        probes = int(n_probes)
-        # selectivity-aware dispatch (the HNSW twin documents the
-        # rationale, hnsw.py::search_filtered): a predicate that leaves
-        # ≤ pool-width rows would pay pool + full-probe escalation +
-        # the exact fallback anyway — the limit-probe below terminates
-        # early when the predicate is NOT selective, so the fast path
-        # stays cheap and the selective path skips straight to exact.
-        n_f = filtered_base.select(id_col).limit(ef_i + 1).count()
-        if n_f <= ef_i:
-            return knn_ops.knn(
-                filtered_base, [float(x) for x in query], int(k),
-                metric=self.model.metric, vec_col=self.vec_col, id_col=id_col,
-            )
-        for last in (False, True):
-            pool = self.search(query, k=ef_i, n_probes=probes, ef=ef_i)
-            rows = (
-                filtered_base.select(id_col)
-                .join(F.broadcast(pool), id_col)
-                .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-                .limit(int(k))
-                .collect()
-            )
-            if len(rows) >= int(k) or (last and probes >= k_clusters):
-                if len(rows) >= int(k):
-                    return spark.createDataFrame(rows, f"{id_col} long, dist double")
-                break
-            probes, ef_i = k_clusters, ef_i * 4
-        return knn_ops.knn(
-            filtered_base, [float(x) for x in query], int(k),
-            metric=self.model.metric, vec_col=self.vec_col, id_col=id_col,
-        )
+        """Metadata-filtered ANN for one query as ``(id, dist)``:
+        :meth:`search_batch_filtered` over a one-row block (its pool
+        from the driver mirror when enabled)."""
+        return self.search_batch_filtered(
+            np.asarray([query], dtype=np.float64), k, filtered_base,
+            n_probes=n_probes, ef=ef, oversample=oversample,
+        ).select(self.id_col, "dist")
 
     def search_batch_filtered(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         filtered_base: DataFrame,
         n_probes: int = 4,
@@ -952,15 +912,9 @@ class IVFPQIndex:
         exact_fallback: bool = True,
         fallback_margin: float = 1.0,
     ) -> DataFrame:
-        """Batch filtered ANN on the distributed tier: one
-        partition-pruned ADC + re-rank pass produces each query's
-        max(ef, oversample·k) pool, then the shared finisher
-        (operators/knn.py::filtered_topk_from_pool) joins it against
-        the predicate-filtered scan and answers starved queries
-        exactly (``fallback_margin`` > 1 also escalates thin-
-        intersection queries — see the finisher's contract)."""
-        from lab_1806_vec_db_spark.operators.knn import filtered_topk_from_pool
-
+        """Oversample-and-filter: each query's max(ef, oversample·k)
+        ADC + re-rank pool (:meth:`search_batch`) goes through the shared
+        finisher (operators/knn.py::filtered_topk_from_pool)."""
         pool_k = max(int(ef), int(oversample) * int(k), int(k))
         pool = self.search_batch(
             queries, k=pool_k, n_probes=n_probes, ef=pool_k,
@@ -970,7 +924,7 @@ class IVFPQIndex:
             pool, queries, k, filtered_base, self.id_col, self.model.metric,
             self.vec_col, qid_col=qid_col, qvec_col=qvec_col,
             exact_fallback=exact_fallback, fallback_margin=fallback_margin,
-            pool_k=pool_k,
+            pool_k=pool_k, dim=self.pq.dim,
         )
 
     def search_batch(

@@ -38,11 +38,18 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.index.hnsw import HNSWIndex
 from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans, sample_rows
+from lab_1806_vec_db_spark.operators.knn import (
+    _topk_per_query,
+    collect_query_block,
+    empty_topk,
+    filtered_topk_from_pool,
+)
 
 #: executor-local cache of loaded shard graphs, keyed by shard dir.
 #: Bounded FIFO: a task set serving a probe workload touches at most a
@@ -217,10 +224,21 @@ class ShardedHNSWIndex:
         npz = np.load(os.path.join(path, "router.npz"))
         model = KMeansModel(centroids=np.asarray(npz["centroids"], dtype=np.float64),
                             metric=meta["metric"])
-        return cls(model, path, meta["metric"], id_col=meta["id_col"],
-                   m=meta["m"], ef_construction=meta["ef_construction"],
-                   shard_counts={int(k): v for k, v in meta["shard_counts"].items()},
-                   max_committed_id=int(meta.get("max_committed_id", -2)))
+        shard_counts = {int(k): v for k, v in meta["shard_counts"].items()}
+        obj = cls(model, path, meta["metric"], id_col=meta["id_col"],
+                  m=meta["m"], ef_construction=meta["ef_construction"],
+                  shard_counts=shard_counts,
+                  max_committed_id=int(meta.get("max_committed_id", -1)))
+        if "max_committed_id" not in meta:
+            # an artifact written before the watermark: its largest
+            # shard id, read one shard at a time and dirty-marked so the
+            # next save persists it
+            for sid, n in shard_counts.items():
+                if n:
+                    ids = HNSWIndex.load(None, _shard_dir(path, sid)).ids
+                    obj.max_committed_id = max(obj.max_committed_id, int(ids.max()))
+            obj._meta_dirty = True
+        return obj
 
     # ---- serve: point (driver-side latency path) -------------------------
 
@@ -256,7 +274,7 @@ class ShardedHNSWIndex:
 
     def search_batch_filtered(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         filtered_base: DataFrame,
         ef: int | None = None,
@@ -275,8 +293,6 @@ class ShardedHNSWIndex:
         pool against the predicate-filtered scan and answers starved
         queries exactly — the same contract as the broadcast-graph and
         IVF+PQ tiers, so filtered search survives the tier switch."""
-        from lab_1806_vec_db_spark.operators.knn import filtered_topk_from_pool
-
         pool_k = max(int(ef or 0), int(oversample) * int(k), int(k))
         pool = self.search_batch(
             queries, k=pool_k, ef=max(pool_k, int(ef or 0)),
@@ -286,12 +302,12 @@ class ShardedHNSWIndex:
             pool, queries, k, filtered_base, self.id_col, self.metric,
             vec_col, qid_col=qid_col, qvec_col=qvec_col,
             exact_fallback=exact_fallback, fallback_margin=fallback_margin,
-            pool_k=pool_k,
+            pool_k=pool_k, dim=self.model.centroids.shape[1],
         )
 
     def search_batch(
         self,
-        queries: DataFrame,
+        queries: DataFrame | np.ndarray,
         k: int,
         ef: int | None = None,
         n_probes: int = 4,
@@ -303,7 +319,8 @@ class ShardedHNSWIndex:
         (query, shard) rows → ONE shuffle on shard_id → each task
         serves its shard from the executor-local graph cache → global
         k-bounded window merge. The shuffle carries n_probes rows per
-        query; result traffic is k rows per (query, shard)."""
+        query; result traffic is k rows per (query, shard). A driver-side
+        matrix block enters as a driver-local frame."""
         # executors serve from the on-disk shard files: flush any
         # dirty driver-side shards first so appended rows (and shards
         # newly materialized by add_batch) are visible — without this,
@@ -311,6 +328,19 @@ class ShardedHNSWIndex:
         # brand-new shard has no directory to load at all
         if self.dirty:
             self.save()
+        if not isinstance(queries, DataFrame):
+            # the session the builder made, also in a thread that did not
+            # make it (the JVM's active session is thread-local)
+            spark = SparkSession.active()
+            block = collect_query_block(queries, qid_col, qvec_col,
+                                        self.model.centroids.shape[1])
+            if block is None:
+                return empty_topk(spark, self.id_col, qid_col)
+            queries = spark.createDataFrame(
+                pa.table({qid_col: pa.array(block[0]),
+                          qvec_col: pa.array(list(block[1]), pa.list_(pa.float64()))}),
+                schema=f"{qid_col} long, {qvec_col} array<double>",
+            )
         spark = queries.sparkSession
         id_col = self.id_col
         bc = spark.sparkContext.broadcast((
@@ -361,8 +391,6 @@ class ShardedHNSWIndex:
         per_shard = routed.groupBy("shard_id").applyInPandas(
             serve, schema=f"{qid_col} long, {id_col} long, dist double"
         )
-
-        from lab_1806_vec_db_spark.operators.knn import _topk_per_query
 
         return _topk_per_query(per_shard, k_, id_col, upper_bound, qid_col=qid_col)
 

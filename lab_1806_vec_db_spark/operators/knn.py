@@ -89,7 +89,6 @@ def knn(
     upper_bound: float | None = None,
     payload_cols: Sequence[str] | None = None,
     id_col: str = "id",
-    norm_col: str | None = None,
 ) -> DataFrame:
     """Single-query brute-force kNN (reference ``search`` with a Flat
     index, flat_index.rs:48-57 + metadata_vec_table.rs:194-212).
@@ -97,28 +96,14 @@ def knn(
     Returns ``payload_cols + [dist]`` ascending, ties broken by id.
     The plan is scan → project(dist) → TakeOrderedAndProject(k) →
     filter(ub): the filter is applied after top-k, as in the reference.
-
-    ``norm_col``: name of a materialized per-row norm column (the
-    reference's dist_cache, distance/mod.rs:31-37) — when given and the
-    metric is cosine, the base-side norm is read, not recomputed, and
-    the query-side norm is folded to a literal.
     """
     _check_metric(metric)
-    qvals = [float(x) for x in query]
-    qlit = F.lit(qvals).cast("array<double>")
+    qlit = F.lit([float(x) for x in query]).cast("array<double>")
     payload = list(payload_cols) if payload_cols is not None else [id_col]
     if id_col not in payload:
         payload = [id_col] + payload  # the sort key must survive the projection
-    kwargs = {}
-    if norm_col is not None and metric == "cosine" and norm_col in df.columns:
-        import math
-
-        kwargs = {
-            "norm_a": F.col(norm_col).cast("double"),
-            "norm_b": F.lit(math.sqrt(sum(x * x for x in qvals))),
-        }
     scored = df.select(
-        *payload, round_dist(dist_expr(F.col(vec_col), qlit, metric, **kwargs)).alias("dist")
+        *payload, round_dist(dist_expr(F.col(vec_col), qlit, metric)).alias("dist")
     )
     out = scored.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(k)
     if upper_bound is not None:
@@ -167,6 +152,13 @@ def knn_grouped(
 DRIVER_MERGE_MAX_BYTES = 512 << 20
 #: Largest query block a batch tier driver-collects and broadcasts.
 MAX_QUERIES = 200_000
+#: Rows up to which a driver-local frame is read row by row with
+#: ``collect()`` (no Spark job) rather than ``toArrow()`` (one job), and
+#: a driver-local candidate pool picks its survivors with one ``id IN``
+#: scan rather than a broadcast join. Above it the per-row Python cost
+#: loses: a local 1000 × 128 block read in 31 ms by ``collect()`` and
+#: 59 ms by ``toArrow()``, a 4000-row one in 123 vs 87 ms (local[4]).
+SMALL_LOCAL_ROWS = 1024
 #: Compaction floors of the per-task candidate accumulator
 #: (:class:`TopkAccumulator`): (query, id, dist) triples, and — on the
 #: fused PQ / IVF+PQ scans — bytes of buffered candidate vectors. The
@@ -179,13 +171,31 @@ ACC_VEC_BYTES = 32 << 20
 _log = logging.getLogger("lab_1806_vec_db_spark")
 
 
+def read_arrow(frame: DataFrame, *cols: str) -> "pa.Table":
+    """One driver read of ``frame``'s ``cols`` as an Arrow table. A
+    driver-local frame (``isLocal()``, e.g. a :func:`driver_topk_merge`
+    result, whose optimized plan is a ``LocalRelation``) of at most
+    :data:`SMALL_LOCAL_ROWS` rows is read with ``collect()``, which runs
+    no Spark job where ``toArrow()`` runs one."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    sel = frame.select(*cols)
+    plan = sel._jdf.queryExecution().optimizedPlan()
+    if (plan.getClass().getSimpleName() == "LocalRelation"
+            and plan.data().size() <= SMALL_LOCAL_ROWS):
+        return pa.Table.from_pylist([r.asDict() for r in sel.collect()],
+                                    schema=to_arrow_schema(sel.schema))
+    return sel.toArrow()
+
+
 def collect_query_block(
     queries: DataFrame | np.ndarray, qid_col: str, qvec_col: str,
     dim: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray] | None:
     """The one place a query block enters a batch plan, as (qids int64,
     qmat f64). ``queries`` is either a ``(qid_col, qvec_col)``
-    DataFrame, driver-collected through ONE Arrow transfer (the Arrow
+    DataFrame, driver-collected through :func:`read_arrow` (the Arrow
     doubles ARE the stored doubles), or a driver-side (n × dim) matrix,
     taken as is with query ids ``0..n-1`` and no Spark job — the block
     a point ``search`` hands its tier's batch plan.
@@ -197,7 +207,7 @@ def collect_query_block(
     from lab_1806_vec_db_spark.functions.arrowvec import vec_matrix
 
     if isinstance(queries, DataFrame):
-        tbl = queries.select(qid_col, qvec_col).toArrow()
+        tbl = read_arrow(queries, qid_col, qvec_col)
         qids = tbl.column(qid_col).to_numpy(zero_copy_only=False).astype(
             np.int64, copy=False)
         qmat = vec_matrix(tbl.column(qvec_col), dtype=np.float64)
@@ -527,8 +537,9 @@ def driver_side(tier: str, frame: DataFrame, est_rows: int | None) -> bool:
 
 
 def collect_columns(frame: DataFrame, *cols: str) -> list[np.ndarray]:
-    """One Arrow collect of ``frame``, returned as numpy columns."""
-    tbl = frame.toArrow()
+    """One driver read (:func:`read_arrow`) of ``frame``'s ``cols`` as
+    numpy columns."""
+    tbl = read_arrow(frame, *cols)
     return [tbl.column(c).to_numpy(zero_copy_only=False) for c in cols]
 
 
@@ -604,7 +615,7 @@ def merge_topk(
 
 def filtered_topk_from_pool(
     pool: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | np.ndarray,
     k: int,
     filtered_base: DataFrame,
     id_col: str,
@@ -615,34 +626,38 @@ def filtered_topk_from_pool(
     exact_fallback: bool = True,
     fallback_margin: float = 1.0,
     pool_k: int | None = None,
+    dim: int | None = None,
 ) -> DataFrame:
     """Shared oversample-and-filter finisher for every batch ANN tier
-    (HNSW broadcast graph, IVF+PQ, sharded HNSW): join an ef-bounded
+    (HNSW broadcast graph, IVF+PQ, sharded HNSW) and so for their point
+    forms, which run it over a one-row block: join an ef-bounded
     per-query candidate ``pool`` (query_id, id, dist) against the
     predicate-filtered base — the predicate pushes into the parquet
     scan, the pool is the broadcast side — and keep k survivors per
-    query through the shared window. Queries whose pool can't fill k
-    are detected with one |Q|-bounded aggregate and answered EXACTLY
-    by the flat batch scan over the filtered base, so the result never
+    query. Queries whose pool can't fill k are answered EXACTLY by the
+    flat batch scan over the filtered base, so the result never
     silently under-fills while matches exist (``exact_fallback=False``
-    skips that pass; recall then depends on the pool width).
+    skips that pass and returns the window plan; recall then depends on
+    the pool width).
 
     ``fallback_margin`` widens the escalation trigger: queries whose
     pool ∩ filter holds fewer than ``ceil(margin·k)`` survivors go to
-    the exact scan too. A pool that BARELY fills k is the thin-
+    the exact scan too — a pool that BARELY fills k is the thin-
     intersection regime where the graph most likely missed true
-    neighbors — escalating it trades one bounded exact pass for the
-    recall the pool can't certify. margin=1.0 keeps the strict
-    "under-filled only" contract.
+    neighbors. margin=1.0 keeps the strict "under-filled only" contract.
 
-    With ``exact_fallback`` the survivors are driver-materialized
-    anyway. The merge gate (:func:`driver_side`, |Q|·``pool_k`` rows
-    for a pool of per-query width ``pool_k``; None = unbounded) decides
-    whether the per-query probe_k cut runs driver-side on the collected
-    join or as the window plan ahead of the collect; either way the
-    starvation counts see the same rows, the driver materialization
-    stays |Q|·probe_k-bounded, and the filtered base is never
-    collected. Plan gate: tests/test_plans.py::test_batch_filtered_ann_plan_shape."""
+    With ``exact_fallback`` the query block is read once
+    (:func:`collect_query_block`, checking ``dim``): its ids find the
+    starved queries and its rows feed the exact scan. The merge gate
+    (:func:`driver_side`, |Q|·``pool_k`` rows for a pool of per-query
+    width ``pool_k``; None = unbounded) decides whether the survivors'
+    probe_k cut runs on the driver or as the window plan ahead of their
+    collect, so the driver holds |Q|·probe_k rows and never the
+    filtered base. On the driver side, a driver-local pool of at most
+    :data:`SMALL_LOCAL_ROWS` rows is matched against the filtered base
+    by its ids instead of the join. The result is built on the driver
+    (:func:`driver_topk_merge`): reading it runs no Spark job. Plan
+    gate: tests/test_plans.py::test_batch_filtered_ann_plan_shape."""
     spark = pool.sparkSession
     surv = pool.join(filtered_base.select(id_col), id_col).select(
         qid_col, id_col, "dist"
@@ -652,36 +667,44 @@ def filtered_topk_from_pool(
         probe_k = int(math.ceil(float(fallback_margin) * int(k)))
     if not exact_fallback:
         return _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
-    # |Q| is needed for starvation detection anyway — collect it first
-    # so it can also bound the gate's estimate
-    qlist = [int(r[0]) for r in queries.select(qid_col).collect()]
-    est_rows = None if pool_k is None else len(qlist) * int(pool_k)
+    block = collect_query_block(queries, qid_col, qvec_col, dim)
+    if block is None:
+        return empty_topk(spark, id_col, qid_col)
+    qids, qmat = block
+    est_rows = None if pool_k is None else qids.size * int(pool_k)
     if not driver_side("filtered", surv, est_rows):
         surv = _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
-    qx, sids, sd = collect_columns(surv, qid_col, id_col, "dist")
+        qx, sids, sd = collect_columns(surv, qid_col, id_col, "dist")
+    elif pool.isLocal() and est_rows <= SMALL_LOCAL_ROWS:
+        # a small driver-built pool (an HNSW matrix block, the IVF+PQ
+        # mirror, a driver-side merge) is read without a job, and its
+        # ids pick the survivors in one `id IN` scan of the filtered
+        # base, where the join would broadcast it first (2 jobs)
+        qx, sids, sd = collect_columns(pool, qid_col, id_col, "dist")
+        hit = sids[:0]
+        if sids.size:
+            (hit,) = collect_columns(
+                filtered_base.filter(F.col(id_col).isin(np.unique(sids).tolist()))
+                .select(id_col), id_col)
+        m = np.isin(sids, hit)
+        qx, sids, sd = qx[m], sids[m], sd[m]
+    else:
+        qx, sids, sd = collect_columns(surv, qid_col, id_col, "dist")
     g = fast_topk_grouped(qx, sids, sd, probe_k)
     qx, sids, sd = qx[g], sids[g], sd[g]
     uq, cnt = np.unique(qx, return_counts=True)
-    counts = dict(zip(uq.tolist(), cnt.tolist()))
-    need = [q for q in qlist if int(counts.get(q, 0)) < probe_k]
-    if need:
-        keep_m = ~np.isin(qx, np.asarray(need, dtype=np.int64))
-        qx, sids, sd = qx[keep_m], sids[keep_m], sd[keep_m]
-    kept = driver_topk_merge(spark, qx, sids, sd, k, id_col, None, qid_col)
-    if not need:
-        return kept
-    exact = knn_batch(
-        filtered_base,
-        queries.filter(F.col(qid_col).isin(need)),
-        int(k), metric=metric, vec_col=vec_col,
-        id_col=id_col, qid_col=qid_col, qvec_col=qvec_col,
-    )
-    if qid_col != "query_id":
-        # knn_batch's output column is always literal query_id
-        exact = exact.withColumnRenamed("query_id", qid_col)
-    return kept.unionByName(exact).orderBy(
-        qid_col, F.col("dist").asc(), F.col(id_col).asc()
-    )
+    full = uq[cnt >= probe_k]
+    need = ~np.isin(qids, full)
+    if need.any():
+        keep = np.isin(qx, full)
+        exact = knn_batch(filtered_base, qmat[need], int(k), metric=metric,
+                          vec_col=vec_col, id_col=id_col)
+        eq, eids, ed = collect_columns(exact, "query_id", id_col, "dist")
+        # the exact block's query ids are its row positions
+        qx = np.concatenate([qx[keep], qids[need][eq]])
+        sids = np.concatenate([sids[keep], eids])
+        sd = np.concatenate([sd[keep], ed])
+    return driver_topk_merge(spark, qx, sids, sd, k, id_col, None, qid_col)
 
 
 def range_search(

@@ -842,10 +842,11 @@ def test_hnsw_search_filtered_oversample(spark, emb):
         q, 10, filt, ef=60, vec_col="embedding").collect()]
     assert len(set(part) & set(exact)) >= 9
 
-    # selective predicate: only 3 matching rows exist -> exact fallback
+    # selective predicate: only 3 matching rows exist, so the pool's
+    # survivors cannot fill k -> exact fallback
     tiny = emb.filter(F.col("vec_id").isin([7, 8, 9]))
     got = [r["vec_id"] for r in idx.search_filtered(
-        q, 10, tiny, ef=40, max_rounds=1, vec_col="embedding").collect()]
+        q, 10, tiny, ef=40, vec_col="embedding").collect()]
     assert sorted(got) == [7, 8, 9]
 
 
@@ -947,35 +948,6 @@ def test_batch_add_idempotency_token_list_path(spark, tmp_path):
     db.batch_add("t", [[1.0, 2.0]], [{"i": "1"}], idempotency_token="s:1")
     assert db.get_len("t") == 2
     db.close()
-
-
-def test_hnsw_selective_filtered_dispatch_skips_pool(spark, emb):
-    """HNSW twin of the IVF+PQ selectivity dispatch: matches ≤ pool
-    width → zero graph pool passes, exact answer."""
-    from lab_1806_vec_db_spark.index.hnsw import HNSWIndex
-    from pyspark.sql import functions as F
-
-    base = emb.limit(300).cache()
-    idx = HNSWIndex.build(base, metric="l2sqr", vec_col="embedding",
-                          id_col="vec_id", m=8)
-    calls = {"pool": 0}
-    real = idx.search_np
-
-    def spy(*a, **kw):
-        calls["pool"] += 1
-        return real(*a, **kw)
-
-    idx.search_np = spy
-    try:
-        filtered = base.filter(F.col("vec_id") < 2)
-        q = [float(x) for x in base.filter(F.col("vec_id") == 0).first()["embedding"]]
-        rows = idx.search_filtered(q, k=2, filtered_base=filtered,
-                                   vec_col="embedding").collect()
-    finally:
-        idx.search_np = real
-    assert calls["pool"] == 0
-    assert [r["vec_id"] for r in rows] == [0, 1]
-    assert rows[0]["dist"] == 0.0
 
 
 # ---- u8 through the index tiers (scalar.rs:117-119, dynamic_index.rs) -------

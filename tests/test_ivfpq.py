@@ -357,29 +357,6 @@ def test_ivfpq_codes_swap_crash_recovery(spark, emb, tmp_path):
     assert not _os.path.isdir(codes + "__tmp")
 
 
-def test_selective_filtered_dispatch_skips_pool(spark, emb, ivfpq):
-    """A highly selective predicate (matches ≤ pool width) routes
-    straight to the exact filtered scan — the pool pass, full-probe
-    escalation, and fallback would all be wasted work."""
-    calls = {"pool": 0}
-    real = ivfpq.search
-
-    def spy(*a, **kw):
-        calls["pool"] += 1
-        return real(*a, **kw)
-
-    ivfpq.search = spy
-    try:
-        filtered = emb.filter(F.col("vec_id") < 3)  # 3 of 2000 rows
-        q = [float(x) for x in emb.filter(F.col("vec_id") == 1).first()["embedding"]]
-        rows = ivfpq.search_filtered(q, k=2, filtered_base=filtered).collect()
-    finally:
-        ivfpq.search = real
-    assert calls["pool"] == 0, "pool pass ran for a selective predicate"
-    assert [r["vec_id"] for r in rows][0] == 1 and rows[0]["dist"] == 0.0
-    assert len(rows) == 2 and all(r["vec_id"] < 3 for r in rows)
-
-
 def test_local_serve_matches_distributed(spark, emb, qvec):
     """The driver-local mirror (enable_local_serve) must reproduce the
     distributed two-pass plan bit-for-bit — same probes, rounded ADC

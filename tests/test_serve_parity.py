@@ -171,3 +171,46 @@ def test_ivfpq_mirror_batch_jobs(spark, tables):
     by_matrix, matrix_jobs = serve(np.asarray(queries))
     assert (frame_jobs, matrix_jobs) == (1, 0)
     assert len(by_frame) == 4 * K and by_frame == by_matrix
+
+
+def test_local_frame_reads_run_no_job(spark):
+    """A driver-local frame (``isLocal()``: built from Arrow on the
+    driver) is read with ``collect()``, which runs no Spark job, by both
+    ``collect_query_block`` and ``collect_columns``; a frame that is not
+    local takes one Arrow collect. Both reads return the same values."""
+    import pyarrow as pa
+
+    from lab_1806_vec_db_spark.operators.knn import (
+        collect_columns,
+        collect_query_block,
+        driver_topk_merge,
+    )
+
+    q = np.arange(6, dtype=np.float64).reshape(2, 3)
+    local = spark.createDataFrame(pa.table({
+        "query_id": pa.array([4, 9], pa.int64()),
+        "vec": pa.array(q.tolist(), pa.list_(pa.float64())),
+    }))
+    remote = spark.createDataFrame([(4, q[0].tolist()), (9, q[1].tolist())],
+                                   "query_id long, vec array<double>")
+    merged = driver_topk_merge(spark, np.array([0, 0, 1]), np.array([5, 6, 7]),
+                               np.array([0.5, 0.25, 1.0]), 2, "id", None)
+    assert local.isLocal() and merged.isLocal() and not remote.isLocal()
+    sc = spark.sparkContext
+
+    def read(fn):
+        group = f"read_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "frame read")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    (lq, lm), l_jobs = read(lambda: collect_query_block(local, "query_id", "vec", 3))
+    (rq, rm), r_jobs = read(lambda: collect_query_block(remote, "query_id", "vec", 3))
+    cols, m_jobs = read(lambda: collect_columns(merged, "query_id", "id", "dist"))
+    assert (l_jobs, r_jobs, m_jobs) == (0, 1, 0)
+    assert lq.tolist() == rq.tolist() == [4, 9]
+    assert np.array_equal(lm, q) and np.array_equal(rm, q)
+    assert [c.tolist() for c in cols] == [[0, 0, 1], [6, 5, 7], [0.25, 0.5, 1.0]]

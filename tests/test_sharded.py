@@ -169,6 +169,43 @@ def test_vecdb_sharded_tier_dispatch(spark, tmp_path):
     d2.close()
 
 
+def test_legacy_artifact_watermark_from_shards(spark, tmp_path):
+    """A sharded artifact whose meta predates the watermark loads with
+    its largest shard id as the watermark: a current table absorbs
+    nothing at open and keeps no shard graph on the driver, and the
+    next save persists the watermark."""
+    import json
+    import os
+
+    from lab_1806_vec_db_spark.db.vecdb import VecDB
+
+    rng = np.random.default_rng(9)
+    vecs = rng.normal(size=(60, 8))
+    d1 = VecDB(str(tmp_path / "db"), spark=spark)
+    d1.create_table_if_not_exists("t", 8, "l2sqr")
+    d1.batch_add("t", [[float(x) for x in v] for v in vecs],
+                 [{"i": str(i)} for i in range(60)])
+    d1.build_hnsw_index("t", sharded=True, n_shards=3)
+    meta_path = os.path.join(d1._index_path("t", "hnsw"), "meta.json")
+    d1.close()
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["max_committed_id"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+
+    d2 = VecDB(str(tmp_path / "db"), spark=spark)
+    idx = d2._get_index("t", "hnsw")
+    assert idx.max_committed_id == 59
+    assert idx._driver_shards == {}
+    assert sum(idx.shard_counts.values()) == 60
+    res = d2.search("t", [float(x) for x in vecs[7]], k=1, ef=100)
+    assert res[0][0] == {"i": "7"}
+    d2.close()
+    with open(meta_path) as f:
+        assert json.load(f)["max_committed_id"] == 59
+
+
 def test_batch_serve_sees_appends_and_new_shards(spark, tmp_path):
     # regression: (a) batch serving must not miss appended rows — the
     # serve path flushes dirty shards and the executor cache is

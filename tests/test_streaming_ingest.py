@@ -428,6 +428,57 @@ def test_interrupted_tail_sync_resumes_without_double_insert(spark, tmp_path):
     db.close()
 
 
+def test_long_tail_sync_is_range_sorted(spark, tmp_path, monkeypatch):
+    """A tail longer than one chunk is range-sorted across partitions
+    (toLocalIterator then holds one partition at a time on the driver,
+    and the scan stays parallel) and absorbed in ascending, contiguous
+    chunks; a tail within one chunk is read by one scan."""
+    from lab_1806_vec_db_spark.db import vecdb as vecdb_mod
+
+    monkeypatch.setattr(vecdb_mod, "TAIL_CHUNK_ROWS", 8)
+    db = VecDB(str(tmp_path / "db_long_tail"), spark)
+    db.create_table_if_not_exists("t", dim=DIM, dist="l2sqr")
+    rng = np.random.default_rng(29)
+    db.batch_add("t", [_mk_vec(rng) for _ in range(32)],
+                 [{"i": str(i)} for i in range(32)])
+    db.build_hnsw_index("t")
+    idx = db._get_index("t", "hnsw")
+
+    plans: list[str] = []
+    frame_cls = type(db.table_df("t"))  # the session's concrete DataFrame
+    real_iter = frame_cls.toLocalIterator
+
+    def spy_iter(self, *a, **kw):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real_iter(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "toLocalIterator", spy_iter)
+    chunks: list[list[int]] = []
+    real_add = idx.add_batch
+
+    def rec_add(ids, vv, seed=43):
+        chunks.append([int(i) for i in ids])
+        real_add(ids, vv, seed=seed)
+
+    idx.add_batch = rec_add
+    db.batch_add_df("t", spark.createDataFrame(
+        [(_mk_vec(rng),) for _ in range(30)], "vec array<double>"))
+    db._hnsw_tail_sync("t", idx)
+    assert len(plans) == 1
+    assert "rangepartitioning" in plans[0].lower() and "Coalesce" not in plans[0]
+    assert [len(c) for c in chunks] == [8, 8, 8, 6]
+    assert sum(chunks, []) == list(range(32, 62))
+
+    plans.clear()
+    chunks.clear()
+    db.batch_add_df("t", spark.createDataFrame(
+        [(_mk_vec(rng),) for _ in range(5)], "vec array<double>"))
+    db._hnsw_tail_sync("t", idx)
+    assert plans == [] and chunks == [list(range(62, 67))]
+    idx.add_batch = real_add
+    db.close()
+
+
 def test_checkpoint_query_id_reads_uri_checkpoints(spark, tmp_path, seeded_db):
     """Exactly-once tokens must work when the checkpoint is named by a
     filesystem URI (file://, and by the same mechanism hdfs://s3a://):
