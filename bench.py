@@ -759,21 +759,18 @@ def run_matched(spark) -> dict:
     # exact FILTERED ground truth, with the exact-fallback rate (starved
     # queries answered by the flat filtered scan) — the oversample-width
     # claim measured, not argued. The pool comes from the threaded
-    # driver graph kernel (search_many_parallel) and feeds the shared
-    # Spark finisher (filtered_topk_from_pool: predicate pushed into the
-    # scan, pool broadcast) — the same decomposition the serving path
-    # uses; the mapInPandas broadcast-graph variant would replicate the
-    # multi-GB graph into every Python worker at N=1M.
+    # driver graph kernel (search_many_parallel) as driver columns and
+    # feeds the shared finisher (filtered_topk_from_pool: predicate
+    # pushed into the scan, survivors picked by id) — the same
+    # decomposition the serving path (HNSWIndex.search_batch_filtered)
+    # uses.
     if os.environ.get("BENCH_FILTERED", "1") == "1":
-        from lab_1806_vec_db_spark.operators.knn import filtered_topk_from_pool
+        from lab_1806_vec_db_spark.operators.knn import (
+            collect_query_block,
+            filtered_topk_from_pool,
+        )
 
-        qpdf_f = _pd.DataFrame({"query_id": np.arange(n_q, dtype=np.int64),
-                                "embedding": list(queries)})
-        qdf_f = spark.createDataFrame(
-            qpdf_f, schema="query_id long, embedding array<double>"
-        ).coalesce(8).cache()
-        del qpdf_f
-        qdf_f.count()
+        qblock = collect_query_block(queries, "query_id", "embedding")
         sel_efs = {50.0: (240,), 5.0: (240, 800), 0.5: (240, 4000)}
         for sel_pct, thr in ((50.0, 500), (5.0, 50), (0.5, 5)):
             fbase = bdf.filter((F.col("vec_id") % 1000) < thr)
@@ -786,19 +783,10 @@ def run_matched(spark) -> dict:
                 pool_k = max(int(ef_f), 4 * K)
                 ids, dists = hnsw.search_many_parallel(
                     queries, pool_k, ef_f, workers=32)
-                valid = ids >= 0
-                rows_q, rows_c = np.nonzero(valid)
-                pool_pdf = _pd.DataFrame({
-                    "query_id": rows_q.astype(np.int64),
-                    "vec_id": ids[valid].astype(np.int64),
-                    "dist": dists[valid].astype(np.float64),
-                })
-                pool_df = spark.createDataFrame(
-                    pool_pdf, schema="query_id long, vec_id long, dist double"
-                )
+                rows_q, rows_c = np.nonzero(ids >= 0)
+                pool = (rows_q, ids[rows_q, rows_c], dists[rows_q, rows_c])
                 return filtered_topk_from_pool(
-                    pool_df, qdf_f, K, fbase, "vec_id", "l2sqr",
-                    "embedding", qid_col="query_id", qvec_col="embedding",
+                    pool, qblock, K, fbase, "vec_id", "l2sqr", "embedding",
                     exact_fallback=fallback,
                 ).collect()
 
@@ -828,7 +816,6 @@ def run_matched(spark) -> dict:
                     "recall_at_10": round(rec, 4),
                     "exact_fallback_rate": round(fb, 4),
                 })
-        qdf_f.unpersist()
 
     # ---- PQ m=320 4-bit (config/bench_pq_hnsw.toml:18-24) ----------------
     t0 = time.time()
@@ -1109,12 +1096,11 @@ def host_calibration() -> dict:
     measured: it says which kind of host a run came from and, taken at
     both ends of a grid, whether the host degraded mid-run (a host can
     throttle ~2× under sustained all-core load). It is never used to
-    rescale timings. Sort stamps, ~1 s total: a 1M-element f64
-    ``np.sort`` loop on ONE thread (numpy sorts are single-threaded —
-    BLAS GEMM would fan out internally and hide the signal) and the
-    same work fanned over all cores (sort releases the GIL). A
-    degraded window shows the all-core number at ~half its healthy
-    value while the 1-thread number barely moves."""
+    rescale timings. Sort stamp, ~0.3 s: a 1M-element f64 ``np.sort``
+    loop on ONE thread (numpy sorts are single-threaded — BLAS GEMM
+    would fan out internally and hide the signal). It has no all-core
+    twin: one taken first in a fresh process read ~4× low on a 4-core
+    host, so start/end pairs showed drift that did not happen."""
     from concurrent.futures import ThreadPoolExecutor
 
     rng = np.random.default_rng(0)
@@ -1129,13 +1115,6 @@ def host_calibration() -> dict:
     work(6)
     single = 6 / (time.time() - t0)
     w = min(32, os.cpu_count() or 1)
-    with ThreadPoolExecutor(max_workers=w) as tp:
-        # untimed all-core pass first: spins the pool up and lets the
-        # governor ramp, so the timed pass measures steady state
-        list(tp.map(work, [1] * w))
-        t0 = time.time()
-        list(tp.map(work, [3] * w))
-        agg = 3 * w / (time.time() - t0)
 
     # DRAM-bandwidth probe: np.sort is cache-resident and BLIND to
     # memory-bandwidth drift — round 8 re-ran the 1M grid on a host
@@ -1162,7 +1141,6 @@ def host_calibration() -> dict:
         list(tp.map(stream, [2] * w))
         bwa = 2.0 * w / (time.time() - t0)
     return {"sort1m_per_sec_1t": round(single, 2),
-            "sort1m_per_sec_all": round(agg, 2),
             "stream_gibps_1t": round(bw1, 2),
             "stream_gibps_all": round(bwa, 2), "threads": w}
 

@@ -74,7 +74,7 @@ def _cast_u8(x: float) -> int:
 
 
 def _is_plain_hnsw(idx) -> bool:
-    """True for the broadcast-tier single-graph index (knn_pq's
+    """True for the plain single-graph index (knn_pq's
     ADC-steered traversal requires it); False for None or the sharded
     tier (index/sharded.py), which serves through its routed paths."""
     if idx is None:
@@ -768,6 +768,9 @@ class VecDB:
         if len(query) != meta["dim"]:
             raise ValueError("Dimension mismatch")
         q = np.asarray([query], dtype=np.float64)
+        # collect_query_block's rule, inline: this is the point hot path
+        if not np.isfinite(q).all():
+            raise ValueError("Non-finite query value (NaN or inf)")
         tier, idx, pq = self._tier(key, meta, ef)
         if tier == "hnsw_pq":
             ids, dists = idx.search_np(q[0], k, ef, pq=pq)
@@ -1092,7 +1095,7 @@ class VecDB:
     @_locked_per_table
     def _hnsw_tail_sync(self, key: str, idx, force: bool = False) -> None:
         """Absorb table rows the HNSW graph hasn't seen — the one place
-        vectors cross to the driver for the broadcast tier, moved OUT
+        vectors cross to the driver for the plain tier, moved OUT
         of the ingest loop: DataFrame-native appends (``batch_add_df``,
         streaming micro-batches) leave the graph lagging and this sync
         runs at the next serve / ``force_save`` / artifact load,
@@ -1107,7 +1110,7 @@ class VecDB:
         millions of rows without OOMing the driver). Appends are
         id-ordered and deletes clear the index, so the missing rows are
         exactly those above a bound: the graph's largest id on the
-        broadcast tier, the durable watermark on the sharded tier, which
+        plain tier, the durable watermark on the sharded tier, which
         membership-checks per shard (``force=True`` at load time runs
         the watermark probe even when counts look current — a crash
         BETWEEN shard flushes and the root-meta flush leaves counts
@@ -1228,13 +1231,14 @@ class VecDB:
         (metadata_vec_table.rs:84-98). Persisted under
         ``tables/<name>_hnsw`` so it survives restart.
 
-        Tier switch (docs/SCALE.md serving tiers): tables above the
-        broadcast bound (``SPARK_GRAFT_HNSW_BROADCAST_CAP``, default
-        50 M rows) get the sharded layout — per-shard sub-graphs built
-        executor-side + a centroid router (index/sharded.py) — instead
-        of one driver-built broadcast graph. ``sharded=True/False``
-        forces the tier; ``n_shards`` defaults to len/cap so each
-        sub-graph stays within the broadcast tier's envelope."""
+        Tier switch (docs/SCALE.md serving tiers): tables above
+        ``SPARK_GRAFT_HNSW_BROADCAST_CAP`` (default 50 M rows; the name
+        dates from a broadcast serve) get the sharded layout —
+        per-shard sub-graphs built executor-side + a centroid router
+        (index/sharded.py) — instead of one driver-built, driver-served
+        graph. ``sharded=True/False`` forces the tier; ``n_shards``
+        defaults to len/cap so each sub-graph stays within the plain
+        tier's envelope."""
         meta = self._meta(key)
         if meta["has_hnsw"]:
             return

@@ -1,4 +1,4 @@
-"""HNSW graph index — chunked-parallel build + batched broadcast serving.
+"""HNSW graph index — chunked-parallel build + driver-side batched serving.
 
 Reference semantics (/root/reference/src/index_algorithm/hnsw_index.rs):
 - level sampling: ``floor(−ln U · 1/ln M)`` (hnsw_index.rs:112-119);
@@ -31,13 +31,18 @@ Spark design:
   or, without a toolchain, on the serial batched-numpy lockstep kernel
   (index/beam.py) — the fallback and test oracle. The link phase
   applies the k-bounded candidate lists serially.
-- **serve**: broadcast the compact graph (flat int32 link arrays +
-  vectors) and run the *batched* beam kernel inside ``mapInPandas``
-  over the queries DataFrame — queries are the parallel axis
-  (examples/bench.rs:414-417), zero shuffle. The kernel
-  (index/beam.py) expands one frontier node per live query per wave,
-  so each wave is a few large numpy gathers instead of per-query
-  Python loops.
+- **serve**: on the driver, against the one in-RAM graph, as the
+  reference serves (hnsw_index.rs:614-634). A point query is one
+  compiled-kernel call; a batch (``search_batch``, a DataFrame or a
+  matrix block, read once by ``operators/knn.py::collect_query_block``)
+  fans the block over a persistent thread pool — queries are the
+  parallel axis, the reference's rayon loop (examples/bench.rs:414-417)
+  — and returns a driver-built frame, so the only Spark job is the
+  read of a DataFrame block. Without a toolchain the batched numpy
+  kernel (index/beam.py) serves instead: it expands one frontier node
+  per live query per wave, so each wave is a few large numpy gathers
+  instead of per-query Python loops. Past one driver's memory the
+  sharded tier (index/sharded.py) takes over.
 
 Deviations (documented): reverse-link additions from one chunk are
 applied per neighbor in a single batched shrink instead of one shrink
@@ -54,7 +59,7 @@ import json
 import logging
 import os
 import time
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +71,7 @@ from lab_1806_vec_db_spark.index.beam import (
     greedy_descent_batch,
 )
 from lab_1806_vec_db_spark.operators.knn import (
+    QueryBlock,
     collect_query_block,
     driver_topk_merge,
     empty_topk,
@@ -116,12 +122,12 @@ def _release_pools(holder: dict) -> None:
 
 
 class _Graph:
-    """Plain-array graph state shared by build and (broadcast) serve.
+    """Plain-array graph state shared by build and serve.
 
     links[level] is an (n, cap) int32 array with -1 padding — flat
-    arrays, not objects, so the broadcast is a few contiguous buffers
-    (the Spark analogue of the reference's compact link vectors,
-    hnsw_index.rs:136-147)."""
+    arrays, not objects, so a saved graph is a few contiguous buffers
+    and the compiled kernel reads them zero-copy (the analogue of the
+    reference's compact link vectors, hnsw_index.rs:136-147)."""
 
     def __init__(self, n: int, m: int):
         self.M = m
@@ -339,7 +345,7 @@ def _chunk_candidates(
 
 
 class HNSWIndex:
-    """Chunk-parallel-built, broadcast-served HNSW graph."""
+    """Chunk-parallel-built, driver-served HNSW graph."""
 
     def __init__(
         self,
@@ -371,23 +377,15 @@ class HNSWIndex:
         # rows). The finalizer closes over a mutable holder, never over
         # self (that would make the index immortal); close_pool() keeps
         # the holder in sync.
+        import threading
         import weakref
 
         self._pool_holder: dict = {"tpool": None}
+        self._pool_lock = threading.Lock()
         weakref.finalize(self, _release_pools, self._pool_holder)
         # flattened C-contiguous graph views for the compiled kernel
         # (ckernel.py); built lazily, invalidated by add_batch
         self._c_state: dict | None = None
-        # cached serving broadcast for search_batch: (pq object, pq
-        # codes frame, broadcast, owning SparkContext) — re-broadcasting
-        # the whole graph payload per batch is a per-call cost
-        # proportional to the index size (GBs at the broadcast-tier
-        # ceiling); invalidated by add_batch. Identity (`is`) holds
-        # strong refs so an id() can't be recycled onto a new PQTable,
-        # the codes-frame ref detects an in-place codes append, and the
-        # context ref detects a recreated SparkSession (the old
-        # broadcast would fail at job time)
-        self._bc_cache: tuple[object, object, object, object] | None = None
 
     # ---- build (A11-A12, W4) ---------------------------------------------
 
@@ -834,9 +832,8 @@ class HNSWIndex:
         query-independent; materializing them is a Spark action, so
         callers must do this once before any thread fan-out).
         Keyed by the pq OBJECT and its codes frame via ``is`` (strong
-        refs — same identity contract as the serving-broadcast cache):
-        an id()-keyed entry could serve stale codes after gc id reuse
-        or an in-place codes append."""
+        refs): an id()-keyed entry could serve stale codes after gc id
+        reuse or an in-place codes append."""
         from lab_1806_vec_db_spark.index.pq import aligned_codes
 
         c = self._pq_cache
@@ -857,7 +854,7 @@ class HNSWIndex:
         ``steer=True`` forces the steered kernel (parity tests, forced
         A/Bs); ``steer=False`` disables it.
 
-        The Spark batch path (search_batch) does NOT use this gate:
+        The batch serve (search_batch) does NOT use this gate:
         there the LUT build amortizes over the whole query batch and
         steering wins at every measured scale — the asymmetry is
         documented there with the round-13 A/B numbers. A logical
@@ -968,14 +965,16 @@ class HNSWIndex:
         serve rows 1.2-1.6× (round-8 A/B on a shared artifact)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        tp = getattr(self, "_tpool", None)
-        if tp is None or self._tpool_w != w:
-            if tp is not None:
-                tp.shutdown(wait=True)
-            tp = ThreadPoolExecutor(max_workers=w)
-            self._tpool = tp
-            self._tpool_w = w
-            self._pool_holder["tpool"] = tp
+        # concurrent batches share the pool: one creates it
+        with self._pool_lock:
+            tp = getattr(self, "_tpool", None)
+            if tp is None or self._tpool_w != w:
+                if tp is not None:
+                    tp.shutdown(wait=True)
+                tp = ThreadPoolExecutor(max_workers=w)
+                self._tpool = tp
+                self._tpool_w = w
+                self._pool_holder["tpool"] = tp
         return tp
 
     def search_many_parallel(
@@ -992,9 +991,8 @@ class HNSWIndex:
         pool: queries are the parallel axis, and the compiled kernel
         releases the GIL, so threads share the graph and vectors with
         zero serialization. This is the in-memory serving regime the
-        reference benches (a rayon par_iter over queries); the Spark
-        ``search_batch`` path is the same kernel fanned over executor
-        tasks instead.
+        reference benches (a rayon par_iter over queries), and the body
+        of :meth:`search_batch`.
 
         When the compiled kernel cannot serve the block (no toolchain,
         or cosine with PQ steering) or the block is too small to split,
@@ -1081,7 +1079,7 @@ class HNSWIndex:
         like the flat path (id, dist). Runs on the driver — serving a
         point query from in-memory state, the reference's latency model;
         no Spark job at all."""
-        spark = self.base.sparkSession if self.base is not None else SparkSession.getActiveSession()
+        spark = self._spark()
         ids, dists = self.search_np(np.asarray(list(query)), k, ef)
         rows = [(int(i), float(d)) for i, d in zip(ids, dists)
                 if upper_bound is None or d <= upper_bound]
@@ -1126,21 +1124,22 @@ class HNSWIndex:
         fallback_margin: float = 1.0,
     ) -> DataFrame:
         """Oversample-and-filter: each query's max(ef, oversample·k)
-        graph pool (:meth:`search_batch`) goes through the finisher
-        every batch tier shares (operators/knn.py::
-        filtered_topk_from_pool): a join against the predicate-filtered
-        base keeps k survivors per query, and queries the pool cannot
-        fill are answered by the exact filtered scan."""
+        graph pool (:meth:`search_batch`'s serve, kept on the driver as
+        columns) goes through the finisher every batch tier shares
+        (operators/knn.py::filtered_topk_from_pool): the pool ids that
+        pass the predicate keep k survivors per query, and queries the
+        pool cannot fill are answered by the exact filtered scan. The
+        block is read once."""
+        spark = self._spark()
+        block = collect_query_block(queries, qid_col, qvec_col, self.dim)
+        if block is None:
+            return empty_topk(spark, self.id_col, qid_col)
         pool_k = max(int(ef or 0), int(oversample) * int(k), int(k))
-        pool = self.search_batch(
-            queries, k=pool_k, ef=max(pool_k, int(ef or 0)),
-            qid_col=qid_col, qvec_col=qvec_col,
-        )
+        pool = self._serve_block(block, pool_k, max(pool_k, int(ef or 0)))
         return filtered_topk_from_pool(
-            pool, queries, k, filtered_base, self.id_col, self.metric,
-            vec_col, qid_col=qid_col, qvec_col=qvec_col,
-            exact_fallback=exact_fallback, fallback_margin=fallback_margin,
-            pool_k=pool_k, dim=self.dim,
+            pool, block, k, filtered_base, self.id_col, self.metric,
+            vec_col, qid_col=qid_col, exact_fallback=exact_fallback,
+            fallback_margin=fallback_margin, pool_k=pool_k,
         )
 
     @property
@@ -1148,6 +1147,12 @@ class HNSWIndex:
         """The vector width; None for an empty graph, whose width is
         unknown."""
         return self.vecs.shape[1] if self.vecs.ndim == 2 else None
+
+    def _spark(self) -> SparkSession:
+        # the session the builder made, also in a thread that did not
+        # make it (the JVM's active session is thread-local)
+        return (self.base.sparkSession if self.base is not None
+                else SparkSession.active())
 
     def search_batch(
         self,
@@ -1160,142 +1165,54 @@ class HNSWIndex:
         pq=None,
         steer: bool | None = None,
     ) -> DataFrame:
-        """Broadcast the graph, run the batched beam kernel inside
-        mapInPandas over the queries DataFrame — queries are the
-        parallel axis (bench.rs:414-417), no shuffle of anything but the
-        k-bounded results.
+        """Batch kNN served on the driver, the reference's in-process
+        model (a rayon loop over queries against one in-RAM graph,
+        bench.rs:414-417): the block, a DataFrame or a driver-side
+        matrix, is read once (:func:`operators.knn.collect_query_block`,
+        which checks its width and values), fanned over threads by
+        :meth:`search_many_parallel`, and returned as a driver-built
+        ``(qid_col, id, dist)`` frame. The only Spark jobs are the read
+        of a DataFrame block that is not driver-local and, once per PQ
+        codes frame, the read of the aligned codes (:meth:`_codes_for`).
 
         ``pq``: a trained PQTable → the knn_pq combined path: ADC
         distances steer the traversal, the ef pool is exact-re-ranked
-        in-task (hnsw_index.rs:672-696). Steering policy is
-        DELIBERATELY asymmetric to the driver point paths
-        (_auto_steer_pq): the batch path steers whenever ``pq`` is
-        given, at every scale, because the per-query LUT build
-        amortizes over the whole query batch inside one kernel call —
-        the round-13 interleaved A/B measured the auto-dropped exact
-        kernel at 1.92 s vs 0.80 s steered on the cache-resident
-        sf-suite row (hnsw_pq_ef120; OPTIMIZATION_r13.md), i.e. the
-        driver paths' byte gate inverts here.
-        ``steer=False`` disables steering (then this is the plain
-        exact-kernel serve); both variants exact-re-rank the ef pool,
-        so distances are exact either way. PATH-DEPENDENCE CAVEAT: a
-        point query served through ``search``/``search_np`` below
-        ``ADC_STEER_MIN_BYTES`` traverses UNsteered, so the same
-        logical query can return a (slightly) different candidate set
-        there than on this always-steered batch path — recall of the
-        steered batch is gated vs the exact serve in
-        tests/test_indexes.py::test_hnsw_batch_steered_recall_floor.
-
-        A driver-side matrix block is served on the driver instead
-        (:meth:`_search_block`), with no Spark job."""
-        if steer is False:
-            pq = None
-        if not isinstance(queries, DataFrame):
-            return self._search_block(queries, k, ef, qid_col, upper_bound, pq)
-        spark = queries.sparkSession
-        sc = spark.sparkContext
-        # cache hit requires the SAME pq object (strong ref, `is` — an
-        # id() key could collide after gc), the SAME codes frame (a
-        # codes append swaps pq.codes, so `is` detects it), and the
-        # SAME live SparkContext (a recreated session invalidates the
-        # old broadcast)
-        cached = self._bc_cache
-        if (
-            cached is not None
-            and cached[0] is pq
-            and (pq is None or cached[1] is pq.codes)
-            and cached[3] is sc
-        ):
-            bc = cached[2]
-        else:
-            pq_payload = None
-            if pq is not None:
-                from lab_1806_vec_db_spark.index.pq import aligned_codes
-
-                codes_np = aligned_codes(pq, self.ids)
-                pq_payload = (codes_np, pq.codebooks, pq.groups, pq.n_bits)
-            payload = (self.ids, self.vecs, self.metric,
-                       self.graph.levels, self.graph.links, self.graph.counts,
-                       self.graph.entry, self.graph.max_level, self.graph.M,
-                       pq_payload)
-            self._destroy_bc()
-            bc = sc.broadcast(payload)
-            self._bc_cache = (pq, pq.codes if pq is not None else None, bc, sc)
-        id_col = self.id_col
-        k_ = int(k)
-        ef_ = ef
-        ub = upper_bound
-
-        def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            from lab_1806_vec_db_spark.functions.arrowvec import (
-                knn_schema,
-                result_batch,
-                vec_matrix,
-            )
-            from lab_1806_vec_db_spark.index.pq import build_lookup_batch
-
-            ids, vecs, metric, levels, links, counts, entry, max_level, m, pqp = bc.value
-            g = _Graph(1, m)
-            g.levels, g.links, g.counts, g.entry, g.max_level = levels, links, counts, entry, max_level
-            idx = HNSWIndex(ids, vecs, g, metric)
-            out_schema = knn_schema(id_col)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                sch = rb.schema
-                qids = rb.column(sch.get_field_index(qid_col)).to_numpy(
-                    zero_copy_only=False)
-                qmat = vec_matrix(rb.column(sch.get_field_index(qvec_col)),
-                                  dtype=vecs.dtype)
-                adc = None
-                if pqp is not None:
-                    codes_np, codebooks, groups, n_bits = pqp
-                    lut, sq, qn = build_lookup_batch(qmat, codebooks, groups, n_bits, metric)
-                    adc = ADCPairDist(codes_np, lut, sq, qn)
-                rid, rd = idx._kernel_search(qmat, k_, ef_, adc=adc)
-                valid = rid >= 0
-                if ub is not None:
-                    valid &= rd <= ub
-                rows, cols = np.nonzero(valid)
-                if rows.size:
-                    yield result_batch(
-                        out_schema,
-                        query_id=qids[rows],
-                        **{id_col: rid[rows, cols]},
-                        dist=rd[rows, cols],
-                    )
-
-        # each query is answered completely inside one task (the graph is
-        # broadcast), so results are already exact top-k ascending per
-        # query — no cross-partition merge window, no shuffle at all
-        out = queries.select(qid_col, qvec_col).repartition(
-            max(queries.sparkSession.sparkContext.defaultParallelism, 1)
-        ).mapInArrow(run, schema=f"query_id long, {id_col} long, dist double")
-        if qid_col != "query_id":
-            out = out.withColumnRenamed("query_id", qid_col)
-        return out
-
-    def _search_block(
-        self, queries: np.ndarray, k: int, ef: int | None, qid_col: str,
-        upper_bound: float | None, pq,
-    ) -> DataFrame:
-        """:meth:`search_batch` of a driver-side matrix block
-        (:func:`operators.knn.collect_query_block` checks its width):
-        :meth:`search_many_parallel` with the tasks' kernel, steering
-        rule and beam width, into a driver-built result frame."""
-        spark = (self.base.sparkSession if self.base is not None
-                 else SparkSession.active())
-        block = collect_query_block(queries, qid_col, "vec", self.dim)
+        (hnsw_index.rs:672-696). Steering policy is DELIBERATELY
+        asymmetric to the point paths (_auto_steer_pq): a batch steers
+        whenever ``pq`` is given, at every scale, because the per-query
+        LUT build amortizes over the whole block — the round-13
+        interleaved A/B measured the auto-dropped exact kernel at 1.92 s
+        vs 0.80 s steered on the cache-resident sf-suite row
+        (hnsw_pq_ef120; OPTIMIZATION_r13.md), i.e. the point paths'
+        byte gate inverts here. ``steer=False`` disables steering (then
+        this is the plain exact-kernel serve); both variants
+        exact-re-rank the ef pool, so distances are exact either way.
+        PATH-DEPENDENCE CAVEAT: a point query served through
+        ``search``/``search_np`` below ``ADC_STEER_MIN_BYTES`` traverses
+        UNsteered, so the same logical query can return a (slightly)
+        different candidate set there than on this always-steered batch
+        path — recall of the steered batch is gated vs the exact serve
+        in tests/test_indexes.py::test_hnsw_batch_steered_recall_floor."""
+        spark = self._spark()
+        block = collect_query_block(queries, qid_col, qvec_col, self.dim)
         if block is None:
             return empty_topk(spark, self.id_col, qid_col)
+        pool = self._serve_block(block, k, ef, None if steer is False else pq)
+        return driver_topk_merge(spark, *pool, int(k), self.id_col,
+                                 upper_bound, qid_col)
+
+    def _serve_block(
+        self, block: QueryBlock, k: int, ef: int | None, pq=None,
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """A checked block's per-query top-``k`` as driver columns
+        (query id, id, dist): :meth:`search_many_parallel` with the
+        batch steering rule (steer whenever ``pq`` is given) and beam
+        width 1."""
         qids, qmat = block
-        # steer=True: the tasks steer whenever pq is given (no byte gate)
         gids, dists = self.search_many_parallel(qmat, k, ef, pq=pq, steer=True,
                                                 beam_width=1)
         rows, cols = np.nonzero(gids >= 0)
-        return driver_topk_merge(spark, qids[rows], gids[rows, cols],
-                                 dists[rows, cols], int(k), self.id_col,
-                                 upper_bound, qid_col)
+        return qids[rows], gids[rows, cols], dists[rows, cols]
 
     # ---- persistence (S8: hnsw_index.rs:644-670 saves links w/o vectors) --
 
@@ -1452,13 +1369,4 @@ class HNSWIndex:
         )
         self._pq_cache = None  # aligned codes no longer cover every id
         self._c_state = None  # flattened views hold the pre-add graph
-        self._destroy_bc()  # the serving broadcast holds the pre-add graph
         self.dirty = True
-
-    def _destroy_bc(self) -> None:
-        if self._bc_cache is not None:
-            try:
-                self._bc_cache[2].unpersist()
-            except Exception:
-                pass
-            self._bc_cache = None

@@ -573,10 +573,10 @@ def finish_adc(
 def aligned_codes(pq: "PQTable", ids: np.ndarray) -> np.ndarray:
     """Collect + unpack the codes table into an (N × m) uint8 matrix
     row-aligned with ``ids`` (an HNSW index's id order) — the
-    driver-resident companion of the broadcast graph for the knn_pq
-    combined path (hnsw_index.rs:672-696). At m bytes per row it is
-    smaller than the graph's link arrays, so it rides the same bounded
-    broadcast tier (docs/SCALE.md)."""
+    driver-resident companion of the graph for the knn_pq combined
+    path (hnsw_index.rs:672-696). At m bytes per row it is smaller than
+    the graph's link arrays, so it fits wherever the plain tier's graph
+    does (docs/SCALE.md)."""
     ids = np.asarray(ids, dtype=np.int64)
     pdf = pq.codes.select(pq.id_col, "code").toPandas()
     buf = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8).reshape(len(pdf), -1)

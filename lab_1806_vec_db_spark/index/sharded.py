@@ -1,8 +1,9 @@
 """Sharded HNSW — the >50 M-row serving tier (docs/SCALE.md "HNSW
 (latency serving)").
 
-The broadcast tier tops out where one graph no longer ships to every
-executor (~50 M rows × 16 links ≈ 3.2 GB). Past that, this module
+The plain tier (index/hnsw.py) serves one graph on the driver and tops
+out where that graph no longer fits it (~50 M rows × 16 links ≈ 3.2 GB
+of links). Past that, this module
 implements the layout SCALE.md promises: **IVF over graph shards** —
 k-means centroids route rows to spatially-coherent shards, each shard
 carries its own HNSW sub-graph built *inside an executor task*, and a
@@ -19,12 +20,14 @@ Scale shape:
   shuffle on shard_id, then every shard builds its sub-graph in
   parallel inside `applyInPandas` — no graph ever visits the driver.
   A shard must fit one executor's memory: that is the sizing rule
-  (n_shards ≈ N / broadcast-tier-capacity), not a scalability limit.
-- **Serve**: routing is map-only (centroid matrix is tiny and
-  broadcast); the probe explode carries n_probes rows per query into
-  ONE shuffle keyed by shard_id; each task loads its shard graph once
-  (executor-local cache) and answers all its queries; the global
-  merge is a k-bounded window — the same merge the flat path uses.
+  (n_shards ≈ N / plain-tier capacity), not a scalability limit.
+- **Serve**: the query block is read once on the driver
+  (operators/knn.py::collect_query_block) and routed there (the
+  centroid matrix is tiny); only (query index, shard_id) rows, up to
+  n_probes per query, go into ONE shuffle keyed by shard_id, with the
+  block broadcast; each task loads its shard graph once
+  (executor-local cache) and answers all its queries; the global cut
+  is ``merge_topk`` — the merge gate the scan tiers share.
 - **Storage**: `path` must be visible to all executors (local FS in
   local mode; a shared filesystem / object store on a cluster —
   exactly where the table's Parquet already lives).
@@ -34,21 +37,20 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lab_1806_vec_db_spark.index.hnsw import HNSWIndex
 from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans, sample_rows
 from lab_1806_vec_db_spark.operators.knn import (
-    _topk_per_query,
+    QueryBlock,
     collect_query_block,
     empty_topk,
     filtered_topk_from_pool,
+    merge_topk,
 )
 
 #: executor-local cache of loaded shard graphs, keyed by shard dir.
@@ -204,7 +206,7 @@ class ShardedHNSWIndex:
     def save(self, path: str | None = None) -> None:
         """Flush root metadata plus any dirty driver-loaded shard
         graphs (the append path dirty-marks, VecDB's force_save/close
-        flushes — the same deferred policy as the broadcast tier)."""
+        flushes — the same deferred policy as the plain tier)."""
         if path is not None and path != self.path:
             raise ValueError("sharded index artifacts are bound to their build path")
         for sid, shard in self._driver_shards.items():
@@ -270,7 +272,7 @@ class ShardedHNSWIndex:
         order = np.lexsort((ids, dists))[:k]
         return ids[order], dists[order]
 
-    # ---- serve: batch (one shuffle on shard_id) --------------------------
+    # ---- serve: batch (driver routing, one shuffle on shard_id) ---------
 
     def search_batch_filtered(
         self,
@@ -287,27 +289,31 @@ class ShardedHNSWIndex:
         fallback_margin: float = 1.0,
     ) -> DataFrame:
         """Batch filtered ANN on the >50 M sharded tier: the routed
-        per-shard pool pass (one shard_id shuffle) produces each
-        query's max(ef, oversample·k) candidates, then the shared
-        finisher (operators/knn.py::filtered_topk_from_pool) joins the
-        pool against the predicate-filtered scan and answers starved
-        queries exactly — the same contract as the broadcast-graph and
-        IVF+PQ tiers, so filtered search survives the tier switch."""
+        per-shard pool (:meth:`search_batch`) produces each query's
+        max(ef, oversample·k) candidates, then the shared finisher
+        (operators/knn.py::filtered_topk_from_pool) joins the pool
+        against the predicate-filtered scan and answers starved queries
+        exactly — the same contract as the plain-graph and IVF+PQ
+        tiers, so filtered search survives the tier switch. The block is
+        read once and handed to both."""
+        block = collect_query_block(queries, qid_col, qvec_col,
+                                    self.model.centroids.shape[1])
+        if block is None:
+            return empty_topk(SparkSession.active(), self.id_col, qid_col)
         pool_k = max(int(ef or 0), int(oversample) * int(k), int(k))
         pool = self.search_batch(
-            queries, k=pool_k, ef=max(pool_k, int(ef or 0)),
-            n_probes=n_probes, qid_col=qid_col, qvec_col=qvec_col,
+            block, k=pool_k, ef=max(pool_k, int(ef or 0)),
+            n_probes=n_probes, qid_col=qid_col,
         )
         return filtered_topk_from_pool(
-            pool, queries, k, filtered_base, self.id_col, self.metric,
-            vec_col, qid_col=qid_col, qvec_col=qvec_col,
-            exact_fallback=exact_fallback, fallback_margin=fallback_margin,
-            pool_k=pool_k, dim=self.model.centroids.shape[1],
+            pool, block, k, filtered_base, self.id_col, self.metric,
+            vec_col, qid_col=qid_col, exact_fallback=exact_fallback,
+            fallback_margin=fallback_margin, pool_k=pool_k,
         )
 
     def search_batch(
         self,
-        queries: DataFrame | np.ndarray,
+        queries: DataFrame | np.ndarray | QueryBlock,
         k: int,
         ef: int | None = None,
         n_probes: int = 4,
@@ -315,12 +321,13 @@ class ShardedHNSWIndex:
         qid_col: str = "query_id",
         upper_bound: float | None = None,
     ) -> DataFrame:
-        """Route (map-only, broadcast centroids) → explode to n_probes
-        (query, shard) rows → ONE shuffle on shard_id → each task
-        serves its shard from the executor-local graph cache → global
-        k-bounded window merge. The shuffle carries n_probes rows per
-        query; result traffic is k rows per (query, shard). A driver-side
-        matrix block enters as a driver-local frame."""
+        """Read the block once (:func:`operators.knn.collect_query_block`)
+        and rank its centroids on the driver → a local frame of
+        (query index, shard_id) rows for the live probed shards, with
+        the block broadcast → ONE shuffle on shard_id → each task serves
+        its shard from the executor-local graph cache (shards do not fit
+        the driver) → the global cut (:func:`operators.knn.merge_topk`,
+        k rows per routed pair)."""
         # executors serve from the on-disk shard files: flush any
         # dirty driver-side shards first so appended rows (and shards
         # newly materialized by add_batch) are visible — without this,
@@ -328,71 +335,41 @@ class ShardedHNSWIndex:
         # brand-new shard has no directory to load at all
         if self.dirty:
             self.save()
-        if not isinstance(queries, DataFrame):
-            # the session the builder made, also in a thread that did not
-            # make it (the JVM's active session is thread-local)
-            spark = SparkSession.active()
-            block = collect_query_block(queries, qid_col, qvec_col,
-                                        self.model.centroids.shape[1])
-            if block is None:
-                return empty_topk(spark, self.id_col, qid_col)
-            queries = spark.createDataFrame(
-                pa.table({qid_col: pa.array(block[0]),
-                          qvec_col: pa.array(list(block[1]), pa.list_(pa.float64()))}),
-                schema=f"{qid_col} long, {qvec_col} array<double>",
-            )
-        spark = queries.sparkSession
+        # the session the builder made, also in a thread that did not
+        # make it (the JVM's active session is thread-local)
+        spark = SparkSession.active()
+        block = collect_query_block(queries, qid_col, qvec_col,
+                                    self.model.centroids.shape[1])
+        if block is None:
+            return empty_topk(spark, self.id_col, qid_col)
+        qids, qmat = block
+        probes = self.model.rank_centroids_batch(qmat, int(n_probes))
+        live = [sid for sid, n in self.shard_counts.items() if n > 0]
+        qx, col = np.nonzero(np.isin(probes, live))
+        routed = spark.createDataFrame(pa.table({
+            "qx": pa.array(qx, pa.int64()),
+            "shard_id": pa.array(probes[qx, col], pa.int32()),
+        }))
+        bc = spark.sparkContext.broadcast((qids, qmat, self.path))
         id_col = self.id_col
-        bc = spark.sparkContext.broadcast((
-            self.model.centroids, self.metric, self.path,
-            [sid for sid, n in self.shard_counts.items() if n > 0],
-        ))
-        n_probes_ = int(n_probes)
         ef_ = ef
         k_ = int(k)
 
-        def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            centroids, metric, _, live = bc.value
-            model = KMeansModel(centroids=centroids, metric=metric)
-            live_set = set(live)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                qmat = np.asarray(pdf[qvec_col].to_list(), dtype=np.float64)
-                probes = model.rank_centroids_batch(qmat, n_probes_)
-                out_qid, out_vec, out_sid = [], [], []
-                for i in range(len(pdf)):
-                    for sid in probes[i]:
-                        if int(sid) in live_set:
-                            out_qid.append(pdf[qid_col].iloc[i])
-                            out_vec.append(pdf[qvec_col].iloc[i])
-                            out_sid.append(int(sid))
-                yield pd.DataFrame({qid_col: out_qid, qvec_col: out_vec,
-                                    "shard_id": out_sid})
-
-        routed = queries.select(qid_col, qvec_col).mapInPandas(
-            route, schema=f"{qid_col} long, {qvec_col} array<double>, shard_id int"
-        )
-
         def serve(pdf: pd.DataFrame) -> pd.DataFrame:
-            _, _, root, _ = bc.value
-            sid = int(pdf["shard_id"].iloc[0])
-            shard = _cached_graph(_shard_dir(root, sid))
-            qmat = np.asarray(pdf[qvec_col].to_list(), dtype=np.float64)
-            gids, dists = shard.search_many(qmat, k_, ef_)
-            qids, out_ids, out_d = [], [], []
-            for i in range(qmat.shape[0]):
-                keep = gids[i] >= 0
-                qids.extend([int(pdf[qid_col].iloc[i])] * int(keep.sum()))
-                out_ids.extend(gids[i][keep].tolist())
-                out_d.extend(dists[i][keep].tolist())
-            return pd.DataFrame({qid_col: qids, id_col: out_ids, "dist": out_d})
+            bqids, bqmat, root = bc.value
+            shard = _cached_graph(_shard_dir(root, int(pdf["shard_id"].iloc[0])))
+            qx = pdf["qx"].to_numpy()
+            gids, dists = shard.search_many(bqmat[qx], k_, ef_)
+            rows, cols = np.nonzero(gids >= 0)
+            return pd.DataFrame({qid_col: bqids[qx[rows]],
+                                 id_col: gids[rows, cols],
+                                 "dist": dists[rows, cols]})
 
         per_shard = routed.groupBy("shard_id").applyInPandas(
             serve, schema=f"{qid_col} long, {id_col} long, dist double"
         )
-
-        return _topk_per_query(per_shard, k_, id_col, upper_bound, qid_col=qid_col)
+        return merge_topk(per_shard, k_, id_col, upper_bound, qx.size * k_,
+                          tier="sharded", qid_col=qid_col)
 
     def absorb_tail(self, cand_ids: np.ndarray, cand_vecs: np.ndarray,
                     seed: int = 43) -> int:
@@ -446,7 +423,7 @@ class ShardedHNSWIndex:
         there; shards are dirty-marked and flushed by save() — adds
         never invalidate the index (the reference's invariant,
         README.md:45). Loading one shard on the driver is the same
-        memory envelope as the broadcast tier's whole graph."""
+        memory envelope as the plain tier's whole graph."""
         new_vecs = np.asarray(new_vecs, dtype=np.float64)
         new_ids = np.asarray(new_ids, dtype=np.int64)
         labels = self.model.assign(new_vecs)

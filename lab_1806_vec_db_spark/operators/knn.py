@@ -45,6 +45,7 @@ from __future__ import annotations
 import logging
 import math
 from collections.abc import Iterator, Sequence
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -189,23 +190,37 @@ def read_arrow(frame: DataFrame, *cols: str) -> "pa.Table":
     return sel.toArrow()
 
 
+class QueryBlock(NamedTuple):
+    """A query block :func:`collect_query_block` has read and checked:
+    query ids (int64) and the (n × dim) query matrix (f64)."""
+
+    qids: np.ndarray
+    qmat: np.ndarray
+
+
 def collect_query_block(
-    queries: DataFrame | np.ndarray, qid_col: str, qvec_col: str,
+    queries: DataFrame | np.ndarray | QueryBlock, qid_col: str, qvec_col: str,
     dim: int | None = None,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """The one place a query block enters a batch plan, as (qids int64,
-    qmat f64). ``queries`` is either a ``(qid_col, qvec_col)``
-    DataFrame, driver-collected through :func:`read_arrow` (the Arrow
-    doubles ARE the stored doubles), or a driver-side (n × dim) matrix,
-    taken as is with query ids ``0..n-1`` and no Spark job — the block
-    a point ``search`` hands its tier's batch plan.
+) -> QueryBlock | None:
+    """The one place a query block enters a batch plan. ``queries`` is
+    either a ``(qid_col, qvec_col)`` DataFrame, driver-collected through
+    :func:`read_arrow` (the Arrow doubles ARE the stored doubles), or a
+    driver-side (n × dim) matrix, taken as is with query ids ``0..n-1``
+    and no Spark job — the block a point ``search`` hands its tier's
+    batch plan. A :class:`QueryBlock` this function already returned
+    passes through unread, so a serve that hands its block to a second
+    stage (a filtered pool and its finisher) reads a DataFrame once.
 
     The shared guard of every batch tier: returns None for an empty
     block (callers answer with :func:`empty_topk`), raises above
-    :data:`MAX_QUERIES` rows, and raises ``ValueError("Dimension
-    mismatch")`` when ``dim`` is given and the block's width differs."""
+    :data:`MAX_QUERIES` rows, raises ``ValueError("Dimension
+    mismatch")`` when ``dim`` is given and the block's width differs,
+    and raises on a NaN or infinite query value, which has no nearest
+    neighbour."""
     from lab_1806_vec_db_spark.functions.arrowvec import vec_matrix
 
+    if isinstance(queries, QueryBlock):
+        return queries
     if isinstance(queries, DataFrame):
         tbl = read_arrow(queries, qid_col, qvec_col)
         qids = tbl.column(qid_col).to_numpy(zero_copy_only=False).astype(
@@ -227,7 +242,9 @@ def collect_query_block(
         )
     if dim is not None and qmat.shape[1] != int(dim):
         raise ValueError("Dimension mismatch")
-    return qids, qmat
+    if not np.isfinite(qmat).all():
+        raise ValueError("Non-finite query value (NaN or inf)")
+    return QueryBlock(qids, qmat)
 
 
 def empty_topk(spark, id_col: str, qid_col: str = "query_id") -> DataFrame:
@@ -552,21 +569,27 @@ def driver_topk_merge(
     plan (:func:`fast_topk_grouped`), the threshold applied after the
     cut, and the result returned as a local DataFrame sorted
     (qid, dist, id) — no wide exchange, no window sort."""
-    import pyarrow as pa
-
     g = fast_topk_grouped(qx, ids, d, int(k))
     qx, ids, d = qx[g], ids[g], d[g]
     if upper_bound is not None:
         m = d <= float(upper_bound)
         qx, ids, d = qx[m], ids[m], d[m]
     o = np.lexsort((ids, d, qx))  # (qid, dist, id) — the shared order
-    out_tbl = pa.table({
-        qid_col: pa.array(qx[o], type=pa.int64()),
-        id_col: pa.array(ids[o], type=pa.int64()),
-        "dist": pa.array(d[o], type=pa.float64()),
-    })
-    return spark.createDataFrame(
-        out_tbl, schema=f"{qid_col} long, {id_col} long, dist double")
+    return local_topk_frame(spark, qx[o], ids[o], d[o], id_col, qid_col)
+
+
+def local_topk_frame(
+    spark, qx: np.ndarray, ids: np.ndarray, d: np.ndarray, id_col: str,
+    qid_col: str = "query_id",
+) -> DataFrame:
+    """(qid, id, dist) driver columns as a driver-local DataFrame."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        qid_col: pa.array(qx, type=pa.int64()),
+        id_col: pa.array(ids, type=pa.int64()),
+        "dist": pa.array(d, type=pa.float64()),
+    }), schema=f"{qid_col} long, {id_col} long, dist double")
 
 
 def window_cut(
@@ -588,9 +611,9 @@ def _topk_per_query(
     scored: DataFrame, k: int, id_col: str, upper_bound: float | None,
     qid_col: str = "query_id",
 ) -> DataFrame:
-    """The shared k-bounded per-query merge (window rank + optional
-    threshold) every batch tier funnels through — flat, PQ, IVF,
-    IVF+PQ, and sharded-HNSW all share this one contract."""
+    """The window-plan per-query top-k (rank + optional threshold),
+    sorted (query id, dist, id): the window side of :func:`merge_topk`,
+    and the cut of the plans that have no driver side."""
     out = window_cut(scored, k, id_col, qid_col=qid_col)
     if upper_bound is not None:
         out = out.filter(F.col("dist") <= F.lit(float(upper_bound)))
@@ -599,23 +622,49 @@ def _topk_per_query(
 
 def merge_topk(
     scored: DataFrame, k: int, id_col: str, upper_bound: float | None,
-    est_rows: int | None, *, tier: str,
+    est_rows: int | None, *, tier: str, qid_col: str = "query_id",
 ) -> DataFrame:
-    """The global top-k every scan tier finishes with. ``scored`` is the
-    tier's (query_id, id, dist) emission of per-task top-k rows and
-    ``est_rows`` an upper bound on its row count; the gate
-    (:func:`driver_side`) picks the driver merge or the window plan,
-    which return identical rows in the (query_id, dist, id) order."""
+    """The global top-k every scan tier and sharded HNSW finish with.
+    ``scored`` is the tier's (``qid_col``, id, dist) emission of
+    per-task top-k rows and ``est_rows`` an upper bound on its row
+    count; the gate (:func:`driver_side`) picks the driver merge or the
+    window plan, which return identical rows in the (query id, dist, id)
+    order."""
     if not driver_side(tier, scored, est_rows):
-        return _topk_per_query(scored, k, id_col, upper_bound)
-    qx, ids, d = collect_columns(scored, "query_id", id_col, "dist")
+        return _topk_per_query(scored, k, id_col, upper_bound, qid_col=qid_col)
+    qx, ids, d = collect_columns(scored, qid_col, id_col, "dist")
     return driver_topk_merge(scored.sparkSession, qx, ids, d, k, id_col,
-                             upper_bound)
+                             upper_bound, qid_col)
+
+
+def pool_survivors(
+    filtered_base: DataFrame, id_col: str, qx: np.ndarray, ids: np.ndarray,
+    d: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The rows of a driver-side candidate pool whose ids pass the
+    predicate of ``filtered_base``: one scan of it for the pool's
+    distinct ids — an ``id IN`` list up to :data:`SMALL_LOCAL_ROWS`
+    ids, above it a semi-join against them as a broadcast local frame —
+    so only ids cross to Spark, never the pool's rows."""
+    import pyarrow as pa
+
+    uniq = np.unique(ids)
+    if uniq.size <= SMALL_LOCAL_ROWS:
+        hits = filtered_base.filter(F.col(id_col).isin(uniq.tolist()))
+    else:
+        keys = filtered_base.sparkSession.createDataFrame(
+            pa.table({id_col: pa.array(uniq, type=pa.int64())}))
+        hits = filtered_base.join(F.broadcast(keys), id_col, "left_semi")
+    hit = uniq[:0]
+    if uniq.size:
+        (hit,) = collect_columns(hits.select(id_col), id_col)
+    m = np.isin(ids, hit)
+    return qx[m], ids[m], d[m]
 
 
 def filtered_topk_from_pool(
-    pool: DataFrame,
-    queries: DataFrame | np.ndarray,
+    pool: DataFrame | tuple[np.ndarray, np.ndarray, np.ndarray],
+    queries: DataFrame | np.ndarray | QueryBlock,
     k: int,
     filtered_base: DataFrame,
     id_col: str,
@@ -629,16 +678,17 @@ def filtered_topk_from_pool(
     dim: int | None = None,
 ) -> DataFrame:
     """Shared oversample-and-filter finisher for every batch ANN tier
-    (HNSW broadcast graph, IVF+PQ, sharded HNSW) and so for their point
-    forms, which run it over a one-row block: join an ef-bounded
-    per-query candidate ``pool`` (query_id, id, dist) against the
-    predicate-filtered base — the predicate pushes into the parquet
-    scan, the pool is the broadcast side — and keep k survivors per
-    query. Queries whose pool can't fill k are answered EXACTLY by the
-    flat batch scan over the filtered base, so the result never
-    silently under-fills while matches exist (``exact_fallback=False``
-    skips that pass and returns the window plan; recall then depends on
-    the pool width).
+    (plain HNSW, IVF+PQ, sharded HNSW) and so for their point
+    forms, which run it over a one-row block: match an ef-bounded
+    per-query candidate ``pool`` against the predicate-filtered base —
+    the predicate pushes into the parquet scan — and keep k survivors
+    per query. ``pool`` is a (query_id, id, dist) DataFrame, or those
+    columns already on the driver (plain HNSW's graph serve). Queries
+    whose pool can't fill k are answered EXACTLY by the flat batch scan
+    over the filtered base, so the result never silently under-fills
+    while matches exist (``exact_fallback=False`` skips that pass and
+    returns the window plan over the pool joined to the filtered base;
+    recall then depends on the pool width).
 
     ``fallback_margin`` widens the escalation trigger: queries whose
     pool ∩ filter holds fewer than ``ceil(margin·k)`` survivors go to
@@ -647,47 +697,46 @@ def filtered_topk_from_pool(
     neighbors. margin=1.0 keeps the strict "under-filled only" contract.
 
     With ``exact_fallback`` the query block is read once
-    (:func:`collect_query_block`, checking ``dim``): its ids find the
-    starved queries and its rows feed the exact scan. The merge gate
-    (:func:`driver_side`, |Q|·``pool_k`` rows for a pool of per-query
-    width ``pool_k``; None = unbounded) decides whether the survivors'
-    probe_k cut runs on the driver or as the window plan ahead of their
-    collect, so the driver holds |Q|·probe_k rows and never the
-    filtered base. On the driver side, a driver-local pool of at most
-    :data:`SMALL_LOCAL_ROWS` rows is matched against the filtered base
-    by its ids instead of the join. The result is built on the driver
-    (:func:`driver_topk_merge`): reading it runs no Spark job. Plan
-    gate: tests/test_plans.py::test_batch_filtered_ann_plan_shape."""
-    spark = pool.sparkSession
-    surv = pool.join(filtered_base.select(id_col), id_col).select(
-        qid_col, id_col, "dist"
-    )
+    (:func:`collect_query_block`, checking ``dim``; a tier that read it
+    for its pool passes the :class:`QueryBlock`): its ids find the
+    starved queries and its rows feed the exact scan. A driver-side pool
+    picks its survivors by id (:func:`pool_survivors`). For a pool
+    frame, the merge gate (:func:`driver_side`, |Q|·``pool_k`` rows for
+    a pool of per-query width ``pool_k``; None = unbounded) decides
+    whether the survivors' probe_k cut runs on the driver or as the
+    window plan ahead of their collect, so the driver holds |Q|·probe_k
+    rows and never the filtered base; on the driver side, a driver-local
+    frame of at most :data:`SMALL_LOCAL_ROWS` rows is read without a
+    job and matched by its ids too (the broadcast join would cost 2
+    jobs). The result is built on the driver (:func:`driver_topk_merge`):
+    reading it runs no Spark job. Plan gate:
+    tests/test_plans.py::test_batch_filtered_ann_plan_shape."""
+    spark = filtered_base.sparkSession
     probe_k = int(k)
     if exact_fallback and float(fallback_margin) > 1.0:
         probe_k = int(math.ceil(float(fallback_margin) * int(k)))
-    if not exact_fallback:
-        return _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
+    if not exact_fallback and not isinstance(pool, DataFrame):
+        pool = local_topk_frame(spark, *pool, id_col, qid_col)
+    if isinstance(pool, DataFrame):
+        surv = pool.join(filtered_base.select(id_col), id_col).select(
+            qid_col, id_col, "dist"
+        )
+        if not exact_fallback:
+            return _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
     block = collect_query_block(queries, qid_col, qvec_col, dim)
     if block is None:
         return empty_topk(spark, id_col, qid_col)
     qids, qmat = block
     est_rows = None if pool_k is None else qids.size * int(pool_k)
-    if not driver_side("filtered", surv, est_rows):
+    if not isinstance(pool, DataFrame):
+        qx, sids, sd = pool_survivors(filtered_base, id_col, *pool)
+    elif not driver_side("filtered", surv, est_rows):
         surv = _topk_per_query(surv, probe_k, id_col, None, qid_col=qid_col)
         qx, sids, sd = collect_columns(surv, qid_col, id_col, "dist")
     elif pool.isLocal() and est_rows <= SMALL_LOCAL_ROWS:
-        # a small driver-built pool (an HNSW matrix block, the IVF+PQ
-        # mirror, a driver-side merge) is read without a job, and its
-        # ids pick the survivors in one `id IN` scan of the filtered
-        # base, where the join would broadcast it first (2 jobs)
-        qx, sids, sd = collect_columns(pool, qid_col, id_col, "dist")
-        hit = sids[:0]
-        if sids.size:
-            (hit,) = collect_columns(
-                filtered_base.filter(F.col(id_col).isin(np.unique(sids).tolist()))
-                .select(id_col), id_col)
-        m = np.isin(sids, hit)
-        qx, sids, sd = qx[m], sids[m], sd[m]
+        qx, sids, sd = pool_survivors(
+            filtered_base, id_col,
+            *collect_columns(pool, qid_col, id_col, "dist"))
     else:
         qx, sids, sd = collect_columns(surv, qid_col, id_col, "dist")
     g = fast_topk_grouped(qx, sids, sd, probe_k)

@@ -339,7 +339,7 @@ ORDER BY query_id, dist, vec_id""",
 )
 def knn_hnsw_filtered_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of knn_hnsw_filtered (index/hnsw.py
-    search_batch_filtered): one broadcast-graph pool pass over all
+    search_batch_filtered): one driver-side graph pool pass over all
     queries, one join against the predicate-filtered scan, per-query
     window keeps k; starved queries answered exactly. Full beam →
     equals the exact per-query filtered top-k."""

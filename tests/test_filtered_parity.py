@@ -137,7 +137,7 @@ def test_hnsw_matrix_block_matches_frame_block(spark, tables, with_pq):
 @pytest.mark.parametrize("tier,pred,jobs", [
     ("flat", "cat", 2), ("flat", "starved", 2),
     ("hnsw", "cat", 2), ("hnsw", "starved", 3),
-    ("sharded", "cat", 5), ("sharded", "starved", 6),
+    ("sharded", "cat", 4), ("sharded", "starved", 5),
     ("ivfpq_mirror", "cat", 2), ("ivfpq_mirror", "starved", 3),
     ("ivfpq_spark", "cat", 3), ("ivfpq_spark", "starved", 4),
 ])
@@ -145,10 +145,10 @@ def test_point_filtered_job_count(spark, tables, tier, pred, jobs):
     """After one warm-up call (index load, IVF+PQ mirror), a filtered
     point query runs: the flat scan, or the pool's jobs (none from an
     HNSW graph or the IVF+PQ mirror, one ADC scan for IVF+PQ served by
-    Spark, the routed shuffle and its merge for sharded HNSW), the
-    survivors (one ``id IN`` scan for a driver-local pool, the broadcast
-    join for sharded HNSW's) and, when starved, the exact scan; then the
-    metadata lookup of the returned ids."""
+    Spark, the routed shuffle and its driver merge for sharded HNSW),
+    the survivors (one ``id IN`` scan of the driver-local pool) and, when
+    starved, the exact scan; then the metadata lookup of the returned
+    ids."""
     db, key, queries = tables[tier, "l2sqr"]
     ef = None if tier == "flat" else EF
     pattern = PATTERNS[pred]

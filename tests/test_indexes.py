@@ -593,37 +593,48 @@ def test_hnsw_driver_pq_caches_key_by_identity(emb, hnsw, pq16):
         hnsw._pq_cache = None
 
 
-def test_hnsw_serving_broadcast_pq_identity(emb, hnsw, pq16):
-    """The serving-broadcast cache keys on the pq OBJECT and its codes
-    frame by identity: a different PQTable (even one landing on a
-    recycled id()) or an in-place codes swap (append path) must rebuild
-    the broadcast — serving stale ADC codes would silently corrupt the
-    steered results."""
-    queries = emb.filter(F.col("vec_id") < 4).select(
+def _batch_rows(frame) -> list[tuple]:
+    return sorted(tuple(r) for r in frame.collect())
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs (a job group around it)."""
+    sc = spark.sparkContext
+    group = f"jobs_{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hnsw_batch_serves_pq_codes_swap(emb, hnsw, pq16):
+    """A PQ codes swap (what a codes append does: a new codes frame on
+    the same PQTable) is served by the next steered batch: its rows are
+    those of a cold index sharing the graph, and swapping back restores
+    the original rows — no stale codes outlive a swap."""
+    queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    hnsw.search_batch(queries, k=5, ef=64, qvec_col="embedding",
-                      pq=pq16, steer=True).collect()
-    assert hnsw._bc_cache is not None and hnsw._bc_cache[0] is pq16
-    bc1 = hnsw._bc_cache[2]
-    hnsw.search_batch(queries, k=5, ef=64, qvec_col="embedding",
-                      pq=pq16, steer=True).collect()
-    assert hnsw._bc_cache[2] is bc1  # same pq object + codes → reused
-    # an in-place codes swap (what a codes append does) invalidates —
-    # same content, new frame object: identity, not equality, is the key
+
+    def batch(idx):
+        return _batch_rows(idx.search_batch(queries, k=5, ef=8,
+                                            qvec_col="embedding", pq=pq16))
+
+    before = batch(hnsw)
     orig_codes = pq16.codes
+    width = len(orig_codes.select("code").first()["code"])
     try:
-        pq16.codes = pq16.codes.select("*")
-        hnsw.search_batch(queries, k=5, ef=64, qvec_col="embedding",
-                      pq=pq16, steer=True).collect()
-        assert hnsw._bc_cache[2] is not bc1
-        bc2 = hnsw._bc_cache[2]
+        # every row the same code: the steering sees no structure
+        pq16.codes = orig_codes.withColumn("code", F.lit(bytes(width)))
+        swapped = batch(hnsw)
+        assert swapped == batch(HNSWIndex(hnsw.ids, hnsw.vecs, hnsw.graph,
+                                          hnsw.metric))
+        assert swapped != before
     finally:
         pq16.codes = orig_codes  # module-scoped fixture — restore
-    # dropping the pq (cache holds a strong ref, so id() can't be
-    # recycled onto a lookalike) and serving un-steered rebuilds again
-    hnsw.search_batch(queries, k=5, ef=64, qvec_col="embedding").collect()
-    assert hnsw._bc_cache[0] is None and hnsw._bc_cache[2] is not bc2
+    assert batch(hnsw) == before
 
 
 def test_hnsw_parallel_pool_and_beam_width_exact(emb, hnsw):
@@ -1024,34 +1035,95 @@ def test_pq_u8_full_ef_equals_flat(emb_u8):
     got = pq.search(q, k=10, ef=1_000_000, metric="l2sqr").collect()
     assert _pairs(got) == _pairs(_flat_u8(emb_u8, q))
 
-def test_hnsw_serving_broadcast_cached_and_invalidated(emb):
-    """search_batch reuses one graph broadcast across calls (re-pickling
-    the whole payload per batch is a per-call cost proportional to the
-    index size) and invalidates it on add_batch; results track the
-    post-add graph."""
+def test_hnsw_batch_serves_appends(emb):
+    """After add_batch the next DataFrame batch serves the appended row
+    (at distance 0 to itself): the serve reads the live graph."""
     idx = HNSWIndex.build(
         emb.filter(F.col("vec_id") < 400), metric="l2sqr",
         vec_col="embedding", id_col="vec_id", m=16, ef_construction=200,
     )
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    idx.search_batch(queries, k=5, ef=64, qvec_col="embedding").collect()
-    assert idx._bc_cache is not None
-    bc1 = idx._bc_cache[2]
-    idx.search_batch(queries, k=5, ef=64, qvec_col="embedding").collect()
-    assert idx._bc_cache[2] is bc1  # reused, not re-broadcast
-    # a write invalidates; the next batch serves the appended row
-    row = emb.filter(F.col("vec_id") == 450).first()
-    idx.add_batch(np.asarray([450], dtype=np.int64),
-                  np.asarray([row["embedding"]], dtype=np.float64))
-    assert idx._bc_cache is None
     q450 = emb.filter(F.col("vec_id") == 450).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     got = idx.search_batch(q450, k=1, ef=64, qvec_col="embedding").collect()
+    assert got and got[0]["vec_id"] != 450
+    idx.add_batch(np.asarray([450], dtype=np.int64),
+                  np.asarray([q450.first()["embedding"]], dtype=np.float64))
+    got = idx.search_batch(q450, k=1, ef=64, qvec_col="embedding").collect()
     assert got and got[0]["vec_id"] == 450 and got[0]["dist"] == 0.0
-    assert idx._bc_cache[2] is not bc1
+
+
+def test_hnsw_batch_job_count(spark, emb, hnsw):
+    """A batch is served on the driver: a DataFrame block costs one
+    Spark job (its read) and an Arrow-built local block none; the
+    driver-built result is read with no job either way."""
+    import pyarrow as pa
+
+    frame = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    rows = frame.orderBy("query_id").collect()
+    local = spark.createDataFrame(pa.table({
+        "query_id": pa.array([r["query_id"] for r in rows], pa.int64()),
+        "embedding": pa.array([list(r["embedding"]) for r in rows],
+                              pa.list_(pa.float64())),
+    }))
+
+    def serve(block):
+        return hnsw.search_batch(block, k=5, ef=64, qvec_col="embedding")
+
+    want = _batch_rows(serve(frame))  # warm-up
+    assert _jobs(spark, lambda: serve(frame).collect()) == 1
+    assert _jobs(spark, lambda: serve(local).collect()) == 0
+    assert _batch_rows(serve(local)) == want
+
+
+def test_hnsw_concurrent_batches(emb, hnsw, pq16):
+    """Batches from more threads than cores share one index's driver
+    state (thread pool, kernel views, aligned codes — all cold at the
+    start, so the threads race to build them) and each returns the rows
+    a serial batch returns."""
+    import sys
+    import threading
+
+    qmat = np.asarray([r["embedding"] for r in emb.filter(F.col("vec_id") < 64)
+                       .orderBy("vec_id").collect()])
+    blocks = [qmat[i::4] for i in range(4)]
+    cases = [(i, steer) for i in range(4) for steer in (True, False)]
+
+    def serve(idx, case):
+        return _batch_rows(idx.search_batch(blocks[case[0]], k=5, ef=40,
+                                            pq=pq16, steer=case[1]))
+
+    want = {case: serve(hnsw, case) for case in cases}
+    cold = HNSWIndex(hnsw.ids, hnsw.vecs, hnsw.graph, hnsw.metric)
+    got: dict = {}
+    errors: list = []
+
+    def run(t):
+        try:
+            for _ in range(3):
+                for case in cases:
+                    got[t, case] = serve(cold, case)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(t,))
+               for t in range(2 * (os.cpu_count() or 2))]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+        cold.close_pool()
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    assert all(got[t, case] == want[case]
+               for t in range(len(threads)) for case in cases)
 
 
 def test_hnsw_batch_steers_point_paths_gate(emb, hnsw, pq16):
@@ -1062,17 +1134,29 @@ def test_hnsw_batch_steers_point_paths_gate(emb, hnsw, pq16):
     keep the ADC_STEER_MIN_BYTES auto gate (a point query pays the full
     LUT build for one traversal). The asymmetry is deliberate and
     documented on both paths; distances stay exact either way because
-    the steered ef pool is exact-re-ranked in-task."""
+    the steered ef pool is exact-re-ranked."""
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     steered = hnsw.search_batch(queries, k=5, ef=64, qvec_col="embedding",
                                 pq=pq16).collect()
-    # batch path: pq broadcast built and cached — steering is ON
-    assert hnsw._bc_cache[0] is pq16
     plain = hnsw.search_batch(queries, k=5, ef=64, qvec_col="embedding",
                               pq=pq16, steer=False).collect()
-    assert hnsw._bc_cache[0] is None  # steer=False serves the exact kernel
+    qids = [r["query_id"] for r in queries.orderBy("query_id").collect()]
+    qmat = np.asarray([r["embedding"] for r in
+                       queries.orderBy("query_id").collect()])
+
+    def kernel_rows(ids, dists):
+        return sorted((q, int(i), float(d)) for q, row_i, row_d
+                      in zip(qids, ids, dists)
+                      for i, d in zip(row_i, row_d) if i >= 0)
+
+    # the batch path steers whenever pq is given; steer=False serves the
+    # exact kernel's rows
+    assert sorted(tuple(r) for r in steered) == kernel_rows(
+        *hnsw.search_many(qmat, 5, 64, pq=pq16, steer=True))
+    assert sorted(tuple(r) for r in plain) == kernel_rows(
+        *hnsw.search_many(qmat, 5, 64))
     # every returned distance is exact: re-ranked rows agree with the
     # exact serve wherever the candidate sets overlap
     exact = {(r["query_id"], r["vec_id"]): r["dist"] for r in plain}

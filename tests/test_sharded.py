@@ -104,6 +104,37 @@ def test_sharded_recall_vs_broadcast_tier(spark, mixture, tmp_path):
     assert recall(part) >= 0.9  # clustered data: few probes suffice
 
 
+def test_sharded_batch_jobs_and_query_ids(spark, mixture, tmp_path):
+    """A sharded batch reads its block once, routes it on the driver and
+    finishes through the merge gate: at most 3 Spark jobs (the block
+    read, the per-shard shuffle and the merge's read). Rows keep the
+    caller's query ids and query-id column, and a matrix block returns
+    the DataFrame block's rows under positional ids."""
+    df, rows = mixture
+    idx = ShardedHNSWIndex.build(
+        df, str(tmp_path / "sh"), n_shards=4, metric="l2sqr", vec_col="vec",
+        id_col="id", train_size=1000,
+    )
+    qids = [5000 + 7 * i for i in range(6)]
+    frame = df.filter(F.col("id") < 6).select(
+        (F.col("id") * 7 + 5000).alias("qid"), "vec")
+    kw = dict(k=5, ef=64, n_probes=2, qid_col="qid")
+    want = sorted(tuple(r) for r in idx.search_batch(frame, **kw).collect())
+    sc = spark.sparkContext
+    group = "sharded_batch_jobs"
+    sc.setJobGroup(group, "sharded batch")
+    try:
+        got = sorted(tuple(r) for r in idx.search_batch(frame, **kw).collect())
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert got == want and {q for q, _, _ in got} == set(qids)
+    assert idx.search_batch(frame, **kw).columns == ["qid", "id", "dist"]
+    by_matrix = sorted((qids[q], i, d) for q, i, d in (
+        tuple(r) for r in idx.search_batch(rows[:6], **kw).collect()))
+    assert by_matrix == want
+
+
 def test_sharded_save_load_and_routed_append(spark, mixture, tmp_path):
     df, rows = mixture
     path = str(tmp_path / "sh")
