@@ -557,19 +557,13 @@ def run_relational_suite(spark) -> dict:
 # Section 2: matched-scale grid (N=10k, dim=960 — the baseline's own regime)
 # ---------------------------------------------------------------------------
 
-#: copy-on-write state for the Flat+PQ fork workers (set pre-fork)
-_FLAT_PQ_STATE: dict = {}
-
-
-def _flat_pq_slice(args):
-    """One worker's query slice: per query, one flat gather over the
-    precomputed (n × m) int32 code-address table + one row-sum gives
-    every ADC score (pq_table.rs:239-301), then top-ef cut and exact
-    re-rank to top-k (candidate_pair.rs pq_resort semantics). The
-    address table is query-independent and COW-shared; a per-group
-    python loop here measured ~10× slower."""
-    s, e, ef = args
-    st = _FLAT_PQ_STATE
+def _flat_pq_slice(st: dict, s: int, e: int, ef: int) -> np.ndarray:
+    """The numpy Flat+PQ scan of queries [s, e): per query, one flat
+    gather over the precomputed (n × m) int32 code-address table + one
+    row-sum gives every ADC score (pq_table.rs:239-301), then top-ef cut
+    and exact re-rank to top-k (candidate_pair.rs pq_resort semantics).
+    The address table is query-independent and shared by every span; a
+    per-group python loop here measured ~10× slower."""
     base, queries, addr, lut = st["base"], st["queries"], st["addr"], st["lut"]
     k = st["k"]
     out = np.empty((e - s, k), dtype=np.int64)
@@ -580,6 +574,7 @@ def _flat_pq_slice(args):
         d = ((base[cand] - queries[qi]) ** 2).sum(1)
         out[qi - s] = cand[np.argpartition(d, k - 1)[:k]]
     return out
+
 
 def _gist_matched(n_target: int = MATCHED_N) -> tuple[np.ndarray, np.ndarray]:
     """N × 960 GIST-derived base + the reference's 1,000 test queries.
@@ -848,7 +843,7 @@ def run_matched(spark) -> dict:
                                            pq.n_bits, "l2sqr", dtype=np.float32)
         ksub = 1 << pq.n_bits
         addr = codes.astype(np.int32) + (np.arange(pq.m, dtype=np.int32) * ksub)[None, :]
-        _FLAT_PQ_STATE.update(
+        st = dict(
             base=base.astype(np.float32), queries=queries.astype(np.float32),
             addr=np.ascontiguousarray(addr),
             lut=lut_all, k=K,
@@ -856,43 +851,35 @@ def run_matched(spark) -> dict:
 
         from lab_1806_vec_db_spark.index import ckernel
 
-        st = _FLAT_PQ_STATE
         cx2 = np.einsum("ij,ij->i", st["base"], st["base"])
         clut = lut_all.reshape(n_q, pq.m, 1 << pq.n_bits)
 
         def run_flat_pq(ef: int):
+            # both scans run on plain threads: the compiled one releases
+            # the GIL for the whole span, the numpy one inside its
+            # gathers and reductions
+            from concurrent.futures import ThreadPoolExecutor
+
             w = min(32, os.cpu_count() or 1)
             bounds = np.linspace(0, n_q, 4 * w + 1).astype(int)
             spans = [(int(s), int(e)) for s, e in zip(bounds[:-1], bounds[1:]) if e > s]
-            if ckernel.available():
-                # compiled scan releases the GIL — plain threads, no forks
-                from concurrent.futures import ThreadPoolExecutor
+            use_c = ckernel.available()
 
-                def span(se):
-                    s, e = se
-                    ids, _ = ckernel.pq_flat(
-                        st["base"], cx2, codes, clut[s:e],
-                        st["queries"][s:e], K, ef)
-                    return ids
-                with ThreadPoolExecutor(max_workers=w) as tp:
-                    return np.concatenate(list(tp.map(span, spans)), axis=0)
-            import multiprocessing as mp
-
-            from lab_1806_vec_db_spark.index.pq import _cow_friendly_fork
-
-            jobs = [(s, e, ef) for s, e in spans]
-            with _cow_friendly_fork():
-                pool = mp.get_context("fork").Pool(w)
-            try:
-                parts = pool.map(_flat_pq_slice, jobs, chunksize=1)
-            finally:
-                pool.terminate()
-            return np.concatenate(parts, axis=0)
+            def span(se):
+                s, e = se
+                if not use_c:
+                    return _flat_pq_slice(st, s, e, ef)
+                ids, _ = ckernel.pq_flat(
+                    st["base"], cx2, codes, clut[s:e],
+                    st["queries"][s:e], K, ef)
+                return ids
+            with ThreadPoolExecutor(max_workers=w) as tp:
+                return np.concatenate(list(tp.map(span, spans)), axis=0)
 
         for ef in flat_efs:
             best, ids = _timed(lambda ef=ef: run_flat_pq(ef), runs=max(1, RUNS - 1))
             point("flat_pq", ef, best, _grid_recall(ids, gt))
-        _FLAT_PQ_STATE.clear()
+        st.clear()
 
     # ---- IVF k=128 (config/bench_10000_ivf.toml — no committed reference
     # rows; published here as the partition-pruning curve) ---------------

@@ -8,8 +8,9 @@ kernel in ``beam.py`` amortizes interpreter overhead across a query
 for the Spark `mapInPandas` path, hopeless for point-serve latency.
 This module compiles a ~300-line standard HNSW kernel set (greedy
 upper-level descent + bounded-pool beam, the knn_pq ADC-steered
-variant of hnsw_index.rs:672-696, a flat ADC scan, and the build-time
-multi-level candidate-pool search of hnsw_index.rs:398-442) with the
+variant of hnsw_index.rs:672-696, a flat ADC scan, the build-time
+multi-level candidate-pool search of hnsw_index.rs:398-442, and the
+Lloyd step and k-means++ fold of ``kmeans.fit_kmeans``) with the
 system C compiler at first use and binds it via ctypes.
 
 Design constraints honored:
@@ -190,6 +191,179 @@ int dense_topk(
                   out_row + (size_t)s * kk, out_d + (size_t)s * kk);
     }
     free(heap);
+    return 0;
+}
+
+/*
+ * k-means (index/kmeans.py::fit_kmeans). The caller forms the (n x k)
+ * inner-product block with the same numpy matmul as the numpy path, so
+ * every distance here is bit-identical to kmeans._pairwise_dist:
+ * l2sqr max((x2 + c2) - 2ip, 0), with 2ip written ip + ip (exactly
+ * 2ip, and nothing for the compiler to contract into an FMA), cosine
+ * 1 - ip / max(|x||c|, 1e-10). xs / cs hold the rows' and centroids'
+ * self-dots (l2sqr) or norms (cosine).
+ */
+static inline double km_dist(double xs, double cs, double ip, int metric) {
+    if (metric == 0) {
+        double v = (xs + cs) - (ip + ip);
+        return v < 0.0 ? 0.0 : v;
+    }
+    double den = xs * cs;
+    if (den < 1e-10) den = 1e-10;
+    return 1.0 - ip / den;
+}
+
+/* Nearest centroid of each row: the first minimum wins and a NaN
+ * beats every number, as np.argmin does. A row's k distances go to
+ * buf first, so the metric branch leaves the inner loops and the
+ * distance loop vectorizes. */
+static void km_label(const double *ip, long n, int k, const double *xs,
+                     const double *cs, int metric, double *buf, long *labels)
+{
+    for (long i = 0; i < n; i++) {
+        const double *row = ip + (size_t)i * k;
+        double x = xs[i];
+        int nan = 0;
+        if (metric == 0)
+            for (int j = 0; j < k; j++) buf[j] = km_dist(x, cs[j], row[j], 0);
+        else
+            for (int j = 0; j < k; j++) buf[j] = km_dist(x, cs[j], row[j], 1);
+        for (int j = 0; j < k; j++) nan |= buf[j] != buf[j];
+        long bi = 0;
+        if (nan) {
+            while (buf[bi] == buf[bi]) bi++;
+        } else {
+            double best = buf[0];
+            for (int j = 1; j < k; j++) {
+                int lt = buf[j] < best;
+                best = lt ? buf[j] : best;
+                bi = lt ? j : bi;
+            }
+        }
+        labels[i] = bi;
+    }
+}
+
+/* np.add.reduce's contiguous inner loop (pairwise_sum): 8 partial sums
+ * up to 128 values, split in halves above, over a[idx[i]]. */
+static double km_pairwise(const double *a, const long *idx, long n, long st) {
+    if (n < 8) {
+        double r = 0.0;
+        for (long i = 0; i < n; i++) r += a[idx[i] * st];
+        return r;
+    }
+    if (n <= 128) {
+        double r[8];
+        long i;
+        for (int j = 0; j < 8; j++) r[j] = a[idx[j] * st];
+        for (i = 8; i < n - (n % 8); i += 8)
+            for (int j = 0; j < 8; j++) r[j] += a[idx[i + j] * st];
+        double res = ((r[0] + r[1]) + (r[2] + r[3])) + ((r[4] + r[5]) + (r[6] + r[7]));
+        for (; i < n; i++) res += a[idx[i] * st];
+        return res;
+    }
+    long n2 = n / 2;
+    n2 -= n2 % 8;
+    return km_pairwise(a, idx, n2, st) + km_pairwise(a, idx + n2, n - n2, st);
+}
+
+/*
+ * One Lloyd step. Label each row by its (n x k) inner products ip,
+ * then move each centroid to the mean of its rows, bit for bit
+ * np.mean(x[labels == c], axis=0): the sum starts at 0.0 and adds the
+ * rows in row order, then divides by the count. With d == 1 numpy
+ * reduces the gathered column as one contiguous run, by the pairwise
+ * scheme in bufsize-long chunks, so that case gathers each cluster's
+ * row indices in row order and sums them the same way. An empty
+ * cluster keeps its centroid in cent (k x d, updated in place). x is
+ * (n x d) with a row stride of st values.
+ */
+int kmeans_step(const double *x, long n, int d, long st,
+                const double *ip, const double *xs, const double *cs,
+                int metric, int k, long bufsize, double *cent)
+{
+    long *labels = (long *)malloc((size_t)(n > 0 ? n : 1) * sizeof(long));
+    long *counts = (long *)calloc((size_t)k + 1, sizeof(long));
+    double *work = (double *)calloc((size_t)k * (d > 1 ? d : 1), sizeof(double));
+    long *order = d == 1 ? (long *)malloc((size_t)(n > 0 ? n : 1) * sizeof(long)) : NULL;
+    int rc = 0;
+    if (!labels || !counts || !work || (d == 1 && !order)) { rc = 1; goto done; }
+    km_label(ip, n, k, xs, cs, metric, work, labels);
+    for (long i = 0; i < n; i++) counts[labels[i] + 1]++;
+    if (d == 1) {
+        for (int c = 0; c < k; c++) counts[c + 1] += counts[c];
+        for (long i = 0; i < n; i++) order[counts[labels[i]]++] = i;
+        /* counts[c] is now the end of cluster c's run */
+        long lo = 0;
+        for (int c = 0; c < k; c++) {
+            long hi = counts[c];
+            if (hi > lo) {
+                double acc = 0.0;
+                for (long s = lo; s < hi; s += bufsize) {
+                    long m = hi - s < bufsize ? hi - s : bufsize;
+                    acc += km_pairwise(x, order + s, m, st);
+                }
+                cent[c] = acc / (double)(hi - lo);
+            }
+            lo = hi;
+        }
+        goto done;
+    }
+    memset(work, 0, (size_t)k * d * sizeof(double));
+    for (long i = 0; i < n; i++) {
+        const double *xr = x + (size_t)i * st;
+        double *sr = work + (size_t)labels[i] * d;
+        for (int t = 0; t < d; t++) sr[t] += xr[t];
+    }
+    for (int c = 0; c < k; c++) {
+        long cnt = counts[c + 1];
+        if (cnt == 0) continue;
+        for (int t = 0; t < d; t++)
+            cent[(size_t)c * d + t] = work[(size_t)c * d + t] / (double)cnt;
+    }
+done:
+    free(labels); free(counts); free(work); free(order);
+    return rc;
+}
+
+/* One k-means++ seeding step: fold a new centroid's distances (from
+ * its (n,) inner products) into min_d, with np.minimum's NaN rule
+ * (first != 0 starts min_d from them), and write w = max(min_d, 0). */
+int kmeans_pp_step(const double *ip, long n, const double *xs, double cs,
+                   int metric, int first, double *min_d, double *w)
+{
+    for (long i = 0; i < n; i++) {
+        double v = km_dist(xs[i], cs, ip[i], metric);
+        if (!first) {
+            double m = min_d[i];
+            v = (m <= v || isnan(m)) ? m : v;
+        }
+        min_d[i] = v;
+        w[i] = (v >= 0.0 || isnan(v)) ? v : 0.0;
+    }
+    return 0;
+}
+
+/* 1 when x (n x d, row stride st) holds more than k distinct rows
+ * under float ==, else 0; the scan stops at the (k + 1)-th. rep holds
+ * k + 1 row indices (scratch). */
+int kmeans_exceeds_distinct(const double *x, long n, int d, long st,
+                            long k, long *rep)
+{
+    long nrep = 0;
+    for (long i = 0; i < n; i++) {
+        const double *xr = x + (size_t)i * st;
+        int seen = 0;
+        for (long r = 0; r < nrep && !seen; r++) {
+            const double *yr = x + (size_t)rep[r] * st;
+            int t = 0;
+            while (t < d && xr[t] == yr[t]) t++;
+            seen = t == d;
+        }
+        if (seen) continue;
+        if (nrep == k) return 1;
+        rep[nrep++] = i;
+    }
     return 0;
 }
 """
@@ -787,7 +961,7 @@ def _load_validated(path: str) -> ctypes.CDLL | None:
     except OSError:
         return None
     if (hasattr(lib, "hnsw_search_f64") and hasattr(lib, "heur_select_f64")
-            and hasattr(lib, "dense_topk")):
+            and hasattr(lib, "dense_topk") and hasattr(lib, "kmeans_step")):
         return lib
     return None
 
@@ -927,6 +1101,22 @@ def _bind(lib: ctypes.CDLL) -> None:
         lp, lp, dp,                            # out_id, out_row, out_d
     ]
     dt.restype = ctypes.c_int
+    vp = ctypes.c_void_p  # the k-means calls take raw buffer addresses
+    lib.kmeans_step.argtypes = [
+        vp, ctypes.c_long, ctypes.c_int, ctypes.c_long,  # x, n, d, st
+        vp, vp, vp, ctypes.c_int,                        # ip, xs, cs, metric
+        ctypes.c_int, ctypes.c_long, vp,                 # k, bufsize, cent
+    ]
+    lib.kmeans_pp_step.argtypes = [
+        vp, ctypes.c_long, vp, ctypes.c_double,          # ip, n, xs, cs
+        ctypes.c_int, ctypes.c_int, vp, vp,              # metric, first, min_d, w
+    ]
+    lib.kmeans_exceeds_distinct.argtypes = [
+        vp, ctypes.c_long, ctypes.c_int, ctypes.c_long,  # x, n, d, st
+        ctypes.c_long, vp,                               # k, rep
+    ]
+    for fn in (lib.kmeans_step, lib.kmeans_pp_step, lib.kmeans_exceeds_distinct):
+        fn.restype = ctypes.c_int
 
 
 def get_lib() -> ctypes.CDLL | None:
@@ -1355,3 +1545,88 @@ def heur_select(cd: np.ndarray, cid: np.ndarray, vecs: np.ndarray,
     if rc != 0:
         raise MemoryError("heur_select C kernel failure")
     return sel_id, sel_d
+
+
+# ---- k-means (index/kmeans.py::fit_kmeans) ---------------------------------
+
+_KM_METRIC = {"l2sqr": 0, "cosine": 1}
+
+
+def _f64_rows(x: np.ndarray) -> tuple[np.ndarray, int]:
+    """``x`` as a 2-D f64 block with contiguous rows, and its row stride
+    in values: a column slice of a wider block (a PQ group) passes as
+    is."""
+    if x.ndim != 2:
+        raise ValueError(f"expected a 2-D block, got shape {x.shape}")
+    if x.dtype != np.float64 or x.strides[1] != 8 or x.strides[0] % 8:
+        x = np.ascontiguousarray(x, dtype=np.float64)
+    return x, x.strides[0] // 8
+
+
+def _f64_buf(a: np.ndarray, shape: tuple[int, ...], out: bool = False) -> np.ndarray:
+    """``a`` as a C-contiguous f64 buffer of ``shape``; an ``out``
+    buffer the kernel writes must already be one."""
+    if out and (a.dtype != np.float64 or not a.flags["C_CONTIGUOUS"]
+                or not a.flags["WRITEABLE"]):
+        raise ValueError("output buffer must be a writeable C-contiguous f64 array")
+    a = np.ascontiguousarray(a, dtype=np.float64)
+    if a.shape != shape:
+        raise ValueError(f"expected shape {shape}, got {a.shape}")
+    return a
+
+
+def kmeans_step(x: np.ndarray, ip: np.ndarray, xs: np.ndarray, cs: np.ndarray,
+                metric: str, centroids: np.ndarray) -> np.ndarray:
+    """One Lloyd step in one GIL-released call. Each row of ``x`` goes
+    to its nearest centroid by the ``kmeans._pairwise_dist`` formulas
+    over its (n × k) inner products ``ip`` and the self terms ``xs`` /
+    ``cs`` (self-dots for l2sqr, norms for cosine), the first minimum
+    winning as with ``np.argmin``. Returns a new (k × d) array whose row
+    c is the mean of the rows labelled c, bit for bit
+    ``x[labels == c].mean(axis=0)``, or ``centroids[c]`` when none is."""
+    lib = get_lib()
+    assert lib is not None
+    x, st = _f64_rows(x)
+    n, d = x.shape
+    cent = np.array(centroids, dtype=np.float64, order="C")
+    k = cent.shape[0]
+    if cent.shape != (k, d) or k < 1:
+        raise ValueError(f"centroids of shape {cent.shape} for {d}-dim rows")
+    ip = _f64_buf(ip, (n, k))
+    xs, cs = _f64_buf(xs, (n,)), _f64_buf(cs, (k,))
+    rc = lib.kmeans_step(x.ctypes.data, n, d, st, ip.ctypes.data,
+                         xs.ctypes.data, cs.ctypes.data, _KM_METRIC[metric],
+                         k, np.getbufsize(), cent.ctypes.data)
+    if rc != 0:
+        raise MemoryError("kmeans_step C kernel allocation failure")
+    return cent
+
+
+def kmeans_pp_step(ip: np.ndarray, xs: np.ndarray, cs: float, metric: str,
+                   min_d: np.ndarray, w: np.ndarray, first: bool) -> None:
+    """One k-means++ seeding step in place: fold a new centroid's
+    distances (``ip`` its (n,) inner products, ``cs`` its self term)
+    into ``min_d`` as ``np.minimum`` does (``first`` starts it), and
+    write the draw weights ``max(min_d, 0)`` into ``w``."""
+    lib = get_lib()
+    assert lib is not None
+    n = xs.shape[0]
+    ip = _f64_buf(np.reshape(ip, -1), (n,))
+    xs = _f64_buf(xs, (n,))
+    min_d, w = _f64_buf(min_d, (n,), out=True), _f64_buf(w, (n,), out=True)
+    lib.kmeans_pp_step(ip.ctypes.data, n, xs.ctypes.data, float(cs),
+                       _KM_METRIC[metric], 1 if first else 0,
+                       min_d.ctypes.data, w.ctypes.data)
+
+
+def exceeds_distinct(x: np.ndarray, k: int) -> bool:
+    """True when ``x`` holds more than ``k`` distinct rows (float ==);
+    the scan stops at the (k + 1)-th, so on spread data it reads about
+    k rows."""
+    lib = get_lib()
+    assert lib is not None
+    x, st = _f64_rows(x)
+    n, d = x.shape
+    rep = np.empty(max(int(k), 0) + 1, dtype=np.int64)
+    return bool(lib.kmeans_exceeds_distinct(
+        x.ctypes.data, n, d, st, max(int(k), 0), rep.ctypes.data))

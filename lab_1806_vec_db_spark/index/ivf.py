@@ -134,10 +134,13 @@ class IVFIndex:
         if path is not None:
             spark = df.sparkSession
             os.makedirs(path, exist_ok=True)
-            # partitioned-by-cluster layout: probe = partition pruning
-            clustered.write.mode("overwrite").partitionBy("cluster_id").parquet(
-                os.path.join(path, "data")
-            )
+            # partitioned-by-cluster layout: probe = partition pruning.
+            # One shuffle on cluster_id first, so each cluster is one
+            # task's one file (IVFPQIndex._write_codes has the numbers
+            # and the skew trade-off)
+            clustered.repartition("cluster_id").write.mode(
+                "overwrite"
+            ).partitionBy("cluster_id").parquet(os.path.join(path, "data"))
             np.save(os.path.join(path, "centroids.npy"), model.centroids)
             with open(os.path.join(path, "meta.json"), "w") as f:
                 json.dump({"metric": metric, "vec_col": vec_col, "id_col": id_col, "k": model.k}, f)

@@ -16,6 +16,12 @@ Reference semantics (/root/reference/src/index_algorithm/k_means.rs):
   100 TB you still train the codebook on ~10⁵ rows; only *assignment*
   must be distributed, and it is (broadcast centroids + Arrow scan,
   the Spark analogue of the rayon par-assign at k_means.rs:117-123).
+- One fit path, in-process: with the C toolchain the Lloyd step and the
+  k-means++ distance fold run as GIL-released ``ckernel`` calls over
+  numpy's inner-product GEMM, so concurrent fits (the PQ codebook
+  groups, ``pq._fit_codebooks``) share the driver's cores on plain
+  threads; no fork. Without it the numpy loop runs, and it is the
+  reference: both paths give the same centroids bit for bit.
 
 Everything is seeded (numpy ``default_rng``) → deterministic across
 runs, which the correctness harness relies on.
@@ -27,10 +33,20 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _self_terms(a: np.ndarray, metric: str) -> np.ndarray:
+    """Per-row self terms of :func:`_pairwise_dist`: self-dots for
+    l2sqr, norms for cosine."""
+    s = np.einsum("ij,ij->i", a, a)
+    if metric == "l2sqr":
+        return s
+    if metric == "cosine":
+        return np.sqrt(s)
+    raise ValueError(f"Invalid distance function: {metric}")
 
 
 def _pairwise_dist(x: np.ndarray, c: np.ndarray, metric: str) -> np.ndarray:
@@ -40,39 +56,53 @@ def _pairwise_dist(x: np.ndarray, c: np.ndarray, metric: str) -> np.ndarray:
     L2² via the cached-dot identity, cosine with the 1e-10 floor.
     """
     ip = x @ c.T
+    xs, cs = _self_terms(x, metric), _self_terms(c, metric)
     if metric == "l2sqr":
-        x2 = np.einsum("ij,ij->i", x, x)
-        c2 = np.einsum("ij,ij->i", c, c)
-        d = x2[:, None] + c2[None, :] - 2.0 * ip
+        d = xs[:, None] + cs[None, :] - 2.0 * ip
         np.maximum(d, 0.0, out=d)
         return d
-    if metric == "cosine":
-        nx = np.sqrt(np.einsum("ij,ij->i", x, x))
-        nc = np.sqrt(np.einsum("ij,ij->i", c, c))
-        denom = np.maximum(nx[:, None] * nc[None, :], 1e-10)
-        return 1.0 - ip / denom
-    raise ValueError(f"Invalid distance function: {metric}")
+    return 1.0 - ip / np.maximum(xs[:, None] * cs[None, :], 1e-10)
 
 
 def kmeans_pp_init(x: np.ndarray, k: int, rng: np.random.Generator, metric: str) -> np.ndarray:
     """k-means++ seeding (k_means.rs:61-87): first pick uniform, then
     each next ∝ min-distance-to-chosen (D weighting, as the reference
-    weights by the raw distance, not D²)."""
+    weights by the raw distance, not D²).
+
+    With the C toolchain one GIL-released call per pick folds the last
+    centroid's distances into the running minimum; the inner products
+    and the ``rng`` draws stay in numpy, so the picks are the numpy
+    path's, bit for bit."""
+    from lab_1806_vec_db_spark.index import ckernel
+
     n = x.shape[0]
     chosen = np.empty((k, x.shape[1]), dtype=np.float64)
     first = int(rng.integers(0, n))
     chosen[0] = x[first]
-    min_d = _pairwise_dist(x, chosen[0:1], metric)[:, 0]
+    if ckernel.available():
+        xs = _self_terms(x, metric)
+        min_d, w = np.empty(n), np.empty(n)
+
+        def fold(c: np.ndarray, start: bool) -> np.ndarray:
+            ckernel.kmeans_pp_step(x @ c.T, xs, _self_terms(c, metric)[0],
+                                   metric, min_d, w, start)
+            return w
+    else:
+        min_d = np.empty(n)
+
+        def fold(c: np.ndarray, start: bool) -> np.ndarray:
+            d_new = _pairwise_dist(x, c, metric)[:, 0]
+            np.minimum(d_new if start else min_d, d_new, out=min_d)
+            return np.maximum(min_d, 0.0)
+
     for i in range(1, k):
-        w = np.maximum(min_d, 0.0)
-        total = w.sum()
+        weights = fold(chosen[i - 1 : i], i == 1)
+        total = weights.sum()
         if total <= 0:
             idx = int(rng.integers(0, n))
         else:
-            idx = int(rng.choice(n, p=w / total))
+            idx = int(rng.choice(n, p=weights / total))
         chosen[i] = x[idx]
-        d_new = _pairwise_dist(x, chosen[i : i + 1], metric)[:, 0]
-        np.minimum(min_d, d_new, out=min_d)
     return chosen
 
 
@@ -154,28 +184,45 @@ def fit_kmeans(
     module docstring. Dedup-aware: k is clamped to the number of
     distinct rows so the exactness regime (#distinct ≤ k) yields one
     centroid per distinct vector (pq_table.rs:324-372 relies on this).
+
+    With the C toolchain each Lloyd step is numpy's inner-product GEMM
+    plus one GIL-released call that labels the rows and re-averages the
+    clusters (:func:`ckernel.kmeans_step`), and ``np.unique`` runs only
+    when a scan finds at most k distinct rows. The numpy loop is the
+    reference: both give the same centroids, bit for bit
+    (tests/test_indexes.py pins it).
     """
+    from lab_1806_vec_db_spark.index import ckernel
+
     x = np.asarray(x, dtype=np.float64)
-    distinct = np.unique(x, axis=0)
-    k = min(int(k), distinct.shape[0])
+    k = int(k)
+    compiled = ckernel.available()
+    distinct = None  # more than k distinct rows: no exactness regime
+    if not (compiled and ckernel.exceeds_distinct(x, k)):
+        distinct = np.unique(x, axis=0)
+        k = min(k, distinct.shape[0])
     rng = np.random.default_rng(seed)
-    if k == distinct.shape[0]:
+    if distinct is not None and k == distinct.shape[0]:
         # exactness regime: every distinct vector is its own centroid
-        centroids = distinct.copy()
-    else:
-        centroids = kmeans_pp_init(x, k, rng, metric)
-        for _ in range(max_iter):
-            d = _pairwise_dist(x, centroids, metric)
-            labels = np.argmin(d, axis=1)
+        return KMeansModel(centroids=distinct.copy(), metric=metric)
+    centroids = kmeans_pp_init(x, k, rng, metric)
+    xs = _self_terms(x, metric) if compiled else None
+    for _ in range(max_iter):
+        if compiled:
+            new_centroids = ckernel.kmeans_step(
+                x, x @ centroids.T, xs, _self_terms(centroids, metric),
+                metric, centroids)
+        else:
+            labels = np.argmin(_pairwise_dist(x, centroids, metric), axis=1)
             new_centroids = centroids.copy()  # empty cluster keeps old centroid
             for c in range(k):
                 mask = labels == c
                 if mask.any():
                     new_centroids[c] = x[mask].mean(axis=0)
-            move = np.max(np.einsum("ij,ij->i", centroids - new_centroids, centroids - new_centroids))
-            centroids = new_centroids
-            if move < tol:
-                break
+        move = np.max(np.einsum("ij,ij->i", centroids - new_centroids, centroids - new_centroids))
+        centroids = new_centroids
+        if move < tol:
+            break
     return KMeansModel(centroids=centroids, metric=metric)
 
 
@@ -194,14 +241,16 @@ def sample_rows(
 ) -> np.ndarray:
     """Deterministic training sample (A1, vec_set.rs:154-163): order by a
     seeded hash key of the id, take n. ``orderBy(key).limit(n)`` is a
-    TakeOrderedAndProject — k-bounded, no full sort, no full shuffle."""
-    pdf = (
+    TakeOrderedAndProject — k-bounded, no full sort, no full shuffle.
+    The rows come back as one Arrow table and leave it as one (n × dim)
+    f64 matrix, with no per-row objects on the driver."""
+    from lab_1806_vec_db_spark.functions.arrowvec import vec_matrix
+
+    tbl = (
         df.select(vec_col, sample_key(id_col, seed).alias("__sk"))
         .orderBy("__sk")
         .limit(int(n))
         .select(vec_col)
-        .toPandas()  # Arrow: ndarray rows, no boxed floats on the driver
+        .toArrow()
     )
-    out = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
-    del pdf
-    return out
+    return vec_matrix(tbl.column(vec_col), dtype=np.float64)

@@ -46,7 +46,6 @@ from __future__ import annotations
 import json
 import logging
 import os
-from contextlib import contextmanager
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
@@ -249,92 +248,30 @@ def lut_span_builder(
     return build
 
 
-#: COW state for codebook-fit fork workers
-_FIT_STATE: dict = {}
-
-_LAST_GC_COLLECT = [0.0]
-
-
-@contextmanager
-def _cow_friendly_fork():
-    """Make fork cheap from a busy driver process (a live SparkSession,
-    collected DataFrames): drop garbage, then freeze every surviving
-    object into the permanent generation so the children's own gc
-    passes never walk — and copy-on-write — the parent's heap pages.
-    Measured effect: the matched-scale build/serve inside bench.py ran
-    5-6× slower than the identical kernel in a clean process before
-    this. The full collect is throttled (it is O(heap), and back-to-back
-    codebook fits — one per PQ or IVF+PQ train — would each pay it);
-    freeze/unfreeze is cheap and always runs."""
-    import gc
-    import time as _time
-
-    now = _time.monotonic()
-    if now - _LAST_GC_COLLECT[0] > 5.0:
-        gc.collect()
-        _LAST_GC_COLLECT[0] = now
-    gc.freeze()
-    try:
-        yield
-    finally:
-        gc.unfreeze()
-
-
-def _fit_group_slice(args):
-    lo, hi = args
-    sample, groups, ksub, seed = (
-        _FIT_STATE["sample"], _FIT_STATE["groups"],
-        _FIT_STATE["ksub"], _FIT_STATE["seed"],
-    )
-    out = []
-    for gi in range(lo, hi):
-        start, size = groups[gi]
-        model = fit_kmeans(sample[:, start : start + size], k=ksub,
-                           metric="l2sqr", seed=seed + gi)
-        cb = model.centroids
-        if cb.shape[0] < ksub:  # exactness regime: pad with copies so
-            # code values stay in range (unused slots never win argmin)
-            pad = np.repeat(cb[-1:], ksub - cb.shape[0], axis=0)
-            cb = np.concatenate([cb, pad], axis=0)
-        out.append(cb)
-    return out
-
-
 def _fit_codebooks(
     sample: np.ndarray, groups: list[tuple[int, int]], ksub: int, seed: int
 ) -> list[np.ndarray]:
-    """Per-group k-means fits, fork-parallel over groups (the rayon
-    par_iter of pq_table.rs:141-191). Each group's fit keeps its own
-    ``seed + gi`` stream, so results are bit-identical to the
-    sequential loop — only wall time changes (m=320 fits dominated
-    PQ train before this)."""
-    import multiprocessing as mp
+    """Per-group k-means fits on a thread pool over groups (the rayon
+    par_iter of pq_table.rs:141-191), ``min(os.cpu_count(), groups)``
+    workers. Each group's fit keeps its own ``seed + gi`` stream, so the
+    codebooks do not depend on the worker count; with the C toolchain
+    each Lloyd step runs GIL-released (:func:`kmeans.fit_kmeans`).
 
-    n_groups = len(groups)
-    workers = min(os.cpu_count() or 1, n_groups)
-    if workers <= 1 or n_groups < 8:
-        return _fit_group_slice_seq(sample, groups, ksub, seed)
-    global _FIT_STATE
-    _FIT_STATE = {"sample": sample, "groups": groups, "ksub": ksub, "seed": seed}
-    bounds = np.linspace(0, n_groups, workers + 1).astype(int)
-    jobs = [(int(s), int(e)) for s, e in zip(bounds[:-1], bounds[1:]) if e > s]
-    with _cow_friendly_fork():
-        pool = mp.get_context("fork").Pool(len(jobs))
-    try:
-        parts = pool.map(_fit_group_slice, jobs)
-    finally:
-        pool.terminate()
-        _FIT_STATE = {}
-    return [cb for part in parts for cb in part]
+    A group in the exactness regime (fewer distinct sub-vectors than
+    ``ksub``) is padded with copies of its last centroid, so code values
+    stay in range; the unused slots never win the argmin."""
+    from concurrent.futures import ThreadPoolExecutor
 
+    def fit(gi: int) -> np.ndarray:
+        start, size = groups[gi]
+        cb = fit_kmeans(sample[:, start : start + size], k=ksub,
+                        metric="l2sqr", seed=seed + gi).centroids
+        if cb.shape[0] < ksub:
+            cb = np.concatenate([cb, np.repeat(cb[-1:], ksub - cb.shape[0], axis=0)])
+        return cb
 
-def _fit_group_slice_seq(sample, groups, ksub, seed):
-    global _FIT_STATE
-    _FIT_STATE = {"sample": sample, "groups": groups, "ksub": ksub, "seed": seed}
-    try:
-        return _fit_group_slice((0, len(groups)))
-    finally:
-        _FIT_STATE = {}
+    with ThreadPoolExecutor(max_workers=max(1, min(os.cpu_count() or 1, len(groups)))) as tp:
+        return list(tp.map(fit, range(len(groups))))
 
 
 def adc_tile(

@@ -289,22 +289,22 @@ class ShardedHNSWIndex:
         fallback_margin: float = 1.0,
     ) -> DataFrame:
         """Batch filtered ANN on the >50 M sharded tier: the routed
-        per-shard pool (:meth:`search_batch`) produces each query's
-        max(ef, oversample·k) candidates, then the shared finisher
-        (operators/knn.py::filtered_topk_from_pool) joins the pool
-        against the predicate-filtered scan and answers starved queries
-        exactly — the same contract as the plain-graph and IVF+PQ
-        tiers, so filtered search survives the tier switch. The block is
-        read once and handed to both."""
+        per-shard pool (:meth:`search_batch`'s plan) produces each
+        query's max(ef, oversample·k) candidates, then the shared
+        finisher (operators/knn.py::filtered_topk_from_pool) matches the
+        pool against the predicate-filtered scan and answers starved
+        queries exactly — the same contract as the plain-graph and
+        IVF+PQ tiers, so filtered search survives the tier switch. The
+        block is read once and handed to both; a pool the merge gate
+        finishes on the driver reaches the finisher as driver columns,
+        never as a frame that Spark would join again."""
         block = collect_query_block(queries, qid_col, qvec_col,
                                     self.model.centroids.shape[1])
         if block is None:
             return empty_topk(SparkSession.active(), self.id_col, qid_col)
         pool_k = max(int(ef or 0), int(oversample) * int(k), int(k))
-        pool = self.search_batch(
-            block, k=pool_k, ef=max(pool_k, int(ef or 0)),
-            n_probes=n_probes, qid_col=qid_col,
-        )
+        pool = self._routed_topk(block, pool_k, max(pool_k, int(ef or 0)),
+                                 n_probes, qvec_col, qid_col, None, columns=True)
         return filtered_topk_from_pool(
             pool, block, k, filtered_base, self.id_col, self.metric,
             vec_col, qid_col=qid_col, exact_fallback=exact_fallback,
@@ -328,6 +328,24 @@ class ShardedHNSWIndex:
         its shard from the executor-local graph cache (shards do not fit
         the driver) → the global cut (:func:`operators.knn.merge_topk`,
         k rows per routed pair)."""
+        return self._routed_topk(queries, k, ef, n_probes, qvec_col, qid_col,
+                                 upper_bound)
+
+    def _routed_topk(
+        self,
+        queries: DataFrame | np.ndarray | QueryBlock,
+        k: int,
+        ef: int | None,
+        n_probes: int,
+        qvec_col: str,
+        qid_col: str,
+        upper_bound: float | None,
+        columns: bool = False,
+    ) -> DataFrame | tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """:meth:`search_batch`'s plan. With ``columns`` a driver-side
+        cut stays as driver columns (``merge_topk(columns=True)``), so
+        the filtered finisher matches the pool by id instead of joining
+        a driver-local frame in Spark."""
         # executors serve from the on-disk shard files: flush any
         # dirty driver-side shards first so appended rows (and shards
         # newly materialized by add_batch) are visible — without this,
@@ -369,7 +387,7 @@ class ShardedHNSWIndex:
             serve, schema=f"{qid_col} long, {id_col} long, dist double"
         )
         return merge_topk(per_shard, k_, id_col, upper_bound, qx.size * k_,
-                          tier="sharded", qid_col=qid_col)
+                          tier="sharded", qid_col=qid_col, columns=columns)
 
     def absorb_tail(self, cand_ids: np.ndarray, cand_vecs: np.ndarray,
                     seed: int = 43) -> int:

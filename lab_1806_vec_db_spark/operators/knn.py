@@ -563,18 +563,22 @@ def collect_columns(frame: DataFrame, *cols: str) -> list[np.ndarray]:
 def driver_topk_merge(
     spark, qx: np.ndarray, ids: np.ndarray, d: np.ndarray, k: int,
     id_col: str, upper_bound: float | None, qid_col: str = "query_id",
-) -> DataFrame:
+    columns: bool = False,
+) -> DataFrame | tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Driver side of the global cut, over collected (qid, id, dist)
     columns: the SAME (dist asc, id asc) per-query top-k as the window
     plan (:func:`fast_topk_grouped`), the threshold applied after the
     cut, and the result returned as a local DataFrame sorted
-    (qid, dist, id) — no wide exchange, no window sort."""
+    (qid, dist, id) — no wide exchange, no window sort — or, with
+    ``columns``, as those sorted driver columns."""
     g = fast_topk_grouped(qx, ids, d, int(k))
     qx, ids, d = qx[g], ids[g], d[g]
     if upper_bound is not None:
         m = d <= float(upper_bound)
         qx, ids, d = qx[m], ids[m], d[m]
     o = np.lexsort((ids, d, qx))  # (qid, dist, id) — the shared order
+    if columns:
+        return qx[o], ids[o], d[o]
     return local_topk_frame(spark, qx[o], ids[o], d[o], id_col, qid_col)
 
 
@@ -623,18 +627,21 @@ def _topk_per_query(
 def merge_topk(
     scored: DataFrame, k: int, id_col: str, upper_bound: float | None,
     est_rows: int | None, *, tier: str, qid_col: str = "query_id",
-) -> DataFrame:
+    columns: bool = False,
+) -> DataFrame | tuple[np.ndarray, np.ndarray, np.ndarray]:
     """The global top-k every scan tier and sharded HNSW finish with.
     ``scored`` is the tier's (``qid_col``, id, dist) emission of
     per-task top-k rows and ``est_rows`` an upper bound on its row
     count; the gate (:func:`driver_side`) picks the driver merge or the
     window plan, which return identical rows in the (query id, dist, id)
-    order."""
+    order. With ``columns`` the driver side returns those rows as
+    (query id, id, dist) driver columns, for a caller that finishes on
+    the driver (a filtered pool, :func:`filtered_topk_from_pool`)."""
     if not driver_side(tier, scored, est_rows):
         return _topk_per_query(scored, k, id_col, upper_bound, qid_col=qid_col)
     qx, ids, d = collect_columns(scored, qid_col, id_col, "dist")
     return driver_topk_merge(scored.sparkSession, qx, ids, d, k, id_col,
-                             upper_bound, qid_col)
+                             upper_bound, qid_col, columns=columns)
 
 
 def pool_survivors(
@@ -683,7 +690,8 @@ def filtered_topk_from_pool(
     per-query candidate ``pool`` against the predicate-filtered base —
     the predicate pushes into the parquet scan — and keep k survivors
     per query. ``pool`` is a (query_id, id, dist) DataFrame, or those
-    columns already on the driver (plain HNSW's graph serve). Queries
+    columns already on the driver (plain HNSW's graph serve, sharded
+    HNSW's driver-side merge). Queries
     whose pool can't fill k are answered EXACTLY by the flat batch scan
     over the filtered base, so the result never silently under-fills
     while matches exist (``exact_fallback=False`` skips that pass and

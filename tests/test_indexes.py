@@ -86,6 +86,115 @@ def test_kmeans_multi_probe_ranking():
     assert list(probes) == [1, 0, 2]
 
 
+# ---- compiled k-means step vs the numpy reference ---------------------------
+#
+# fit_kmeans runs its Lloyd step and k-means++ fold through ckernel when
+# the toolchain is present; the numpy loop is the reference. Each case
+# runs both in one process (ckernel.available patched off for the
+# reference) and asserts bit-identical centroids and codes. Without a
+# toolchain (SPARK_GRAFT_NO_CKERNEL=1) both legs are the numpy loop.
+
+
+def _clustered(n: int, d: int, c: int, seed: int) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(scale=3.0, size=(c, d))
+    return centers[rng.integers(0, c, n)] + rng.normal(size=(n, d))
+
+
+def _both_paths(monkeypatch, fn):
+    """``fn()`` on the default path, then on the numpy reference."""
+    from lab_1806_vec_db_spark.index import ckernel
+
+    got = fn()
+    with monkeypatch.context() as m:
+        m.setattr(ckernel, "available", lambda: False)
+        ref = fn()
+    return got, ref
+
+
+def _encode(x: np.ndarray, codebooks, groups) -> np.ndarray:
+    """Per-group nearest codeword, the argmin ``PQTable.encode_df`` runs."""
+    from lab_1806_vec_db_spark.index.kmeans import _pairwise_dist
+
+    return np.stack([
+        np.argmin(_pairwise_dist(x[:, s : s + z], cb, "l2sqr"), axis=1)
+        for (s, z), cb in zip(groups, codebooks)
+    ], axis=1)
+
+
+@pytest.mark.parametrize("n", [1000, 10000])
+def test_codebook_fit_compiled_matches_numpy(monkeypatch, n):
+    sample = _clustered(n, 128, 32, seed=n)
+    groups = pq_groups(128, 43)
+    got, ref = _both_paths(
+        monkeypatch, lambda: pq_mod._fit_codebooks(sample, groups, 16, 42))
+    assert len(got) == len(ref) == 43
+    assert all(np.array_equal(a, b) for a, b in zip(got, ref))
+    assert np.array_equal(_encode(sample, got, groups), _encode(sample, ref, groups))
+
+
+@pytest.mark.parametrize("metric", ["l2sqr", "cosine"])
+def test_coarse_fit_compiled_matches_numpy(monkeypatch, metric):
+    x = _clustered(10000, 128, 64, seed=5)
+    if metric == "cosine":
+        x /= np.linalg.norm(x, axis=1, keepdims=True)
+    got, ref = _both_paths(
+        monkeypatch, lambda: fit_kmeans(x, k=64, metric=metric, seed=42).centroids)
+    assert got.shape == (64, 128)
+    assert np.array_equal(got, ref)
+    m = KMeansModel(centroids=got, metric=metric)
+    assert np.array_equal(m.assign(x), KMeansModel(centroids=ref, metric=metric).assign(x))
+
+
+def test_kmeans_exactness_regime_compiled_matches_numpy(monkeypatch):
+    # ≤ k distinct rows: one centroid per distinct row, on both paths
+    rng = np.random.default_rng(4)
+    x = rng.normal(size=(10, 3))[rng.integers(0, 10, 300)]
+    got, ref = _both_paths(monkeypatch, lambda: fit_kmeans(x, k=16, seed=4).centroids)
+    assert np.array_equal(got, ref)
+    assert np.array_equal(got, np.unique(x, axis=0))
+
+
+@pytest.mark.parametrize("d", [1, 3])
+def test_kmeans_duplicate_heavy_compiled_matches_numpy(monkeypatch, d):
+    # a few hundred rows over a small integer grid: many exact ties
+    # between rows and between distances; d=1 takes numpy's pairwise
+    # summation in the mean
+    rng = np.random.default_rng(3)
+    x = rng.integers(0, 6, (4000, d)).astype(np.float64)
+    got, ref = _both_paths(monkeypatch, lambda: fit_kmeans(x, k=4, seed=3).centroids)
+    assert np.array_equal(got, ref)
+
+
+def test_kmeans_empty_cluster_compiled_matches_numpy(monkeypatch):
+    # three directions at many norms, k=8 under cosine: every row is at
+    # distance ~0 from every centroid on its direction, ties split only
+    # by rounding, and a centroid that wins no row must keep its value
+    rng = np.random.default_rng(8)
+    dirs = rng.normal(size=(3, 4))
+    x = dirs[rng.integers(0, 3, 600)] * rng.uniform(0.5, 2.0, (600, 1))
+    got, ref = _both_paths(
+        monkeypatch, lambda: fit_kmeans(x, k=8, metric="cosine", seed=8).centroids)
+    assert np.array_equal(got, ref)
+    labels = KMeansModel(centroids=got, metric="cosine").assign(x)
+    assert np.unique(labels).size < 8  # some centroid holds no rows
+
+
+def test_sample_rows_arrow_equals_pandas_conversion(emb):
+    """The training sample read through Arrow is the one the pandas
+    conversion built: the same rows in the same order, the same f64
+    values."""
+    from lab_1806_vec_db_spark.index.kmeans import sample_key, sample_rows
+
+    for frame in (emb, emb.withColumn("embedding", F.col("embedding").cast("array<double>"))):
+        got = sample_rows(frame, 300, vec_col="embedding", id_col="vec_id", seed=7)
+        pdf = (frame.select("embedding", sample_key("vec_id", 7).alias("__sk"))
+               .orderBy("__sk").limit(300).select("embedding").toPandas())
+        ref = np.asarray(pdf["embedding"].to_list(), dtype=np.float64)
+        assert got.dtype == np.float64 and got.shape == ref.shape == (300, 64)
+        assert np.array_equal(got, ref)
+
+
 # ---- IVF -------------------------------------------------------------------
 
 
@@ -607,6 +716,96 @@ def _jobs(spark, fn) -> int:
     finally:
         sc._jsc.clearJobGroup()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# ---- full cluster-partitioned writes: one file per cluster directory -------
+
+
+def _files_per_cluster(root: str) -> list[int]:
+    import glob
+
+    return [len(glob.glob(os.path.join(d, "*.parquet")))
+            for d in glob.glob(os.path.join(root, "cluster_id=*"))]
+
+
+def _query_block(emb, n: int = 20):
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec"))
+
+
+def test_ivf_build_writes_one_file_per_cluster(emb, tmp_path):
+    """From a 4-partition input the IVF build still writes each
+    cluster as one file, and the written layout serves the rows of the
+    same build kept in memory."""
+    src = emb.repartition(4)
+    kw = dict(k=16, metric="l2sqr", vec_col="embedding", id_col="vec_id",
+              train_size=500)
+    path = str(tmp_path / "ivf")
+    idx = IVFIndex.build(src, path=path, **kw)
+    files = _files_per_cluster(os.path.join(path, "data"))
+    assert files and set(files) == {1}
+    q = _query_block(emb)
+    assert _batch_rows(idx.search_batch(q, k=10, n_probes=4)) == \
+        _batch_rows(IVFIndex.build(src, **kw).search_batch(q, k=10, n_probes=4))
+
+
+def test_ivfpq_full_writes_one_file_per_cluster(emb, tmp_path):
+    """Build, the settle rewrite and compact each leave one file per
+    cluster directory (an append adds files; compact folds them back),
+    and every layout serves the rows of the same index kept in memory."""
+    import json
+
+    from lab_1806_vec_db_spark.index.ivfpq import IVFPQIndex
+
+    src = emb.filter(F.col("vec_id") < 400).repartition(4)
+    kw = dict(k_coarse=8, m=16, n_bits=8, metric="l2sqr", vec_col="embedding",
+              id_col="vec_id", train_size=400, dim=64)
+    path = str(tmp_path / "ivfpq")
+    codes = os.path.join(path, "codes")
+    idx = IVFPQIndex.build(src, path=path, **kw)
+    mem = IVFPQIndex.build(src, **kw)
+    q = _query_block(emb)
+
+    def served(index):
+        return _batch_rows(index.search_batch(q, k=10, n_probes=8, ef=64))
+
+    want = served(mem)
+    assert set(_files_per_cluster(codes)) == {1}
+    assert served(idx) == want
+    # a pending marker over encoded ids: settle re-encodes them in one
+    # full rewrite of the codes directory
+    with open(os.path.join(path, "pending_append.json"), "w") as f:
+        json.dump({"lo": 100, "hi": 200}, f)
+    idx._settle_pending_codes()
+    assert set(_files_per_cluster(codes)) == {1}
+    assert served(idx) == want
+    more = emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 500))
+    idx.add_batch(more)
+    mem.add_batch(more)
+    assert max(_files_per_cluster(codes)) > 1
+    idx.compact()
+    assert set(_files_per_cluster(codes)) == {1}
+    assert served(idx) == served(mem)
+
+
+def test_index_build_job_counts(spark, emb, tmp_path):
+    """Spark jobs of each VecDB index build, 64 clusters as in perfbench's
+    batch-scan, pinned: PQ 7, IVF 6, IVF+PQ 8. IVF and IVF+PQ each run
+    one map stage more than a plain partitioned write (5 and 7 jobs):
+    the shuffle that hands each cluster to one task. Above 32 cluster
+    directories the read-back lists them in a job of its own."""
+    db = VecDB(str(tmp_path / "db"), spark=spark)
+    try:
+        src = emb.select(F.col("embedding").alias("vec"), "label")
+        for key in ("a", "b", "c"):
+            db.create_table_if_not_exists(key, 64)
+            db.batch_add_df(key, src, vec_col="vec", meta_cols=["label"])
+        assert _jobs(spark, lambda: db.build_pq_table("a")) == 7
+        assert _jobs(spark, lambda: db.build_ivf_index("b", k=64)) == 6
+        assert _jobs(spark, lambda: db.build_ivfpq_index("c", k_coarse=64,
+                                                          n_probes=4)) == 8
+    finally:
+        db.close()
 
 
 def test_hnsw_batch_serves_pq_codes_swap(emb, hnsw, pq16):
