@@ -1286,26 +1286,6 @@ class SearchCtx:
         return oi[0], od[0]
 
 
-def search(
-    vecs: np.ndarray,      # (n, d) contiguous f32/f64
-    x2: np.ndarray,        # (n,) self-dots, same dtype
-    xn: np.ndarray | None,  # (n,) norms (cosine) or None
-    links: list[np.ndarray],   # per-level (n, cap) int32
-    counts: list[np.ndarray],  # per-level (n,) int32
-    entry: int,
-    max_level: int,
-    metric: str,
-    qs: np.ndarray,        # (nq, d) contiguous, same dtype as vecs
-    k: int,
-    ef: int,
-    codes: np.ndarray | None = None,   # (n, m) uint8 — ADC traversal
-    lut: np.ndarray | None = None,     # (nq, m, ksub), same dtype as vecs
-) -> tuple[np.ndarray, np.ndarray]:
-    """One-shot form of :class:`SearchCtx` (context built per call)."""
-    ctx = SearchCtx(vecs, x2, xn, links, counts, entry, max_level, metric)
-    return ctx.search(qs, k, ef, codes=codes, lut=lut)
-
-
 def build_pools(
     vecs: np.ndarray,
     x2: np.ndarray,

@@ -18,54 +18,30 @@ Spark mapping — the inverted list IS the partition layout:
 - centroids are tiny (k × dim) and live driver-side / broadcast,
   exactly like the reference's in-memory centroid VecSet.
 - batch search: route each query to its n_probes clusters on the
-  driver and broadcast the (cluster → probing queries) map; the scan
-  of the probed clusters scores a base row only for the queries that
-  probe its cluster (no all-pairs blow-up), cuts each (cluster run ×
-  probing queries) tile with ``operators.knn.topk_cut`` into the task's
-  ``TopkAccumulator``, and the only wide step is the k-bounded global
-  cut (``merge_topk``).
+  driver; ``operators.knn.exact_list_scan``, the flat tier's scan with
+  the clusters as its lists, scores a base row only for the queries
+  that probe its cluster (no all-pairs blow-up), in the flat scan's f64
+  arithmetic, and the only wide step is the k-bounded global cut
+  (``merge_topk``). Probing every cluster is the flat scan
+  (ivf_index.rs:166-235's equivalence gate).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab_1806_vec_db_spark.index.kmeans import (
-    KMeansModel,
-    _pairwise_dist,
-    fit_kmeans,
-    sample_rows,
-)
-from lab_1806_vec_db_spark.operators import knn as knn_ops
+from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans, sample_rows
 from lab_1806_vec_db_spark.operators.knn import (
-    TopkAccumulator,
     collect_query_block,
     empty_topk,
-    merge_topk,
-    topk_cut,
+    exact_list_scan,
 )
-
-
-def group_probes(probes: np.ndarray) -> dict[int, np.ndarray]:
-    """cluster_id → int64 array of the query indices probing it, built
-    with one argsort instead of the |Q|·n_probes python append loop
-    (round-14: at the 1000×111 bench shape the dict-of-lists loop plus
-    its per-broadcast pickle of 111k boxed ints cost ~0.1 s per serve;
-    numpy arrays group in ~1 ms and pickle as binary buffers)."""
-    nq, n_probes = probes.shape
-    qi = np.repeat(np.arange(nq, dtype=np.int64), n_probes)
-    cc = np.asarray(probes, dtype=np.int64).reshape(-1)
-    order = np.argsort(cc, kind="stable")  # stable → per-cluster query
-    cc_s, qi_s = cc[order], qi[order]      # order matches the old loop
-    ucc, starts = np.unique(cc_s, return_index=True)
-    bounds = np.r_[starts[1:], cc_s.size]
-    return {int(c): qi_s[s:e] for c, s, e in zip(ucc, starts, bounds)}
 
 
 class IVFIndex:
@@ -112,15 +88,14 @@ class IVFIndex:
         sampling, so the quantizer fit, the assignment, and the stored
         vectors all see the same f32-rounded values (the whole pipeline
         stays SQL-reproducible via a double→float4→double prelude).
-        Distances still accumulate in f64; they carry f32 input error
-        (~1e-7 relative), an occasional last-decimal flip under the
-        4-dp contract, so the oracle-checked default stays full
-        precision. Regime note (measured, BENCH_AUDIT_r12.md §3): the
-        win is the IO-bound serve — parquet probes at 100 TB, memory-
-        tight caches. With the clustered frame fully pinned in executor
-        memory the f32 layout is ~1.5× SLOWER than f64: the scan pays a
-        full upcast copy per Arrow batch while the halved bytes save
-        nothing. Pick by where the bytes come from."""
+        The scan upcasts each batch and scores it in f64, so the answer
+        is the flat scan's over the f32-rounded values. Regime note
+        (measured, BENCH_AUDIT_r12.md §3): the win is the IO-bound serve
+        — parquet probes at 100 TB, memory-tight caches. With the
+        clustered frame fully pinned in executor memory the f32 layout
+        is ~1.5× SLOWER than f64: the scan pays a full upcast copy per
+        Arrow batch while the halved bytes save nothing. Pick by where
+        the bytes come from."""
         if store_vec_dtype not in (None, "float32", "float64"):
             raise ValueError(f"Unsupported store_vec_dtype: {store_vec_dtype}")
         vec_type = {"float32": "array<float>", "float64": "array<double>",
@@ -210,10 +185,10 @@ class IVFIndex:
         upper_bound: float | None = None,
     ) -> DataFrame:
         """Single-query IVF kNN (ivf_index.rs:132-155) as ``(id, dist)``:
-        :meth:`search_batch` over a one-row block, in f64 arithmetic."""
+        :meth:`search_batch` over a one-row block."""
         return self.search_batch(
             np.asarray([query], dtype=np.float64), k, n_probes,
-            upper_bound=upper_bound, compute_dtype="float64",
+            upper_bound=upper_bound,
         ).select(self.id_col, "dist")
 
     def search_batch(
@@ -224,109 +199,25 @@ class IVFIndex:
         qid_col: str = "query_id",
         qvec_col: str = "vec",
         upper_bound: float | None = None,
-        compute_dtype: str | None = None,
     ) -> DataFrame:
         """Batch IVF kNN: each query scans only its own probed clusters.
-
-        Plan: queries → (query_id, cluster_id, qv) probe rows (driver
-        ranking over the tiny centroid set) → broadcast-join with the
-        clustered base on ``cluster_id`` → Arrow-batched distance → per
-        query top-k. Scored rows ≈ |Q| · n_probes/k · |base| — the
-        pruning ratio of the reference, distributed.
-
-        ``compute_dtype``: numeric precision of the scan's distance
-        GEMM. ``None`` (auto) follows the STORE dtype — an f32 layout
-        is served with f32 arithmetic end-to-end, the reference's own
-        serving precision (distance/mod.rs:43-51 sums f32; accumulation
-        order is the BLAS kernel's, as the reference's is its SIMD
-        lanes'), and the scan touches the Arrow buffer zero-copy with
-        no upcast copy per batch — round-12 measured the per-batch f64
-        upcast making the f32 layout ~1.5× SLOWER than f64 in the
-        memory-cached regime. ``"float64"`` forces full-precision
-        arithmetic over the stored values (bit-compatible with the
-        DuckDB oracles; what the 4-dp contract was validated against).
-        Distances are rounded on the 4-dp grid in f64 either way; f32
-        arithmetic can flip a rounded last decimal on near-ties, so
-        forced-f64 remains the choice where oracle hash-equality
-        matters; :meth:`search` forces it.
+        The n_probes nearest centroids of each query are ranked on the
+        driver (the centroid set is tiny), and
+        :func:`operators.knn.exact_list_scan` scores each probed cluster
+        for the queries probing it, the flat scan's f64 arithmetic.
+        Scored pairs ≈ |Q| · n_probes/k · |base| — the pruning ratio of
+        the reference, distributed; with n_probes = k the result is the
+        flat scan's.
 
         ``queries`` is a DataFrame or a driver-side matrix
-        (:func:`operators.knn.collect_query_block`). The global cut is
-        :func:`operators.knn.merge_topk`."""
-        spark = self.clustered.sparkSession
+        (:func:`operators.knn.collect_query_block`)."""
         block = collect_query_block(queries, qid_col, qvec_col,
                                     self.model.centroids.shape[1])
         if block is None:
-            return empty_topk(spark, self.id_col)
-        qids, qmat = block
-        probes = self.model.rank_centroids_batch(qmat, n_probes)  # (m, n_probes)
-        # cluster_id -> int64 array of the query indices probing it
-        by_cluster = group_probes(np.asarray(probes))
-        if compute_dtype not in (None, "float32", "float64"):
-            raise ValueError(f"Unsupported compute_dtype: {compute_dtype}")
-        bc = spark.sparkContext.broadcast((qids, qmat, by_cluster, self.model.metric))
-        vec_col, id_col = self.vec_col, self.id_col
-        k_ = int(k)
-        cdt = compute_dtype
-        cap = knn_ops.ACC_CAP_ROWS
-
-        def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            from lab_1806_vec_db_spark.functions.arrowvec import (
-                knn_schema,
-                result_batch,
-                vec_matrix,
-            )
-
-            bqids, bq, bclusters, metric = bc.value
-            acc = TopkAccumulator(k_, cap)
-            bqc = None  # query block in the compute dtype (cast once per task)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                # zero-copy views: the vector column flattens in place;
-                # compute-dtype auto (cdt None) keeps the STORE dtype so
-                # an f32 layout is scanned with no per-batch upcast copy
-                # (see the docstring); no pandas round-trip
-                x_all = vec_matrix(rb.column(rb.schema.get_field_index(vec_col)),
-                                   dtype=np.dtype(cdt) if cdt else None)
-                if bqc is None or bqc.dtype != x_all.dtype:
-                    bqc = np.ascontiguousarray(bq, dtype=x_all.dtype)
-                ids_all = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
-                    zero_copy_only=False)
-                cl_all = rb.column(rb.schema.get_field_index("cluster_id")).to_numpy(
-                    zero_copy_only=False)
-                for cid in np.unique(cl_all):
-                    sel = bclusters.get(int(cid))
-                    if sel is None or len(sel) == 0:
-                        continue
-                    rows = np.nonzero(cl_all == cid)[0]
-                    ids = ids_all[rows]
-                    # the 4-dp rounding grid stays f64 whatever the GEMM
-                    # precision (topk_cut cuts on f64)
-                    top, d = topk_cut(_pairwise_dist(x_all[rows], bqc[sel], metric),
-                                      ids, k_, True)
-                    acc.add(np.repeat(np.asarray(sel, dtype=np.int64), top.shape[1]),
-                            ids[top].reshape(-1), d.reshape(-1))
-            out = acc.result()
-            if out is not None:
-                qx, ids_o, d_o = out[:3]
-                yield result_batch(knn_schema(id_col), query_id=bqids[qx],
-                                   **{id_col: ids_o}, dist=d_o)
-
-        probed_any = sorted(by_cluster.keys())
-        src = self.clustered.filter(F.col("cluster_id").isin(probed_any)).select(
-            id_col, vec_col, "cluster_id"
-        )
-        scored = src.mapInArrow(
-            scan, schema=f"query_id long, {id_col} long, dist double"
-        )
-        try:
-            n_parts = src.rdd.getNumPartitions()
-        except Exception:
-            n_parts = None
-        # the in-task compaction emits at most k rows per (query, task)
-        est_rows = None if n_parts is None else len(qids) * k_ * n_parts
-        return merge_topk(scored, k_, id_col, upper_bound, est_rows, tier="ivf")
+            return empty_topk(self.clustered.sparkSession, self.id_col)
+        probes = self.model.rank_centroids_batch(block.qmat, n_probes)
+        return exact_list_scan(self.clustered, block, probes, k, self.model.metric,
+                               self.id_col, self.vec_col, upper_bound, tier="ivf")
 
     def assign(self, df: DataFrame) -> DataFrame:
         """Q9 as a DataFrame op: nearest-centroid id per row."""

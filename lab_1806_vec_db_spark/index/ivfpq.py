@@ -16,16 +16,16 @@ index/pq.py):
   n_probes/k of its directories — both pruning axes multiply.
 - **search_batch** (and ``search``, which runs it over a one-row
   block): centroids are ranked driver-side (they are tiny, exactly the
-  reference's in-memory centroid VecSet) and per-query probe sets share
-  one partition-pruned scan — each codes partition scores a row only
-  for the queries that probe its cluster (``pq.adc_tile`` per cluster
-  run, pq_table.rs:239-301 lookup-sum, 4-dp rounded top-ef into the
-  task's ``operators.knn.TopkAccumulator``), then the global ADC gate,
-  the exact re-rank (``pq.exact_rerank``, candidate_pair.rs:102-108:
-  fused in the scan, or an Arrow-batched join wave) and the top-k cut
-  (``pq.finish_adc``). The driver-local mirror (``enable_local_serve``)
-  runs the same tile cut and re-rank over a thread pool with no Spark
-  job.
+  reference's in-memory centroid VecSet) and ``pq.adc_list_scan``, the
+  flat PQ tier's scan with the clusters as its lists, runs one
+  partition-pruned scan in which each codes partition scores a row
+  only for the queries that probe its cluster (``pq.adc_tile`` per
+  cluster run, pq_table.rs:239-301 lookup-sum, 4-dp rounded top-ef),
+  then the global ADC gate, the exact re-rank (``pq.exact_rerank``,
+  candidate_pair.rs:102-108: fused in the scan, or an Arrow-batched
+  join wave) and the top-k cut. With one centroid it is the PQ tier's
+  serve. The driver-local mirror (``enable_local_serve``) runs the same
+  tile cut and re-rank over a thread pool with no Spark job.
 
 Plan shape at scale: one pruned scan of the codes table (no shuffle),
 one ef·|Q|-bounded shuffle for the merge window, one broadcast join for
@@ -42,27 +42,24 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab_1806_vec_db_spark.index.ivf import group_probes
 from lab_1806_vec_db_spark.index.kmeans import KMeansModel, fit_kmeans, sample_rows
-from lab_1806_vec_db_spark.index import pq as pq_mod
 from lab_1806_vec_db_spark.index.pq import (
     PQTable,
+    adc_list_scan,
     adc_tile,
     build_lookup_batch,
     exact_rerank,
-    finish_adc,
-    make_grouped_rerank_scan,
+    lut_chunk,
     pq_groups,
     unpack_codes,
     _fit_codebooks,
 )
-from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.operators.knn import (
-    TopkAccumulator,
     collect_query_block,
     driver_topk_merge,
     empty_topk,
     filtered_topk_from_pool,
+    group_probes,
 )
 
 
@@ -767,14 +764,12 @@ class IVFPQIndex:
         L = self._local
         assert L is not None
         nq = qmat.shape[0]
-        lut_chunk = max(
-            4, pq_mod.MAX_LUT_BYTES // (self.pq.m * (1 << self.pq.n_bits) * 8)
-        )
-        if nq > lut_chunk:
+        chunk = lut_chunk(self.pq.m, self.pq.n_bits)
+        if nq > chunk:
             qs_p, is_p, ds_p = [], [], []
-            for s in range(0, nq, lut_chunk):
+            for s in range(0, nq, chunk):
                 q_, i_, d_ = self._search_local(
-                    qmat[s : s + lut_chunk], k, n_probes, ef, metric)
+                    qmat[s : s + chunk], k, n_probes, ef, metric)
                 qs_p.append(q_ + s)
                 is_p.append(i_)
                 ds_p.append(d_)
@@ -797,7 +792,7 @@ class IVFPQIndex:
             # — per-tile round/lexsort ufunc passes held the GIL and
             # serialized the pool (22 s → ~1 s at the worst-skew N=1M
             # shape)
-            rows, d = adc_tile(L["codes"][s:e], ids, lut64, sq, qn, sel, ef_, True)
+            rows, d = adc_tile(L["codes"][s:e], ids, lut64, sq, qn, sel, ef_)
             return (np.repeat(sel, rows.shape[1]), ids[rows].reshape(-1),
                     d.reshape(-1), (rows + s).reshape(-1))
 
@@ -856,20 +851,6 @@ class IVFPQIndex:
         return qs2[keep], is2[keep], ds2[keep]
 
     # ---- search -----------------------------------------------------------
-
-    def _rerank_source(self, probed: Sequence[int]) -> DataFrame:
-        """Vector source for the exact re-rank: the cluster-partitioned
-        codes table itself when it carries the vec column (partition
-        pruning → only probed directories are read; columnar pruning
-        keeps the ADC scan from ever touching these bytes), else the
-        unpartitioned base table (legacy/in-memory layouts)."""
-        if self.vec_col in self.codes_clustered.columns:
-            return (
-                self.codes_clustered
-                .filter(F.col("cluster_id").isin([int(c) for c in probed]))
-                .select(self.id_col, self.vec_col)
-            )
-        return self.base.select(self.id_col, self.vec_col)
 
     def search(
         self,
@@ -943,21 +924,15 @@ class IVFPQIndex:
         qvec_col: str = "vec",
         upper_bound: float | None = None,
     ) -> DataFrame:
-        """Batch IVF+PQ: one pruned scan of the codes table; each
-        partition scores a row only for the queries probing its
-        cluster (LUT gather, no raw vectors touched), keeps its top-ef
-        per query; the global ADC gate, the exact re-rank and the final
-        top-k are :func:`index.pq.finish_adc`.
-
-        Per task, each (cluster run × probing queries) tile is cut by
-        :func:`index.pq.adc_tile` on the 4-dp grid into one
-        :class:`operators.knn.TopkAccumulator`, whose floors
-        (``knn.ACC_CAP_ROWS`` triples of ~24 B, plus on the fused plan
-        ``knn.ACC_VEC_BYTES`` of candidate vectors in the STORE dtype)
-        bound per-task memory at max(floor, 1.5× the live set). Python
-        workers are per-core, so the executor-wide footprint multiplies
-        by concurrent task slots (the result set is identical at any
-        floor).
+        """Batch IVF+PQ: the driver mirror when enabled, else
+        :func:`index.pq.adc_list_scan` with the clusters as its lists —
+        one pruned scan of the codes table in which each partition
+        scores a row only for the queries probing its cluster (LUT
+        gather, no raw vectors touched), then the global ADC gate, the
+        exact re-rank and the final top-k. Per-task memory is the scan's
+        accumulator floors; Python workers are per-core, so the
+        executor-wide footprint multiplies by concurrent task slots (the
+        result set is identical at any floor).
 
         ``queries`` is a DataFrame or a driver-side matrix
         (:func:`operators.knn.collect_query_block`)."""
@@ -980,123 +955,15 @@ class IVFPQIndex:
             return driver_topk_merge(spark, qids[qq], ii, dd, int(k), id_col,
                                      upper_bound, qid_col)
 
-        fused = pq_mod.fuse_rerank(self.codes_clustered, self.vec_col, self.pq.dim)
-        vec_col = self.vec_col
-
-        cap, cap_vec = knn_ops.ACC_CAP_ROWS, knn_ops.ACC_VEC_BYTES
-
-        def make_scan(bc):
-            def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-                import pyarrow as pa
-
-                from lab_1806_vec_db_spark.functions.arrowvec import (
-                    binary_matrix,
-                    result_batch,
-                    vec_matrix,
-                )
-
-                bqids, bclusters, blut3, bsq, bqn, m, n_bits, bqmat, bmetric = bc.value
-                fused_t = bqmat is not None
-                lut64 = np.ascontiguousarray(blut3, dtype=np.float64)
-                acc = TopkAccumulator(ef_, cap, cap_vec)
-                out_schema = pa.schema(
-                    [pa.field("query_id", pa.int64()),
-                     pa.field(id_col, pa.int64()),
-                     pa.field("adc", pa.float64())]
-                    + ([pa.field("dist", pa.float64())] if fused_t else []))
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    # zero-copy views over the Arrow batch: packed codes
-                    # as an (n, bytes) uint8 matrix, vectors flattened in
-                    # place — no pandas materialization of either column
-                    sch = rb.schema
-                    buf = binary_matrix(rb.column(sch.get_field_index("code")))
-                    codes_all = unpack_codes(buf, m, n_bits)
-                    ids_all = rb.column(sch.get_field_index(id_col)).to_numpy(
-                        zero_copy_only=False)
-                    cl_all = rb.column(sch.get_field_index("cluster_id")).to_numpy(
-                        zero_copy_only=False)
-                    vec_all = (
-                        vec_matrix(rb.column(sch.get_field_index(vec_col)))
-                        if fused_t else None
-                    )
-                    for cid in np.unique(cl_all):
-                        sel = bclusters.get(int(cid))
-                        if sel is None or len(sel) == 0:
-                            continue
-                        sel = np.asarray(sel, dtype=np.int64)
-                        rows = np.nonzero(cl_all == cid)[0]
-                        ids = ids_all[rows]
-                        # 4-dp rounded candidate gate with id tie-break —
-                        # the SAME cut the driver mirror applies, so the
-                        # two agree on near-tie boundaries
-                        top, adc = adc_tile(codes_all[rows], ids, lut64, bsq, bqn,
-                                            sel, ef_, True)
-                        args = (np.repeat(sel, top.shape[1]), ids[top].reshape(-1),
-                                adc.reshape(-1))
-                        if fused_t:
-                            need = np.unique(top)
-                            args += (ids[need], vec_all[rows[need]])
-                        acc.add(*args)
-                out = acc.result()
-                if out is None:
-                    return
-                qx, ids, adc = out[:3]
-                cols = {"query_id": bqids[qx], id_col: ids, "adc": adc}
-                if fused_t:
-                    # exact re-rank of ONLY the surviving candidates —
-                    # the same function and rounding as the two-pass
-                    # wave, so results stay bit-identical to it
-                    cols["dist"] = exact_rerank(out[3], out[4], bqmat, qx, bmetric)
-                yield result_batch(out_schema, **cols)
-
-            return scan
-
-        # bound each broadcast lookup tensor (same ≤64 MB budget as
-        # PQTable.search_batch): queries are processed in chunks, each
-        # with its own probe routing, pruned scan, and broadcast
-        ksub = 1 << self.pq.n_bits
-        chunk = max(4, pq_mod.MAX_LUT_BYTES // (self.pq.m * ksub * 8))
-        pieces = []
-        all_probed: set[int] = set()
-        for s in range(0, len(qids), chunk):
-            qmat_c = qmat[s : s + chunk]
-            probes = self.model.rank_centroids_batch(qmat_c, n_probes)
-            by_cluster = group_probes(np.asarray(probes))
-            all_probed.update(by_cluster.keys())
-            lut3, sq, qn = build_lookup_batch(
-                qmat_c, self.pq.codebooks, self.pq.groups, self.pq.n_bits, metric
-            )
-            bc = spark.sparkContext.broadcast(
-                (qids[s : s + chunk], by_cluster, lut3, sq, qn,
-                 self.pq.m, self.pq.n_bits,
-                 qmat_c if fused else None, metric)
-            )
-            probed_any = sorted(by_cluster.keys())
-            scan_cols = [id_col, "code", "cluster_id"] + ([vec_col] if fused else [])
-            scan_schema = f"query_id long, {id_col} long, adc double" + (
-                ", dist double" if fused else "")
-            pieces.append(
-                self.codes_clustered.filter(F.col("cluster_id").isin(probed_any))
-                .select(*scan_cols)
-                .mapInArrow(make_scan(bc), schema=scan_schema)
-            )
-        approx = pieces[0]
-        for p in pieces[1:]:
-            approx = approx.unionByName(p)
-        rerank_source = None if fused else (
-            self._rerank_source(sorted(all_probed)),
-            make_grouped_rerank_scan(spark, qids, qmat, metric, id_col, vec_col),
-        )
+        probes = self.model.rank_centroids_batch(qmat, n_probes)
         # ×2: per-task emission is ef per (query, TASK), and the
         # balanced range pin splits big clusters across ~2 tasks on
         # average (measured 1.8× raw-emission inflation at 1M/8p with
         # the pin at shuffle width), so the emission runs ~2× the
         # |Q|·n_probes·ef ideal
-        out = finish_adc(approx, int(k), ef_, id_col, upper_bound,
-                         len(qids) * int(n_probes) * ef_ * 2, rerank_source,
-                         tier="ivfpq")
+        out = adc_list_scan(self.codes_clustered, self.base, self.pq, block, probes,
+                            int(k), ef_, metric, upper_bound,
+                            len(qids) * int(n_probes) * ef_ * 2, tier="ivfpq")
         if qid_col != "query_id":
             out = out.withColumnRenamed("query_id", qid_col)
         return out

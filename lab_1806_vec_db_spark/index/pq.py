@@ -20,13 +20,15 @@ Spark mapping:
   IVF+PQ's codes frame has too: the compressed column is ~dim·4bits vs
   dim·32bits, and every reader projects the columns it needs, so the
   columnar ADC scan reads 8× less than a flat scan;
-- lookup tables are per-query, tiny, and broadcast; the ADC scan is an
-  Arrow-batched lookup-sum (the SIMD loop of pq_table.rs:239-270):
-  :func:`adc_tile`, the one ADC scorer of every PQ and IVF+PQ scan
-  (batch scans, ``adc_scan``, driver mirror), scores a (rows × queries) tile
-  and cuts each query's top-ef (the compiled ``ckernel.adc_topk`` /
-  ``adc_block`` kernels, or a numpy gather loop) — in the batch scans
-  into the task's ``operators.knn.TopkAccumulator``;
+- lookup tables are per-query, tiny, and broadcast (in
+  :func:`lut_chunk` pieces); :func:`adc_list_scan`, the one ADC scan of
+  the PQ and IVF+PQ batch serves (PQ is its one-list case), is an
+  Arrow-batched lookup-sum (the SIMD loop of pq_table.rs:239-301):
+  :func:`adc_tile`, the one ADC scorer (batch scans and the IVF+PQ
+  driver mirror), scores a (rows × queries) tile and cuts each query's
+  4-dp rounded top-ef (the compiled ``ckernel.adc_topk`` /
+  ``adc_block`` kernels, or a numpy gather loop) into the task's
+  ``operators.knn.TopkAccumulator``;
 - re-rank (:func:`exact_rerank`, the one exact re-rank of the PQ and
   IVF+PQ serves) either runs in the scan over vectors riding the codes
   batches (fused) or joins the ef candidate ids back to the vectors
@@ -43,6 +45,7 @@ pq_table.rs:215-224.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -55,6 +58,8 @@ from pyspark.sql import functions as F
 from lab_1806_vec_db_spark.index.kmeans import _pairwise_dist, fit_kmeans, sample_rows
 from lab_1806_vec_db_spark.operators import knn as knn_ops
 from lab_1806_vec_db_spark.operators.knn import (
+    LIST_COL,
+    QueryBlock,
     TopkAccumulator,
     _topk_per_query,
     collect_columns,
@@ -63,7 +68,10 @@ from lab_1806_vec_db_spark.operators.knn import (
     driver_topk_merge,
     empty_topk,
     fast_topk_grouped,
+    list_runs,
     np_round_half_up,
+    route_lists,
+    take,
     topk_cut,
     window_cut,
 )
@@ -248,14 +256,43 @@ def lut_span_builder(
     return build
 
 
+@functools.lru_cache(maxsize=1)
+def _openblas_threads() -> tuple[Callable, Callable] | None:
+    """(get, set) of the thread count of the OpenBLAS numpy ships in its
+    wheel (``numpy.libs``), or None when numpy links another BLAS."""
+    import ctypes
+    import glob
+
+    root = os.path.dirname(np.__file__)
+    for path in sorted(glob.glob(os.path.join(root, "..", "numpy.libs", "libopenblas*"))
+                       + glob.glob(os.path.join(root, ".libs", "libopenblas*"))):
+        lib = ctypes.CDLL(path)  # numpy loaded it already: the same handle
+        for suffix in ("64_", ""):
+            get = getattr(lib, f"openblas_get_num_threads{suffix}", None)
+            put = getattr(lib, f"openblas_set_num_threads{suffix}", None)
+            if get is not None and put is not None:
+                return get, put
+    return None
+
+
 def _fit_codebooks(
     sample: np.ndarray, groups: list[tuple[int, int]], ksub: int, seed: int
 ) -> list[np.ndarray]:
-    """Per-group k-means fits on a thread pool over groups (the rayon
-    par_iter of pq_table.rs:141-191), ``min(os.cpu_count(), groups)``
-    workers. Each group's fit keeps its own ``seed + gi`` stream, so the
-    codebooks do not depend on the worker count; with the C toolchain
-    each Lloyd step runs GIL-released (:func:`kmeans.fit_kmeans`).
+    """Per-group k-means fits (the rayon par_iter of pq_table.rs:141-191)
+    on a thread pool over groups, one thread per 1024 sample rows up to
+    ``min(os.cpu_count(), groups)``. Each group's fit keeps its own
+    ``seed + gi`` stream, so the codebooks do not depend on the worker
+    count; with the C toolchain each Lloyd step runs GIL-released
+    (:func:`kmeans.fit_kmeans`).
+
+    Concurrent multi-threaded OpenBLAS GEMMs are not reproducible: at a
+    100k-row sample, pooled fits differed from each other and from the
+    serial fit in ~1 group of 7. The pool therefore runs with numpy's
+    OpenBLAS held at one thread (process-wide, restored after), which
+    equals the serial fit and is also faster (100k × 128, 43 groups,
+    4 cores: 2.0-2.2 s against 4.1-4.5 s with BLAS threads). Without
+    that handle the groups fit one after another. Below 2048 rows
+    threads do not pay (1k rows: 0.14 s pooled, 0.08 s serial).
 
     A group in the exactness regime (fewer distinct sub-vectors than
     ``ksub``) is padded with copies of its last centroid, so code values
@@ -270,8 +307,18 @@ def _fit_codebooks(
             cb = np.concatenate([cb, np.repeat(cb[-1:], ksub - cb.shape[0], axis=0)])
         return cb
 
-    with ThreadPoolExecutor(max_workers=max(1, min(os.cpu_count() or 1, len(groups)))) as tp:
-        return list(tp.map(fit, range(len(groups))))
+    workers = min(os.cpu_count() or 1, len(groups), sample.shape[0] // 1024)
+    blas = _openblas_threads() if workers > 1 else None
+    if blas is None:
+        return [fit(gi) for gi in range(len(groups))]
+    get, put = blas
+    prev = get()
+    put(1)
+    try:
+        with ThreadPoolExecutor(max_workers=workers) as tp:
+            return list(tp.map(fit, range(len(groups))))
+    finally:
+        put(prev)
 
 
 def adc_tile(
@@ -282,17 +329,16 @@ def adc_tile(
     qn: np.ndarray,
     sel: np.ndarray | None,
     kk: int,
-    round: bool,
 ) -> tuple[np.ndarray, np.ndarray]:
     """ADC-score one tile and cut each query's top-``kk`` by (score, id)
-    (pq_table.rs:239-301 lookup-sums). ``codes`` (n × m) uint8 are the
-    tile's rows and ``ids`` their ids; ``lut`` the (Q × m × 2^b) f64
-    lookup block of :func:`build_lookup_batch` and ``sel`` the (S,)
-    query rows scored (None = all Q). Cosine (``sq`` the (m × 2^b)
-    centroid self-dots, ``qn`` the (Q,) query norms) turns the summed
-    dots into 1 − dot / max(‖v̂‖·‖q‖, 1e-10) with one reconstructed norm
-    per row. ``round`` cuts on the 4-dp grid (IVF+PQ's candidate gate);
-    PQ cuts its raw ADC. Returns ``(rows, scores)`` as
+    on the 4-dp grid (pq_table.rs:239-301 lookup-sums): the candidate
+    gate of every ADC serve. ``codes`` (n × m) uint8 are the tile's rows
+    and ``ids`` their ids; ``lut`` the (Q × m × 2^b) f64 lookup block of
+    :func:`build_lookup_batch` and ``sel`` the (S,) query rows scored
+    (None = all Q). Cosine (``sq`` the (m × 2^b) centroid self-dots,
+    ``qn`` the (Q,) query norms) turns the summed dots into
+    1 − dot / max(‖v̂‖·‖q‖, 1e-10) with one reconstructed norm per row.
+    Returns ``(rows, scores)``, the scores rounded, as
     :func:`operators.knn.topk_cut` does.
 
     With the C toolchain, l2sqr runs score + round + cut in one
@@ -305,7 +351,7 @@ def adc_tile(
     n, m = codes.shape
     use_c = ckernel.available()
     if use_c and sq is None:
-        _, rows, d = ckernel.adc_topk(codes, ids, lut, sel, min(int(kk), n), round)
+        _, rows, d = ckernel.adc_topk(codes, ids, lut, sel, min(int(kk), n), True)
         return rows, d
     if use_c:
         summed = ckernel.adc_block(codes, lut, sel)  # (S × n)
@@ -323,7 +369,7 @@ def adc_tile(
         vnorm = np.sqrt(np.maximum(v2, 0.0))
         qs = qn if sel is None else qn[sel]
         summed = 1.0 - summed / np.maximum(vnorm[None, :] * qs[:, None], 1e-10)
-    return topk_cut(summed.T, ids, kk, round)
+    return topk_cut(summed.T, ids, kk, True)
 
 
 def exact_rerank(
@@ -507,6 +553,145 @@ def finish_adc(
     return driver_topk_merge(spark, qx, ids, ex, k, id_col, upper_bound)
 
 
+def lut_chunk(m: int, n_bits: int) -> int:
+    """Queries per ADC lookup block, the one chunk rule of the ADC scans
+    and the IVF+PQ driver mirror: the most queries whose f64
+    (Q × m × 2^b) lookup tensor fits :data:`MAX_LUT_BYTES`, at least 4
+    (dim 128 / m=43 4-bit: ~12k queries; dim 960 / m=320: ~1.6k)."""
+    return max(4, MAX_LUT_BYTES // (m * (1 << n_bits) * 8))
+
+
+def adc_list_scan(
+    frame: DataFrame,
+    base: DataFrame,
+    pq: "PQTable",
+    block: QueryBlock,
+    probes: np.ndarray | None,
+    k: int,
+    ef: int,
+    metric: str,
+    upper_bound: float | None,
+    est_rows: int,
+    *,
+    tier: str,
+) -> DataFrame:
+    """The ADC batch scan of the PQ and IVF+PQ tiers, the ADC twin of
+    ``operators.knn.exact_list_scan``: the codes ``frame`` (``id, code``
+    plus ``cluster_id`` when ``probes`` is given, and ``vec`` when it
+    carries the vectors) is read as lists, each scored only for the
+    queries probing it (``knn.route_lists``: PQ passes no ``probes``,
+    one list probed by every query; IVF+PQ its centroid probes).
+
+    The query block is split into :func:`lut_chunk` pieces, each with
+    its broadcast lookup tensor, routing and scan. Per Arrow batch,
+    each (list run × probing queries) tile is cut to its 4-dp rounded
+    top-``ef`` by (adc, id) (:func:`adc_tile`) into the task's
+    :class:`operators.knn.TopkAccumulator`, whose floors
+    (``knn.ACC_CAP_ROWS`` triples of ~24 B, and on the fused plan
+    ``knn.ACC_VEC_BYTES`` of candidate vectors in the store dtype) bound
+    per-task memory at max(floor, 1.5× the live set). :func:`fuse_rerank`
+    picks where the exact re-rank runs: in the scan over the vectors
+    riding the codes batches, or in a join wave against the probed
+    lists' vectors of ``frame`` when it carries them, else ``base``.
+    Both plans return identical rows. ``est_rows`` bounds the scan's
+    emission for the merge gate; :func:`finish_adc` makes the global ADC
+    gate, the re-rank wave and the exact top-k."""
+    spark = frame.sparkSession
+    qids, qmat = block
+    id_col, vec_col, m, n_bits = pq.id_col, pq.vec_col, pq.m, pq.n_bits
+    fused = fuse_rerank(frame, vec_col, pq.dim)
+    ef = max(int(ef), int(k))
+    cap, cap_vec = knn_ops.ACC_CAP_ROWS, knn_ops.ACC_VEC_BYTES
+
+    def make_scan(bc):
+        def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+            import pyarrow as pa
+
+            from lab_1806_vec_db_spark.functions.arrowvec import (
+                binary_matrix,
+                result_batch,
+                vec_matrix,
+            )
+
+            bqids, blists, blut3, bsq, bqn, bqmat = bc.value
+            every = np.arange(len(bqids))
+            lut64 = np.ascontiguousarray(blut3, dtype=np.float64)
+            acc = TopkAccumulator(ef, cap, cap_vec)
+            out_schema = pa.schema(
+                [pa.field("query_id", pa.int64()),
+                 pa.field(id_col, pa.int64()),
+                 pa.field("adc", pa.float64())]
+                + ([pa.field("dist", pa.float64())] if fused else []))
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                # zero-copy views over the Arrow batch: packed codes as
+                # an (n, bytes) uint8 matrix, vectors flattened in place
+                # (the accumulator copies, in the store dtype, only the
+                # vectors of the candidates it buffers)
+                sch = rb.schema
+                codes_all = unpack_codes(
+                    binary_matrix(rb.column(sch.get_field_index("code"))), m, n_bits)
+                ids_all = rb.column(sch.get_field_index(id_col)).to_numpy(
+                    zero_copy_only=False)
+                vec_all = (vec_matrix(rb.column(sch.get_field_index(vec_col)))
+                           if fused else None)
+                for sel, rows in list_runs(rb, blists):
+                    ids = take(ids_all, rows)
+                    top, adc = adc_tile(take(codes_all, rows), ids, lut64, bsq, bqn,
+                                        sel, ef)
+                    args = (np.repeat(every if sel is None else sel, top.shape[1]),
+                            ids[top].reshape(-1), adc.reshape(-1))
+                    if fused:
+                        need = np.unique(top)
+                        args += (ids[need],
+                                 vec_all[need if rows is None else rows[need]])
+                    acc.add(*args)
+            out = acc.result()
+            if out is None:
+                return
+            qx, ids, adc = out[:3]
+            cols = {"query_id": bqids[qx], id_col: ids, "adc": adc}
+            if fused:
+                # exact re-rank of the task's surviving pool: the same
+                # function and rounding as the two-wave plan
+                cols["dist"] = exact_rerank(out[3], out[4], bqmat, qx, metric)
+            yield result_batch(out_schema, **cols)
+
+        return scan
+
+    scan_cols = [id_col, "code"] + ([] if probes is None else [LIST_COL]) + (
+        [vec_col] if fused else [])
+    scan_schema = f"query_id long, {id_col} long, adc double" + (
+        ", dist double" if fused else "")
+    chunk = lut_chunk(m, n_bits)
+    pieces, probed = [], set()
+    for s in range(0, qids.size, chunk):
+        src, by_list = route_lists(frame, None if probes is None else probes[s : s + chunk])
+        probed.update(by_list or ())
+        lut3, sq, qn = build_lookup_batch(
+            qmat[s : s + chunk], pq.codebooks, pq.groups, n_bits, metric)
+        bc = spark.sparkContext.broadcast(
+            (qids[s : s + chunk], by_list, lut3, sq, qn,
+             qmat[s : s + chunk] if fused else None))
+        pieces.append(src.select(*scan_cols).mapInArrow(make_scan(bc), schema=scan_schema))
+    approx = pieces[0]
+    for p in pieces[1:]:
+        approx = approx.unionByName(p)
+    rerank_source = None
+    if not fused:
+        vecs = base
+        if vec_col in frame.columns:
+            vecs = frame if probes is None else frame.filter(
+                F.col(LIST_COL).isin(sorted(probed)))
+        rerank_source = (
+            vecs.select(id_col, vec_col),
+            make_grouped_rerank_scan(spark, qids, qmat, metric, id_col, vec_col),
+        )
+    return finish_adc(approx, int(k), ef, id_col, upper_bound, est_rows,
+                      rerank_source, tier=tier)
+
+
 def aligned_codes(pq: "PQTable", ids: np.ndarray) -> np.ndarray:
     """Collect + unpack the codes table into an (N × m) uint8 matrix
     row-aligned with ``ids`` (an HNSW index's id order) — the
@@ -666,42 +851,6 @@ class PQTable:
         return df.select(id_col, vec_col).mapInArrow(
             encode, schema=f"{id_col} long, code binary, {vec_col} {vtype}")
 
-    # ---- ADC (A8-A9) ------------------------------------------------------
-
-    def adc_scan(self, query: Sequence[float], metric: str = "l2sqr") -> DataFrame:
-        """Approximate distance for every encoded vector: broadcast the
-        one-query lookup block, Arrow scan over the codes DataFrame,
-        each batch scored whole by :func:`adc_tile`."""
-        q = np.asarray(list(query), dtype=np.float64)
-        lut, sq, qn = build_lookup_batch(q[None, :], self.codebooks, self.groups,
-                                         self.n_bits, metric)
-        spark = self.codes.sparkSession
-        bc = spark.sparkContext.broadcast((lut, sq, qn, self.m, self.n_bits))
-        id_col = self.id_col
-
-        def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
-            from lab_1806_vec_db_spark.functions.arrowvec import binary_matrix
-
-            blut, bsq, bqn, m, n_bits = bc.value
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                buf = binary_matrix(rb.column(rb.schema.get_field_index("code")))
-                codes = unpack_codes(buf, m, n_bits)
-                ids = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
-                    zero_copy_only=False)
-                rows, d = adc_tile(codes, ids, blut, bsq, bqn, None, len(ids), False)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids[rows[0]], type=pa.int64()),
-                     pa.array(d[0], type=pa.float64())],
-                    names=[id_col, "dist"],
-                )
-
-        return self.codes.select(id_col, "code").mapInArrow(
-            scan, schema=f"{id_col} long, dist double")
-
     # ---- search = ADC topk(ef) → exact re-rank topk(k) (Q5, A10) ---------
 
     def search(
@@ -729,119 +878,20 @@ class PQTable:
         qvec_col: str = "vec",
         upper_bound: float | None = None,
     ) -> DataFrame:
-        """Batch ADC: per-query lookup tensors broadcast in bounded
-        chunks (≤ :data:`MAX_LUT_BYTES` each), one Arrow scan of the
-        codes table per chunk emitting each TASK's top-ef per query by
-        raw ADC (:func:`adc_tile` per Arrow batch into a
-        :class:`operators.knn.TopkAccumulator`, so the emission is
-        ef-bounded per task), the global ADC gate across partitions,
-        then the exact re-rank.
-
-        :func:`fuse_rerank` picks where the re-rank runs. Fused, each
-        task re-ranks its own ef-bounded pool against the vectors riding
-        the same Arrow batches, so the ADC scan is the only scan. Two-wave
-        (dim above :data:`FUSE_MAX_DIM`, or a codes frame without
-        vectors) scans ``(id, code)`` and joins the gated candidates
-        back to the base table's vectors. The pool selection, tie
-        handling, re-rank arithmetic and rounding are the same on both
-        plans, so results are IDENTICAL.
+        """Batch ADC (knn_pq, flat_index.rs:84-104): the table is one
+        list, probed by every query, of :func:`adc_list_scan` — per-task
+        4-dp rounded top-ef by ADC, the global ADC gate, the exact
+        re-rank fused into the scan or in a join wave
+        (:func:`fuse_rerank`), and the exact top-k.
 
         ``queries`` is a DataFrame or a driver-side matrix
-        (:func:`operators.knn.collect_query_block`). The ADC gate, the
-        re-rank wave and the final top-k are :func:`finish_adc`."""
-        spark = self.codes.sparkSession
+        (:func:`operators.knn.collect_query_block`)."""
         block = collect_query_block(queries, qid_col, qvec_col, self.dim)
         if block is None:
-            return empty_topk(spark, self.id_col)
-        qids, qmat = block
-        id_col = self.id_col
-        vec_col = self.vec_col
-        fused = fuse_rerank(self.codes, vec_col, self.dim)
+            return empty_topk(self.codes.sparkSession, self.id_col)
         ef_ = max(int(ef), int(k))
-        ksub = 1 << self.n_bits
-        # bound each broadcast lookup tensor (default ~64 MB; dim 960 /
-        # m=320: ~1.6k queries per chunk; small m → one chunk for all)
-        chunk = max(256, int(MAX_LUT_BYTES // (self.m * ksub * 8)))
-        n_parts = self.code_partitions
-        cap, cap_vec = knn_ops.ACC_CAP_ROWS, knn_ops.ACC_VEC_BYTES
-        # NOTE on parallelism: splitting queries into more chunks than
-        # the LUT byte bound requires was measured SLOWER at bench shape
-        # (per-piece broadcast + task overhead beats the win; 32 pieces
-        # cost 2× the single-piece scan) — the scan stays one piece per
-        # LUT-bound chunk and parallelism comes from code partitions.
-
-        def make_scan(bc):
-            def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-                import pyarrow as pa
-
-                from lab_1806_vec_db_spark.functions.arrowvec import (
-                    binary_matrix,
-                    result_batch,
-                    vec_matrix,
-                )
-
-                bqids, blut3, bsq, bqn, m, n_bits, bqmat = bc.value
-                fused_t = bqmat is not None
-                out_schema = pa.schema(
-                    [pa.field("query_id", pa.int64()),
-                     pa.field(id_col, pa.int64()),
-                     pa.field("adc", pa.float64())]
-                    + ([pa.field("dist", pa.float64())] if fused_t else []))
-                lut64 = np.ascontiguousarray(blut3, dtype=np.float64)
-                acc = TopkAccumulator(ef_, cap, cap_vec)
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    buf = binary_matrix(rb.column(rb.schema.get_field_index("code")))
-                    codes = unpack_codes(buf, m, n_bits)
-                    ids = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
-                        zero_copy_only=False)
-                    # raw (unrounded) ADC pool cut, id tie-break
-                    rows, adc = adc_tile(codes, ids, lut64, bsq, bqn, None, ef_, False)
-                    args = (np.repeat(np.arange(len(bqids)), rows.shape[1]),
-                            ids[rows].reshape(-1), adc.reshape(-1))
-                    if fused_t:
-                        # the accumulator copies the vectors of the rows
-                        # it buffers, in the STORE dtype (exact_rerank
-                        # upcasts per step, losslessly)
-                        args += (ids, vec_matrix(
-                            rb.column(rb.schema.get_field_index(vec_col))))
-                    acc.add(*args)
-                out = acc.result()
-                if out is None:
-                    return
-                qx, ids, adc = out[:3]
-                cols = {"query_id": bqids[qx], id_col: ids, "adc": adc}
-                if fused_t:
-                    # in-task exact re-rank of the pool: the same
-                    # function, ops and rounding as the two-wave wave
-                    cols["dist"] = exact_rerank(out[3], out[4], bqmat, qx, metric)
-                yield result_batch(out_schema, **cols)
-
-            return scan
-
-        scan_src = self.codes.select(id_col, "code", *([vec_col] if fused else []))
-        scan_schema = f"query_id long, {id_col} long, adc double" + (
-            ", dist double" if fused else "")
-        pieces = []
-        for s in range(0, len(qids), chunk):
-            lut3, sq, qn = build_lookup_batch(
-                qmat[s : s + chunk], self.codebooks, self.groups, self.n_bits, metric
-            )
-            bc = spark.sparkContext.broadcast(
-                (qids[s : s + chunk], lut3, sq, qn, self.m, self.n_bits,
-                 qmat[s : s + chunk] if fused else None)
-            )
-            pieces.append(
-                scan_src.mapInArrow(make_scan(bc), schema=scan_schema)
-            )
-        approx = pieces[0]
-        for p in pieces[1:]:
-            approx = approx.unionByName(p)
-        rerank_source = None if fused else (
-            self.base.select(id_col, vec_col),
-            make_grouped_rerank_scan(spark, qids, qmat, metric, id_col, vec_col),
-        )
         # each task emits at most ef rows per query
-        return finish_adc(approx, int(k), ef_, id_col, upper_bound,
-                          n_parts * ef_ * len(qids), rerank_source, tier="pq")
+        return adc_list_scan(self.codes, self.base, self, block, None, k, ef_,
+                             metric, upper_bound,
+                             self.code_partitions * ef_ * block.qids.size,
+                             tier="pq")

@@ -28,11 +28,16 @@ rayon loop, examples/bench.rs:414-417):
   plan that survives 100 TB. (Same partial-top-k-then-merge shape that
   TakeOrderedAndProject uses, generalized per query.)
 
-The per-task half is shared by every batch scan tier (flat, IVF, PQ,
-IVF+PQ): :func:`topk_cut` cuts a scored tile per query (compiled heap
-or numpy round + lexsort) and :class:`TopkAccumulator` keeps the task's
-candidates down to the per-query top-k; the post-scan half is
-:func:`merge_topk` (and ``index/pq.py::finish_adc``).
+The four batch scan tiers run two list-probe scans. A list scan reads
+rows grouped into lists and scores each list only for the queries that
+probe it (:func:`route_lists`, :func:`list_runs`). The exact one,
+:func:`exact_list_scan`, serves flat (one list, probed by every query)
+and IVF (its centroid probes), so IVF probing every list is the flat
+scan. The ADC one is ``index/pq.py::adc_list_scan`` (PQ as one list,
+IVF+PQ). Per task, :func:`topk_cut` cuts a scored tile per query
+(compiled heap or numpy round + lexsort) and :class:`TopkAccumulator`
+keeps the task's candidates down to the per-query top-k; the post-scan
+half is :func:`merge_topk` (and ``index/pq.py::finish_adc``).
 
 Determinism contract for the correctness oracle: distances are computed
 in float64, rounded to ``ROUND_DECIMALS``, normalized ``-0.0 → +0.0``,
@@ -168,6 +173,9 @@ SMALL_LOCAL_ROWS = 1024
 #: its rows until the first compaction sets the per-query bounds.
 ACC_CAP_ROWS = 2_000_000
 ACC_VEC_BYTES = 32 << 20
+#: List column of the cluster-partitioned layouts (IVF, IVF+PQ): the
+#: rows of one inverted list share its value.
+LIST_COL = "cluster_id"
 
 _log = logging.getLogger("lab_1806_vec_db_spark")
 
@@ -272,8 +280,8 @@ def knn_batch(
     ``'crossjoin'`` is the fully-declarative reference plan used as the
     semantic oracle in tests (DataFrame queries only). The partitioned
     plan takes its block through :func:`collect_query_block` (``dim``,
-    when given, is the table's width) and its global cut is
-    :func:`merge_topk`.
+    when given, is the table's width) and runs :func:`exact_list_scan`
+    with the whole table as one list.
     """
     _check_metric(metric)
     if strategy == "crossjoin":
@@ -289,13 +297,94 @@ def knn_batch(
     if strategy != "partitioned":
         raise ValueError(f"Unknown knn_batch strategy: {strategy}")
 
-    spark = df.sparkSession
     block = collect_query_block(queries, qid_col, qvec_col, dim)
     if block is None:
-        return empty_topk(spark, id_col)
-    qids, qmat = block
-    bc = spark.sparkContext.broadcast((qids, qmat))
+        return empty_topk(df.sparkSession, id_col)
+    return exact_list_scan(df, block, None, k, metric, id_col, vec_col,
+                           upper_bound, tier="flat")
 
+
+def group_probes(probes: np.ndarray) -> dict[int, np.ndarray]:
+    """list id → int64 array of the query rows probing it, in query
+    order, built with one argsort of the (queries × n_probes) probe
+    matrix (a dict-of-lists loop over 111k probes cost ~0.1 s per serve;
+    numpy arrays group in ~1 ms and pickle as binary buffers)."""
+    nq, n_probes = probes.shape
+    qi = np.repeat(np.arange(nq, dtype=np.int64), n_probes)
+    cc = np.asarray(probes, dtype=np.int64).reshape(-1)
+    order = np.argsort(cc, kind="stable")
+    cc_s, qi_s = cc[order], qi[order]
+    ucc, starts = np.unique(cc_s, return_index=True)
+    bounds = np.r_[starts[1:], cc_s.size]
+    return {int(c): qi_s[s:e] for c, s, e in zip(ucc, starts, bounds)}
+
+
+def route_lists(
+    frame: DataFrame, probes: np.ndarray | None,
+) -> tuple[DataFrame, dict[int, np.ndarray] | None]:
+    """The rows a list scan reads and its list → probing-queries map.
+    ``probes`` is the (queries × n_probes) matrix of probed list ids;
+    the scan then reads only the probed :data:`LIST_COL` values, which
+    on a cluster-partitioned layout is partition pruning. None means
+    the table is one list probed by every query: ``frame`` as is, no
+    map."""
+    if probes is None:
+        return frame, None
+    by_list = group_probes(np.asarray(probes))
+    return frame.filter(F.col(LIST_COL).isin(sorted(by_list))), by_list
+
+
+def list_runs(
+    rb: "pa.RecordBatch", by_list: dict[int, np.ndarray] | None,
+) -> Iterator[tuple[np.ndarray | None, np.ndarray | None]]:
+    """The scored runs of one Arrow batch of a list scan: per list the
+    batch holds, ``(query rows probing it, batch rows of it)``. With no
+    map (:func:`route_lists` of one list) the batch is one run of every
+    row for every query: ``(None, None)``."""
+    if by_list is None:
+        yield None, None
+        return
+    cl = rb.column(rb.schema.get_field_index(LIST_COL)).to_numpy(zero_copy_only=False)
+    for cid in np.unique(cl):
+        sel = by_list.get(int(cid))
+        if sel is not None and sel.size:
+            yield sel, np.nonzero(cl == cid)[0]
+
+
+def take(a: np.ndarray, rows: np.ndarray | None) -> np.ndarray:
+    """``a[rows]``, or ``a`` itself for the all-rows run (None)."""
+    return a if rows is None else a[rows]
+
+
+def exact_list_scan(
+    frame: DataFrame,
+    block: QueryBlock,
+    probes: np.ndarray | None,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    upper_bound: float | None,
+    *,
+    tier: str,
+) -> DataFrame:
+    """The exact batch scan of the flat and IVF tiers: ``frame``'s rows
+    grouped into lists, each list scored only for the queries probing
+    it (:func:`route_lists`: flat passes no ``probes``, one list probed
+    by every query; IVF its centroid probes over the cluster-partitioned
+    layout, so probing every list IS the flat scan).
+
+    Per Arrow batch, each (list run × probing queries) tile is scored in
+    f64 by ``kmeans._pairwise_dist`` (an f32 store is upcast per batch),
+    cut per query by :func:`topk_cut` on the 4-dp grid, and kept in the
+    task's :class:`TopkAccumulator`; the task emits at most k rows per
+    query, and :func:`merge_topk` makes the global cut."""
+    spark = frame.sparkSession
+    qids, qmat = block
+    src, by_list = route_lists(frame, probes)
+    src = src.select(id_col, vec_col, *([] if by_list is None else [LIST_COL]))
+    bc = spark.sparkContext.broadcast((qids, qmat, by_list))
+    k = int(k)
     cap = ACC_CAP_ROWS
 
     def scan(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -305,37 +394,38 @@ def knn_batch(
             vec_matrix,
         )
 
-        bqids, bq = bc.value
+        bqids, bq, blists = bc.value
+        every = np.arange(len(bqids))
         acc = TopkAccumulator(k, cap)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            # zero-copy Arrow flatten — no pandas round-trip of the
-            # vector column (the f64 cast is the only copy)
+            # zero-copy Arrow flatten, no pandas round-trip of the vector
+            # column (the f64 cast is the only copy)
             x = vec_matrix(rb.column(rb.schema.get_field_index(vec_col)),
                            dtype=np.float64)
-            ids = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
+            ids_all = rb.column(rb.schema.get_field_index(id_col)).to_numpy(
                 zero_copy_only=False)
-            rows, d = topk_cut(_pairwise_dist(x, bq, metric), ids, k, True)
-            acc.add(np.repeat(np.arange(len(bqids)), rows.shape[1]),
-                    ids[rows].reshape(-1), d.reshape(-1))
+            for sel, rows in list_runs(rb, blists):
+                ids = take(ids_all, rows)
+                top, d = topk_cut(_pairwise_dist(take(x, rows), take(bq, sel), metric),
+                                  ids, k, True)
+                acc.add(np.repeat(every if sel is None else sel, top.shape[1]),
+                        ids[top].reshape(-1), d.reshape(-1))
         out = acc.result()
         if out is not None:
             qx, ids_o, d_o = out[:3]
             yield result_batch(knn_schema(id_col), query_id=bqids[qx],
                                **{id_col: ids_o}, dist=d_o)
 
-    src = df.select(id_col, vec_col)
-    scored = src.mapInArrow(
-        scan, schema=f"query_id long, {id_col} long, dist double"
-    )
+    scored = src.mapInArrow(scan, schema=f"query_id long, {id_col} long, dist double")
     try:
         n_parts = src.rdd.getNumPartitions()
     except Exception:
         n_parts = None
     # the scan emits at most k rows per (query, task)
-    est_rows = None if n_parts is None else qids.size * int(k) * n_parts
-    return merge_topk(scored, k, id_col, upper_bound, est_rows, tier="flat")
+    est_rows = None if n_parts is None else qids.size * k * n_parts
+    return merge_topk(scored, k, id_col, upper_bound, est_rows, tier=tier)
 
 
 def local_topk_grouped(qx: np.ndarray, ids: np.ndarray, dist: np.ndarray, k: int) -> np.ndarray:

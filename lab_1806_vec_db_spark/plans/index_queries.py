@@ -136,30 +136,25 @@ _IVF_F32C_ORACLE = """WITH q AS (
          CAST(CAST(embedding AS FLOAT4[]) AS DOUBLE[]) AS qv
   FROM embeddings WHERE vec_id < 4),
 f AS (SELECT vec_id, CAST(CAST(embedding AS FLOAT4[]) AS DOUBLE[])
-      AS fe FROM embeddings)
-SELECT query_id, vec_id, dist FROM (
+      AS fe FROM embeddings),
+d AS (
   SELECT q.query_id, e.vec_id,
-         round(round(list_dot_product(e.fe,e.fe) + list_dot_product(q.qv,q.qv)
-               - 2*list_dot_product(e.fe,q.qv), 4), 2) + 0.0 AS dist,
-         row_number() OVER (PARTITION BY q.query_id ORDER BY
-           round(list_dot_product(e.fe,e.fe) + list_dot_product(q.qv,q.qv)
-                 - 2*list_dot_product(e.fe,q.qv), 4), e.vec_id) AS rn
-  FROM f e, q) WHERE rn <= 10"""
+         round(list_dot_product(e.fe,e.fe) + list_dot_product(q.qv,q.qv)
+               - 2*list_dot_product(e.fe,q.qv), 4) + 0.0 AS dist
+  FROM f e, q)
+SELECT query_id, vec_id, dist FROM d
+QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) <= 10"""
 
 
 @register("knn_ivf_f32compute", _IVF_F32C_ORACLE)
 def knn_ivf_f32compute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """f32 COMPUTE serving over the f32 store (round 13): the batch
-    scan's auto compute_dtype follows the store, so the f32 layout is
-    served with f32 GEMM arithmetic end-to-end — the reference's own
-    serving precision (distance/mod.rs:43-51 sums f32) — with no
-    per-batch upcast copy (the round-12 cached-regime regression).
-    Probing every cluster makes the result the flat top-k over the f32
-    store. The oracle computes the same distances in f64 over the same
-    f32-rounded values; f32 accumulation differs by ~1e-6 relative, so
-    the reported dist is double-rounded onto a 2-dp grid on BOTH sides
-    (4-dp contract grid first, then 2 dp) — id sets and ordering are
-    verified identical at the driver SFs."""
+    """The batch IVF serve over the f32 store: each probed batch is
+    upcast and scored in f64, the flat scan's arithmetic, so probing
+    every cluster returns the flat top-k over the f32-rounded values on
+    the 4-dp contract, which the oracle reproduces with the
+    double→float4→double round-trip. Exercises build→persist→load→
+    search_batch on the array<float> layout (knn_ivf_f32store is the
+    point form)."""
     import tempfile
 
     emb = _emb(spark, sf_dir).cache()
@@ -171,11 +166,7 @@ def knn_ivf_f32compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = idx.search_batch(queries, k=10, n_probes=16, qvec_col="embedding")
-    return out.select(
-        "query_id", "vec_id",
-        (F.round(F.col("dist"), 2) + F.lit(0.0)).alias("dist"),
-    )
+    return idx.search_batch(queries, k=10, n_probes=16, qvec_col="embedding")
 
 
 @register("knn_pq_rerank", _FLAT_L2_ORACLE)
@@ -233,8 +224,6 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means-trained variant is knn_pq_rerank, and the p90 ADC-error +
     recall gates for trained codebooks live in tests."""
     from lab_1806_vec_db_spark.index.pq import pq_groups
-    from lab_1806_vec_db_spark.functions.distance import dist_expr
-    from lab_1806_vec_db_spark.operators.knn import round_dist
 
     emb = _emb(spark, sf_dir).cache()
     crows = emb.filter(F.col("vec_id") < 16).orderBy("vec_id").select("embedding").collect()
@@ -244,21 +233,8 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = PQTable(codebooks, groups, 4, codes=None, base=emb,  # type: ignore[arg-type]
                  vec_col="embedding", id_col="vec_id")
     pq.codes = pq.encode_df(emb)
-    qv = _query_vec(spark, sf_dir)
-    # rounded ADC gate → deterministic ef cut on both sides
-    cand = (
-        pq.adc_scan(qv, metric="l2sqr")
-        .select("vec_id", round_dist(F.col("dist")).alias("adc_r"))
-        .orderBy("adc_r", "vec_id")
-        .limit(64)
-    )
-    qlit = F.lit([float(x) for x in qv]).cast("array<double>")
-    return (
-        emb.join(cand, "vec_id")
-        .select("vec_id", round_dist(dist_expr(F.col("embedding"), qlit, "l2sqr")).alias("dist"))
-        .orderBy("dist", "vec_id")
-        .limit(10)
-    )
+    # the serve's 4-dp rounded ADC gate keeps the oracle's 64 candidates
+    return pq.search(_query_vec(spark, sf_dir), k=10, ef=64, metric="l2sqr")
 
 
 @register("knn_hnsw", _FLAT_L2_ORACLE)

@@ -74,6 +74,10 @@ def get_spark(app_name: str = "lab_1806_vec_db_spark", cpus: int | None = None) 
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # IVF and IVF+PQ layouts hold one directory per cluster (default
+        # k = 128); a 64-directory read listed on the driver took ~0.1 s,
+        # where Spark's default (32) runs a listing job: 0.55-1.05 s
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
