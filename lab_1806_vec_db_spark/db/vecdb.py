@@ -23,13 +23,16 @@ Mapping of the reference's machinery onto Spark:
 Index-invalidation state machine (metadata_vec_table.rs:64-81,163-187;
 README.md:22,45):
 
-    add / batch_add   → PQ cleared, HNSW kept
-    delete (pattern)  → PQ cleared, HNSW cleared
+    add / batch_add / batch_add_df
+                      → PQ and IVF cleared, IVF+PQ absorbs the rows,
+                        HNSW kept (it lags until ``_hnsw_tail_sync``)
+    delete (pattern)  → PQ, IVF, IVF+PQ and HNSW cleared
     build_* if built  → no-op
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -40,6 +43,8 @@ from collections.abc import Sequence
 from typing import Any
 
 import numpy as np
+import pyarrow as pa
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,11 +71,16 @@ def _table_schema(data_type: str) -> str:
     return f"id long, vec array<{DATA_TYPES[data_type]}>, metadata map<string,string>"
 
 
-def _cast_u8(x: float) -> int:
-    """Saturating, NaN→0, truncate-toward-zero (scalar.rs:20-37)."""
-    if x != x:  # NaN
-        return 0
-    return int(min(max(x, 0.0), 255.0))
+@contextlib.contextmanager
+def _ingest_errors():
+    """Re-raise a row the ingest validation rejected (its
+    ``raise_error``, on the driver or in a job) as ``ValueError``."""
+    try:
+        yield
+    except SparkRuntimeException as e:
+        if e.getCondition() != "USER_RAISED_EXCEPTION":
+            raise
+        raise ValueError(e.getMessageParameters()["errorMessage"]) from None
 
 
 def _is_plain_hnsw(idx) -> bool:
@@ -261,7 +271,7 @@ class VecDB:
 
     def delete_table(self, key: str) -> bool:
         # per-table lock FIRST, catalog mutex second — the same
-        # tlock→_mu order every writer uses (batch_add holds tlock and
+        # tlock→_mu order every writer uses (_append holds tlock and
         # takes _mu at reserve/commit), so a drop can neither deadlock
         # against an in-flight append nor race it: the rmtree waits for
         # the writer's parquet write to finish instead of deleting the
@@ -418,7 +428,6 @@ class VecDB:
         HNSW (metadata_vec_table.rs:64-68)."""
         self.batch_add(key, [vec], [metadata])
 
-    @_locked_per_table
     def batch_add(
         self,
         key: str,
@@ -426,69 +435,29 @@ class VecDB:
         metadata_list: list[dict[str, str]],
         idempotency_token: str | None = None,
     ) -> None:
-        """Bulk insert (database/mod.rs:435-450) — one Parquet append,
-        Spark's native bulk path. ``idempotency_token`` gives the
-        list-based path the same replayed-batch no-op contract as
-        :meth:`batch_add_df` (the reference API has no such concept —
-        the kwarg is optional and additive)."""
-        meta = self._meta(key)
-        if idempotency_token is not None and idempotency_token in (
-            meta.get("absorbed_batches") or []
-        ):
-            return
+        """Bulk insert (database/mod.rs:435-450): the rows become one
+        Arrow-built driver-local frame with their positions, appended by
+        :meth:`_append`. Metadata is ``dict[str, str]`` as in the
+        reference's PyO3 signature; a non-``str`` key or value raises
+        ``TypeError``. ``idempotency_token`` gives the list-based path
+        the same replayed-batch no-op contract as :meth:`batch_add_df`
+        (the reference API has no such concept — the kwarg is optional
+        and additive)."""
         if len(vec_list) != len(metadata_list):
             raise ValueError("Length mismatch between vec_list and metadata_list")
-        dim = meta["dim"]
-        for v in vec_list:
-            if len(v) != dim:
-                raise ValueError("Dimension mismatch")
-        if not vec_list:
-            return
-        self._settle_pending(key)
-        data_type = meta.get("data_type", "float32")
-        if data_type == "uint8":
-            # saturating NaN→0 cast on ingest (vec_set.rs:142-149 to_type)
-            conv = lambda v: [_cast_u8(float(x)) for x in v]  # noqa: E731
-        else:
-            conv = lambda v: [float(x) for x in v]  # noqa: E731
-        start = self._reserve_append(key, len(vec_list))
-        rows = [
-            (start + i, conv(v), {str(a): str(b) for a, b in md.items()})
-            for i, (v, md) in enumerate(zip(vec_list, metadata_list))
-        ]
-        df = self.spark.createDataFrame(rows, _table_schema(data_type)).withColumn(
-            "norm", norm_expr("vec")
-        )
-        df.write.mode("append").parquet(self._table_path(key))
-        self._commit_append(key, len(rows), idempotency_token)
-        # write invalidates PQ, never HNSW (README.md:22,45) — the HNSW
-        # graph absorbs the new rows incrementally (hnsw_index.rs:538-572)
-        self._clear_pq_state(key)
-        self._clear_ivf_state(key)
-        if meta.get("has_ivfpq"):
-            # the IVF+PQ tier absorbs appends incrementally: frozen
-            # quantizers encode the new rows, the partitioned codes
-            # table gets an O(batch) append — no rebuild, no O(N)
-            # rewrite (the distributed-tier twin of the HNSW
-            # incremental insert below)
-            ivfpq = self._get_index(key, "ivfpq")
-            if ivfpq is not None:
-                ivfpq.add_batch(df)
-                ivfpq.base = self.spark.read.parquet(self._table_path(key))
-            else:
-                self._clear_ivfpq_state(key)
-        # a live HNSW graph deliberately lags the table: _hnsw_tail_sync
-        # absorbs the new rows at the next serve or force_save, in id
-        # order — ONE absorption discipline for both ingest paths, so
-        # the "missing rows are exactly the largest ids" invariant the
-        # sync relies on always holds. (The graph artifact itself is
-        # flushed once at force_save()/close(), not per append — the
-        # reference's dirty-mark + deferred-flush shape,
-        # thread_save.rs:97-114, 60 s cadence.)
-        self._save_brief()
-        self._invalidate_cache(key)
+        for md in metadata_list:
+            if not all(isinstance(a, str) and isinstance(b, str)
+                       for a, b in md.items()):
+                raise TypeError("metadata keys and values must be str")
+        # vec stays f64 here, so the u8 cast sees the raw value
+        frame = self.spark.createDataFrame(pa.table({
+            "vec": pa.array(list(vec_list), type=pa.list_(pa.float64())),
+            "metadata": pa.array([list(md.items()) for md in metadata_list],
+                                 type=pa.map_(pa.string(), pa.string())),
+            "_pos": pa.array(np.arange(len(vec_list), dtype=np.int64)),
+        }))
+        self._append(key, frame, idempotency_token)
 
-    @_locked_per_table
     def batch_add_df(
         self,
         key: str,
@@ -497,74 +466,19 @@ class VecDB:
         meta_cols: Sequence[str] = (),
         idempotency_token: str | None = None,
     ) -> int:
-        """DataFrame-native bulk insert — the scale path of
-        :meth:`batch_add`: the rows NEVER hop through the driver
-        (``batch_add`` is the reference's list-based API,
-        database/mod.rs:435-450; this is its distributed twin for
-        streaming micro-batches and bulk loads).
-
-        Contiguous ids are assigned from ``next_id`` without a global
-        sort or shuffle: the batch is pinned with an eager checkpoint
-        (stable partitioning), then ``monotonically_increasing_id``'s
-        (partition << 33 | local) encoding plus one tiny per-partition
-        count job yields ``id = next_id + partition_offset + local`` —
-        two jobs, both map-only, offsets broadcast. The pin is a
-        reliable ``checkpoint()`` when the session has a checkpoint dir
-        configured, else ``localCheckpoint`` — executor-LOCAL blocks,
-        so losing an executor mid-append fails the batch
-        non-recoverably; streaming retries it (covered by the pending
-        marker + idempotency token below), bulk loaders that need
-        executor-loss tolerance should ``spark.sparkContext.
-        setCheckpointDir(...)`` first.
-
-        Durability: ids are RESERVED in the brief before the parquet
-        append and the batch commits with a second brief write (see the
-        append crash protocol above) — a crash anywhere in between is
-        repaired, never double-assigned. ``idempotency_token`` makes a
-        redelivered batch (foreachBatch is at-least-once) a no-op: a
-        token found in the table's committed-batch log returns 0
-        without touching anything, giving exactly-once table content
-        under streaming retries.
-
-        The dim check runs executor-side (``raise_error`` inside the
-        stamp projection). Metadata values are stringified with Spark's
-        ``cast("string")`` (booleans render ``true``, not Python's
-        ``True``); NULLs are normalized to the string ``"None"`` so the
-        table content matches :meth:`batch_add`'s ``str(None)`` exactly
-        — pattern filters behave identically on both ingest paths.
-        Index absorption: PQ/IVF invalidate, IVF+PQ absorbs the stamped
-        FRAME executor-side (frozen quantizers, O(batch) partitioned
-        append). A live HNSW graph is NOT touched here — the graph
-        deliberately lags the table and ``_hnsw_tail_sync`` absorbs the
-        gap (chunked, bounded driver memory) at the next serve or
-        ``force_save``, so the streaming ingest loop moves ZERO vectors
-        through the driver on any tier. Returns the number of rows
-        appended."""
-        meta = self._meta(key)
-        if idempotency_token is not None and idempotency_token in (
-            meta.get("absorbed_batches") or []
-        ):
-            return 0
-        self._settle_pending(key)
-        dim = meta["dim"]
-        data_type = meta.get("data_type", "float32")
-
-        checked = F.when(
-            F.size(F.col(vec_col)) == dim, F.col(vec_col)
-        ).otherwise(
-            F.raise_error(
-                F.lit(f"Dimension mismatch: expected dim={dim} in table {key!r}")
-            )
-        )
-        if data_type == "uint8":
-            # saturating NaN→0 cast on ingest (vec_set.rs:142-149)
-            vec_out = cast_vec_expr(checked, "u8").cast("array<smallint>")
-        else:
-            vec_out = cast_vec_expr(checked, "f32")
+        """DataFrame-native bulk insert, for streaming micro-batches and
+        bulk loads: ``vec_col`` plus the metadata map of ``meta_cols``,
+        appended by :meth:`_append`. A distributed frame's rows never
+        visit the driver. Metadata values are stringified with Spark's
+        ``cast("string")`` (booleans render ``true``); NULLs become the
+        string ``"None"``. ``idempotency_token`` makes a redelivered
+        batch (foreachBatch is at-least-once) a no-op: a token found in
+        the table's committed-batch log returns 0 without touching
+        anything, giving exactly-once table content under streaming
+        retries. Returns the number of rows appended."""
         if meta_cols:
             pairs: list[F.Column] = []
             for c in meta_cols:
-                # coalesce: NULL → "None", matching batch_add's str(None)
                 pairs += [
                     F.lit(str(c)),
                     F.coalesce(F.col(c).cast("string"), F.lit("None")),
@@ -572,46 +486,108 @@ class VecDB:
             mmap = F.create_map(*pairs)
         else:
             mmap = F.expr("map()").cast("map<string,string>")
+        return self._append(
+            key, df.select(F.col(vec_col).alias("vec"), mmap.alias("metadata")),
+            idempotency_token,
+        )
 
-        staged = df.select(
-            vec_out.alias("vec"),
-            mmap.alias("metadata"),
-            F.monotonically_increasing_id().alias("_mid"),
-        )
-        # pin partitioning + _mid values across the two jobs below:
-        # reliable checkpoint when configured (survives executor loss),
-        # executor-local blocks otherwise
-        if self.spark.sparkContext.getCheckpointDir() is not None:
-            staged = staged.checkpoint(eager=True)
-        else:
-            staged = staged.localCheckpoint(eager=True)
-        pid = F.shiftrightunsigned(F.col("_mid"), 33)
-        counts = (
-            staged.groupBy(pid.alias("_pid"))
-            .agg(F.count("*").alias("_c"))
-            .collect()
-        )
-        if not counts:
+    @_locked_per_table
+    def _append(self, key: str, frame: DataFrame, token: str | None) -> int:
+        """The one append of both ingest APIs: ``frame`` holds ``vec``
+        and ``metadata`` (``map<string,string>``), and ``_pos`` =
+        0..n-1 when its rows are driver positions. Returns the number of
+        rows appended.
+
+        Validation is one projection, before any id is reserved: the
+        dim, no NaN or inf on float32 tables, the saturating u8 cast
+        (NaN → 0, vec_set.rs:142-149) on uint8 tables. Over a
+        driver-local frame (a ``LocalRelation``) it is evaluated when the
+        plan is optimized, with no job; over a distributed frame, in the
+        eager checkpoint job. A rejected row raises ``ValueError``.
+
+        Ids are contiguous from ``next_id``. A local frame with ``_pos``
+        (or one of at most ``SMALL_LOCAL_ROWS`` rows, read without a
+        job and given positions here) gets ``id = start + _pos``, so the
+        parquet write is its only job. Any other frame is pinned by an
+        eager checkpoint (a reliable ``checkpoint()`` when the session
+        has a checkpoint dir; else ``localCheckpoint``, whose
+        executor-local blocks fail the batch if an executor is lost), and
+        ``monotonically_increasing_id``'s (partition << 33 | local)
+        encoding plus a per-partition count gives ``id = start +
+        partition offset + local``.
+
+        Durability: the append crash protocol above (reserve, write,
+        commit). Index absorption then runs once: PQ and IVF clear,
+        IVF+PQ encodes the stamped frame (frozen quantizers, O(batch)
+        partitioned append), and a live HNSW graph is left to lag —
+        :meth:`_hnsw_tail_sync` absorbs the new rows at the next serve
+        or ``force_save``, so the ingest moves no vector through the
+        driver on any tier."""
+        meta = self._meta(key)
+        if token is not None and token in (meta.get("absorbed_batches") or []):
             return 0
-        offs, acc = [], 0
-        for r in sorted(counts, key=lambda r: r["_pid"]):
-            offs.append((int(r["_pid"]), acc))
-            acc += int(r["_c"])
-        off_df = self.spark.createDataFrame(offs, "_pid long, _off long")
-        local = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
-        start = self._reserve_append(key, acc)
-        stamped = (
-            staged.withColumn("_pid", pid)
-            .join(F.broadcast(off_df), "_pid")
-            .select(
-                (F.lit(start) + F.col("_off") + local).alias("id"),
-                "vec",
-                "metadata",
-            )
-            .withColumn("norm", norm_expr("vec"))
+        self._settle_pending(key)
+        dim = int(meta["dim"])
+        vec = F.col("vec")
+        checked = F.when(~F.size(vec).eqNullSafe(dim), F.raise_error(F.lit(
+            f"Dimension mismatch: expected dim={dim} in table {key!r}")))
+        if meta.get("data_type", "float32") == "uint8":
+            out = cast_vec_expr(vec, "u8").cast("array<smallint>")
+        else:
+            out = cast_vec_expr(vec, "f32")
+            checked = checked.when(
+                F.exists(out, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))),
+                F.raise_error(F.lit(
+                    f"Non-finite vector value (NaN or inf) in table {key!r}")))
+        has_pos = "_pos" in frame.columns
+        staged = frame.select(checked.otherwise(out).alias("vec"), "metadata",
+                              *(["_pos"] if has_pos else []))
+        with _ingest_errors():
+            plan = staged._jdf.queryExecution().optimizedPlan()
+            n = (plan.data().size()
+                 if plan.getClass().getSimpleName() == "LocalRelation" else None)
+            if n == 0:
+                return 0
+            if n is not None and not has_pos and n <= knn_ops.SMALL_LOCAL_ROWS:
+                tbl = knn_ops.read_arrow(staged, "vec", "metadata")
+                staged = self.spark.createDataFrame(tbl.append_column(
+                    "_pos", pa.array(np.arange(n, dtype=np.int64))))
+                has_pos = True
+            by_pos = n is not None and has_pos
+            if not by_pos:
+                staged = staged.select(
+                    "vec", "metadata", F.monotonically_increasing_id().alias("_mid"))
+                # pin partitioning + _mid values across the count and
+                # the write: reliable checkpoint when configured
+                # (survives executor loss), executor-local blocks
+                # otherwise
+                if self.spark.sparkContext.getCheckpointDir() is not None:
+                    staged = staged.checkpoint(eager=True)
+                else:
+                    staged = staged.localCheckpoint(eager=True)
+        if by_pos:
+            pos = F.col("_pos")
+        else:
+            pid = F.shiftrightunsigned(F.col("_mid"), 33)
+            counts = staged.groupBy(pid.alias("_pid")).agg(F.count("*").alias("_c"))
+            offs, n = [], 0
+            for r in sorted(counts.collect(), key=lambda r: r["_pid"]):
+                offs.append(f"{int(r['_pid'])}L, {n}L")
+                n += int(r["_c"])
+            # the offsets as one map literal: a broadcast join of them
+            # would cost a job
+            off = F.expr(f"map({', '.join(offs)})")[pid]
+            pos = off + F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+        if not n:
+            return 0
+        start = self._reserve_append(key, n)
+        stamped = staged.select(
+            (F.lit(start) + pos).alias("id"), "vec", "metadata",
+            norm_expr("vec").alias("norm"),
         )
         stamped.write.mode("append").parquet(self._table_path(key))
-        self._commit_append(key, acc, idempotency_token)
+        self._commit_append(key, n, token)
+        # a write invalidates PQ and IVF, never HNSW (README.md:22,45)
         self._clear_pq_state(key)
         self._clear_ivf_state(key)
         if meta.get("has_ivfpq"):
@@ -621,12 +597,9 @@ class VecDB:
                 ivfpq.base = self.spark.read.parquet(self._table_path(key))
             else:
                 self._clear_ivfpq_state(key)
-        # a live HNSW graph (either tier) is left to lag: _hnsw_tail_sync
-        # absorbs [start, start+acc) at the next serve or force_save —
-        # zero (id, vec) driver transfer inside the ingest loop
         self._save_brief()
         self._invalidate_cache(key)
-        return acc
+        return n
 
     @staticmethod
     def _pattern_pred(pattern: dict[str, str]):
@@ -763,7 +736,9 @@ class VecDB:
 
         Metadata: the driver serves read the table's driver-resident map
         (:meth:`_metadata_map`); the batch plans look it up for the
-        returned ids only (:meth:`_driver_result`)."""
+        returned ids only (:meth:`_driver_result`). ``k`` and ``ef``
+        follow ``knn.serve_k`` on every serve form: ``k = 0`` answers
+        empty, a negative ``k`` or an ``ef`` below 1 raises."""
         meta = self._meta(key)
         if len(query) != meta["dim"]:
             raise ValueError("Dimension mismatch")
@@ -771,6 +746,8 @@ class VecDB:
         # collect_query_block's rule, inline: this is the point hot path
         if not np.isfinite(q).all():
             raise ValueError("Non-finite query value (NaN or inf)")
+        if not knn_ops.serve_k(k, ef):
+            return []
         tier, idx, pq = self._tier(key, meta, ef)
         if tier == "hnsw_pq":
             ids, dists = idx.search_np(q[0], k, ef, pq=pq)
@@ -891,6 +868,8 @@ class VecDB:
           :meth:`_ivfpq_mirror` allows it;
         - else the exact flat batch scan of the filtered rows."""
         meta = self._meta(key)
+        if not knn_ops.serve_k(k, ef):
+            return knn_ops.empty_topk(self.spark, "id")
         df = self.table_df(key).filter(self._pattern_pred(pattern))
         cols = {"qid_col": "query_id", "qvec_col": "vec"}
         out = None
@@ -925,6 +904,8 @@ class VecDB:
         ``(query_id, vec)`` → ``(query_id, id, dist)``, served by the
         tier :meth:`_tier` picks — the same tier :meth:`search` uses."""
         meta = self._meta(key)
+        if not knn_ops.serve_k(k, ef):
+            return knn_ops.empty_topk(self.spark, "id")
         tier, idx, pq = self._tier(key, meta, ef)
         return self._batch_plan(key, meta, tier, idx, pq, queries, k, ef,
                                 upper_bound)

@@ -255,6 +255,19 @@ def collect_query_block(
     return QueryBlock(qids, qmat)
 
 
+def serve_k(k: int, ef: int | None = None) -> bool:
+    """The one ``k`` / ``ef`` contract of the VecDB serves, on every
+    tier: ``k = 0`` asks for nothing (the caller answers empty); ``k <
+    0``, and an ``ef`` (beam width, candidate count or IVF probe count)
+    given below 1, raise ``ValueError``. Returns whether there is
+    anything to serve."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    if ef is not None and ef < 1:
+        raise ValueError(f"ef must be >= 1, got {ef}")
+    return k > 0
+
+
 def empty_topk(spark, id_col: str, qid_col: str = "query_id") -> DataFrame:
     """The batch-kNN result frame with no rows."""
     return spark.createDataFrame([], f"{qid_col} long, {id_col} long, dist double")

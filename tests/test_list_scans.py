@@ -12,7 +12,8 @@ tiers that shares one must return the same rows:
 
 Each table runs on both executor kernels: the compiled one and the
 numpy one (``SPARK_GRAFT_NO_CKERNEL=1``, set on the driver and handed
-to the Python workers through the context's environment)."""
+to the Python workers through the context's environment; the ``kernel``
+fixture of ``conftest.py``)."""
 
 from __future__ import annotations
 
@@ -21,7 +22,6 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from lab_1806_vec_db_spark.index import ckernel
 from lab_1806_vec_db_spark.index import pq as pq_mod
 from lab_1806_vec_db_spark.index.ivf import IVFIndex
 from lab_1806_vec_db_spark.index.ivfpq import IVFPQIndex
@@ -51,29 +51,6 @@ def data(spark):
     })).cache()
     base32 = base.withColumn("vec", F.col("vec").cast("array<float>")).cache()
     return {"float64": base, "float32": base32}, queries
-
-
-@pytest.fixture(params=["ckernel", "numpy"])
-def kernel(request, spark, monkeypatch):
-    """The kernel of the driver and of the Python workers: the compiled
-    one, or the numpy reference as under ``SPARK_GRAFT_NO_CKERNEL=1``."""
-    if request.param == "numpy":
-        monkeypatch.setitem(spark.sparkContext.environment,
-                            "SPARK_GRAFT_NO_CKERNEL", "1")
-        monkeypatch.setenv("SPARK_GRAFT_NO_CKERNEL", "1")
-        monkeypatch.setattr(ckernel, "_lib", None)
-        monkeypatch.setattr(ckernel, "_tried", False)
-    want = request.param == "ckernel" and ckernel.available()
-
-    def probe(batches):
-        from lab_1806_vec_db_spark.index import ckernel as ck
-
-        for _ in batches:
-            yield pa.RecordBatch.from_pylist([{"c": int(ck.available())}])
-
-    seen = {r["c"] for r in spark.range(1).mapInArrow(probe, "c long").collect()}
-    assert seen == {int(want)}
-    return request.param
 
 
 @pytest.mark.parametrize("metric", METRICS)

@@ -7,9 +7,10 @@ a NaN or infinite value raises the non-finite error, and a block above
 ``knn.MAX_QUERIES`` rows raises the cap error. A good block serves k
 rows per query, the same rows from either block kind.
 
-The table is generated over both driver kernels: the compiled one and
-the numpy one (``SPARK_GRAFT_NO_CKERNEL=1``, forced on the driver,
-where the guard and the graph serves run)."""
+The table is generated over both kernels: the compiled one and the
+numpy one (``SPARK_GRAFT_NO_CKERNEL=1``, forced on the driver, where
+the guard and the graph serves run, and in the Python workers, where
+the scans run: the ``kernel`` fixture of ``conftest.py``)."""
 
 from __future__ import annotations
 
@@ -17,7 +18,6 @@ import numpy as np
 import pytest
 
 from lab_1806_vec_db_spark.db.vecdb import VecDB
-from lab_1806_vec_db_spark.index import ckernel
 from lab_1806_vec_db_spark.index.hnsw import HNSWIndex
 from lab_1806_vec_db_spark.index.ivf import IVFIndex
 from lab_1806_vec_db_spark.index.ivfpq import IVFPQIndex
@@ -64,18 +64,6 @@ def tiers(spark, tmp_path_factory):
         "hnsw": lambda q: hnsw.search_batch(q, K, ef=20),
         "sharded": lambda q: sharded.search_batch(q, K, ef=20, n_probes=2),
     }
-
-
-@pytest.fixture(params=["ckernel", "numpy"])
-def kernel(request, monkeypatch):
-    """The driver kernel: the compiled one, or the numpy reference as
-    under ``SPARK_GRAFT_NO_CKERNEL=1``."""
-    if request.param == "numpy":
-        monkeypatch.setenv("SPARK_GRAFT_NO_CKERNEL", "1")
-        monkeypatch.setattr(ckernel, "_lib", None)
-        monkeypatch.setattr(ckernel, "_tried", False)
-        assert not ckernel.available()
-    return request.param
 
 
 def _block(spark, kind: str, qmat: np.ndarray):

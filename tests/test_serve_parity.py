@@ -214,3 +214,28 @@ def test_local_frame_reads_run_no_job(spark):
     assert lq.tolist() == rq.tolist() == [4, 9]
     assert np.array_equal(lm, q) and np.array_equal(rm, q)
     assert [c.tolist() for c in cols] == [[0, 0, 1], [6, 5, 7], [0.25, 0.5, 1.0]]
+
+
+@pytest.mark.parametrize("form", ["point", "batch", "point_filtered",
+                                  "batch_filtered"])
+@pytest.mark.parametrize("tier", TIERS)
+def test_k_ef_contract(spark, tables, tier, form):
+    """One ``k`` / ``ef`` contract on every tier and serve form
+    (``knn.serve_k``): ``k = 0`` returns the empty result, and ``k < 0``
+    or an ``ef`` below 1 raises ``ValueError``."""
+    db, key, queries = tables[tier, "l2sqr"]
+    q = queries[0]
+    serve = {
+        "point": lambda k, ef: db.search(key, q, k, ef=ef),
+        "batch": lambda k, ef: db.batch_search(
+            key, _one_row(spark, q), k, ef=ef).collect(),
+        "point_filtered": lambda k, ef: db.search_filtered(
+            key, q, k, {}, ef=ef),
+        "batch_filtered": lambda k, ef: db.batch_search_filtered(
+            key, _one_row(spark, q), k, {}, ef=ef).collect(),
+    }[form]
+    assert serve(0, EF[tier]) == [] and serve(0, None) == []
+    for k, ef in ((-1, EF[tier]), (-1, None), (K, 0), (K, -1)):
+        with pytest.raises(ValueError, match="must be >= "):
+            serve(k, ef)
+    assert len(serve(K, EF[tier])) == K

@@ -1,6 +1,6 @@
 """End-to-end: Structured-Streaming ingest → live HNSW → one flush.
 
-A stream of vectors lands through foreachBatch/batch_add while an HNSW
+A stream of vectors lands through foreachBatch/batch_add_df while an HNSW
 index is live; every streamed vector is immediately searchable (the
 graph absorbs appends incrementally), the artifact is written ONCE at
 close despite multiple micro-batches, and a reopened DB serves the
@@ -49,7 +49,7 @@ def test_stream_ingest_live_search_and_single_flush(spark, tmp_path, seeded_db):
             "tag string, vec array<double>",
         ).coalesce(1).write.mode("append").parquet(src)
 
-    # one file per micro-batch → 3 separate batch_add calls
+    # one file per micro-batch → 3 separate batch_add_df calls
     stream = (
         spark.readStream.schema("tag string, vec array<double>")
         .option("maxFilesPerTrigger", 1)
@@ -100,7 +100,7 @@ def test_stream_into_vecdb_rejects_batch_df(spark, tmp_path, seeded_db):
 
 def test_stream_ingest_into_live_ivfpq(spark, tmp_path):
     # the distributed tier absorbs the same stream: foreachBatch →
-    # batch_add → frozen-quantizer encode + O(batch) partitioned append;
+    # batch_add_df → frozen-quantizer encode + O(batch) partitioned append;
     # every streamed vector is searchable through the IVF+PQ dispatch
     db = VecDB(str(tmp_path / "db_pq"), spark)
     db.create_table_if_not_exists("t", dim=DIM, dist="l2sqr")

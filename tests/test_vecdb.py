@@ -442,9 +442,9 @@ def test_batch_add_df_idempotency_token_replay(db, spark):
 
 
 def test_batch_add_df_null_metadata_matches_list_path(db, spark):
-    """NULL metadata values stringify to "None" on BOTH ingest paths
-    (batch_add applies Python str(None)), so pattern filters behave
-    identically regardless of how a row arrived."""
+    """A NULL metadata value through batch_add_df stringifies to "None",
+    the string a list caller passes as str(None), so pattern filters
+    behave identically regardless of how a row arrived."""
     db.create_table_if_not_exists("nm", 2, "l2sqr")
     db.batch_add("nm", [[1.0, 0.0]], [{"tag": str(None)}])
     bdf = spark.createDataFrame(
