@@ -499,16 +499,16 @@ class VecDB:
         rows appended.
 
         Validation is one projection, before any id is reserved: the
-        dim, no NaN or inf on float32 tables, the saturating u8 cast
-        (NaN → 0, vec_set.rs:142-149) on uint8 tables. Over a
-        driver-local frame (a ``LocalRelation``) it is evaluated when the
-        plan is optimized, with no job; over a distributed frame, in the
-        eager checkpoint job. A rejected row raises ``ValueError``.
+        dim, no NULL element, no NaN or inf on float32 tables, the
+        saturating u8 cast (NaN → 0, vec_set.rs:142-149) on uint8
+        tables. Over a driver-local frame (a ``LocalRelation``) it is
+        evaluated once, when the plan is optimized, with no job; over a
+        distributed frame, in the eager checkpoint job. A rejected row
+        raises ``ValueError``.
 
         Ids are contiguous from ``next_id``. A local frame with ``_pos``
-        (or one of at most ``SMALL_LOCAL_ROWS`` rows, read without a
-        job and given positions here) gets ``id = start + _pos``, so the
-        parquet write is its only job. Any other frame is pinned by an
+        (the list API's) gets ``id = start + _pos``, so the parquet
+        write is its only job. Any other frame is pinned by an
         eager checkpoint (a reliable ``checkpoint()`` when the session
         has a checkpoint dir; else ``localCheckpoint``, whose
         executor-local blocks fail the batch if an executor is lost), and
@@ -532,13 +532,16 @@ class VecDB:
         checked = F.when(~F.size(vec).eqNullSafe(dim), F.raise_error(F.lit(
             f"Dimension mismatch: expected dim={dim} in table {key!r}")))
         if meta.get("data_type", "float32") == "uint8":
+            # the u8 cast maps NaN to 0 and would map NULL to 0 too
             out = cast_vec_expr(vec, "u8").cast("array<smallint>")
+            bad, what = F.exists(vec, lambda x: x.isNull()), "NULL"
         else:
             out = cast_vec_expr(vec, "f32")
-            checked = checked.when(
-                F.exists(out, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))),
-                F.raise_error(F.lit(
-                    f"Non-finite vector value (NaN or inf) in table {key!r}")))
+            bad = F.exists(out, lambda x: x.isNull() | F.isnan(x)
+                           | (F.abs(x) == float("inf")))
+            what = "NaN, inf or NULL"
+        checked = checked.when(bad, F.raise_error(F.lit(
+            f"Non-finite vector value ({what}) in table {key!r}")))
         has_pos = "_pos" in frame.columns
         staged = frame.select(checked.otherwise(out).alias("vec"), "metadata",
                               *(["_pos"] if has_pos else []))
@@ -548,13 +551,14 @@ class VecDB:
                  if plan.getClass().getSimpleName() == "LocalRelation" else None)
             if n == 0:
                 return 0
-            if n is not None and not has_pos and n <= knn_ops.SMALL_LOCAL_ROWS:
-                tbl = knn_ops.read_arrow(staged, "vec", "metadata")
-                staged = self.spark.createDataFrame(tbl.append_column(
-                    "_pos", pa.array(np.arange(n, dtype=np.int64))))
-                has_pos = True
             by_pos = n is not None and has_pos
-            if not by_pos:
+            if by_pos:
+                # a frame over the validated rows, so the write and the
+                # IVF+PQ absorption do not run the projection again
+                staged = DataFrame(self.spark._jvm.org.apache.spark.sql.classic
+                                   .Dataset.ofRows(self.spark._jsparkSession, plan),
+                                   self.spark)
+            else:
                 staged = staged.select(
                     "vec", "metadata", F.monotonically_increasing_id().alias("_mid"))
                 # pin partitioning + _mid values across the count and

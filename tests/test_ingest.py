@@ -2,14 +2,14 @@
 ``VecDB.batch_add_df`` (frames) run through ``VecDB._append``: one
 validation projection, one id-stamping rule, one index absorption. The
 table below runs each input kind — a list, an Arrow-built local frame
-and a distributed parquet frame — over both data types and four row
+and a distributed parquet frame — over both data types and five row
 kinds:
 
 - good rows land identically from every input kind: the same ids,
   vectors, metadata and norms;
-- a wrong-width row, and on float32 tables a NaN or infinite value,
-  raise ``ValueError`` before any id is reserved: ``next_id``, ``len``
-  and the table's parquet directory are unchanged;
+- a wrong-width row, a NULL element, and on float32 tables a NaN or
+  infinite value, raise ``ValueError`` before any id is reserved:
+  ``next_id``, ``len`` and the table's parquet directory are unchanged;
 - on uint8 tables NaN and inf are not errors: the saturating cast maps
   ``[300, -5, NaN]`` to ``(255, 0, 0)`` (scalar.rs:20-37).
 
@@ -37,6 +37,7 @@ BAD = {
     "dim": [1.0, 2.0],
     "nan": [300.0, -5.0, math.nan],
     "inf": [math.inf, -math.inf, 1.5],
+    "null": [1.0, None, 2.0],
 }
 #: what a uint8 table stores for the accepted NaN / inf rows
 U8 = {"nan": [255, 0, 0], "inf": [255, 0, 1]}
@@ -115,15 +116,15 @@ def test_good_rows_identical_from_every_input(db, spark, tmp_path, dtype):
         assert rows[1][1] == pytest.approx([1.0, -0.5, 2.35])
 
 
-@pytest.mark.parametrize("case", ["dim", "nan", "inf"])
+@pytest.mark.parametrize("case", sorted(BAD))
 @pytest.mark.parametrize("dtype", DTYPES)
 @pytest.mark.parametrize("how", INPUTS)
 def test_bad_row(db, spark, tmp_path, how, dtype, case):
     """A rejected row raises before any id is reserved; a uint8 table
-    takes NaN and inf through the saturating cast."""
+    takes NaN and inf through the saturating cast, but not NULL."""
     key = _new_table(db, spark, tmp_path, dtype, how)
     before = _state(db, key)
-    if case == "dim" or dtype == "float32":
+    if case in ("dim", "null") or dtype == "float32":
         err = "Dimension mismatch" if case == "dim" else "Non-finite vector"
         with pytest.raises(ValueError, match=err):
             _append(db, spark, tmp_path, how, key, _vecs(case))
@@ -161,13 +162,13 @@ def test_list_metadata_must_be_str(db, spark, tmp_path):
     assert _state(db, key) == before
 
 
-@pytest.mark.parametrize("how,jobs", [("list", 1), ("local", 1), ("parquet", 5)])
+@pytest.mark.parametrize("how,jobs", [("list", 1), ("local", 4), ("parquet", 5)])
 def test_append_job_count(db, spark, tmp_path, how, jobs):
-    """A 500-row append runs at most ``jobs`` Spark jobs. A list or a
-    local frame is stamped on the driver, so the parquet write is its
-    one job. A parquet frame runs five: the frame's schema read, the
-    eager checkpoint, the per-partition count (a shuffle: its map stage
-    and its result stage are two jobs) and the write."""
+    """A 500-row append runs at most ``jobs`` Spark jobs. The list API's
+    frame carries driver positions, so the parquet write is its one job.
+    Any other frame is stamped through the eager checkpoint, the
+    per-partition count (a shuffle: its map stage and its result stage
+    are two jobs) and the write; a parquet frame adds its schema read."""
     rng = np.random.default_rng(1)
     key = _new_table(db, spark, tmp_path, "float32", f"jobs_{how}")
     vecs = [[float(x) for x in v] for v in rng.normal(size=(500, DIM))]
