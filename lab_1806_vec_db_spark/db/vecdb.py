@@ -124,6 +124,16 @@ def sanitize_key(key: str) -> str:
     return safe or "table"
 
 
+def _partition_rows(batches):
+    """``mapInArrow`` body of the append's offset pass: ``(partition,
+    rows)`` per Arrow batch of ``_mid``, the partition read from
+    ``monotonically_increasing_id``'s high bits."""
+    for rb in batches:
+        pid, c = np.unique(rb.column(0).to_numpy() >> 33, return_counts=True)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(pid, pa.int64()), pa.array(c, pa.int64())], names=["_pid", "_c"])
+
+
 class VecDB:
     """Parity implementation of ``lab_1806_vec_db.VecDB`` (pyi surface)
     plus the batch entry points a Spark engine naturally adds
@@ -573,11 +583,16 @@ class VecDB:
             pos = F.col("_pos")
         else:
             pid = F.shiftrightunsigned(F.col("_mid"), 33)
-            counts = staged.groupBy(pid.alias("_pid")).agg(F.count("*").alias("_c"))
+            # rows per partition from one map-only pass over _mid (a
+            # groupBy count would add a shuffle: two jobs)
+            sizes: dict[int, int] = {}
+            for r in staged.select("_mid").mapInArrow(
+                    _partition_rows, "_pid long, _c long").collect():
+                sizes[r["_pid"]] = sizes.get(r["_pid"], 0) + r["_c"]
             offs, n = [], 0
-            for r in sorted(counts.collect(), key=lambda r: r["_pid"]):
-                offs.append(f"{int(r['_pid'])}L, {n}L")
-                n += int(r["_c"])
+            for p in sorted(sizes):
+                offs.append(f"{p}L, {n}L")
+                n += sizes[p]
             # the offsets as one map literal: a broadcast join of them
             # would cost a job
             off = F.expr(f"map({', '.join(offs)})")[pid]

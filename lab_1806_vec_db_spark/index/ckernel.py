@@ -9,7 +9,9 @@ for the Spark `mapInPandas` path, hopeless for point-serve latency.
 This module compiles a ~300-line standard HNSW kernel set (greedy
 upper-level descent + bounded-pool beam, the knn_pq ADC-steered
 variant of hnsw_index.rs:672-696, a flat ADC scan, the build-time
-multi-level candidate-pool search of hnsw_index.rs:398-442, and the
+multi-level candidate-pool search of hnsw_index.rs:398-442, the
+build's link phase (forward selection and the in-place link apply of
+connect_new_links / arrange_links), and the
 Lloyd step and k-means++ fold of ``kmeans.fit_kmeans``) with the
 system C compiler at first use and binds it via ctypes.
 
@@ -94,6 +96,51 @@ static pair_t heap_pop(pair_t *h, long *sz, int is_max) {
         i = m;
     }
     return top;
+}
+
+/* link-phase candidate: (dist to the base node, id, self term) */
+typedef struct { double d; long id; double s; } lcand_t;
+
+static int lcand_cmp(const void *a, const void *b) {
+    const lcand_t *x = (const lcand_t *)a, *y = (const lcand_t *)b;
+    if (x->d < y->d) return -1;
+    if (x->d > y->d) return 1;
+    return (x->id > y->id) - (x->id < y->id);
+}
+
+/* max-heap by lcand_cmp (root = worst kept) of the nearest `cap` */
+static void lheap_offer(lcand_t *h, long *hs, long cap, lcand_t t) {
+    long i;
+    if (*hs < cap) {
+        i = (*hs)++;
+        h[i] = t;
+        while (i > 0) {
+            long p = (i - 1) >> 1;
+            if (lcand_cmp(&h[i], &h[p]) <= 0) break;
+            lcand_t x = h[p]; h[p] = h[i]; h[i] = x;
+            i = p;
+        }
+        return;
+    }
+    if (lcand_cmp(&t, &h[0]) >= 0) return;
+    h[0] = t;
+    i = 0;
+    for (;;) {
+        long l = 2 * i + 1, r = l + 1, m = i;
+        if (l < *hs && lcand_cmp(&h[l], &h[m]) > 0) m = l;
+        if (r < *hs && lcand_cmp(&h[r], &h[m]) > 0) m = r;
+        if (m == i) break;
+        lcand_t x = h[m]; h[m] = h[i]; h[i] = x;
+        i = m;
+    }
+}
+
+typedef struct { long p; long seq; long node; } ledge_t;
+
+static int ledge_cmp(const void *a, const void *b) {
+    const ledge_t *x = (const ledge_t *)a, *y = (const ledge_t *)b;
+    if (x->p != y->p) return (x->p > y->p) - (x->p < y->p);
+    return (x->seq > y->seq) - (x->seq < y->seq);
 }
 
 /* (dist, id, tile-row) triple of the per-query top-k tile kernels */
@@ -872,68 +919,186 @@ int adc_lut_SUF(
     return 0;
 }
 
-/* Forward-link diversity selection (connect_new_links,
- * candidate_pair.rs:85-99) with LAZY pair distances and early exit:
- * candidates arrive ascending by (dist-to-query, id); v is accepted
- * iff no already-accepted p has dist(v, p) < dist(v, q). The numpy
- * twin materializes the full (T x T) candidate<->candidate distance
- * block per row (a batched GEMM measured as 58%% of the 1M x 960
- * build wall); here each pair is computed only when the scan needs it
- * and the inner loop stops at the first violation — ~5-10x fewer
- * FLOPs, no (R x T x d) gather, GIL released. Same accept set up to
- * summation-order ulps on exact ties (the numpy block goes through
- * BLAS, whose sums are not sequential either). */
+/* ---- link phase (connect_new_links + arrange_links) ------------------
+ * Every distance here accumulates in f64 (wdot), whatever VT is, so the
+ * heuristic's comparisons match the numpy reference's f64 blocks
+ * (hnsw._pairwise_block) up to summation-order ulps. A candidate's
+ * "self term" is its self-dot (l2sqr) or norm (cosine), < 0 until
+ * first needed. */
+static inline double lself_SUF(const VT *vecs, int d, int metric, long u) {
+    const VT *x = vecs + (size_t)u * d;
+    double s = wdot_SUF(x, x, d);
+    return metric == 0 ? s : sqrt(s);
+}
+
+/* d(a, b) from the self terms sa, sb: the _pairwise_block formulas */
+static inline double ldist_SUF(const VT *vecs, int d, int metric,
+                               long a, double sa, long b, double sb) {
+    double ip = wdot_SUF(vecs + (size_t)a * d, vecs + (size_t)b * d, d);
+    if (metric == 0) {
+        double dd = sa + sb - 2.0 * ip;
+        return dd > 0.0 ? dd : 0.0;
+    }
+    double denom = sa * sb;
+    if (denom < 1e-10) denom = 1e-10;
+    return 1.0 - ip / denom;
+}
+
+/* Diversity heuristic (candidate_pair.rs:85-99) over T candidates sorted
+ * by (dist to the base node, id): v is kept iff no kept p has
+ * d(v, p) < d(v, base), at most cap kept, non-finite entries skipped.
+ * Pair distances are computed only when the scan needs them and the
+ * inner loop stops at the first violation — no (T x T) block. Kept
+ * entries are packed to the front of c in accept order; returns their
+ * count. */
+static long heur_core_SUF(const VT *vecs, int d, int metric,
+                          lcand_t *c, long T, long cap) {
+    long na = 0;
+    for (long v = 0; v < T && na < cap; v++) {
+        if (c[v].id < 0 || !isfinite(c[v].d)) continue;
+        int ok = 1;
+        for (long p = 0; p < na; p++) {
+            if (c[v].s < 0.0) c[v].s = lself_SUF(vecs, d, metric, c[v].id);
+            if (ldist_SUF(vecs, d, metric, c[v].id, c[v].s, c[p].id, c[p].s) < c[v].d) {
+                ok = 0;
+                break;
+            }
+        }
+        if (ok) {
+            if (c[v].s < 0.0) c[v].s = lself_SUF(vecs, d, metric, c[v].id);
+            c[na++] = c[v];
+        }
+    }
+    return na;
+}
+
+/* The heuristic alone over (R, T) rows sorted by (dist, id): sel_id /
+ * sel_d (R, cap) get the kept entries in accept order, -1/inf padded
+ * (the unit twin of hnsw._heuristic_select_batch). */
 int heur_select_SUF(
     const VT *vecs, int d, int metric,
     const double *cd, const long *cid,   /* (R, T) row-major, sorted */
     long R, long T, long cap,
     long *sel_id, double *sel_d)          /* (R, cap), -1/inf padded */
 {
-    if (cap > 128) return 1;
+    lcand_t *c = (lcand_t *)malloc((size_t)(T > 0 ? T : 1) * sizeof(lcand_t));
+    if (!c) return 1;
     for (long r = 0; r < R; r++) {
-        const double *dq = cd + r * T;
-        const long *ids = cid + r * T;
-        long *oid = sel_id + r * cap;
-        double *od = sel_d + r * cap;
-        long accv[128];
-        double accn[128];   /* accepted self-dot (l2) / norm (cosine) */
-        long na = 0;
-        for (long c = 0; c < cap; c++) { oid[c] = -1; od[c] = INFINITY; }
-        for (long v = 0; v < T && na < cap; v++) {
-            long uv = ids[v];
-            if (uv < 0 || !isfinite(dq[v])) continue;
-            const VT *xv = vecs + (size_t)uv * d;
-            double n2v = -1.0;   /* self term, computed on first need */
-            int ok = 1;
-            for (long p = 0; p < na; p++) {
-                const VT *xp = vecs + (size_t)accv[p] * d;
-                double ip = dot_SUF(xv, xp, d);
-                double dvp;
-                if (metric == 0) {
-                    if (n2v < 0.0) n2v = dot_SUF(xv, xv, d);
-                    dvp = n2v + accn[p] - 2.0 * ip;
-                    if (dvp < 0.0) dvp = 0.0;
-                } else {
-                    if (n2v < 0.0) n2v = sqrt(dot_SUF(xv, xv, d));
-                    double denom = n2v * accn[p];
-                    if (denom < 1e-10) denom = 1e-10;
-                    dvp = 1.0 - ip / denom;
-                }
-                if (dvp < dq[v]) { ok = 0; break; }
-            }
-            if (ok) {
-                if (n2v < 0.0) {
-                    n2v = dot_SUF(xv, xv, d);
-                    if (metric != 0) n2v = sqrt(n2v);
-                }
-                accn[na] = n2v;
-                accv[na] = uv;
-                oid[na] = uv;
-                od[na] = dq[v];
-                na++;
-            }
+        for (long v = 0; v < T; v++) {
+            lcand_t x = { cd[r * T + v], cid[r * T + v], -1.0 };
+            c[v] = x;
+        }
+        long na = heur_core_SUF(vecs, d, metric, c, T, cap);
+        for (long j = 0; j < cap; j++) {
+            sel_id[r * cap + j] = j < na ? c[j].id : -1;
+            sel_d[r * cap + j] = j < na ? c[j].d : INFINITY;
         }
     }
+    free(c);
+    return 0;
+}
+
+/* Forward-link selection (connect_new_links, hnsw_index.rs:431-447) for
+ * rows [s, e) of one level's chunk rows. Row r's candidates are its
+ * build_pools pool (ascending by (dist, id), -1/inf padded) plus the
+ * chunk peers before it at this level (nodes[0..r)) with exact
+ * distances; the nearest `trim` by (dist, id) go through the heuristic
+ * with at most `cap` kept. sel_id is the level's full (R, cap) output:
+ * row r gets its kept ids in accept order, -1 padded, so concurrent
+ * calls on disjoint spans share one buffer. */
+int hnsw_link_select_SUF(
+    const VT *vecs, int d, int metric,
+    const long *nodes, long R,
+    const long *pool_ids, const double *pool_d, long ef,   /* (R, ef) */
+    long s, long e, long trim, long cap,
+    long *sel_id)
+{
+    lcand_t *h = (lcand_t *)malloc((size_t)(trim > 0 ? trim : 1) * sizeof(lcand_t));
+    double *ps = (double *)malloc((size_t)(e > 0 ? e : 1) * sizeof(double));
+    if (!h || !ps) { free(h); free(ps); return 1; }
+    for (long j = 0; j < e; j++) ps[j] = lself_SUF(vecs, d, metric, nodes[j]);
+    for (long r = s; r < e; r++) {
+        long hs = 0;
+        /* the pool is sorted, so only its first `trim` can make the cut */
+        for (long i = 0; i < ef && i < trim; i++) {
+            long u = pool_ids[r * ef + i];
+            double du = pool_d[r * ef + i];
+            if (u < 0 || !isfinite(du)) continue;
+            lcand_t x = { du, u, -1.0 };
+            lheap_offer(h, &hs, trim, x);
+        }
+        for (long j = 0; j < r; j++) {
+            lcand_t x = { ldist_SUF(vecs, d, metric, nodes[r], ps[r], nodes[j], ps[j]),
+                          nodes[j], ps[j] };
+            lheap_offer(h, &hs, trim, x);
+        }
+        qsort(h, (size_t)hs, sizeof(lcand_t), lcand_cmp);
+        long na = heur_core_SUF(vecs, d, metric, h, hs, cap);
+        for (long j = 0; j < cap; j++) sel_id[r * cap + j] = j < na ? h[j].id : -1;
+    }
+    free(h); free(ps);
+    return 0;
+}
+
+/* The serial link apply of one level, in place on the live (n, cap)
+ * link / (n,) count arrays: node r of `nodes` (chunk order) takes its
+ * forward links sel_id[r] (accept order, -1 padded, m wide); then every
+ * selected neighbor p takes the reverse links (arrange_links): appended
+ * in insert order when old + additions fit `cap`, else the heuristic
+ * over old ∪ additions sorted by (d(·, p), id), at most `cap` kept —
+ * one shrink per neighbor per chunk. */
+int hnsw_link_apply_SUF(
+    const VT *vecs, int d, int metric,
+    int *links, int *counts, long cap,
+    const long *nodes, long R, const long *sel_id, long m)
+{
+    long E = 0;
+    for (long r = 0; r < R; r++) {
+        int *row = links + (size_t)nodes[r] * cap;
+        long cnt = 0;
+        for (long j = 0; j < m && j < cap; j++) {
+            long u = sel_id[r * m + j];
+            if (u < 0) break;
+            row[cnt++] = (int)u;
+        }
+        for (long j = cnt; j < cap; j++) row[j] = -1;
+        counts[nodes[r]] = (int)cnt;
+        E += cnt;
+    }
+    ledge_t *ed = (ledge_t *)malloc((size_t)(E > 0 ? E : 1) * sizeof(ledge_t));
+    lcand_t *c = (lcand_t *)malloc((size_t)(cap + R + 1) * sizeof(lcand_t));
+    if (!ed || !c) { free(ed); free(c); return 1; }
+    E = 0;
+    for (long r = 0; r < R; r++)
+        for (long j = 0; j < counts[nodes[r]]; j++) {
+            ledge_t x = { links[(size_t)nodes[r] * cap + j], E, nodes[r] };
+            ed[E++] = x;
+        }
+    qsort(ed, (size_t)E, sizeof(ledge_t), ledge_cmp);
+    for (long a = 0, b; a < E; a = b) {
+        long p = ed[a].p;
+        for (b = a; b < E && ed[b].p == p; b++) ;
+        int *row = links + (size_t)p * cap;
+        long old = counts[p];
+        if (old + (b - a) <= cap) {
+            for (long t = a; t < b; t++) row[old + (t - a)] = (int)ed[t].node;
+            counts[p] = (int)(old + (b - a));
+            continue;
+        }
+        double sp = lself_SUF(vecs, d, metric, p);
+        long T = 0;
+        for (long t = 0; t < old + (b - a); t++) {
+            long u = t < old ? row[t] : ed[a + t - old].node;
+            double su = lself_SUF(vecs, d, metric, u);
+            lcand_t x = { ldist_SUF(vecs, d, metric, u, su, p, sp), u, su };
+            c[T++] = x;
+        }
+        qsort(c, (size_t)T, sizeof(lcand_t), lcand_cmp);
+        long na = heur_core_SUF(vecs, d, metric, c, T, cap);
+        for (long j = 0; j < cap; j++) row[j] = j < na ? (int)c[j].id : -1;
+        counts[p] = (int)na;
+    }
+    free(ed); free(c);
     return 0;
 }
 """
@@ -960,7 +1125,7 @@ def _load_validated(path: str) -> ctypes.CDLL | None:
         lib = ctypes.CDLL(path)
     except OSError:
         return None
-    if (hasattr(lib, "hnsw_search_f64") and hasattr(lib, "heur_select_f64")
+    if (hasattr(lib, "hnsw_search_f64") and hasattr(lib, "hnsw_link_apply_f64")
             and hasattr(lib, "dense_topk") and hasattr(lib, "kmeans_step")):
         return lib
     return None
@@ -1090,6 +1255,23 @@ def _bind(lib: ctypes.CDLL) -> None:
             lp, dp,                                       # sel_id, sel_d
         ]
         hs.restype = ctypes.c_int
+        ls = getattr(lib, f"hnsw_link_select_{suf}")
+        ls.argtypes = [
+            vp, ctypes.c_int, ctypes.c_int,               # vecs, d, metric
+            lp, ctypes.c_long,                            # nodes, R
+            lp, dp, ctypes.c_long,                        # pool_ids, pool_d, ef
+            ctypes.c_long, ctypes.c_long,                 # s, e
+            ctypes.c_long, ctypes.c_long,                 # trim, cap
+            lp,                                           # sel_id
+        ]
+        ls.restype = ctypes.c_int
+        la = getattr(lib, f"hnsw_link_apply_{suf}")
+        la.argtypes = [
+            vp, ctypes.c_int, ctypes.c_int,               # vecs, d, metric
+            ip, ip, ctypes.c_long,                        # links, counts, cap
+            lp, ctypes.c_long, lp, ctypes.c_long,         # nodes, R, sel_id, m
+        ]
+        la.restype = ctypes.c_int
     dt = lib.dense_topk
     lp = ctypes.POINTER(ctypes.c_long)
     dp = ctypes.POINTER(ctypes.c_double)
@@ -1501,30 +1683,106 @@ def adc_lut(qspan: np.ndarray, cbs: np.ndarray) -> np.ndarray:
 
 def heur_select(cd: np.ndarray, cid: np.ndarray, vecs: np.ndarray,
                 metric: str, cap: int) -> tuple[np.ndarray, np.ndarray]:
-    """Forward-link diversity selection over (R, T) sorted candidate
-    rows — the C twin of hnsw._heuristic_select_batch with lazy pair
+    """Diversity heuristic over (R, T) candidate rows sorted by (dist,
+    id) — the C twin of hnsw._heuristic_select_batch with lazy f64 pair
     distances and early exit (no (R, T, T) distance block, no
-    (R, T, d) gather). Returns (sel_id, sel_d) as (R, cap) arrays
-    padded with -1/inf, already packed in accept order. Caller
-    guarantees: kernel available, ``vecs`` C-contiguous f32/f64,
-    ``cap <= 128``, metric in {l2sqr, cosine}."""
-    lib = get_lib()
-    assert lib is not None
-    vt = ctypes.c_float if vecs.dtype == np.float32 else ctypes.c_double
-    fn = getattr(lib, "heur_select_f32" if vecs.dtype == np.float32
-                 else "heur_select_f64")
+    (R, T, d) gather), the core of :func:`link_select`. Returns
+    (sel_id, sel_d) as (R, cap) arrays padded with -1/inf, packed in
+    accept order."""
+    vt, fn = _link_fn("heur_select", vecs, metric)
     cd64 = np.ascontiguousarray(cd, dtype=np.float64)
     cid64 = np.ascontiguousarray(cid, dtype=np.int64)
     R, T = cd64.shape
     sel_id = np.empty((R, int(cap)), dtype=np.int64)
     sel_d = np.empty((R, int(cap)), dtype=np.float64)
-    rc = fn(_ptr(vecs, vt), vecs.shape[1], 0 if metric == "l2sqr" else 1,
+    rc = fn(_ptr(vecs, vt), vecs.shape[1], _KM_METRIC[metric],
             _ptr(cd64, ctypes.c_double), _ptr(cid64, ctypes.c_long),
             R, T, int(cap),
             _ptr(sel_id, ctypes.c_long), _ptr(sel_d, ctypes.c_double))
     if rc != 0:
-        raise MemoryError("heur_select C kernel failure")
+        raise MemoryError("heur_select C kernel allocation failure")
     return sel_id, sel_d
+
+
+def _link_fn(name: str, vecs: np.ndarray, metric: str):
+    """(ctypes element type, bound ``{name}_f32|f64``) for the link-phase
+    kernels, after checking what they read through raw pointers."""
+    lib = get_lib()
+    if lib is None:
+        raise RuntimeError("compiled kernel unavailable")
+    if (vecs.ndim != 2 or vecs.dtype not in (np.float32, np.float64)
+            or not vecs.flags["C_CONTIGUOUS"]):
+        raise ValueError("vecs must be a C-contiguous 2-D f32/f64 matrix")
+    if metric not in _KM_METRIC:
+        raise ValueError(f"unsupported metric {metric!r}")
+    if vecs.dtype == np.float32:
+        return ctypes.c_float, getattr(lib, f"{name}_f32")
+    return ctypes.c_double, getattr(lib, f"{name}_f64")
+
+
+def link_select(vecs: np.ndarray, metric: str, nodes: np.ndarray,
+                pool_ids: np.ndarray, pool_d: np.ndarray, span: tuple[int, int],
+                trim: int, sel_id: np.ndarray) -> None:
+    """Forward-link selection of one level's chunk rows ``span`` = [s, e)
+    into ``sel_id`` (R, cap), in place (hnsw_index.rs:431-447): row r
+    merges its ``(pool_ids, pool_d)`` pool (R, ef), ascending by (dist,
+    id), with the chunk peers ``nodes[:r]`` at exact distances, keeps
+    the nearest ``trim`` by (dist, id), and runs the diversity
+    heuristic; the kept ids land in accept order, -1 padded. Calls on
+    disjoint spans may share ``sel_id`` from threads (GIL released)."""
+    vt, fn = _link_fn("hnsw_link_select", vecs, metric)
+    nodes = np.ascontiguousarray(nodes, dtype=np.int64)
+    pool_ids = np.ascontiguousarray(pool_ids, dtype=np.int64)
+    pool_d = np.ascontiguousarray(pool_d, dtype=np.float64)
+    R = nodes.shape[0]
+    s, e = int(span[0]), int(span[1])
+    if (pool_ids.shape != pool_d.shape or pool_ids.ndim != 2
+            or pool_ids.shape[0] != R or not 0 <= s <= e <= R):
+        raise ValueError("link_select: pool / span shapes do not match the rows")
+    if (sel_id.dtype != np.int64 or sel_id.ndim != 2 or sel_id.shape[0] != R
+            or not sel_id.flags["C_CONTIGUOUS"] or not sel_id.flags["WRITEABLE"]):
+        raise ValueError("sel_id must be a writeable C-contiguous (R, cap) int64 array")
+    if (nodes.size and not 0 <= nodes.min() <= nodes.max() < vecs.shape[0]) or (
+            pool_ids.size and pool_ids.max() >= vecs.shape[0]):
+        raise ValueError("link_select: node id out of range")
+    rc = fn(_ptr(vecs, vt), vecs.shape[1], _KM_METRIC[metric],
+            _ptr(nodes, ctypes.c_long), R,
+            _ptr(pool_ids, ctypes.c_long), _ptr(pool_d, ctypes.c_double),
+            pool_ids.shape[1], s, e, int(trim), sel_id.shape[1],
+            _ptr(sel_id, ctypes.c_long))
+    if rc != 0:
+        raise MemoryError("link_select C kernel allocation failure")
+
+
+def link_apply(vecs: np.ndarray, metric: str, links: np.ndarray,
+               counts: np.ndarray, nodes: np.ndarray, sel_id: np.ndarray) -> None:
+    """Serial link apply of one level, in place on the live graph arrays
+    ``links`` (n, cap) / ``counts`` (n,): ``nodes`` (chunk order) take
+    their forward links ``sel_id`` (R, m), then each selected neighbor
+    takes the reverse links — appended when they fit, else one
+    heuristic shrink over old ∪ additions (arrange_links)."""
+    vt, fn = _link_fn("hnsw_link_apply", vecs, metric)
+    for a in (links, counts):
+        if (a.dtype != np.int32 or not a.flags["C_CONTIGUOUS"]
+                or not a.flags["WRITEABLE"]):
+            raise ValueError("links/counts must be writeable C-contiguous int32 arrays")
+    nodes = np.ascontiguousarray(nodes, dtype=np.int64)
+    sel_id = np.ascontiguousarray(sel_id, dtype=np.int64)
+    n = vecs.shape[0]
+    if links.ndim != 2 or links.shape[0] != n or counts.shape != (n,):
+        raise ValueError("links/counts do not cover the vector rows")
+    if sel_id.ndim != 2 or sel_id.shape[0] != nodes.shape[0]:
+        raise ValueError("link_apply: one selection row per node")
+    if nodes.size and not 0 <= nodes.min() <= nodes.max() < n:
+        raise ValueError("link_apply: node id out of range")
+    if sel_id.size and sel_id.max() >= n:
+        raise ValueError("link_apply: neighbor id out of range")
+    rc = fn(_ptr(vecs, vt), vecs.shape[1], _KM_METRIC[metric],
+            _ptr(links, ctypes.c_int), _ptr(counts, ctypes.c_int), links.shape[1],
+            _ptr(nodes, ctypes.c_long), nodes.shape[0],
+            _ptr(sel_id, ctypes.c_long), sel_id.shape[1])
+    if rc != 0:
+        raise MemoryError("link_apply C kernel allocation failure")
 
 
 # ---- k-means (index/kmeans.py::fit_kmeans) ---------------------------------

@@ -30,7 +30,12 @@ Spark design:
   fanned over threads (the rayon ``par_iter`` of hnsw_index.rs:413-442),
   or, without a toolchain, on the serial batched-numpy lockstep kernel
   (index/beam.py) — the fallback and test oracle. The link phase
-  applies the k-bounded candidate lists serially.
+  (``connect_new_links`` + ``arrange_links``) is compiled too: forward
+  selection per chunk row (pool ∪ earlier chunk peers, trim, the
+  diversity heuristic) fans over the same threads, then one serial
+  GIL-released apply per level writes forward links and appends or
+  shrinks reverse links in place on the live link arrays. The numpy
+  link phase is the no-toolchain path and builds the same graph.
 - **serve**: on the driver, against the one in-RAM graph, as the
   reference serves (hnsw_index.rs:614-634). A point query is one
   compiled-kernel call; a batch (``search_batch``, a DataFrame or a
@@ -47,7 +52,7 @@ Spark design:
 Deviations (documented): reverse-link additions from one chunk are
 applied per neighbor in a single batched shrink instead of one shrink
 per edge — same heuristic, applied once over the union; and the
-heuristic candidate list is trimmed to the nearest ``3·M`` entries
+heuristic candidate list is trimmed to the nearest ``max(3·M, 48)`` entries
 (the accept scan keeps at most M and virtually never reaches past the
 nearest few dozen). Both keep the graph bidirectional and connected;
 quality is gated by the recall tests.
@@ -95,7 +100,7 @@ _VISITED_BUDGET = 256 * 1024 * 1024
 ADC_STEER_MIN_BYTES = 256 << 20
 
 #: build insert-chunk cap: bounds the link phase's quadratic
-#: peer-distance block while keeping enough nodes per chunk to
+#: peer-distance work while keeping enough nodes per chunk to
 #: amortize the candidate-phase kernel launches
 _CHUNK_CAP = int(os.environ.get("SPARK_GRAFT_CHUNK_CAP", "512"))
 
@@ -161,7 +166,10 @@ class _Graph:
 
 def _pairwise_block(X: np.ndarray, metric: str) -> np.ndarray:
     """(B, T, d) stacked candidate blocks → (B, T, T) pairwise distances
-    in one batched GEMM — the bulk compute of the link phase."""
+    in one batched f64 GEMM — the bulk compute of the numpy link phase.
+    f64 whatever the store's dtype, as the compiled link kernels
+    accumulate, so both paths make the same heuristic decisions."""
+    X = np.asarray(X, dtype=np.float64)
     G = X @ X.transpose(0, 2, 1)
     n2 = np.einsum("btd,btd->bt", X, X)
     if metric == "l2sqr":
@@ -211,31 +219,15 @@ def _forward_select(
     trim: int,
     cap: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Shared forward-link selection (connect_new_links,
-    hnsw_index.rs:443-447): trim merged candidates to top-``trim`` with
-    a linear cut, order by (dist, id), run the diversity heuristic,
-    and pack the per-row selections to (R, cap) id/dist arrays padded
-    with -1/inf."""
+    """Forward-link selection (connect_new_links, hnsw_index.rs:443-447)
+    of the numpy link phase: order merged candidates by (dist, id), keep
+    the nearest ``trim``, run the diversity heuristic, and pack the
+    per-row selections to (R, cap) id/dist arrays padded with -1/inf."""
     R = cat_d.shape[0]
-    T = min(cat_d.shape[1], trim)
-    if cat_d.shape[1] > T:
-        part = np.argpartition(cat_d, T - 1, axis=1)[:, :T]
-        cat_d = np.take_along_axis(cat_d, part, axis=1)
-        cat_id = np.take_along_axis(cat_id, part, axis=1)
     big = np.iinfo(np.int64).max
-    order = np.lexsort((np.where(cat_id < 0, big, cat_id), cat_d), axis=1)
+    order = np.lexsort((np.where(cat_id < 0, big, cat_id), cat_d), axis=1)[:, :trim]
     cd = np.take_along_axis(cat_d, order, axis=1)
     cid = np.take_along_axis(cat_id, order, axis=1)
-    from lab_1806_vec_db_spark.index import ckernel
-
-    if (ckernel.available() and cap <= 128
-            and metric in ("l2sqr", "cosine")
-            and vecs.dtype in (np.float32, np.float64)
-            and vecs.flags["C_CONTIGUOUS"]):
-        # compiled scan: lazy pair distances + first-violation exit —
-        # skips the (R, T, d) gather and the full (R, T, T) GEMM block
-        # (58% of the 1M×960 build wall), and releases the GIL
-        return ckernel.heur_select(cd, cid, vecs, metric, cap)
     # candidate↔candidate distances for the heuristic
     X = vecs[np.clip(cid, 0, None)]
     D = _pairwise_block(X, metric)
@@ -249,6 +241,14 @@ def _forward_select(
     return sel_id, sel_d
 
 
+def _spans(B: int, workers: int) -> list[tuple[int, int]]:
+    """[s, e) row spans fanning a chunk's B rows over the build threads:
+    at most ``workers`` spans of at least ~8 rows each."""
+    w = max(1, min(workers, B // 8))
+    bounds = np.linspace(0, B, w + 1).astype(int)
+    return [(int(s), int(e)) for s, e in zip(bounds[:-1], bounds[1:]) if e > s]
+
+
 def _c_chunk_candidates(
     g: "_Graph",
     cvecs: np.ndarray,
@@ -258,15 +258,14 @@ def _c_chunk_candidates(
     chunk: np.ndarray,
     ef_c: int,
     workers: int,
+    tp,
 ) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Chunk candidate phase on the compiled kernel: the per-level
     link/count arrays are passed as LIVE zero-copy pointers (the graph
-    is frozen for the duration of a chunk), the chunk fans out over a
-    plain thread pool (the C call releases the GIL), and the result is
-    the same ``{level: (rows, pool_ids, pool_dists)}`` contract
-    ``_chunk_candidates`` produces."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    is frozen for the duration of a chunk), the chunk fans out over the
+    build's thread pool ``tp`` (the C call releases the GIL), and the
+    result is the same ``{level: (rows, pool_ids, pool_dists)}``
+    contract ``_chunk_candidates`` produces."""
     from lab_1806_vec_db_spark.index import ckernel
 
     nlv = min(len(g.links), g.max_level + 1)
@@ -274,10 +273,6 @@ def _c_chunk_candidates(
     counts = [np.ascontiguousarray(c, dtype=np.int32) for c in g.counts[:nlv]]
     chunk = np.ascontiguousarray(chunk, dtype=np.int64)
     levels = np.ascontiguousarray(g.levels[chunk], dtype=np.int32)
-    B = len(chunk)
-    w = max(1, min(workers, B // 8))
-    bounds = np.linspace(0, B, w + 1).astype(int)
-    spans = [(int(s), int(e)) for s, e in zip(bounds[:-1], bounds[1:]) if e > s]
 
     def run(span):
         s, e = span
@@ -286,11 +281,7 @@ def _c_chunk_candidates(
             chunk[s:e], levels[s:e], int(ef_c),
         )
 
-    if len(spans) == 1:
-        parts = [run(spans[0])]
-    else:
-        with ThreadPoolExecutor(max_workers=w) as tp:
-            parts = list(tp.map(run, spans))
+    parts = list(tp.map(run, _spans(len(chunk), workers)))
     ids3 = np.concatenate([p[0] for p in parts], axis=0)
     d3 = np.concatenate([p[1] for p in parts], axis=0)
     out: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
@@ -409,20 +400,27 @@ class HNSWIndex:
         # objects on the driver — the vector column flattens in place
         # (functions/arrowvec.py) instead of materializing ~n ndarray
         # rows through pandas, which cost ~minutes of the 1M×960
-        # build's untracked time.
+        # build's untracked time. The rows are put in id order on the
+        # driver (one stable argsort, skipped when already sorted): a
+        # Spark orderBy would add a range-sampling job and a shuffle.
         from lab_1806_vec_db_spark.functions.arrowvec import vec_matrix
 
-        tbl = df.select(id_col, vec_col).orderBy(id_col).toArrow()
+        tbl = df.select(id_col, vec_col).toArrow()
         ids = tbl.column(0).combine_chunks().to_numpy(
             zero_copy_only=False).astype(np.int64, copy=False)
-        vecs = np.ascontiguousarray(vec_matrix(tbl.column(1), dtype=dtype))
+        col = tbl.column(1)
+        del tbl
+        if ids.size > 1 and (ids[1:] < ids[:-1]).any():
+            order = np.argsort(ids, kind="stable")
+            ids, col = ids[order], col.take(order)
+        vecs = np.ascontiguousarray(vec_matrix(col, dtype=dtype))
+        del col
         if vecs.size == 0:
             # empty table: dim is uninferable from zero rows — restore
             # the 1-D (0,) shape every consumer already handles (the
             # Arrow bridge returns (0, 0), which slipped past
             # add_batch's empty-graph guard and broke the first append)
             vecs = vecs.reshape(0)
-        del tbl
         graph = cls._build_graph(vecs, metric, m, ef_construction, seed)
         obj = cls(ids, vecs, graph, metric, base=df, id_col=id_col, path=path,
                   ef_construction=ef_construction)
@@ -449,10 +447,7 @@ class HNSWIndex:
         if n == 0:
             return g
         ef_c = max(int(ef_c), 2 * m)  # reference clamp (hnsw_index.rs:508)
-        pd_all = ExactPairDist(vecs, vecs, metric)
-        HNSWIndex._insert_all(
-            g, vecs, metric, np.arange(n, dtype=np.int64), ef_c, pd_all
-        )
+        HNSWIndex._insert_all(g, vecs, metric, np.arange(n, dtype=np.int64), ef_c)
         return g
 
     @staticmethod
@@ -462,12 +457,14 @@ class HNSWIndex:
         metric: str,
         nodes: np.ndarray,
         ef_c: int,
-        pd_all: ExactPairDist,
     ) -> None:
-        """Chunked insert loop shared by build and incremental add. The
-        candidate phase runs on the compiled kernel fanned over threads
-        when a toolchain is present, else on the serial numpy lockstep
-        kernel; both feed the same link phase."""
+        """Chunked insert loop shared by build and incremental add. With
+        a toolchain the candidate phase and the link phase both run on
+        the compiled kernels, fanned over one thread pool; without one,
+        the serial numpy lockstep kernel and the numpy link phase — the
+        same graph, the reference the tests compare against."""
+        from concurrent.futures import ThreadPoolExecutor
+
         from lab_1806_vec_db_spark.index import ckernel
 
         n = vecs.shape[0]
@@ -476,55 +473,107 @@ class HNSWIndex:
         # node-chunk cap: visited bitmaps (C × n) stay under budget
         mem_cap = max(32, _VISITED_BUDGET // max(n, 1))
         use_c = ckernel.available()
-        # SPARK_GRAFT_BUILD_WORKERS caps the candidate-phase thread
-        # fan-out — needed when several builds run concurrently in one
-        # machine's executor tasks (the sharded tier builds all
-        # sub-graphs at once; ceil(cpus/concurrent tasks) each)
+        # SPARK_GRAFT_BUILD_WORKERS caps the build's thread fan-out —
+        # needed when several builds run concurrently in one machine's
+        # executor tasks (the sharded tier builds all sub-graphs at
+        # once; ceil(cpus/concurrent tasks) each)
         workers = int(os.environ.get("SPARK_GRAFT_BUILD_WORKERS", "0")) \
             or (os.cpu_count() or 1)
+        tp = None
         if use_c:
             cvecs = np.ascontiguousarray(vecs)
             cx2 = np.einsum("ij,ij->i", cvecs, cvecs)
             cxn = np.sqrt(cx2) if metric == "cosine" else None
-        _log.debug("hnsw build candidates=%s workers=%d reason=%s",
+            tp = ThreadPoolExecutor(max_workers=workers)
+        else:
+            pd_all = ExactPairDist(vecs, vecs, metric)
+        _log.debug("hnsw build candidates=%s link=%s workers=%d reason=%s",
                    "c_threads" if use_c else "numpy",
+                   "c" if use_c else "numpy",
                    workers if use_c else 1,
                    "toolchain" if use_c else "no_toolchain")
-        while i < total:
-            if g.entry < 0:
-                first = int(nodes[i])
-                g.ensure_level(int(g.levels[first]), n)
-                g.entry = first
-                g.max_level = int(g.levels[first])
-                i += 1
-                continue
-            built = int(nodes[i])  # nodes are inserted in ascending order
-            # mem_cap bounds the numpy kernel's (C × n) visited bitmaps;
-            # the compiled kernel keeps one n-int visited array per
-            # thread regardless of chunk width, so it skips the cap
-            C = int(min(total - i, max(32, built // 2), _CHUNK_CAP,
-                        total if use_c else mem_cap))
-            chunk = nodes[i : i + C]
-            top_chunk = int(g.levels[chunk].max())
-            g.ensure_level(max(top_chunk, g.max_level), n)
-            t_c = time.perf_counter()
-            if use_c:
-                cands = _c_chunk_candidates(
-                    g, cvecs, cx2, cxn, metric, chunk, ef_c, workers
-                )
-            else:
-                cands = _chunk_candidates(
-                    g.links, g.counts, g.entry, g.max_level, pd_all,
-                    chunk, g.levels[chunk], ef_c, n,
-                )
-            BUILD_PHASE["candidates"] += time.perf_counter() - t_c
-            HNSWIndex._link_chunk(g, vecs, metric, chunk, cands, pd_all)
-            # entry-point update (hnsw_index.rs:449-456)
-            for idx in chunk:
-                if int(g.levels[idx]) > g.max_level:
-                    g.max_level = int(g.levels[idx])
-                    g.entry = int(idx)
-            i += C
+        try:
+            while i < total:
+                if g.entry < 0:
+                    first = int(nodes[i])
+                    g.ensure_level(int(g.levels[first]), n)
+                    g.entry = first
+                    g.max_level = int(g.levels[first])
+                    i += 1
+                    continue
+                built = int(nodes[i])  # nodes are inserted in ascending order
+                # mem_cap bounds the numpy kernel's (C × n) visited bitmaps;
+                # the compiled kernel keeps one n-int visited array per
+                # thread regardless of chunk width, so it skips the cap
+                C = int(min(total - i, max(32, built // 2), _CHUNK_CAP,
+                            total if use_c else mem_cap))
+                chunk = nodes[i : i + C]
+                top_chunk = int(g.levels[chunk].max())
+                g.ensure_level(max(top_chunk, g.max_level), n)
+                t_c = time.perf_counter()
+                if use_c:
+                    cands = _c_chunk_candidates(
+                        g, cvecs, cx2, cxn, metric, chunk, ef_c, workers, tp
+                    )
+                else:
+                    cands = _chunk_candidates(
+                        g.links, g.counts, g.entry, g.max_level, pd_all,
+                        chunk, g.levels[chunk], ef_c, n,
+                    )
+                BUILD_PHASE["candidates"] += time.perf_counter() - t_c
+                if use_c:
+                    HNSWIndex._c_link_chunk(g, cvecs, metric, chunk, cands,
+                                            workers, tp)
+                else:
+                    HNSWIndex._link_chunk(g, vecs, metric, chunk, cands)
+                # entry-point update (hnsw_index.rs:449-456)
+                for idx in chunk:
+                    if int(g.levels[idx]) > g.max_level:
+                        g.max_level = int(g.levels[idx])
+                        g.entry = int(idx)
+                i += C
+        finally:
+            if tp is not None:
+                tp.shutdown()
+
+    @staticmethod
+    def _c_link_chunk(
+        g: _Graph,
+        vecs: np.ndarray,
+        metric: str,
+        chunk: np.ndarray,
+        cands: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]],
+        workers: int,
+        tp,
+    ) -> None:
+        """Compiled link phase (hnsw_index.rs:443-447): each level's
+        forward selection (``ckernel.link_select``: pool ∪ earlier chunk
+        peers, trim, heuristic) fanned over ``tp`` in row spans, then
+        the serial in-place apply of forward and reverse links per level
+        (``ckernel.link_apply``) on the live link/count arrays."""
+        from lab_1806_vec_db_spark.index import ckernel
+
+        trim = max(3 * g.M, 48)
+        t_s = time.perf_counter()
+        chunk = np.asarray(chunk, dtype=np.int64)
+        sels: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        jobs = []
+        for L, (rows, pid, pdist) in cands.items():
+            nodes = chunk[rows]
+            sel = np.empty((len(rows), g.M), dtype=np.int64)
+            sels[L] = (nodes, sel)
+            jobs += [(nodes, pid, pdist, span, sel)
+                     for span in _spans(len(rows), workers)]
+        def select(job):
+            nodes, pid, pdist, span, sel = job
+            ckernel.link_select(vecs, metric, nodes, pid, pdist, span, trim, sel)
+
+        list(tp.map(select, jobs))
+        BUILD_PHASE["select"] += time.perf_counter() - t_s
+        t_a = time.perf_counter()
+        for L, (nodes, sel) in sels.items():
+            ckernel.link_apply(vecs, metric, g.links[L], g.counts[L], nodes, sel)
+        BUILD_PHASE["apply"] += time.perf_counter() - t_a
 
     @staticmethod
     def _link_chunk(
@@ -533,11 +582,11 @@ class HNSWIndex:
         metric: str,
         chunk: np.ndarray,
         cands: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]],
-        pd_all: ExactPairDist,
     ) -> None:
-        """Serial link phase (hnsw_index.rs:443-447): merge chunk peers
-        into the candidate pools, heuristic-select forward links (cap M,
-        connect_new_links), then batched reverse-link shrink
+        """Numpy link phase (hnsw_index.rs:443-447), the no-toolchain
+        path and the reference of :meth:`_c_link_chunk`: merge chunk
+        peers into the candidate pools, heuristic-select forward links
+        (cap M, connect_new_links), then batched reverse-link shrink
         (arrange_links)."""
         m = g.M
         trim = max(3 * m, 48)
@@ -548,7 +597,8 @@ class HNSWIndex:
         peer_D = _pairwise_block(Xc[None, :, :], metric)[0]  # (C, C)
         # forward selection is pure per-row and GEMM-bound (the
         # candidate↔candidate distance blocks), so fan (level,
-        # row-block) tasks over threads — BLAS releases the GIL
+        # row-block) tasks over threads — BLAS releases the GIL; ~8
+        # coarse blocks, as the select mixes GEMM with GIL-held index ops
         tasks: list[tuple[int, np.ndarray, np.ndarray, np.ndarray]] = []
         for L, (rows, pid, pdist) in cands.items():
             R = len(rows)
@@ -560,14 +610,7 @@ class HNSWIndex:
             cat_id = np.concatenate([pid, peer_ids], axis=1).astype(np.int64)
             cat_id = np.where(np.isfinite(cat_d), cat_id, -1)
             rows = np.asarray(rows, dtype=np.int64)
-            # ~8 blocks when the numpy select runs (it mixes GEMM with
-            # GIL-held index ops — coarse blocks win); the compiled
-            # select releases the GIL outright, so cut finer and fan
-            # wider for real parallelism across the thread pool
-            from lab_1806_vec_db_spark.index import ckernel as _ck
-            c_sel = _ck.available() and m <= 128 and metric in ("l2sqr", "cosine")
-            n_blocks = 4 * (os.cpu_count() or 8) if c_sel else 8
-            blk = max(64, -(-len(rows) // n_blocks))
+            blk = max(64, -(-len(rows) // 8))
             for s in range(0, len(rows), blk):
                 tasks.append((L, rows[s:s + blk], cat_d[s:s + blk], cat_id[s:s + blk]))
 
@@ -579,9 +622,7 @@ class HNSWIndex:
         if len(tasks) > 1 and (os.cpu_count() or 1) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(
-                max_workers=min(32, os.cpu_count() or 8) if c_sel else 8
-            ) as tp:
+            with ThreadPoolExecutor(max_workers=8) as tp:
                 done = list(tp.map(run_sel, tasks))
         else:
             done = [run_sel(t) for t in tasks]
@@ -595,16 +636,16 @@ class HNSWIndex:
             )
         BUILD_PHASE["select"] += time.perf_counter() - t_s
         t_a = time.perf_counter()
-        HNSWIndex._apply_selected(g, metric, chunk, sels, pd_all)
+        HNSWIndex._apply_selected(g, vecs, metric, chunk, sels)
         BUILD_PHASE["apply"] += time.perf_counter() - t_a
 
     @staticmethod
     def _apply_selected(
         g: _Graph,
+        vecs: np.ndarray,
         metric: str,
         chunk: np.ndarray,
         sels: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]],
-        pd_all: ExactPairDist,
     ) -> None:
         """Serial mutation phase: set forward links in insert order
         (rows ascend in chunk position), then the batched reverse-link
@@ -621,21 +662,22 @@ class HNSWIndex:
                 g.set_neighbors(L, node, sel.tolist())
                 for p in sel.tolist():
                     rev.setdefault(int(p), []).append(node)
-            HNSWIndex._apply_reverse(g, metric, L, limit, rev, pd_all)
+            HNSWIndex._apply_reverse(g, vecs, metric, L, limit, rev)
 
     @staticmethod
     def _apply_reverse(
         g: _Graph,
+        vecs: np.ndarray,
         metric: str,
         L: int,
         limit: int,
         rev: dict[int, list[int]],
-        pd_all: ExactPairDist,
     ) -> None:
         """Reverse-link maintenance (arrange_links): append when the
         list fits; on overflow run the heuristic once over
         old ∪ additions — one batched shrink per neighbor per chunk
-        instead of one per edge (documented deviation)."""
+        instead of one per edge (documented deviation). Distances in
+        f64, as :func:`_pairwise_block`."""
         overflow: list[tuple[int, np.ndarray]] = []
         for p, adds in rev.items():
             old = g.neighbors(L, p)
@@ -646,19 +688,26 @@ class HNSWIndex:
                 overflow.append((p, merged))
         if not overflow:
             return
-        vecs = pd_all.vecs
         maxL = max(len(mg) for _, mg in overflow)
         B = len(overflow)
-        md = np.full((B, maxL), np.inf)
         mid = np.full((B, maxL), -1, dtype=np.int64)
         for b, (p, mg) in enumerate(overflow):
-            dd = pd_all(np.full(len(mg), p, dtype=np.int64), mg)
-            md[b, : len(mg)] = dd
             mid[b, : len(mg)] = mg
+        # d(·, p) for every merged entry: the ExactPairDist formulas
+        X = vecs[np.clip(mid, 0, None)].astype(np.float64)
+        P = vecs[np.asarray([p for p, _ in overflow])].astype(np.float64)
+        ip = np.einsum("btd,bd->bt", X, P)
+        x2 = np.einsum("btd,btd->bt", X, X)
+        p2 = np.einsum("bd,bd->b", P, P)[:, None]
+        if metric == "l2sqr":
+            md = np.maximum(x2 + p2 - 2.0 * ip, 0.0)
+        else:
+            md = 1.0 - ip / np.maximum(np.sqrt(x2) * np.sqrt(p2), 1e-10)
+        md[mid < 0] = np.inf
         order = np.lexsort((np.where(mid < 0, np.iinfo(np.int64).max, mid), md), axis=1)
         md = np.take_along_axis(md, order, axis=1)
         mid = np.take_along_axis(mid, order, axis=1)
-        D = _pairwise_block(vecs[np.clip(mid, 0, None)], metric)
+        D = _pairwise_block(np.take_along_axis(X, order[:, :, None], axis=1), metric)
         taken = _heuristic_select_batch(md, D, limit)
         for b, (p, _) in enumerate(overflow):
             g.set_neighbors(L, p, mid[b][taken[b]].tolist())
@@ -1363,9 +1412,8 @@ class HNSWIndex:
             )
         self.vecs, self.ids = vecs, ids
         ef_c = max(int(ef_construction or self.ef_construction), 2 * g.M)
-        pd_all = ExactPairDist(vecs, vecs, self.metric)
         HNSWIndex._insert_all(
-            g, vecs, self.metric, np.arange(n_old, n, dtype=np.int64), ef_c, pd_all
+            g, vecs, self.metric, np.arange(n_old, n, dtype=np.int64), ef_c
         )
         self._pq_cache = None  # aligned codes no longer cover every id
         self._c_state = None  # flattened views hold the pre-add graph

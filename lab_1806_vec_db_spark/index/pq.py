@@ -69,6 +69,7 @@ from lab_1806_vec_db_spark.operators.knn import (
     empty_topk,
     fast_topk_grouped,
     list_runs,
+    lists_in,
     np_round_half_up,
     route_lists,
     take,
@@ -682,8 +683,7 @@ def adc_list_scan(
     if not fused:
         vecs = base
         if vec_col in frame.columns:
-            vecs = frame if probes is None else frame.filter(
-                F.col(LIST_COL).isin(sorted(probed)))
+            vecs = frame if probes is None else frame.filter(lists_in(probed))
         rerank_source = (
             vecs.select(id_col, vec_col),
             make_grouped_rerank_scan(spark, qids, qmat, metric, id_col, vec_col),

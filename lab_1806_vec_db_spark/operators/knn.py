@@ -344,7 +344,32 @@ def route_lists(
     if probes is None:
         return frame, None
     by_list = group_probes(np.asarray(probes))
-    return frame.filter(F.col(LIST_COL).isin(sorted(by_list))), by_list
+    return frame.filter(lists_in(by_list)), by_list
+
+
+def lists_in(lists) -> Column:
+    """``LIST_COL IN (…)`` over the given list ids as one SQL
+    expression: one py4j round trip to parse, where ``isin`` builds a
+    Column literal per list. No list matches no row."""
+    if not lists:
+        return F.lit(False)
+    return F.expr(f"{LIST_COL} IN ({', '.join(str(int(c)) for c in sorted(lists))})")
+
+
+def frame_partitions(frame: DataFrame) -> int | None:
+    """Partition count of ``frame``, probed once per frame object and
+    kept on it (None when it cannot be probed). ``rdd.getNumPartitions``
+    plans the frame and converts it to an RDD, so a cached frame served
+    in a loop must not pay it per serve; a filter over it keeps its
+    partitions, so the count bounds every routed scan of it."""
+    n = getattr(frame, "_vecdb_partitions", None)
+    if n is None:
+        try:
+            n = frame.rdd.getNumPartitions()
+        except Exception:
+            return None
+        frame._vecdb_partitions = n
+    return n
 
 
 def list_runs(
@@ -432,10 +457,7 @@ def exact_list_scan(
                                **{id_col: ids_o}, dist=d_o)
 
     scored = src.mapInArrow(scan, schema=f"query_id long, {id_col} long, dist double")
-    try:
-        n_parts = src.rdd.getNumPartitions()
-    except Exception:
-        n_parts = None
+    n_parts = frame_partitions(frame)
     # the scan emits at most k rows per (query, task)
     est_rows = None if n_parts is None else qids.size * k * n_parts
     return merge_topk(scored, k, id_col, upper_bound, est_rows, tier=tier)

@@ -223,11 +223,16 @@ def vecdb_df_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in emb.filter(F.col("vec_id") == 1).first()["embedding"]
     ]
-    hits = db.search("t", qv, k=10)
-    out = [
-        (int(md["vec_id"]), float(np_round_half_up(np.float64(d))))
+    # The engine breaks 4-dp distance ties by table id, which the
+    # repartition scrambles relative to vec_id; the contract cuts ties
+    # by vec_id. So read every row tied with the 10th distance (a
+    # second search bounded by it), then cut by (dist, vec_id).
+    tenth = db.search("t", qv, k=10)[-1][1]
+    hits = db.search("t", qv, k=n, upper_bound=tenth)
+    out = sorted(
+        (float(np_round_half_up(np.float64(d))), int(md["vec_id"]))
         for md, d in hits
-    ]
-    return spark.createDataFrame(out, "vec_id long, dist double").orderBy(
-        "dist", "vec_id"
-    )
+    )[:10]
+    return spark.createDataFrame(
+        [(i, d) for d, i in out], "vec_id long, dist double"
+    ).orderBy("dist", "vec_id")

@@ -311,9 +311,10 @@ def test_build_gate_forced_both_ways_exact(metric, monkeypatch, caplog):
         # knife-edge value on the other side of the rounding boundary
         assert np.allclose(got_d, want_d, rtol=0, atol=1e-4)
     assert np.array_equal(c_id, n_id) and np.allclose(c_d, n_d)
-    assert len(c_build) == 1 and "candidates=c_threads" in c_build[0]
+    assert len(c_build) == 1 and "candidates=c_threads link=c " in c_build[0]
     assert "reason=toolchain" in c_build[0]
-    assert n_build == ["hnsw build candidates=numpy workers=1 reason=no_toolchain"]
+    assert n_build == [
+        "hnsw build candidates=numpy link=numpy workers=1 reason=no_toolchain"]
     assert len(c_serve) == 1 and "path=c_threads reason=toolchain" in c_serve[0]
     assert len(n_serve) == 1
     assert "path=serial_numpy reason=no_toolchain" in n_serve[0]
@@ -356,6 +357,74 @@ def test_heur_select_matches_numpy(metric, dtype):
     c_id, c_d = ckernel.heur_select(cd, cid, vecs, metric, cap)
     assert np.array_equal(np_id, c_id)
     assert np.allclose(np_d, c_d)
+
+
+@pytest.mark.parametrize("metric", ["l2sqr", "cosine"])
+@pytest.mark.parametrize("dtype", [np.float64, np.float32])
+def test_link_path_forced_both_ways_identical(metric, dtype, monkeypatch):
+    """The compiled link phase (``ckernel.link_select`` + ``link_apply``)
+    and the numpy one it replaces (``_link_chunk``: peer block, trim,
+    batched heuristic, dict-of-lists reverse links) build the same graph
+    from the same compiled candidate pools: identical ``links`` and
+    ``counts`` after a full build and after an ``add_batch``. The
+    compiled side fans out over more threads than cores (16), each
+    writing its own rows of one shared selection buffer."""
+    monkeypatch.setenv("SPARK_GRAFT_BUILD_WORKERS", "16")
+    rng = np.random.default_rng(11)
+    n, d, extra = 1500, 24, 300
+    vecs = np.ascontiguousarray(rng.standard_normal((n, d)).astype(dtype))
+    more = rng.standard_normal((extra, d)).astype(dtype)
+
+    def build_and_add():
+        graph = HNSWIndex._build_graph(vecs, metric, 8, 48, 42)
+        built = ([a.copy() for a in graph.links], [c.copy() for c in graph.counts])
+        idx = HNSWIndex(np.arange(n, dtype=np.int64), vecs.copy(), graph, metric)
+        idx.add_batch(np.arange(n, n + extra, dtype=np.int64), more)
+        return built, (idx.graph.links, idx.graph.counts)
+
+    c_built, c_added = build_and_add()
+
+    def numpy_link(g, vecs_, metric_, chunk, cands, workers, tp):
+        HNSWIndex._link_chunk(g, vecs_, metric_, chunk, cands)
+
+    monkeypatch.setattr(HNSWIndex, "_c_link_chunk", staticmethod(numpy_link))
+    n_built, n_added = build_and_add()
+    for (cl, cc), (nl, nc) in ((c_built, n_built), (c_added, n_added)):
+        assert len(cl) == len(nl)
+        for a, b in zip(cl, nl):
+            assert np.array_equal(a, b)
+        for a, b in zip(cc, nc):
+            assert np.array_equal(a, b)
+    assert c_added[1][0][n:].sum() > 0  # the appended rows are linked
+
+
+def test_build_reads_with_one_spark_job(spark, sf_smoke):
+    """``HNSWIndex.build`` reads its table with one job (no orderBy
+    range sampling or sort shuffle) and still orders rows by id when
+    the frame hands them over out of order."""
+    import os
+    import uuid
+
+    df = spark.read.parquet(os.path.join(sf_smoke, "embeddings.parquet"))
+    sc = spark.sparkContext
+    group = f"hnsw_build_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "hnsw build")
+    try:
+        idx = HNSWIndex.build(df, metric="cosine", vec_col="embedding",
+                              id_col="vec_id", m=8, ef_construction=40)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert np.array_equal(idx.ids, np.sort(idx.ids))
+
+    rows = df.select("vec_id", "embedding").collect()
+    want = {int(r["vec_id"]): np.asarray(r["embedding"]) for r in rows}
+    rev = spark.createDataFrame(sorted(rows, key=lambda r: -r["vec_id"]))
+    idx = HNSWIndex.build(rev, metric="cosine", vec_col="embedding",
+                          id_col="vec_id", m=8, ef_construction=40)
+    assert np.array_equal(idx.ids, np.sort(list(want)))
+    for i in (0, 1, len(idx.ids) - 1):
+        assert np.allclose(idx.vecs[i], want[int(idx.ids[i])])
 
 
 def test_broken_so_cache_recovers_not_crashes(tmp_path):

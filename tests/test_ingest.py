@@ -162,13 +162,13 @@ def test_list_metadata_must_be_str(db, spark, tmp_path):
     assert _state(db, key) == before
 
 
-@pytest.mark.parametrize("how,jobs", [("list", 1), ("local", 4), ("parquet", 5)])
+@pytest.mark.parametrize("how,jobs", [("list", 1), ("local", 3), ("parquet", 4)])
 def test_append_job_count(db, spark, tmp_path, how, jobs):
     """A 500-row append runs at most ``jobs`` Spark jobs. The list API's
     frame carries driver positions, so the parquet write is its one job.
     Any other frame is stamped through the eager checkpoint, the
-    per-partition count (a shuffle: its map stage and its result stage
-    are two jobs) and the write; a parquet frame adds its schema read."""
+    per-partition row count (one map-only job) and the write; a parquet
+    frame adds its schema read."""
     rng = np.random.default_rng(1)
     key = _new_table(db, spark, tmp_path, "float32", f"jobs_{how}")
     vecs = [[float(x) for x in v] for v in rng.normal(size=(500, DIM))]

@@ -88,3 +88,38 @@ def test_pq_equals_one_list_ivfpq(data, pq_table, kernel, monkeypatch, metric, f
     listed = _rows(ivfpq.search_batch(queries, 5, n_probes=1, ef=20))
     assert len(flat) == NQ * 5
     assert listed == flat
+
+
+def test_probe_serve_py4j_round_trips(spark, data, monkeypatch):
+    """A warm IVF or IVF+PQ batch serve that probes most of 64 lists
+    plans its list filter as one SQL ``IN`` and reads the scan's
+    partition count from the frame it probed once: its py4j round trips
+    (counted at ``send_command``, the garbage collector's memory
+    releases aside) stay well under one per probed list on top of the
+    plan. A Column literal per list cost ~4 round trips each."""
+    from py4j.clientserver import ClientServerConnection
+
+    tables, queries = data
+    base = tables["float64"]
+    ivf = IVFIndex.build(base, k=64, metric="l2sqr", train_size=N)
+    ivfpq = IVFPQIndex.build(base, k_coarse=64, m=8, metric="l2sqr", train_size=N)
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\nd\n"):
+            calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    serves = {
+        "ivf": lambda: ivf.search_batch(queries, K, n_probes=16),
+        "ivfpq": lambda: ivfpq.search_batch(queries, K, n_probes=16, ef=40),
+    }
+    for tier, serve in serves.items():
+        first = _rows(serve())
+        probed = np.unique(ivf.model.rank_centroids_batch(queries, 16)).size
+        assert probed >= 48
+        calls[0] = 0
+        assert _rows(serve()) == first
+        assert calls[0] < 200, (tier, calls[0])
